@@ -1,5 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.lang.management.ManagementFactory
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   /** The queries BASELINE.md's latency gates map onto — the entries a
     * judge reads from the bench line. Shared with GateSpec (which
@@ -25,24 +27,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // static conf, default 100: a ~358-plan session structurally
-      // thrashes the Janino codegen cache, so every warm re-execution
-      // re-compiles (and re-JITs) its generated classes — measured as
-      // multi-second inflation on the biggest plans (q358 +9 s, q262
-      // +2 s) ONLY inside full sweeps, never in fresh sessions. Any
-      // long-lived production session (query service, MCP server) has
-      // the same profile; memory cost is bounded by the plan corpus
-      // and already provisioned by the 1g reserved code cache.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // stamp the effective JVM sizing into the diag stream so recorded
     // runs are attributable to their code-cache/heap setting (the same
     // values land in BENCH_FULL.json's "jvm" field)
@@ -69,63 +54,18 @@ object Bench {
     // in milliseconds and would read as a perf win. Failures surface in
     // the JSON line's "failed" array and are excluded from per-query
     // timings and totals.
-    // Per-query JVM diagnostics on stderr (round-11 cold-sweep
-    // adjudication): the cold column showed roving multi-minute
-    // windows hitting ~8 CONSECUTIVE sweep queries ~20 min into the
-    // session (q268-q277 in round 10, q278-q285 in round 11, warm
-    // flat both times, zero source diff). These three deltas separate
-    // the candidate causes per query: a JIT/code-cache flush storm
-    // shows as jit_ms ~ dt, a GC wall as gc_ms ~ dt, an EXTERNAL box
-    // stall as a wall-clock excess with BOTH near zero.
-    import scala.jdk.CollectionConverters._
-    def gcMs: Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    def jitMs: Long = Option(java.lang.management.ManagementFactory
-      .getCompilationMXBean).map(_.getTotalCompilationTime).getOrElse(0L)
-    def codeCacheMb: Long = java.lang.management.ManagementFactory
-      .getMemoryPoolMXBeans.asScala
-      .filter(_.getName.startsWith("CodeHeap"))
-      .map(_.getUsage.getUsed).sum / (1024 * 1024)
-    var sweepName = "cold"
-    def time(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Either[String, Double] = {
-      val (g0, j0) = (gcMs, jitMs)
-      val t0 = System.nanoTime()
-      val err =
-        try { fn(spark, sfDir).count(); None }
-        catch { case e: Throwable => Some(e.getClass.getSimpleName) }
-      val dt = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[benchdiag] $sweepName $name dt=$dt%.2f " +
-        f"gc_ms=${gcMs - g0} jit_ms=${jitMs - j0} cc_mb=$codeCacheMb")
-      // release localCheckpoint/cache blocks the query pinned — in a
-      // 100-query single-JVM session they otherwise accumulate in
-      // storage memory until GC gets around to the RDD references,
-      // and the tail of the run pays for the head's leftovers
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      err.toLeft(dt)
-    }
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
-    val cold = sorted.map { case (name, fn) => name -> time(name, fn) }
-      .toMap
-    sweepName = "warm1"
-    val warm1 = sorted.map { case (name, fn) => name -> time(name, fn) }
-      .toMap
-    sweepName = "warm2"
-    val warm2 = sorted.map { case (name, fn) => name -> time(name, fn) }
-      .toMap
-    val (ok, failed) = sorted.partition { case (name, _) =>
-      cold(name).isRight && warm1(name).isRight && warm2(name).isRight
+    val sweeps = Seq("cold", "warm1", "warm2").map(sweep =>
+      sorted.map { case (name, fn) => time(spark, sfDir, sweep, name, fn) })
+    val (ok, failed) =
+      sorted.map(_._1).zip(sweeps.transpose).partition(_._2.forall(_.isRight))
+    failed.foreach { case (name, runs) =>
+      val why = runs.collectFirst { case Left(e) => e.getClass.getSimpleName }
+      System.err.println(s"[bench] $name FAILED: ${why.get}")
     }
-    failed.foreach { case (name, _) =>
-      val why = Seq(cold(name), warm1(name), warm2(name))
-        .collectFirst { case Left(e) => e }.getOrElse("?")
-      System.err.println(s"[bench] $name FAILED: $why")
-    }
-    val results = ok.map { case (name, _) =>
-      (name, cold(name).toOption.get,
-        math.min(warm1(name).toOption.get, warm2(name).toOption.get))
+    val results = ok.map { case (name, runs) =>
+      val Seq(cold, warm1, warm2) = runs.map(_.toOption.get)
+      (name, cold, math.min(warm1, warm2))
     }
     // The stdout line is tail-budgeted (see renderJson) and past ~200
     // queries its ladder must trade precision to stay parseable. The
@@ -139,6 +79,48 @@ object Bench {
     spark.stop()
   }
 
+  // Per-query JVM diagnostics on stderr (round-11 cold-sweep
+  // adjudication): the cold column showed roving multi-minute
+  // windows hitting ~8 CONSECUTIVE sweep queries ~20 min into the
+  // session (q268-q277 in round 10, q278-q285 in round 11, warm
+  // flat both times, zero source diff). These three deltas separate
+  // the candidate causes per query: a JIT/code-cache flush storm
+  // shows as jit_ms ~ dt, a GC wall as gc_ms ~ dt, an EXTERNAL box
+  // stall as a wall-clock excess with BOTH near zero.
+  def gcMs: Long = ManagementFactory.getGarbageCollectorMXBeans.asScala
+    .map(_.getCollectionTime).sum
+  private def jitMs: Long = Option(ManagementFactory.getCompilationMXBean)
+    .map(_.getTotalCompilationTime).getOrElse(0L)
+  private def codeCacheMb: Long = ManagementFactory.getMemoryPoolMXBeans
+    .asScala.filter(_.getName.startsWith("CodeHeap"))
+    .map(_.getUsage.getUsed).sum / (1024 * 1024)
+
+  /** The one query-run harness of Bench and BenchSome: run `fn` once
+    * to a count, log its [benchdiag] line, then release what it pinned
+    * — after every run, cold included: the warm run re-materializes its
+    * own localCheckpoint blocks, and keeping the cold run's pinned
+    * doubles storage pressure (seen as warm > cold inversions in
+    * many-query sessions, SCALING.md). A crash is a Left, never a time. */
+  def time(spark: SparkSession, sfDir: String, sweep: String, name: String,
+      fn: (SparkSession, String) => DataFrame): Either[Throwable, Double] = {
+    val (g0, j0) = (gcMs, jitMs)
+    val t0 = System.nanoTime()
+    val err =
+      try { fn(spark, sfDir).count(); None }
+      catch { case e: Throwable => Some(e) }
+    val dt = (System.nanoTime() - t0) / 1e9
+    System.err.println(f"[benchdiag] $sweep $name dt=$dt%.2f " +
+      f"gc_ms=${gcMs - g0} jit_ms=${jitMs - j0} cc_mb=$codeCacheMb")
+    Session.release(spark)
+    err.toLeft(dt)
+  }
+
+  private def fmt(v: Double, dp: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${dp}f", Double.box(v))
+
+  private def sfShort(sfDir: String): String =
+    sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)
+
   /** Untruncated companion to [[renderJson]]: every query's [cold,
     * warm] at 3 decimals, no tail budget (written to BENCH_FULL.json,
     * not stdout). This is where per-query precision lives once the
@@ -147,14 +129,10 @@ object Bench {
     * arithmetically (218 keys × 4-char values alone exceed it). */
   def renderFullJson(results: Seq[(String, Double, Double)],
       failed: Seq[String], sfDir: String): String = {
-    def f3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val entries = results.map { case (n, c, w) =>
-      s"""  "$n": [${f3(c)}, ${f3(w)}]"""
+      s"""  "$n": [${fmt(c, 3)}, ${fmt(w, 3)}]"""
     }.mkString(",\n")
-    val failedArr = failed.map(f => "\"" + f + "\"").mkString(", ")
-    val sfShort = sfDir.split('/').filter(_.nonEmpty).lastOption
-      .getOrElse(sfDir)
+    val failedArr = failed.map(Session.jsonString).mkString(", ")
     // window-strike self-annotation (round-11 verdict task 4): this
     // box shows roving multi-minute EXTERNAL stall windows that hit a
     // contiguous run of cold-sweep queries (SCALING.md adjudication,
@@ -170,14 +148,14 @@ object Bench {
     val suspects = results
       .filter { case (_, c, w) =>
         (c > 4 * w && c - w > 2.0) || (w > 2 * c && w - c > 2.0) }
-      .map(r => "\"" + r._1 + "\"").mkString(", ")
+      .map(r => Session.jsonString(r._1)).mkString(", ")
     // effective JVM sizing (round-11 advice): A/B runs with different
     // SPARK_CODECACHE / SPARK_DRIVER_MEM are incomparable — stamp the
     // values so every recorded BENCH_FULL is attributable
     val codeCache = sys.env.getOrElse("SPARK_CODECACHE", "1g")
     val driverMem = sys.env.getOrElse("SPARK_DRIVER_MEM", "32g")
     s"""{
-       |"sf": "$sfShort",
+       |"sf": "${sfShort(sfDir)}",
        |"jvm": {"codecache": "$codeCache", "driver_mem": "$driverMem"},
        |"window_suspect": [$suspects],
        |"failed": [$failedArr],
@@ -207,8 +185,6 @@ object Bench {
     */
   def renderJson(results: Seq[(String, Double, Double)],
       failed: Seq[String], sfDir: String): String = {
-    def fmt(v: Double, dp: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${dp}f", Double.box(v))
     def fmtTrim(v: Double, dp: Int): String = {
       val s = fmt(v, dp)
       if (s.contains('.'))
@@ -217,15 +193,13 @@ object Bench {
     }
     val coldTotal = results.map(_._2).sum
     val warmTotal = results.map(_._3).sum
-    val sfShort = sfDir.split('/').filter(_.nonEmpty).lastOption
-      .getOrElse(sfDir)
     // the gates map is bounded by |BaselineGates ∪ ScalingProbes| = 13
     // regardless of how the suite grows; 2 decimals because these
     // values are compared against sub-second BASELINE.md thresholds
     val gates = results
       .filter(r => BaselineGates(r._1) || ScalingProbes(r._1))
       .sortBy(_._1)
-      .map { case (n, _, w) => "\"" + n + "\":" + fmtTrim(w, 2) }
+      .map { case (n, _, w) => Session.jsonString(n) + ":" + fmtTrim(w, 2) }
       .mkString("{", ",", "}")
     // failed names are diagnostic, not budget-exempt: keep the exact
     // COUNT always, cap the name list at 12 with an explicit remainder
@@ -233,13 +207,13 @@ object Bench {
     val failedField =
       if (failed.isEmpty) ""
       else {
-        val shown = failed.take(12).map(n => "\"" + n + "\"")
+        val shown = failed.take(12).map(Session.jsonString)
           .mkString("[", ",", "]")
         val more =
           if (failed.size > 12) s""","failed_more":${failed.size - 12}"""
           else ""
         s""""failed":$shown$more,"""
       }
-    s"""{"metric":"total","value":${fmtTrim(coldTotal, 1)},"unit":"sec","warm":${fmtTrim(warmTotal, 1)},"n_queries":${results.size},"n_failed":${failed.size},"queries":$gates,$failedField"full":"BENCH_FULL.json","sf":"$sfShort"}"""
+    s"""{"metric":"total","value":${fmtTrim(coldTotal, 1)},"unit":"sec","warm":${fmtTrim(warmTotal, 1)},"n_queries":${results.size},"n_failed":${failed.size},"queries":$gates,$failedField"full":"BENCH_FULL.json","sf":"${sfShort(sfDir)}"}"""
   }
 }

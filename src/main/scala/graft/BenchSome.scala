@@ -1,6 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import scala.jdk.CollectionConverters._
 
 /** Selective bench for plan/perf debugging: run the named queries (in
   * the given order, each twice) in a fresh session and print per-query
@@ -15,46 +13,15 @@ import scala.jdk.CollectionConverters._
 object BenchSome {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // static conf, default 100: a ~358-plan session structurally
-      // thrashes the Janino codegen cache, so every warm re-execution
-      // re-compiles (and re-JITs) its generated classes — measured as
-      // multi-second inflation on the biggest plans (q358 +9 s, q262
-      // +2 s) ONLY inside full sweeps, never in fresh sessions. Any
-      // long-lived production session (query service, MCP server) has
-      // the same profile; memory cost is bounded by the plan corpus
-      // and already provisioned by the 1g reserved code cache.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val all = SparkEntry.queries
-    def gcMs: Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
+    val spark = Session.local()
     args.foreach { a =>
-      val name = all.keys.find(k => k == a || k.takeWhile(_ != '_') == a)
-        .getOrElse(sys.error(s"unknown query: $a"))
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        all(name)(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      def release(): Unit = spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      val g0 = gcMs
-      // release between runs too: the warm run re-materializes its own
-      // localCheckpoint blocks, and keeping the cold run's pinned
-      // doubles storage pressure — in a many-query session that
-      // accumulation showed up as warm > cold inversions (SCALING.md)
-      val cold = once(); release()
-      val warm = once(); release()
+      val name = Session.resolve(a)
+      val g0 = Bench.gcMs
+      val Seq(cold, warm) = Seq("cold", "warm").map(sweep =>
+        Bench.time(spark, sfDir, sweep, name, SparkEntry.queries(name))
+          .toTry.get)
       println(f"BENCHSOME $name cold=$cold%.2f warm=$warm%.2f " +
-        f"gc_delta_ms=${gcMs - g0}")
+        f"gc_delta_ms=${Bench.gcMs - g0}")
     }
     spark.stop()
   }

@@ -22,15 +22,7 @@ object Cli {
     val storeDir = args(0)
     val cmd = args(1)
     val rest = args.drop(2).toList
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     graft.functions.GraftExtensions.registerAll(spark)
     try run(spark, storeDir, cmd, rest) match {
       case Some(df) => df.show(50, truncate = false)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FormattedMode, SimpleMode}
 
 /** Plan-audit tool: print the optimized physical plan of the named
@@ -11,20 +10,11 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val all = SparkEntry.queries
+    val spark = Session.local(logLevel = "ERROR")
     args.foreach { a =>
-      val name = all.keys.find(k => k == a || k.takeWhile(_ != '_') == a)
-        .getOrElse(sys.error(s"unknown query: $a"))
+      val name = Session.resolve(a)
       println(s"\n########## $name")
-      println(all(name)(spark, sfDir).queryExecution
+      println(SparkEntry.queries(name)(spark, sfDir).queryExecution
         .explainString(
         if (sys.env.get("SPARK_GRAFT_EXPLAIN_MODE").contains("formatted"))
           FormattedMode

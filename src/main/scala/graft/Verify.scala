@@ -2,33 +2,22 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  *   sbt "runMain graft.Verify <sfDir> <outDir> [q161,q30_hourly_windows]"
+  *
+  * The optional third argument limits the dump (and the oracle file) to
+  * a comma-separated list of full or short query names. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query-name filter (audit runs)
-    val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores TIMESTAMP(NANOS) which vanilla Spark refuses;
-      // read as long (nanos since epoch) and convert explicitly where used.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // static conf, default 100: a ~358-plan session structurally
-      // thrashes the Janino codegen cache, so every warm re-execution
-      // re-compiles (and re-JITs) its generated classes — measured as
-      // multi-second inflation on the biggest plans (q358 +9 s, q262
-      // +2 s) ONLY inside full sweeps, never in fresh sessions. Any
-      // long-lived production session (query service, MCP server) has
-      // the same profile; memory cost is bounded by the plan corpus
-      // and already provisioned by the 1g reserved code cache.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
+    try run(spark, args(0), args(1), args.lift(2))
+    finally spark.stop()
+  }
+
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+      filter: Option[String]): Unit = {
+    val only = filter.map(_.split(",").map(Session.resolve).toSet)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -38,27 +27,12 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // drop blocks pinned by localCheckpoint/cache inside the query —
-      // 100 queries in one session otherwise accumulate storage memory
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Session.release(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => Session.jsonString(k) + ": " + Session.jsonString(v) }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

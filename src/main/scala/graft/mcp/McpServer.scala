@@ -1,15 +1,17 @@
 package graft.mcp
 
-import java.io.{BufferedReader, InputStreamReader, PrintStream}
+import java.io.{BufferedReader, PrintStream}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import scala.util.{Failure, Success, Try}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.json4s._
 import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
 import graft.model.Model.Labels
 import graft.queries.CodeGraph
-import graft.store.GraphStore
 
 /** MCP (Model Context Protocol) JSON-RPC frontend — the reference's
   * second front-end (`mcp-server/main.go`), re-hosted over the Spark
@@ -36,19 +38,31 @@ class McpServer(nodes: DataFrame, edges: DataFrame) {
     Iterator.continually(in.readLine()).takeWhile(_ != null)
       .foreach(line => handleLine(line).foreach(out.println))
 
-  /** One request line → one response line (None for blank input). */
-  def handleLine(line: String): Option[String] = {
+  /** One request line → one response line (None for blank input).
+    * Malformed JSON answers -32700 with a null id; a request that fails
+    * inside its handler answers -32603 with its own id and is logged to
+    * stderr (stdout carries only the protocol). */
+  def handleLine(line: String): Option[String] =
     if (line.trim.isEmpty) None
-    else {
-      val response =
-        try handleRequest(parse(line))
-        catch { case _: Throwable => errorObj(JNull, -32700, "Parse error") }
-      Some(compact(render(response)))
-    }
-  }
+    else Some(compact(render(Try(parse(line)) match {
+      case Failure(_) => errorObj(JNull, -32700, "Parse error")
+      case Success(req) =>
+        try handleRequest(req)
+        catch { case NonFatal(e) =>
+          val tool = req \ "params" \ "name" match {
+            case JString(t) => t
+            case _ => "-"
+          }
+          System.err.println(s"[mcp] tool=$tool failed: $e")
+          errorObj(idOf(req), -32603, "Internal error")
+        }
+    })))
+
+  private def idOf(req: JValue): JValue =
+    req \ "id" match { case JNothing => JNull; case v => v }
 
   private def handleRequest(req: JValue): JValue = {
-    val id = req \ "id" match { case JNothing => JNull; case v => v }
+    val id = idOf(req)
     req \ "method" match {
       case JString("initialize") => resultObj(id, initializeResult)
       case JString("tools/list") => resultObj(id, toolsListResult)
@@ -343,24 +357,13 @@ class McpServer(nodes: DataFrame, edges: DataFrame) {
     }
 }
 
-/** Entry point: `McpServer <storeDir>` — serve the graph at storeDir
-  * over stdin/stdout JSON-RPC (Spark logs go to stderr, so the protocol
-  * stream stays clean). */
+/** Entry point: `McpServer <storeDir>` — the same server as
+  * `Cli <storeDir> mcp`: serve the graph at storeDir over stdin/stdout
+  * JSON-RPC (Spark logs go to stderr, so the protocol stream stays
+  * clean). */
 object McpServer {
   def main(args: Array[String]): Unit = {
     require(args.length >= 1, "usage: McpServer <storeDir>")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-mcp-server")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val store = new GraphStore(spark, args(0))
-    try new McpServer(store.nodes, store.edges)
-      .run(new BufferedReader(new InputStreamReader(System.in)), System.out)
-    finally spark.stop()
+    graft.Cli.main(Array(args(0), "mcp"))
   }
 }

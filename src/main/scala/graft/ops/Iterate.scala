@@ -85,14 +85,17 @@ object Iterate {
     * the other's stragglers leave idle (guide §2.6 — Spark schedules
     * concurrent jobs FIFO, which is exactly the back-fill behavior).
     * Results are deterministic: thread scheduling affects only WHEN
-    * jobs run, never what they compute. */
+    * jobs run, never what they compute. Both sides are awaited before
+    * a failure is rethrown (`a`'s first), so no job outlives the call. */
   def concurrently[A, B](a: => A, b: => B): (A, B) = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val fa = Future(a)
     val fb = Future(b)
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
+    Await.ready(fa, Duration.Inf)
+    Await.ready(fb, Duration.Inf)
+    (fa.value.get.get, fb.value.get.get)
   }
 
   /** Decimal digit count of the optimized plan's `sizeInBytes` stat —

@@ -409,21 +409,16 @@ object Dedup {
       .drop("_df")
   }
 
-  /** Exact Jaccard pairs for SMALL vocabularies (≤ 62 distinct shingles):
-    * dictionary-encode each shingle set as a 64-bit mask, deduplicate
-    * identical sets, compare distinct masks with popcount, then expand
-    * back to document pairs. Identical output to [[jaccardPairs]], but the
-    * ultra-common-shingle join (quadratic when every shingle is in most
-    * docs) collapses to |distinct sets|² cheap integer ops. The caller
-    * checks the vocabulary bound (see `smallVocabSize`).
+  /** Exact Jaccard pairs for SMALL vocabularies (≤ 62 distinct shingles)
+    * over pre-built (doc, shingle) rows, so the adaptive entry point
+    * materializes the explode exactly once: dictionary-encode each
+    * shingle set as a 64-bit mask, deduplicate identical sets, compare
+    * distinct masks with popcount, then expand back to document pairs.
+    * Identical output to [[jaccardPairs]], but the ultra-common-shingle
+    * join (quadratic when every shingle is in most docs) collapses to
+    * |distinct sets|² cheap integer ops. The caller checks the
+    * vocabulary bound (see `smallVocabSize`).
     */
-  def jaccardPairsBitmask(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 1, threshold: Double = 0.8): DataFrame =
-    jaccardPairsBitmaskFromRows(shingleRows(df, idCol, textCol, n),
-      threshold)
-
-  /** Bitmask path over pre-built (doc, shingle) rows — lets the
-    * adaptive entry point materialize the explode exactly once. */
   def jaccardPairsBitmaskFromRows(sh: DataFrame,
       threshold: Double): DataFrame = {
     // The vocabulary is ≤ 62 entries here (the adaptive dispatch guard),

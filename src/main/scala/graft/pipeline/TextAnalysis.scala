@@ -57,14 +57,6 @@ object TextAnalysis {
         .cast("double") / size(toks))
   }
 
-  /** Mean token length (characters). */
-  def meanTokenLen(text: Column): Column = {
-    val toks = tokens(text)
-    when(size(toks) === 0, lit(0.0))
-      .otherwise(aggregate(toks, lit(0L), (acc, t) => acc + length(t))
-        .cast("double") / size(toks))
-  }
-
   /** Composite quality score in [0,1] — the shape used by pretraining
     * data filters: rewards reasonable length and a healthy stopword rate,
     * penalizes punctuation soup. Deterministic closed form. */

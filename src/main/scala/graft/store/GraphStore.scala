@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.StructType
@@ -361,11 +361,6 @@ class GraphStore(spark: SparkSession, val basePath: String) {
       .select(Model.nodeSchema.fields.map(f =>
         col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
 
-  def edgesAt(version: String): DataFrame =
-    spark.read.parquet(s"$basePath/$version")
-      .select(Model.edgeSchema.fields.map(f =>
-        col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
-
   /** Delete all non-current snapshot versions. */
   def vacuum(): Unit = {
     val keep = Seq("nodes", "edges").flatMap(currentDir)
@@ -387,12 +382,6 @@ object GraphStore {
   /** Merge-identity columns per table kind — the delta/tombstone key. */
   def mergeKeyCols(kind: String): Seq[String] =
     if (kind == "nodes") Seq("id") else Seq("src", "dst", "relType")
-
-  /** Deterministic node id: hash of label + the label's merge-key columns
-    * (Model.MergeKeys). The Spark analog of elementId(n): stable across
-    * re-ingests so MERGE works (SURVEY §1.7). */
-  def nodeId(label: String, keyCols: Column*): Column =
-    xxhash64((lit(label) +: keyCols): _*)
 
   /** Fill ids for rows that lack one, using per-label merge keys. A label
     * whose merge-key columns are not ALL present falls through to the

@@ -60,4 +60,21 @@ class IterateSpec extends SparkSpec {
     assert(withBarrier.orderBy("id").collect().toSeq ===
       bare.orderBy("id").collect().toSeq)
   }
+
+  test("concurrently returns both sides' results in argument order") {
+    val (a, b) = Iterate.concurrently({ Thread.sleep(200); "left" }, 42)
+    assert(a === "left")
+    assert(b === 42)
+  }
+
+  test("concurrently rethrows a side's failure after the sibling ends") {
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val boom = new IllegalStateException("boom")
+    val thrown = intercept[IllegalStateException] {
+      Iterate.concurrently[Int, Unit](throw boom,
+        { Thread.sleep(500); siblingDone.set(true) })
+    }
+    assert(thrown eq boom)
+    assert(siblingDone.get, "the sibling was still running on return")
+  }
 }

@@ -183,6 +183,27 @@ class McpServerSpec extends SparkSpec {
     assert(toolTextOf(noArg) === "Error: query parameter is required")
   }
 
+  test("an engine failure inside tools/call is -32603 with the request id") {
+    // frames without the graph columns: searchNodes fails analysis
+    // inside the handler
+    val bare = spark.range(1).toDF("id")
+    val broken = new McpServer(bare, bare)
+    val err = new ByteArrayOutputStream()
+    val oldErr = System.err
+    System.setErr(new PrintStream(err, true))
+    val line =
+      try broken.handleLine(
+        """{"jsonrpc":"2.0","id":14,"method":"tools/call","params":
+          |{"name":"codegraph_search","arguments":{"query":"Helper"}}}"""
+          .stripMargin.replace("\n", ""))
+      finally System.setErr(oldErr)
+    val r = parse(line.getOrElse(fail("no response")))
+    assert(r \ "error" \ "code" === JInt(-32603))
+    assert(r \ "error" \ "message" === JString("Internal error"))
+    assert(r \ "id" === JInt(14))
+    assert(err.toString.contains("codegraph_search"))
+  }
+
   test("run() loops stdin lines to stdout lines, skipping blanks") {
     val in = new BufferedReader(new StringReader(
       """{"jsonrpc":"2.0","id":1,"method":"initialize"}
