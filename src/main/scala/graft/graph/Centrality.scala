@@ -19,67 +19,11 @@ import graft.ops.Iterate.BarrierOps
   */
 object Centrality {
 
-  /** Integer PageRank over `edges(src, dst)`: damping 0.85 in ppm,
-    * `iters` synchronized iterations from a uniform 10⁶ start.
-    *
-    *   r₀(v)    = 10⁶
-    *   rₖ₊₁(v) = 150000 + (850000 · Σ_{(u,v)∈E} (rₖ(u) div outdeg(u)))
-    *              div 10⁶
-    *
-    * Dangling nodes (no out-edges) leak rank mass — the standard
-    * simplification, applied identically by any mirror. Returns
-    * (id, rank_ppm).
-    *
-    * Scale shape: one join per iteration keyed on the edge endpoint
-    * (partial-aggregated). `outdeg` is static across iterations, so it
-    * is folded into the edge table ONCE before the loop — and that join
-    * is NOT hint-broadcast (`deg` has one row per non-dangling node; at
-    * 10⁹ nodes a forced broadcast ships GBs to every executor). It is a
-    * plain shuffle join keyed on `src`, co-partitioned with the edge
-    * table, and AQE still broadcasts at runtime when it measures small.
-    * Each iteration then performs exactly ONE join: rank ⋈ edges.
-    * Unlike the traversal loops (whose frontier feeds TWO consumers and
-    * must materialize per level), each rank is consumed exactly once by
-    * the next iteration — so iterations chain LAZILY into one job, and
-    * a localCheckpoint barrier is inserted only every few iterations to
-    * bound plan-analysis depth on long runs.
-    */
-  def pageRankInteger(edges: DataFrame, iters: Int): DataFrame = {
-    require(iters >= 1 && iters <= 20,
-      s"iters ($iters) out of the sane unrolled range")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .localCheckpoint(eager = true)
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    // outdeg is iteration-invariant: fold it into the edges once, so the
-    // loop body is a single join per iteration instead of two. The
-    // checkpoint is taken AFTER a repartition on `src` (LogicalRDD keeps
-    // the child's output partitioning), so every iteration's rank join
-    // reuses this layout and only the rank side moves.
-    val eDeg = e.join(deg, Seq("src"))
-      .repartition(col("src")).localCheckpoint(eager = true)
-    val nodes = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id")))
-      .distinct().localCheckpoint(eager = true)
-    var rank = nodes.withColumn("rank_ppm", lit(1000000L))
-    for (i <- 1 to iters) {
-      val contrib = eDeg
-        .join(rank.select(col("id").as("src"), col("rank_ppm")), Seq("src"))
-        .select(col("dst").as("id"),
-          expr("rank_ppm div outdeg").as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("s"))
-      rank = nodes.join(contrib, Seq("id"), "left_outer")
-        .select(col("id"),
-          expr("150000 + (850000 * coalesce(s, 0L)) div 1000000")
-            .as("rank_ppm"))
-      if (i % 8 == 0) rank = rank.barrier
-    }
-    rank
-  }
-
-  /** The vertex-parallel engine for the same recurrence: GraphX
-    * aggregateMessages per synchronized iteration (bit-identical to
-    * [[pageRankInteger]] — integer arithmetic has no accumulation-order
-    * drift; equality is spec-tested). This is the engine q69 runs on:
+  /** Integer PageRank on GraphX: the [[personalizedPageRankInteger]]
+    * recurrence with every node seeded, as aggregateMessages per
+    * synchronized iteration (bit-identical to the DataFrame engine —
+    * integer arithmetic has no accumulation-order drift; equality is
+    * spec-tested). This is the engine q69 runs on:
     * the graph is partitioned ONCE and iterations exchange only
     * messages, where the DataFrame loop pays two shuffles per
     * iteration. An explicit loop (not `Pregel`) because Pregel's
@@ -214,17 +158,36 @@ object Centrality {
        |$steps""".stripMargin
   }
 
-  /** Personalized (topic-sensitive) integer PageRank: identical
-    * recurrence to [[pageRankInteger]] except the teleport mass lands
-    * ONLY on the seed set — the "related code" ranking seeded at a
-    * function of interest (Haveliwala 2002 restricted to one topic).
+  /** Personalized (topic-sensitive) integer PageRank over
+    * `edges(src, dst)`: damping 0.85 in ppm, `iters` synchronized
+    * iterations, with the teleport mass landing ONLY on the seed set —
+    * the "related code" ranking seeded at a function of interest
+    * (Haveliwala 2002 restricted to one topic). Seeding every node
+    * (`lit(true)`) gives plain PageRank from a uniform 10⁶ start.
     *
-    *   rₖ₊₁(v) = seed(v)·150000 + (850000 · Σ contrib) div 10⁶
+    *   r₀(v)    = seed(v)·10⁶
+    *   rₖ₊₁(v) = seed(v)·150000
+    *              + (850000 · Σ_{(u,v)∈E} (rₖ(u) div outdeg(u))) div 10⁶
     *
-    * Seeds arrive as a COLUMN PREDICATE over node ids (not a collected
-    * Seq): membership evaluates distributedly inside the projection, so
-    * an unbounded seed set never touches the driver. Returns
-    * (id, rank_ppm).
+    * Dangling nodes (no out-edges) leak rank mass — the standard
+    * simplification, applied identically by any mirror. Seeds arrive as
+    * a COLUMN PREDICATE over node ids (not a collected Seq): membership
+    * evaluates distributedly inside the projection, so an unbounded
+    * seed set never touches the driver. Returns (id, rank_ppm).
+    *
+    * Scale shape: one join per iteration keyed on the edge endpoint
+    * (partial-aggregated). `outdeg` is static across iterations, so it
+    * is folded into the edge table ONCE before the loop — and that join
+    * is NOT hint-broadcast (`deg` has one row per non-dangling node; at
+    * 10⁹ nodes a forced broadcast ships GBs to every executor). It is a
+    * plain shuffle join keyed on `src`, co-partitioned with the edge
+    * table, and AQE still broadcasts at runtime when it measures small.
+    * Each iteration then performs exactly ONE join: rank ⋈ edges.
+    * Unlike the traversal loops (whose frontier feeds TWO consumers and
+    * must materialize per level), each rank is consumed exactly once by
+    * the next iteration — so iterations chain LAZILY into one job, and
+    * a localCheckpoint barrier is inserted only every few iterations to
+    * bound plan-analysis depth on long runs.
     */
   def personalizedPageRankInteger(edges: DataFrame, seedPred: Column,
       iters: Int): DataFrame = {
@@ -233,6 +196,11 @@ object Centrality {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .localCheckpoint(eager = true)
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+    // outdeg is iteration-invariant: fold it into the edges once, so the
+    // loop body is a single join per iteration instead of two. The
+    // checkpoint is taken AFTER a repartition on `src` (LogicalRDD keeps
+    // the child's output partitioning), so every iteration's rank join
+    // reuses this layout and only the rank side moves.
     val eDeg = e.join(deg, Seq("src"))
       .repartition(col("src")).localCheckpoint(eager = true)
     val nodes = e.select(col("src").as("id"))
@@ -293,8 +261,11 @@ object Centrality {
       .toDF("id", "rank_ppm")
   }
 
-  /** SQL mirror of [[personalizedPageRankInteger]]; `seedPredSql` is a
-    * boolean expression over the node id column `n.id`. */
+  /** SQL mirror of [[personalizedPageRankInteger]]: the same
+    * iterations unrolled as chained CTEs, emitted for oracle use so the
+    * two sides cannot drift in formula shape. `edgesSql` must select
+    * (src, dst); `seedPredSql` is a boolean expression over the node id
+    * column `n.id` (`TRUE` for plain PageRank). */
   def personalizedPageRankIntegerSql(edgesSql: String, seedPredSql: String,
       iters: Int): String = {
     val steps = (1 to iters).map { k =>
@@ -378,29 +349,6 @@ object Centrality {
        |d0 AS (SELECT id,
        |    CASE WHEN $seedPredSql THEN CAST(0 AS BIGINT) END AS dist
        |  FROM nodes n),
-       |$steps""".stripMargin
-  }
-
-  /** The SQL mirror: the same iterations unrolled as chained CTEs.
-    * `edgesSql` must select (src, dst). Emitted for oracle use so the
-    * two sides cannot drift in formula shape. */
-  def pageRankIntegerSql(edgesSql: String, iters: Int): String = {
-    val steps = (1 to iters).map { k =>
-      s"""r$k AS (
-         |  SELECT n.id,
-         |    150000 + (850000 * COALESCE(SUM(p.rank_ppm // deg.outdeg),
-         |      0)) // 1000000 AS rank_ppm
-         |  FROM nodes n
-         |  LEFT JOIN edges e ON e.dst = n.id
-         |  LEFT JOIN deg ON deg.src = e.src
-         |  LEFT JOIN r${k - 1} p ON p.id = e.src
-         |  GROUP BY n.id)""".stripMargin
-    }.mkString(",\n")
-    s"""edges AS ($edgesSql),
-       |deg AS (SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src),
-       |nodes AS (SELECT DISTINCT id FROM
-       |  (SELECT src AS id FROM edges UNION SELECT dst FROM edges)),
-       |r0 AS (SELECT id, CAST(1000000 AS BIGINT) AS rank_ppm FROM nodes),
        |$steps""".stripMargin
   }
 

@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import org.apache.spark.graphx.{Edge, Graph, Pregel, EdgeDirection, EdgeTriplet, VertexId}
+import org.apache.spark.graphx.{Edge, Graph, Pregel, EdgeDirection, EdgeTriplet}
 
 import graft.ops.Iterate
 import graft.ops.Iterate.BarrierOps
@@ -102,39 +102,13 @@ object Traversals {
     } finally e.unpersist()
   }
 
-  /** Bounded closure for FOREST-shaped edges (each node ≤1 parent, no
-    * cycles — e.g. CONTAINS hierarchies): identical output to [[closure]]
-    * but skips the dedup anti-join and distinct, since a tree admits at
-    * most one path per (ancestor, descendant) pair. Half the shuffles per
-    * level. */
-  def closureTree(edges: DataFrame, maxDepth: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      var level = Iterate.barrier(
-        e.select(col("src").as("ancestor"),
-          col("dst").as("descendant"), lit(1).as("depth")))
-      var acc = level
-      var d = 1
-      while (d < maxDepth && !level.isEmpty) {
-        d += 1
-        val next = Iterate.barrier(
-          level.join(e, level("descendant") === e("src"))
-            .select(level("ancestor"), e("dst").as("descendant"),
-              lit(d).as("depth")))
-        acc = acc.unionByName(next)
-        level = next
-      }
-      acc
-    } finally e.unpersist()
-  }
-
   /** Tree closure by DOUBLING: valid only for forests (at most one path
     * per pair, so composing two closures never duplicates a pair and
     * depths add exactly). C(2k) = C(k) ∪ C(k)∘C(k) reaches depth cap D
     * in ⌈log2 D⌉ materializations instead of D — the right shape when
-    * per-level scheduling, not data volume, dominates. Output equals
-    * [[closureTree]] filtered to depth ≤ maxDepth. */
+    * per-level scheduling, not data volume, dominates. On a forest the
+    * output equals [[closure]]'s, whose min-depth dedup never fires
+    * there. */
   def closureTreeDoubling(edges: DataFrame, maxDepth: Int): DataFrame = {
     var acc = Iterate.barrier(
       edges.select(col("src").as("ancestor"),
@@ -215,38 +189,7 @@ object Traversals {
     * spillable state is needed.
     */
   def pathsGraphX(spark: SparkSession, edges: DataFrame,
-      seedIds: Seq[Long], maxHops: Int): DataFrame = {
-    val seeds = seedIds.toSet
-    pathsGraphXInit(spark, edges, maxHops,
-      g => g.mapVertices { (vid, _) =>
-        val self: PathSet = if (seeds.contains(vid)) Set(Vector(vid))
-          else Set.empty
-        (Set.empty: PathSet, self)
-      })
-  }
-
-  /** DataFrame-seed variant of [[pathsGraphX]]: seed membership joins
-    * into the vertex init (nothing collected to the driver), for
-    * unbounded seed sets. */
-  def pathsGraphX(spark: SparkSession, edges: DataFrame,
       seeds: DataFrame, maxHops: Int): DataFrame = {
-    import spark.implicits._
-    val seedRdd = seeds.select(col(seeds.columns.head).cast("long"))
-      .as[Long].rdd.map(id => (id, ()))
-    pathsGraphXInit(spark, edges, maxHops,
-      g => g.outerJoinVertices(seedRdd) { (vid, _, s) =>
-        val self: PathSet = if (s.isDefined) Set(Vector(vid))
-          else Set.empty
-        (Set.empty: PathSet, self)
-      })
-  }
-
-  private type PathSet = Set[Vector[Long]]
-
-  private def pathsGraphXInit(spark: SparkSession, edges: DataFrame,
-      maxHops: Int,
-      seedInit: Graph[Unit, Unit] => Graph[(PathSet, PathSet), Unit])
-      : DataFrame = {
     require(maxHops <= 15,
       s"pathsGraphX holds all simple paths in vertex memory; maxHops " +
         s"($maxHops) above the reference's 15-hop cap risks " +
@@ -255,10 +198,17 @@ object Traversals {
     val edgeRdd = edges.select(col("src"), col("dst")).as[(Long, Long)]
       .rdd.map { case (s, d) => Edge(s, d, ()) }
     val graph = Graph.fromEdges(edgeRdd, ())
-    type Paths = PathSet
+    type Paths = Set[Vector[Long]]
+    // seed membership joins into the vertex init (nothing collected to
+    // the driver), for unbounded seed sets
+    val seedRdd = seeds.select(col(seeds.columns.head).cast("long"))
+      .as[Long].rdd.map(id => (id, ()))
     // accumulated = paths already emitted at this vertex;
     // frontier = paths that arrived last superstep (still extending)
-    val init = seedInit(graph)
+    val init = graph.outerJoinVertices(seedRdd) { (vid, _, s) =>
+      val self: Paths = if (s.isDefined) Set(Vector(vid)) else Set.empty
+      (Set.empty: Paths, self)
+    }
     val result = Pregel(init, Set.empty: Paths, maxHops,
       EdgeDirection.Out)(
       // the initial (empty) message must NOT flush the seed frontier;
@@ -288,47 +238,25 @@ object Traversals {
     * dense call graphs where the DataFrame frontier grows large. Returns
     * (id, depth) like [[reachable]].
     *
-    * Seed-set shapes: the `Seq[Long]` overload matches the reference's
-    * point-seed semantics (impact analysis starts from one user-selected
-    * function) and ships the set in the task closure; the `DataFrame`
-    * overload joins seeds into the vertex init (RDD join, nothing
-    * collected to the driver) for unbounded seed sets — e.g. "impact of
-    * every function in this service" at 100 TB.
+    * `seeds` is a single-column frame of vertex ids; membership arrives
+    * at each vertex via `outerJoinVertices` (RDD join, nothing collected
+    * to the driver), so seed sets are unbounded — e.g. "impact of every
+    * function in this service" at 100 TB.
     */
   def reachableGraphX(spark: SparkSession, edges: DataFrame,
-      seedIds: Seq[Long], maxHops: Int): DataFrame = {
-    val seeds = seedIds.toSet
-    reachableGraphXInit(spark, edges, maxHops,
-      g => g.mapVertices((vid, _) =>
-        if (seeds.contains(vid)) (0, Int.MaxValue)
-        else (Int.MaxValue, Int.MaxValue)))
-  }
-
-  /** DataFrame-seed variant: `seeds` is a single-column frame of vertex
-    * ids; membership arrives at each vertex via `outerJoinVertices`. */
-  def reachableGraphX(spark: SparkSession, edges: DataFrame,
       seeds: DataFrame, maxHops: Int): DataFrame = {
-    import spark.implicits._
-    val seedRdd = seeds.select(col(seeds.columns.head).cast("long"))
-      .as[Long].rdd.map(id => (id, ()))
-    reachableGraphXInit(spark, edges, maxHops,
-      g => g.outerJoinVertices(seedRdd)((_, _, s) =>
-        if (s.isDefined) (0, Int.MaxValue)
-        else (Int.MaxValue, Int.MaxValue)))
-  }
-
-  private def reachableGraphXInit(spark: SparkSession, edges: DataFrame,
-      maxHops: Int,
-      seedInit: Graph[Unit, Unit] => Graph[(Int, Int), Unit]): DataFrame = {
     import spark.implicits._
     val edgeRdd = edges.select(col("src"), col("dst")).as[(Long, Long)]
       .rdd.map { case (s, d) => Edge(s, d, ()) }
     val graph = Graph.fromEdges(edgeRdd, ())
+    val seedRdd = seeds.select(col(seeds.columns.head).cast("long"))
+      .as[Long].rdd.map(id => (id, ()))
     val Inf = Int.MaxValue
     // attr = (propagation depth, reported discovery depth): a seed
     // propagates at 0 but its own discovery via a cycle is tracked in the
     // report slot, matching [[reachable]].
-    val init = seedInit(graph)
+    val init = graph.outerJoinVertices(seedRdd)((_, _, s) =>
+      if (s.isDefined) (0, Inf) else (Inf, Inf))
     val result = Pregel(init, Inf, maxHops, EdgeDirection.Out)(
       vprog = (_, attr: (Int, Int), msg: Int) =>
         (math.min(attr._1, msg), math.min(attr._2, msg)),

@@ -279,7 +279,7 @@ object GoFrontend {
       col("path"), element_at(split(col("path"), "/"), -1).as("name"),
       length(col("content")).cast("int").as("size"),
       (size(split(col("content"), "\n")) - 0).as("lineCount"),
-      sha2(col("content"), 256).as("hash"))
+      sha2(col("content"), 256).as("hash"), col("content"))
     val modNodes = ents.select(lit(Labels.Module).as("label"),
       col("pkg").as("name"), concat(lit(service), lit("/"), col("pkg"))
         .as("fqn")).distinct()

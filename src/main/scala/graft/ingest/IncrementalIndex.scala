@@ -69,7 +69,8 @@ object IncrementalIndex {
     endByte: Option[Int] = None, linesOfCode: Option[Int] = None,
     docstring: String = null, complexity: Option[Int] = None,
     isExported: Option[Boolean] = None, size: Option[Int] = None,
-    lineCount: Option[Int] = None, hash: String = null)
+    lineCount: Option[Int] = None, hash: String = null,
+    content: String = null)
 
   /** Bring `store` up to date with `files` (the full current tree as
     * (path, content)); only changed files are parsed. Returns a one-row
@@ -212,7 +213,8 @@ object IncrementalIndex {
     val fileNs = changed.map { case (p, c) =>
       N(Labels.File, name = p.split('/').last, path = p,
         size = Some(c.codePointCount(0, c.length)),
-        lineCount = Some(c.split("\n", -1).length), hash = sha256(c))
+        lineCount = Some(c.split("\n", -1).length), hash = sha256(c),
+        content = c)
     }
     val modNs = ents.map(_._1.pkg).distinct.map(pkg =>
       N(Labels.Module, name = pkg, fqn = s"$service/$pkg"))
@@ -272,7 +274,7 @@ object IncrementalIndex {
         "isExported" -> n.isExported.map(Boolean.box).orNull,
         "size" -> n.size.map(Int.box).orNull,
         "lineCount" -> n.lineCount.map(Int.box).orNull,
-        "hash" -> n.hash)
+        "hash" -> n.hash, "content" -> n.content)
       Row.fromSeq(nodeSchema.fields.toSeq.map(f => m.getOrElse(f.name, null)))
     }
     // duplicate identities inside one delta collapse here, exactly

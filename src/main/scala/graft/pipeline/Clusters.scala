@@ -36,79 +36,13 @@ object Clusters {
       .toDF("node", "cluster_id")
   }
 
-  /** DataFrame engine for the same result (equality-tested alternate,
-    * the spillable path): iterate label = min(own, neighbors') to a
-    * fixpoint. Each round is one shuffle; rounds ≈ the eccentricity of
-    * each component's min node. Throws if `maxIter` rounds pass without
-    * convergence — an unconverged labeling silently merges nothing and
-    * must not masquerade as components.
-    */
-  def connectedComponentsDF(pairs: DataFrame, aCol: String,
-      bCol: String, maxIter: Int = 20): DataFrame = {
-    val fwd = pairs.select(col(aCol).cast("long").as("u"),
-      col(bCol).cast("long").as("v"))
-    val edges = fwd.unionByName(fwd.select(col("v").as("u"),
-        col("u").as("v")))
-      .distinct().localCheckpoint(eager = true)
-    var labels = graft.ops.Iterate.barrier(
-      edges.select(col("u").as("node")).distinct()
-        .withColumn("cluster_id", col("node")))
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIter) {
-      it += 1
-      // candidate label per node: min over self and neighbors' labels.
-      // The node's OWN previous label rides the aggregation (exactly
-      // one own=true row per node), so the changed-count is an observe
-      // metric on the same barrier job — the former join-back + count
-      // action per round is gone (round 12, guide §1.2: new label ≤
-      // old always, so changed ⟺ min < own).
-      val fromNbr = edges
-        .join(labels.withColumnRenamed("node", "v"), Seq("v"))
-        .select(col("u").as("node"), col("cluster_id"),
-          lit(false).as("own"))
-      // nextDf is the dataset the barrier's checkpoint EXECUTES, so
-      // the metric is read off nextDf's executed plan (the observe
-      // node rides through the projection)
-      val nextDf = labels.withColumn("own", lit(true))
-        .unionByName(fromNbr)
-        .groupBy(col("node"))
-        .agg(min(col("cluster_id")).as("cluster_id"),
-          max(when(col("own"), col("cluster_id"))).as("old"))
-        .observe("graft_cc_changed",
-          sum(when(col("cluster_id") < col("old"), 1L).otherwise(0L))
-            .as("chg"))
-        .select(col("node"), col("cluster_id"))
-      val next = graft.ops.Iterate.barrier(nextDf)
-      // a metric miss (plan shape hid the CollectMetricsExec) must cost
-      // one cheap join-back count job, never correctness: new ≤ old
-      // always, so changed ⟺ new < old
-      changed = org.apache.spark.sql.execution.GraftBarrier
-        .collectedMetricRow(nextDf, "graft_cc_changed") match {
-        case Some(r) =>
-          // sum over an empty frame is null ⇒ nothing changed
-          if (r.isNullAt(0)) 0L else r.getAs[Long]("chg")
-        case None =>
-          next.join(labels.withColumnRenamed("cluster_id", "old"),
-              Seq("node"))
-            .where(col("cluster_id") < col("old")).count()
-      }
-      labels = next
-    }
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponentsDF did not converge in $maxIter rounds — " +
-          "raise maxIter (rounds scale with component diameter)")
-    labels
-  }
-
   /** Connected components via alternating large-star/small-star
     * (Kiveris et al. 2014, "Connected Components in MapReduce and
     * Beyond"): converges in O(log²) rounds INDEPENDENT of component
-    * diameter, where [[connectedComponentsDF]]'s min-label loop and
-    * GraphX Pregel both need diameter-many rounds — the difference
-    * between ~10 and ~20 000 shuffles on a chain-shaped graph, and the
-    * reason this is the production CC for web/citation graphs.
+    * diameter, where a min-label loop such as GraphX Pregel needs
+    * diameter-many rounds — the difference between ~10 and ~20 000
+    * shuffles on a chain-shaped graph, and the reason this is the
+    * production CC for web/citation graphs.
     *
     *   - large-star(u): every neighbor v > u re-points to
     *     m = min(Γ(u) ∪ u);

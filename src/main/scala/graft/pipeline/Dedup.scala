@@ -120,32 +120,6 @@ object Dedup {
         col("size_a"), col("size_b"), col("jaccard"))
   }
 
-  /** AllPairs/PPJoin-style prefix-filtered EXACT-threshold Jaccard join
-    * (Bayardo et al. 2007; Xiao et al. 2008): instead of the full
-    * inverted-list join of [[jaccardPairsFromRows]] — whose cost is
-    * Σ df² over EVERY token, dominated by stopwords at 100 TB — each
-    * document indexes only its PREFIX under a global rarest-first token
-    * order: p = |x| − ⌈t·|x|⌉ + 1 tokens. Two documents with
-    * Jaccard ≥ t must share a prefix token (pigeonhole on the overlap
-    * bound), so the candidate join touches only the RARE end of the
-    * vocabulary and the filter is LOSSLESS — the verified output equals
-    * the naive all-pairs result exactly, which is what the oracle
-    * checks. A length filter (1000·min ≥ t₁₀₀₀·max) prunes candidates
-    * before verification.
-    *
-    * `thresholdX1000` is the Jaccard threshold ×1000 (integer, so the
-    * keep test `1000·|∩| ≥ t₁₀₀₀·|∪|` is exact in any engine). Returns
-    * (id_a, id_b, intersection, size_a, size_b, jac_x1000) with
-    * jac_x1000 = ⌊1000·|∩|/|∪|⌋.
-    */
-  def prefixFilteredJaccardPairs(shAll: DataFrame, thresholdX1000: Long)
-      : DataFrame =
-    prefixFilteredJaccardPairsFromDocs(
-      shAll.groupBy(col("doc"))
-        .agg(sort_array(collect_list(col("shingle"))).as("tk"),
-          count(lit(1)).as("sz")),
-      thresholdX1000)
-
   /** One sorted-distinct token-set row per document, computed straight
     * from the source table WITHOUT the explode → groupBy(doc) →
     * collect_list round trip (guide §2.4: that shuffle re-assembles
@@ -178,9 +152,25 @@ object Dedup {
         .agg(sort_array(collect_list(col("shingle"))).as("tk"),
           count(lit(1)).as("sz"))
 
-  /** The PPJoin pipeline over a pre-built (doc, tk sorted-distinct
-    * array, sz) frame — see [[prefixFilteredJaccardPairs]] for the
-    * algorithm contract. */
+  /** AllPairs/PPJoin-style prefix-filtered EXACT-threshold Jaccard join
+    * (Bayardo et al. 2007; Xiao et al. 2008): instead of the full
+    * inverted-list join of [[jaccardPairsFromRows]] — whose cost is
+    * Σ df² over EVERY token, dominated by stopwords at 100 TB — each
+    * document indexes only its PREFIX under a global rarest-first token
+    * order: p = |x| − ⌈t·|x|⌉ + 1 tokens. Two documents with
+    * Jaccard ≥ t must share a prefix token (pigeonhole on the overlap
+    * bound), so the candidate join touches only the RARE end of the
+    * vocabulary and the filter is LOSSLESS — the verified output equals
+    * the naive all-pairs result exactly, which is what the oracle
+    * checks. A length filter (1000·min ≥ t₁₀₀₀·max) prunes candidates
+    * before verification.
+    *
+    * Input: one (doc, tk sorted-distinct array, sz) row per document,
+    * as [[docShingleSets]] builds it. `thresholdX1000` is the Jaccard
+    * threshold ×1000 (integer, so the keep test `1000·|∩| ≥ t₁₀₀₀·|∪|`
+    * is exact in any engine). Returns (id_a, id_b, intersection,
+    * size_a, size_b, jac_x1000) with jac_x1000 = ⌊1000·|∩|/|∪|⌋.
+    */
   def prefixFilteredJaccardPairsFromDocs(docsArr: DataFrame,
       thresholdX1000: Long): DataFrame = {
     // the exact-duplicate collapse below emits within-set pairs
@@ -333,9 +323,9 @@ object Dedup {
     * rows at sf10 — and dumping/sorting it exceeded the box's spill
     * disk; a production 10⁸-pair dedup report ships per-band counts +
     * capped exemplars instead). Input: (id_a, id_b, jac_x1000, …) as
-    * produced by [[prefixFilteredJaccardPairs]]. Output: one row per
-    * (similarity band, exemplar rank ≤ k) — band pair/doc counts with
-    * the k lexicographically-first exemplar pairs.
+    * produced by [[prefixFilteredJaccardPairsFromDocs]]. Output: one
+    * row per (similarity band, exemplar rank ≤ k) — band pair/doc
+    * counts with the k lexicographically-first exemplar pairs.
     *
     * Scale shape: every aggregate here is a hash aggregation with
     * map-side partial combine over O(bands) cells — NO per-band
@@ -417,7 +407,7 @@ object Dedup {
     * Identical output to [[jaccardPairs]], but the ultra-common-shingle
     * join (quadratic when every shingle is in most docs) collapses to
     * |distinct sets|² cheap integer ops. The caller checks the
-    * vocabulary bound (see `smallVocabSize`).
+    * vocabulary bound (see [[jaccardPairsAdaptive]]).
     */
   def jaccardPairsBitmaskFromRows(sh: DataFrame,
       threshold: Double): DataFrame = {
@@ -468,17 +458,11 @@ object Dedup {
         col("jaccard"))
   }
 
-  /** Distinct-shingle count, for choosing the bitmask fast path. */
-  def smallVocabSize(df: DataFrame, textCol: String, n: Int = 1): Long =
-    df.select(TextAnalysis.tokens(col(textCol)).as("_toks"))
-      .select(explode(shinglesFromToks(col("_toks"), n)).as("s"))
-      .agg(countDistinct(col("s"))).collect()(0).getLong(0)
-
   /** Adaptive Jaccard pairs: materialize the shingle rows ONCE, read
     * the distinct-shingle count from them, then run the bitmask path
     * (vocab ≤ 62) or the general equi-join over the same materialized
-    * rows — the one-pass form of the `smallVocabSize` + dispatch
-    * pattern, which otherwise tokenizes the corpus twice. */
+    * rows, so the corpus is tokenized once for both the vocabulary
+    * count and the join. */
   def jaccardPairsAdaptive(df: DataFrame, idCol: String, textCol: String,
       n: Int = 1, threshold: Double = 0.8,
       maxDf: Long = Long.MaxValue): DataFrame = {
@@ -523,34 +507,12 @@ object Dedup {
   private def kmHash(i: Int): Column =
     (col("h1") + lit(i.toLong) * col("h2")) % MinHashP
 
-  /** K min-hash signatures per doc (Kirsch–Mitzenmacher family, one
-    * digest per token). Returns (doc, seed, sig: long). */
-  def minHashSignatures(df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int): DataFrame = {
-    val toks = kmTokenHashes(df.select(col(idCol).as("doc"),
-      explode(tokenSet(col(textCol))).as("tok")))
-    val seeds = df.sparkSession.range(numHashes)
-      .select(col("id").cast("int").as("seed"))
-    toks.crossJoin(broadcast(seeds))
-      .groupBy(col("doc"), col("seed"))
-      .agg(min((col("h1") + col("seed") * col("h2")) % MinHashP)
-        .as("sig"))
-  }
-
-  /** LSH band keys: rowsPerBand signatures concatenated and re-hashed.
-    * Docs agreeing on any band are candidate near-duplicates. */
-  def minHashBands(sigs: DataFrame, rowsPerBand: Int): DataFrame =
-    sigs.withColumn("band", floor(col("seed") / rowsPerBand))
-      .groupBy(col("doc"), col("band"))
-      .agg(md5(concat_ws("|",
-        sort_array(collect_list(struct(col("seed"), col("sig"))))
-          .getField("sig").cast("array<string>"))).as("band_key"))
-
   /** Candidate pairs from banded LSH: (id_a, id_b, shared_bands).
     * All K min-hashes are computed in ONE aggregation over the token rows
-    * (K min() columns) rather than a K-way fan-out — same signatures and
-    * band keys as [[minHashSignatures]]/[[minHashBands]], one shuffle
-    * less and K× fewer hash evaluations shuffled. */
+    * (K min() columns) rather than a K-way (doc, seed) fan-out — one
+    * shuffle less and K× fewer hash evaluations shuffled. Band b's key
+    * is md5 of its rowsPerBand signatures joined by "|"; docs agreeing
+    * on any band key are candidate near-duplicates. */
   def minHashCandidates(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 8, rowsPerBand: Int = 2, shingleN: Int = 1): DataFrame = {
     require(numHashes % rowsPerBand == 0,

@@ -5,17 +5,15 @@ import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`).
   *
-  * Four engine families:
+  * Three engine families:
   *   - brute-force cosine top-k: broadcast the (small) query set against
   *     the corpus — exact, one pass over the corpus, no shuffle of the
   *     corpus side. The right baseline whenever |queries| ≪ |corpus|.
-  *   - random-hyperplane LSH: 'planes'-bit signature per vector from
-  *     deterministic seeded hyperplanes; bucket-join on signature
-  *     prefix bands, re-rank candidates exactly. At 100 TB the bucket
-  *     join replaces the corpus-wide scan per query (recall tunable via
-  *     bands/planes).
-  *   - WTA comparison-bit LSH: signature bits are raw element
-  *     comparisons (no float arithmetic) — same bucket-join shape, but
+  *   - WTA comparison-bit LSH: 'planes'-bit signature per vector whose
+  *     bits are raw element comparisons (no float arithmetic);
+  *     bucket-join on signature bands, re-rank candidates exactly. At
+  *     100 TB the bucket join replaces the corpus-wide scan per query
+  *     (recall tunable via bands/planes), and the signatures are
   *     bit-identical on any engine, so results oracle exactly.
   *   - IVF: nearest-centroid assignment + nprobe-pruned search — the
   *     partition-pruned ANN layout for a centroid-partitioned corpus.
@@ -73,58 +71,6 @@ object Similarity {
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("sim"), col("rank"))
-  }
-
-  /** Deterministic pseudo-random hyperplane component for (plane, dim):
-    * md5-derived value in [-0.5, 0.5). */
-  private def planeComponent(plane: Column, dim: Column): Column =
-    (conv(substring(md5(concat_ws(":", plane, dim)), 1, 8), 16, 10)
-      .cast("double") / lit(4294967296.0)) - 0.5
-
-  /** `planes`-bit signature: bit p = sign of <v, hyperplane_p>. The
-    * plane-weight matrix is a tiny (planes × dims) table built once and
-    * broadcast — the md5-derived weights are computed |planes|·|dims|
-    * times total, not once per corpus row. */
-  def lshSignature(df: DataFrame, idCol: String, vecCol: String,
-      planes: Int): DataFrame = {
-    val spark = df.sparkSession
-    val v = df.select(col(idCol).as("vid"), asDouble(col(vecCol)).as("v"))
-    val planeWeights = spark.range(planes)
-      .select(col("id").cast("int").as("plane"))
-      .crossJoin(spark.range(
-        df.select(size(asDouble(col(vecCol)))).first().getInt(0))
-        .select(col("id").cast("int").as("dim")))
-      .withColumn("w", planeComponent(col("plane"), col("dim")))
-    val withDim = v.select(col("vid"),
-        posexplode(col("v")).as(Seq("dim", "x")))
-      .join(broadcast(planeWeights), Seq("dim"))
-    withDim.groupBy(col("vid"), col("plane"))
-      .agg(sum(col("x") * col("w")).as("proj"))
-      .groupBy(col("vid"))
-      .agg(sum(when(col("proj") > 0,
-        expr("shiftleft(cast(1 as bigint), plane)")).otherwise(0L))
-        .as("lsh_sig"))
-  }
-
-  /** Candidate pairs whose signatures agree on at least one `bandBits`-
-    * wide band; re-ranked by exact cosine downstream. */
-  def lshCandidates(df: DataFrame, idCol: String, vecCol: String,
-      planes: Int = 16, bandBits: Int = 8): DataFrame = {
-    require(planes % bandBits == 0,
-      s"planes ($planes) must be divisible by bandBits ($bandBits) — " +
-        "leftover high bits would silently never be banded")
-    val sigs = lshSignature(df, idCol, vecCol, planes)
-    val nBands = planes / bandBits
-    val banded = sigs.select(col("vid"), col("lsh_sig"),
-        explode(sequence(lit(0), lit(nBands - 1))).as("band"))
-      .withColumn("band_val",
-        expr(s"shiftright(lsh_sig, band * $bandBits) & ${(1 << bandBits) - 1}"))
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") &&
-        col("a.band_val") === col("b.band_val") &&
-        col("a.vid") < col("b.vid"))
-      .select(col("a.vid").as("id_a"), col("b.vid").as("id_b"))
-      .distinct()
   }
 
   // -------------------------------------------------------------------
@@ -443,29 +389,6 @@ object Similarity {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("vid").as("neighbor_id"), col("sim"),
         col("rank"))
-  }
-
-  /** LSH-accelerated approximate top-k: candidates from banded signatures,
-    * exact cosine re-rank. */
-  def lshTopK(df: DataFrame, idCol: String, vecCol: String, k: Int,
-      planes: Int = 16, bandBits: Int = 8, roundTo: Int = 5): DataFrame = {
-    val cands = lshCandidates(df, idCol, vecCol, planes, bandBits)
-    // candidates are undirected; expand to both directions for per-query k
-    val directed = cands.select(col("id_a").as("query_id"),
-        col("id_b").as("neighbor_id"))
-      .unionByName(cands.select(col("id_b").as("query_id"),
-        col("id_a").as("neighbor_id")))
-    val v = df.select(col(idCol).as("vid"), asDouble(col(vecCol)).as("vec"))
-    val scored = directed
-      .join(v.toDF("query_id", "qv"), Seq("query_id"))
-      .join(v.toDF("neighbor_id", "cv"), Seq("neighbor_id"))
-      .withColumn("sim", round(cosineFast(col("qv"), col("cv")), roundTo))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("sim"), col("rank"))
   }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic

@@ -21,17 +21,11 @@ object TextAnalysis {
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  /** BPE-ish subword token estimate: word-boundary pieces plus digit and
-    * punctuation runs (a cheap stand-in for a real BPE vocab — counts the
-    * units a byte-pair tokenizer would not merge across). */
-  def subwordCount(text: Column): Column =
-    size(filter(split(text, "(?=[A-Z])|[^A-Za-z0-9]+"),
-      x => length(x) > 0))
-
-  /** Engine-portable subword estimate: camel-case pieces, lowercase
-    * runs, digit runs — no lookahead, so the same pattern runs on RE2
-    * engines (and codegen'd regexp_extract_all beats the interpreted
-    * `filter` in [[subwordCount]]). */
+  /** BPE-ish subword token estimate: camel-case pieces, lowercase
+    * runs, digit runs (a cheap stand-in for a real BPE vocab — counts
+    * the units a byte-pair tokenizer would not merge across). No
+    * lookahead, so the same pattern runs on RE2 engines, and codegen'd
+    * regexp_extract_all beats an interpreted split + `filter`. */
   def subwordCountPortable(text: Column): Column =
     size(regexp_extract_all(text,
       lit("[A-Z][a-z]*|[a-z]+|[0-9]+"), lit(0)))
@@ -57,21 +51,13 @@ object TextAnalysis {
         .cast("double") / size(toks))
   }
 
-  /** Composite quality score in [0,1] — the shape used by pretraining
-    * data filters: rewards reasonable length and a healthy stopword rate,
-    * penalizes punctuation soup. Deterministic closed form. */
-  def qualityScore(text: Column, nChars: Column): Column = {
-    val lenScore = least(nChars.cast("double") / 500.0, lit(1.0))
-    val swScore = least(stopwordRatio(text) * 5.0, lit(1.0))
-    val punctPenalty = greatest(lit(0.0), lit(1.0) - punctRatio(text) * 4.0)
-    round((lenScore * 0.4 + swScore * 0.3 + punctPenalty * 0.3), 6)
-  }
-
-  /** Integer-exact quality score in parts-per-million — same formula as
-    * [[qualityScore]] but computed entirely in integer arithmetic (`div`
-    * floor division), so any engine produces bit-identical results; no
-    * float rounding boundaries. Takes column NAMES (built as a SQL expr
-    * to use the integer `div` operator). */
+  /** Composite quality score in parts-per-million — the shape used by
+    * pretraining data filters: rewards reasonable length (0.4 weight,
+    * full at 500 chars) and a healthy stopword rate (0.3, full at 20%),
+    * penalizes punctuation soup (0.3, zero at 25%). Computed entirely in
+    * integer arithmetic (`div` floor division), so any engine produces
+    * bit-identical results; no float rounding boundaries. Takes column
+    * NAMES (built as a SQL expr to use the integer `div` operator). */
   def qualityScorePpm(textCol: String, nCharsCol: String): Column = {
     val swList = defaultStopwords.map(w => s"'$w'").mkString(",")
     expr(

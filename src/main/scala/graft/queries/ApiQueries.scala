@@ -172,6 +172,35 @@ object ApiQueries {
         lit("()\n}\n\nfunc "), col("second_fn"), lit("() {\n}\n")))
       .select(col("path"), col("content"))
 
+  /** (|A ∖ B| + |B ∖ A| over node ids, the same over edge keys
+    * (src, dst, relType)) of two graphs, with EXCEPT semantics: both
+    * sides are distinct'd and keys compare null-safe, so a null relType
+    * present on both sides matches. ONE full-outer join job for BOTH
+    * key spaces instead of two EXCEPT jobs each — the kind tag
+    * partitions the unified key space, so the per-kind counts equal
+    * the separate jobs. */
+  def graphSymDiff(aNodes: DataFrame, aEdges: DataFrame,
+      bNodes: DataFrame, bEdges: DataFrame): (Long, Long) = {
+    def tagged(nodes: DataFrame, edges: DataFrame): DataFrame =
+      nodes.select(lit("n").as("kind"), col("id").as("k1"),
+          lit(0L).as("k2"), lit("").as("k3"))
+        .unionByName(edges.select(lit("e").as("kind"),
+          col("src").as("k1"), col("dst").as("k2"),
+          col("relType").as("k3")))
+    val keys = Seq("kind", "k1", "k2", "k3")
+    val a = tagged(aNodes, aEdges).distinct().withColumn("_a", lit(1))
+    val b = tagged(bNodes, bEdges).distinct().withColumn("_b", lit(1))
+    val r = a.as("a").join(b.as("b"),
+        keys.map(k => col(s"a.$k") <=> col(s"b.$k")).reduce(_ && _),
+        "full_outer")
+      .filter(col("_a").isNull || col("_b").isNull)
+      .select(coalesce(col("a.kind"), col("b.kind")).as("kind"))
+      .agg(count(when(col("kind") === "n", lit(1))).as("dn"),
+        count(when(col("kind") === "e", lit(1))).as("de"))
+      .collect()(0)
+    (r.getLong(0), r.getLong(1))
+  }
+
   def q254_incremental_index(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.model.Model.{Labels, RelTypes}
@@ -241,25 +270,8 @@ object ApiQueries {
         .join(names.toDF("dst", "callee"), Seq("dst"))
       val (nCalls, ckCalls) = agg1(callPairs,
         md5i(concat(col("caller"), lit(">"), col("callee"))))
-      // |A ∖ B| + |B ∖ A| as ONE full-outer join job for BOTH key
-      // spaces instead of two EXCEPT jobs each — identical arithmetic
-      // (EXCEPT is distinct-based; both sides are distinct'd here,
-      // the kind tag partitions the unified key space so the per-kind
-      // distinct/full-outer/count equal the two separate jobs)
-      def tagged(st: GraphStore): DataFrame =
-        st.nodes.select(lit("n").as("kind"), col("id").as("k1"),
-            lit(0L).as("k2"), lit("").as("k3"))
-          .unionByName(st.edges.select(lit("e").as("kind"),
-            col("src").as("k1"), col("dst").as("k2"),
-            col("relType").as("k3")))
-      val diffRow = tagged(inc).distinct().withColumn("_a", lit(1))
-        .join(tagged(full).distinct().withColumn("_b", lit(1)),
-          Seq("kind", "k1", "k2", "k3"), "full_outer")
-        .filter(col("_a").isNull || col("_b").isNull)
-        .agg(count(when(col("kind") === "n", lit(1))).as("dn"),
-          count(when(col("kind") === "e", lit(1))).as("de"))
-        .collect()(0)
-      val (diffNodes, diffEdges) = (diffRow.getLong(0), diffRow.getLong(1))
+      val (diffNodes, diffEdges) =
+        graphSymDiff(inc.nodes, inc.edges, full.nodes, full.edges)
       Seq(
         ("calls", nCalls, ckCalls),
         ("changed_files", s.getLong(0), 0L),

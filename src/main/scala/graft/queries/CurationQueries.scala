@@ -2128,8 +2128,9 @@ object CurationQueries {
   // q311 — TextRank keywords (Mihalcea & Tarau 2004): PageRank over
   // the word co-occurrence graph (consecutive non-stopword tokens,
   // symmetrized), run on the SAME integer-ppm PageRank engine as q69
-  // (Centrality.pageRankInteger — 150000/850000 damping, unrolled
-  // DuckDB CTEs emitted from one module so the engines cannot drift).
+  // (Centrality.personalizedPageRankInteger with every node seeded —
+  // 150000/850000 damping, unrolled DuckDB CTEs emitted from one
+  // module so the engines cannot drift).
   // Word ids come from a deterministic vocabulary rank (vocabulary-
   // sized window). Output: top-20 words by rank.
   // -------------------------------------------------------------------
@@ -2171,7 +2172,8 @@ object CurationQueries {
       .join(broadcast(vocab.select(col("w").as("w2"),
         col("wid").as("dst"))), Seq("w2"))
       .select(col("src"), col("dst"))
-    graft.graph.Centrality.pageRankInteger(edges, TrIters)
+    graft.graph.Centrality.personalizedPageRankInteger(edges, lit(true),
+        TrIters)
       .join(broadcast(vocab.select(col("wid").as("id"), col("w"))),
         Seq("id"))
       .select(col("w").as("word"), col("rank_ppm"))
@@ -2199,7 +2201,7 @@ object CurationQueries {
          |JOIN ($vocab) v1 ON v1.w = e.w1
          |JOIN ($vocab) v2 ON v2.w = e.w2""".stripMargin
     s"""WITH ${graft.graph.Centrality
-          .pageRankIntegerSql(edgesSql, TrIters)},
+          .personalizedPageRankIntegerSql(edgesSql, "TRUE", TrIters)},
        |voc AS ($vocab)
        |SELECT voc.w AS word, CAST(r.rank_ppm AS BIGINT) AS rank_ppm
        |FROM r$TrIters r JOIN voc ON voc.wid = r.id

@@ -38,8 +38,7 @@ object GraphQueries {
   // engine, equality-tested in TraversalsSpec. The seed set here is
   // DERIVED (every 97th part key), so it grows with the data — it goes
   // in as a DataFrame (vertex-join init), never collected: the form
-  // that holds at 100 TB. Point lookups (one user-selected function)
-  // may still use the Seq overload.
+  // that holds at 100 TB.
   // ---------------------------------------------------------------------
   def q17_bfs_reach(spark: SparkSession, dir: String): DataFrame = {
     val seeds = Tables.part(spark, dir)
@@ -72,7 +71,7 @@ object GraphQueries {
       .select(expr("p_partkey div 2").as("src"),
         col("p_partkey").as("dst"))
     // doubling engine: ⌈log2 12⌉ = 4 materializations instead of 12
-    // (equality with the linear engine is spec-tested)
+    // (equality with the linear Traversals.closure is spec-tested)
     Traversals.closureTreeDoubling(parentChild, 12)
       .groupBy(col("depth"))
       .agg(count(lit(1)).as("n_pairs"))
@@ -104,8 +103,8 @@ object GraphQueries {
       .select(col("p_partkey").as("id"))
     // Pregel engine (one superstep barrier per hop, no per-level driver
     // scheduling); the DataFrame engine (Traversals.paths) is equality-
-    // tested against it in TraversalsSpec. Derived seed set → DataFrame
-    // overload (vertex-join init, nothing collected to the driver).
+    // tested against it in TraversalsSpec. The derived seed set goes in
+    // as a DataFrame (vertex-join init, nothing collected to the driver).
     Traversals.pathsGraphX(spark, treeEdges(spark, dir), seeds, 15)
       .select(col("start").as("start_id"), col("end").as("end_id"),
         col("depth"), array_join(col("path"), "->").as("path"))
@@ -162,7 +161,8 @@ object GraphQueries {
       .limit(50)
 
   val q69_sql: String =
-    s"""WITH ${graft.graph.Centrality.pageRankIntegerSql(prEdgesSql, PrIters)}
+    s"""WITH ${graft.graph.Centrality
+          .personalizedPageRankIntegerSql(prEdgesSql, "TRUE", PrIters)}
        |SELECT id, CAST(rank_ppm AS BIGINT) AS rank_ppm FROM r$PrIters
        |ORDER BY rank_ppm DESC, id
        |LIMIT 50""".stripMargin

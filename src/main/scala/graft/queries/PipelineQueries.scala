@@ -761,8 +761,8 @@ object PipelineQueries {
   // q29 — LSH-bucketed ANN. Candidates come from WTA comparison-bit
   // signatures (deterministic raw element comparisons — no float
   // arithmetic in the hash), so the whole approximate pipeline is
-  // exactly reproducible by the DuckDB oracle. The random-hyperplane
-  // variant (Similarity.lshTopK) remains the alternative engine.
+  // exactly reproducible by the DuckDB oracle (a random-hyperplane
+  // projection's float sum order is not).
   // -------------------------------------------------------------------
   def q29_ann_lsh(spark: SparkSession, dir: String): DataFrame =
     Similarity.wtaTopK(Tables.embeddings(spark, dir), "vec_id",

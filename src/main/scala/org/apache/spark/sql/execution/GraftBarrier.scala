@@ -128,10 +128,12 @@ object GraftBarrier {
         // spark-sql_2.13-4.1.2 jar); lr.stream and the origin
         // constraints are deliberately dropped (checkpoints are
         // batch, and constraints would re-derive the origin stats
-        // problem). GraftBarrierSpec pins this shape so a Spark
-        // upgrade that reshapes the constructor or stops analyzing
-        // localCheckpoint to a bare LogicalRDD fails CI loudly
-        // instead of silently degrading to the external-Row branch.
+        // problem). Round11Spec's "localCheckpoint analyzes to
+        // LogicalRDD and resetStats preserves …" test pins this shape,
+        // so a Spark upgrade that reshapes the constructor or stops
+        // analyzing localCheckpoint to a bare LogicalRDD fails CI
+        // loudly instead of silently degrading to the external-Row
+        // branch.
         Dataset.ofRows(session, new LogicalRDD(lr.output, lr.rdd,
           lr.outputPartitioning, lr.outputOrdering, lr.isStreaming,
           None)(session, measured, None))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.graph.Centrality
 
@@ -24,11 +24,13 @@ class CentralitySpec extends SparkSpec {
     rank
   }
 
-  test("pageRankInteger matches the naive recurrence exactly") {
+  test("all-seeded personalized PageRank matches the naive recurrence " +
+      "exactly") {
     // a cycle, a chain feeding it, a dangling sink, parallel edges
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L), (5L, 4L),
       (1L, 6L), (4L, 1L)) // (4,1) duplicated: multigraph contribution
-    val got = Centrality.pageRankInteger(edges.toDF("src", "dst"), 5)
+    val got = Centrality
+      .personalizedPageRankInteger(edges.toDF("src", "dst"), lit(true), 5)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === naive(edges, 5))
     // sink node 6 exists with base rank flowing in from 1
@@ -41,7 +43,8 @@ class CentralitySpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L), (5L, 4L),
       (1L, 6L), (4L, 1L)) ++ (1L to 200L).map(i => (i, i * i % 97))
         .filter { case (a, b) => a != b }
-    val df = Centrality.pageRankInteger(edges.toDF("src", "dst"), 6)
+    val df = Centrality
+      .personalizedPageRankInteger(edges.toDF("src", "dst"), lit(true), 6)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val gx = Centrality.pageRankIntegerGraphX(spark,
         edges.toDF("src", "dst"), 6)
@@ -117,14 +120,17 @@ class CentralitySpec extends SparkSpec {
     assert(run() === walks) // pure function of (graph, walk_id)
   }
 
-  test("pageRankInteger is deterministic across partitionings") {
+  test("all-seeded personalized PageRank is deterministic across " +
+      "partitionings") {
     val edges = (1L to 200L).map(i => (i, i * i % 97))
       .filter { case (a, b) => a != b }
     val df1 = edges.toDF("src", "dst").repartition(1)
     val df7 = edges.toDF("src", "dst").repartition(7)
-    val r1 = Centrality.pageRankInteger(df1, 4).collect()
+    val r1 = Centrality.personalizedPageRankInteger(df1, lit(true), 4)
+      .collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val r7 = Centrality.pageRankInteger(df7, 4).collect()
+    val r7 = Centrality.personalizedPageRankInteger(df7, lit(true), 4)
+      .collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(r1 === r7) // integer arithmetic: no partition-order drift
   }

@@ -91,9 +91,9 @@ class CurationSpec extends SparkSpec {
       (12L, 10L), (20L, 21L), (5L, 4L)).toDF("id_a", "id_b")
     val gx = Clusters.connectedComponentsGraphX(spark, pairs, "id_a",
         "id_b").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val df = Clusters.connectedComponentsDF(pairs, "id_a", "id_b")
+    val star = Clusters.connectedComponentsStar(pairs, "id_a", "id_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(gx === df)
+    assert(gx === star)
     assert(gx(3L) === 1L)   // chain collapses to min id
     assert(gx(12L) === 10L) // cycle safe
     assert(gx(4L) === 4L)   // reversed pair still labels by min
@@ -129,14 +129,9 @@ class CurationSpec extends SparkSpec {
     val gx = Clusters.connectedComponentsGraphX(spark, pairs, "id_a",
         "id_b").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(star === gx)
-    // a 200-node chain: min-label needs ~200 rounds (the DF engine
-    // throws at maxIter 20), star converges within its default 30 —
-    // the whole point of the algorithm
+    // a 200-node chain: min-label needs ~200 rounds, star converges
+    // within its default 30 — the whole point of the algorithm
     val chain = (1L to 199L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    intercept[IllegalStateException] {
-      Clusters.connectedComponentsDF(chain, "id_a", "id_b", maxIter = 20)
-        .collect()
-    }
     val labels = Clusters.connectedComponentsStar(chain, "id_a", "id_b")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(labels.map(_._2).toSet === Set(1L))
@@ -153,15 +148,16 @@ class CurationSpec extends SparkSpec {
     assert(s2 === g2)
   }
 
-  test("connectedComponentsDF refuses an unconverged labeling") {
-    // a 12-node chain: min-label needs ~11 rounds to reach the far end
+  test("connectedComponentsStar refuses an unconverged labeling") {
+    // a 12-node chain: the first star round rewires edges, so one
+    // round cannot reach the fixpoint
     val chain = (1L to 11L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     intercept[IllegalStateException] {
-      Clusters.connectedComponentsDF(chain, "id_a", "id_b", maxIter = 3)
+      Clusters.connectedComponentsStar(chain, "id_a", "id_b", maxIter = 1)
         .collect()
     }
-    val ok = Clusters.connectedComponentsDF(chain, "id_a", "id_b",
-      maxIter = 15).collect().map(_.getLong(1)).toSet
+    val ok = Clusters.connectedComponentsStar(chain, "id_a", "id_b")
+      .collect().map(_.getLong(1)).toSet
     assert(ok === Set(1L))
   }
 

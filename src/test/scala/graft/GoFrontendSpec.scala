@@ -337,6 +337,13 @@ class GoFrontendSpec extends SparkSpec {
       def ek(st: GraphStore) = st.edges.select("src", "dst", "relType")
       assert(ek(a).except(ek(b)).count() +
         ek(b).except(ek(a)).count() === 0L, s"$tag: edge sets differ")
+      // File content feeds codegraph_get_source: both paths must write it
+      def fc(st: GraphStore) = st.nodes.filter($"label" === Labels.File)
+        .select("path", "content")
+      assert(fc(a).except(fc(b)).count() +
+        fc(b).except(fc(a)).count() === 0L, s"$tag: File content differs")
+      assert(fc(a).filter($"content".isNull).count() === 0L,
+        s"$tag: a File node has no content")
     }
     val full2 = new GraphStore(spark, s"$dir/full2")
     GoFrontend.ingest(full2, v2.toDF("path", "content"), "svc")

@@ -61,6 +61,46 @@ class IterateSpec extends SparkSpec {
       bare.orderBy("id").collect().toSeq)
   }
 
+  test("barrierCounted returns count() on a non-empty frame, 0 on an " +
+      "empty one") {
+    val df = loopFrame()
+    val (_, n) = Iterate.barrierCounted(df)
+    assert(n === df.count())
+    assert(n === 64L)
+    val (empty, n0) = Iterate.barrierCounted(df.filter(col("id") < 0L))
+    assert(n0 === 0L)
+    assert(empty.isEmpty)
+  }
+
+  test("barrierCounted preserves rows and schema exactly") {
+    val df = loopFrame()
+    val (b, _) = Iterate.barrierCounted(df)
+    assert(b.schema === df.schema)
+    assert(b.collect().sortBy(_.getLong(0)).toSeq ===
+      df.collect().sortBy(_.getLong(0)).toSeq)
+  }
+
+  test("barrierCounted feeds its count into flat statistics") {
+    val fixed = Iterate.barrier(loopFrame()
+      .select(col("id"), col("grp").as("g2")))
+    var state = Iterate.barrierCounted(loopFrame())._1
+    val digits = Seq.newBuilder[Int]
+    for (round <- 1 to 12) {
+      // drop one row per round, so the count changes every round
+      val (next, n) = Iterate.barrierCounted(
+        state.join(fixed, Seq("id")).filter(col("id") > round)
+          .select(col("id"), col("grp")))
+      assert(n === 64L - round)
+      assert(next.queryExecution.optimizedPlan.stats.rowCount ===
+        Some(BigInt(n)), s"round $round: rowCount is not the count")
+      digits += Iterate.statDigits(next)
+      state = next
+    }
+    val d = digits.result()
+    // 52..63 rows: at most one digit apart, never the multiplied trap
+    assert(d.max - d.min <= 1, s"barrierCounted loop statistic drifted: $d")
+  }
+
   test("concurrently returns both sides' results in argument order") {
     val (a, b) = Iterate.concurrently({ Thread.sleep(200); "left" }, 42)
     assert(a === "left")

@@ -112,6 +112,38 @@ class McpServerSpec extends SparkSpec {
     assert(!text.contains("GAP-ZONE")) // byte span, not whole file
   }
 
+  test("codegraph_get_source returns the exact function text after a Go " +
+      "ingest and after a reindex of the edited file") {
+    import spark.implicits._
+    import graft.ingest.{GoFrontend, IncrementalIndex}
+    val fn1 = "func Add(a, b int) int {\n\treturn a + b\n}"
+    val fn2 = "func Add(a, b int) int {\n\ts := a + b\n\treturn s\n}"
+    def file(fn: String) = Seq(("svc/p/add.go",
+        s"package p\n\n// Add sums.\n$fn\n\nfunc Other() {\n}\n"))
+      .toDF("path", "content")
+    val dir = java.nio.file.Files.createTempDirectory("graft-getsrc")
+    val store = new graft.store.GraphStore(spark, dir.toString)
+    def source(): String = {
+      // a server binds the store's frames when built, so each check
+      // builds one over the current graph
+      val r = parse(new McpServer(store.nodes, store.edges).handleLine(
+          """{"jsonrpc":"2.0","id":9,"method":"tools/call","params":
+            |{"name":"codegraph_get_source","arguments":
+            |{"function_name":"Add"}}}""".stripMargin.replace("\n", ""))
+        .getOrElse(fail("no response")))
+      assert(r \ "result" \ "isError" === JNothing, toolTextOf(r))
+      toolTextOf(r)
+    }
+    try {
+      GoFrontend.ingest(store, file(fn1), "svc")
+      assert(source() ===
+        s"Source code for function 'Add':\n\n```go\n$fn1\n```\n")
+      IncrementalIndex.reindex(store, file(fn2), "svc").collect()
+      assert(source() ===
+        s"Source code for function 'Add':\n\n```go\n$fn2\n```\n")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
+
   test("codegraph_get_source on a missing function is a tool error") {
     val r = call(
       """{"jsonrpc":"2.0","id":6,"method":"tools/call","params":

@@ -68,17 +68,6 @@ class PipelineSpec extends SparkSpec {
     assert(top(1).getAs[Long]("neighbor_id") === 3L)
   }
 
-  test("lshTopK surfaces identical vectors (same signature bucket)") {
-    val vecs = (0 until 20).map(i =>
-      (i.toLong, Array.tabulate(8)(j =>
-        if (i % 2 == 0) math.sin(j + 1).toFloat else math.cos(j + 1).toFloat)))
-      .toDF("vec_id", "embedding")
-    val out = Similarity.lshTopK(vecs, "vec_id", "embedding", k = 3)
-    val forZero = out.filter($"query_id" === 0L).collect()
-    assert(forZero.nonEmpty)
-    assert(forZero.head.getAs[Double]("sim") === 1.0) // another even vector
-  }
-
   test("text analysis: counts, ratios, langId on hand samples") {
     val t = Seq(
       (1L, "The cat and the dog play in the garden with the ball"),

@@ -292,16 +292,17 @@ class Round11Spec extends SparkSpec {
   // Jaccard threshold domain guard (ADVICE r10 #3)
   // ------------------------------------------------------------------
 
-  test("prefixFilteredJaccardPairs rejects thresholds outside " +
+  test("prefixFilteredJaccardPairsFromDocs rejects thresholds outside " +
       "[0, 1000] where the exact-collapse equivalence breaks") {
-    val sh = Seq((1L, "x"), (2L, "x")).toDF("doc", "shingle")
+    val docs = graft.pipeline.Dedup.docShingleSets(
+      Seq((1L, "x"), (2L, "x")).toDF("doc_id", "text"), "doc_id", "text", 1)
     val e = intercept[IllegalArgumentException] {
-      graft.pipeline.Dedup.prefixFilteredJaccardPairs(sh, 1001L)
+      graft.pipeline.Dedup.prefixFilteredJaccardPairsFromDocs(docs, 1001L)
     }
     assert(e.getMessage.contains("thresholdX1000"))
     // the valid boundary still works
     val ok = graft.pipeline.Dedup
-      .prefixFilteredJaccardPairs(sh, 1000L).collect()
+      .prefixFilteredJaccardPairsFromDocs(docs, 1000L).collect()
     assert(ok.length === 1 && ok(0).getAs[Long]("jac_x1000") === 1000L)
   }
 
@@ -314,8 +315,8 @@ class Round11Spec extends SparkSpec {
     val sf = "/root/testdata/sf0.001"
     val bandWidth = 10L; val k = 3
     // ground truth: the exact pair set the report summarizes
-    val pairs = graft.pipeline.Dedup.prefixFilteredJaccardPairs(
-        graft.pipeline.Dedup.shingleRows(
+    val pairs = graft.pipeline.Dedup.prefixFilteredJaccardPairsFromDocs(
+        graft.pipeline.Dedup.docShingleSets(
           Tables.documents(spark, sf), "doc_id", "text", 1), 900L)
       .select("id_a", "id_b", "jac_x1000")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))

@@ -19,9 +19,10 @@ class ScaleAlgoSpec extends SparkSpec {
   // ----------------------------------------------------------------
 
   test("prefix-filtered Jaccard join equals the naive all-pairs result") {
-    val sh = Dedup.shingleRows(Tables.documents(spark, sf),
-      "doc_id", "text", 1)
-    val fast = Dedup.prefixFilteredJaccardPairs(sh, 900L)
+    val docs = Tables.documents(spark, sf)
+    val sh = Dedup.shingleRows(docs, "doc_id", "text", 1)
+    val fast = Dedup.prefixFilteredJaccardPairsFromDocs(
+        Dedup.docShingleSets(docs, "doc_id", "text", 1), 900L)
       .select("id_a", "id_b", "intersection", "size_a", "size_b")
     val naive = Dedup.jaccardPairsFromRows(sh, 0.9, Long.MaxValue)
       .select("id_a", "id_b", "intersection", "size_a", "size_b")

@@ -28,7 +28,8 @@ class TraversalsSpec extends SparkSpec {
     val df = Traversals.reachable(cyc, Seq(1L).toDF("id"), 10).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(df === Map(2L -> 1, 1L -> 2))
-    val gx = Traversals.reachableGraphX(spark, cyc, Seq(1L), 10).collect()
+    val gx = Traversals.reachableGraphX(spark, cyc, Seq(1L).toDF("id"), 10)
+      .collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(gx === df)
   }
@@ -51,14 +52,14 @@ class TraversalsSpec extends SparkSpec {
     assert(got.contains(List(1L, 3L, 4L, 5L, 2L)))
   }
 
-  test("closureTreeDoubling equals closureTree on a deep chain + forest") {
+  test("closureTreeDoubling equals closure on a deep chain + forest") {
     // chain 1→2→…→20 plus a branching forest
     val chain = (1L until 20L).map(i => (i, i + 1))
     val forest = Seq((100L, 101L), (100L, 102L), (101L, 103L),
       (101L, 104L), (103L, 105L))
     val es = (chain ++ forest).toDF("src", "dst")
     for (cap <- Seq(1, 2, 5, 12, 30)) {
-      val linear = Traversals.closureTree(es, cap).collect()
+      val linear = Traversals.closure(es, cap).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       val doubling = Traversals.closureTreeDoubling(es, cap).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
@@ -70,7 +71,8 @@ class TraversalsSpec extends SparkSpec {
     val es = Seq((1L, 1L), (1L, 2L)).toDF("src", "dst")
     val df = Traversals.paths(es, Seq(1L).toDF("id"), 3).collect()
       .map(r => r.getSeq[Long](r.fieldIndex("path")).toList).toSet
-    val gx = Traversals.pathsGraphX(spark, es, Seq(1L), 3).collect()
+    val gx = Traversals.pathsGraphX(spark, es, Seq(1L).toDF("id"), 3)
+      .collect()
       .map(r => r.getSeq[Long](r.fieldIndex("path")).toList).toSet
     assert(df === Set(List(1L, 2L)))
     assert(gx === df)
@@ -79,44 +81,30 @@ class TraversalsSpec extends SparkSpec {
   test("GraphX Pregel path enumeration agrees with DataFrame paths") {
     def canon(rows: Array[org.apache.spark.sql.Row]): Set[List[Long]] =
       rows.map(r => r.getSeq[Long](r.fieldIndex("path")).toList).toSet
-    val df = canon(Traversals.paths(edges, Seq(1L).toDF("id"), 10)
-      .collect())
-    val gx = canon(Traversals.pathsGraphX(spark, edges, Seq(1L), 10)
-      .collect())
-    assert(gx === df)
-    // depth caps agree too
-    val df2 = canon(Traversals.paths(edges, Seq(1L).toDF("id"), 2)
-      .collect())
-    val gx2 = canon(Traversals.pathsGraphX(spark, edges, Seq(1L), 2)
-      .collect())
-    assert(gx2 === df2)
+    // one seed, then a multi-seed set including a seed absent from the
+    // graph (vanishes in both engines) and one mid-cycle
+    for (seeds <- Seq(Seq(1L), Seq(1L, 5L, 99L))) {
+      val s = seeds.toDF("id")
+      val df = canon(Traversals.paths(edges, s, 10).collect())
+      val gx = canon(Traversals.pathsGraphX(spark, edges, s, 10).collect())
+      assert(gx === df, s"seeds=$seeds")
+      assert(gx.nonEmpty)
+      // depth caps agree too
+      val df2 = canon(Traversals.paths(edges, s, 2).collect())
+      val gx2 = canon(Traversals.pathsGraphX(spark, edges, s, 2).collect())
+      assert(gx2 === df2, s"seeds=$seeds")
+    }
   }
 
   test("GraphX Pregel reachability agrees with DataFrame BFS") {
-    val df = Traversals.reachable(edges, Seq(1L).toDF("id"), 10).collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val gx = Traversals.reachableGraphX(spark, edges, Seq(1L), 10).collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(df === gx)
-  }
-
-  test("DataFrame-seed overloads equal the collected-seed variants") {
-    // multi-seed set, including a seed that is absent from the graph
-    // (vanishes in both variants) and one mid-cycle
-    val seedSeq = Seq(1L, 5L, 99L)
-    val seedDf = seedSeq.toDF("id")
-    val rSeq = Traversals.reachableGraphX(spark, edges, seedSeq, 10)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val rDf = Traversals.reachableGraphX(spark, edges, seedDf, 10)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(rDf === rSeq)
-    def canon(rows: Array[org.apache.spark.sql.Row]): Set[List[Long]] =
-      rows.map(r => r.getSeq[Long](r.fieldIndex("path")).toList).toSet
-    val pSeq = canon(Traversals.pathsGraphX(spark, edges, seedSeq, 10)
-      .collect())
-    val pDf = canon(Traversals.pathsGraphX(spark, edges, seedDf, 10)
-      .collect())
-    assert(pDf === pSeq)
-    assert(rDf.nonEmpty && pDf.nonEmpty)
+    for (seeds <- Seq(Seq(1L), Seq(1L, 5L, 99L))) {
+      val s = seeds.toDF("id")
+      val df = Traversals.reachable(edges, s, 10).collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap
+      val gx = Traversals.reachableGraphX(spark, edges, s, 10).collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap
+      assert(df === gx, s"seeds=$seeds")
+      assert(gx.nonEmpty)
+    }
   }
 }
