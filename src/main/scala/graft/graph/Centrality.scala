@@ -93,18 +93,16 @@ object Centrality {
     def normalize(rawDf: DataFrame, out: String): DataFrame = {
       // the max rides the barrier job as an observe metric (read
       // synchronously off the executed plan — see
-      // GraftBarrier.collectedMetricRow) and lands in the projection
+      // Iterate.observed) and lands in the projection
       // as a LITERAL: the former agg + crossJoin(broadcast) shape paid
       // a 1-row aggregation job and a broadcast build per half-round
       // (round 12, guide §1.2). Exact same value, exact same output.
       val rawObs = rawDf.observe("graft_hits_max", max(col("v")).as("m"))
       val raw = graft.ops.Iterate.barrier(rawObs)
-      // a metric miss (plan shape hid the CollectMetricsExec) must cost
-      // one cheap 1-row agg job over the materialized barrier, never
-      // correctness — the exact value either way
-      val mRow = org.apache.spark.sql.execution.GraftBarrier
-        .collectedMetricRow(rawObs, "graft_hits_max")
-        .getOrElse(raw.agg(max(col("v")).as("m")).head())
+      // a metric miss costs one cheap 1-row agg job over the
+      // materialized barrier — the exact value either way
+      val mRow = graft.ops.Iterate.observed(rawObs, "graft_hits_max")(
+        raw.agg(max(col("v")).as("m")).head())
       // max over an empty frame is null; the projection has no rows
       // then, so any non-zero divisor is equivalent
       val m = if (mRow.isNullAt(0)) 1L else mRow.getAs[Long]("m")

@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Iterate
 import graft.ops.Iterate.BarrierOps
 
 /** Community detection — deterministic label propagation.
@@ -213,47 +214,35 @@ object Communities {
     */
   def maximalIndependentSet(nodes: DataFrame, edges: DataFrame,
       maxRounds: Int = 64): DataFrame = {
-    var act = nodes.select(col("v"), col("h")).localCheckpoint(true)
     val ed = edges.select(col("u"), col("w")).localCheckpoint(true)
-    var out: DataFrame = null
-    var r = 0
-    var remaining = act.count()
-    while (remaining > 0) {
-      r += 1
-      require(r <= maxRounds,
-        s"MIS did not converge in $maxRounds rounds ($remaining active)")
-      // nodes having an active neighbour with a smaller priority
+    // round state = the active set, each node flagged _lost when it has
+    // an active neighbour with a smaller priority: winners (_lost null)
+    // and losers PARTITION the active set, so ONE materialization per
+    // round holds both
+    def flag(act: DataFrame): DataFrame = {
       val losers = ed
         .join(act.select(col("v").as("u"), col("h").as("hu")), "u")
         .join(act.select(col("v").as("w"), col("h").as("hw")), "w")
         .filter(col("hw") < col("hu"))
         .select(col("u").as("v")).distinct()
-      // winners and losers PARTITION act: one flagged materialization
-      // replaces the former winners anti-join barrier, and the next
-      // active set anti-joins only the winners' NEIGHBOURS (the
-      // winners themselves are already excluded by the flag; a
-      // left_anti tolerates duplicate right-side rows, so no distinct)
-      val flagged = act
-        .join(losers.withColumn("_lost", lit(true)), Seq("v"),
-          "left_outer")
-        .barrier
-      val winners = flagged.filter(col("_lost").isNull)
-      // remaining-count rides the barrier as an observe metric — no
-      // separate count() job per round (Iterate.barrierCounted)
-      val (nextAct, nextRemaining) = graft.ops.Iterate.barrierCounted(
-        flagged.filter(col("_lost").isNotNull)
-          .select(col("v"), col("h"))
-          .join(ed.join(winners.select(col("v").as("u")), "u")
-            .select(col("w").as("v")), Seq("v"), "left_anti"))
-      act = nextAct
-      remaining = nextRemaining
-      val w = winners.select(col("v").as("node"), lit(r).as("round"))
-      out = if (out == null) w else out.unionAll(w)
+      act.join(losers.withColumn("_lost", lit(true)), Seq("v"),
+        "left_outer")
     }
-    if (out == null)
-      nodes.sparkSession.emptyDataFrame
-        .select(lit(0L).as("node"), lit(0).as("round")).limit(0)
-    else out
+    def winners(f: DataFrame): DataFrame = f.filter(col("_lost").isNull)
+    // the next active set is this round's losers minus the winners'
+    // NEIGHBOURS (a left_anti tolerates duplicate right-side rows, so
+    // no distinct). Convergence shows as an empty round one past the
+    // last winning round, hence maxRounds + 1.
+    Iterate.fixpoint("MIS",
+        flag(nodes.select(col("v"), col("h")).localCheckpoint(true)),
+        maxRounds + 1, mustConverge = true) { rounds =>
+      val f = rounds.last._1
+      flag(f.filter(col("_lost").isNotNull).select(col("v"), col("h"))
+        .join(ed.join(winners(f).select(col("v").as("u")), "u")
+          .select(col("w").as("v")), Seq("v"), "left_anti"))
+    }.zipWithIndex.map { case ((f, _), i) =>
+      winners(f).select(col("v").as("node"), lit(i + 1).as("round"))
+    }.reduce(_ unionAll _)
   }
 
   /** DuckDB mirror of [[maximalIndependentSet]], emitted as UNROLLED
@@ -302,50 +291,39 @@ object Communities {
     * admitted each edge. Fails loudly past `maxRounds`. */
   def maximalMatching(edges: DataFrame, maxRounds: Int = 64)
       : DataFrame = {
-    var live = edges.select(col("u"), col("w"), col("h"))
-      .localCheckpoint(true)
-    var out: DataFrame = null
-    var r = 0
-    var remaining = live.count()
-    while (remaining > 0) {
-      r += 1
-      require(r <= maxRounds,
-        s"matching did not converge in $maxRounds rounds")
+    val key = struct(col("h"), col("u"), col("w"))
+    // round state = the live edges, each flagged _m when its priority
+    // is the maximum at both endpoints (the round's matched edges)
+    def flag(live: DataFrame): DataFrame = {
       val inc = live.select(col("u").as("v"), col("h"), col("u"),
           col("w"))
         .unionAll(live.select(col("w").as("v"), col("h"), col("u"),
           col("w")))
-      val mv = inc.groupBy(col("v"))
-        .agg(max(struct(col("h"), col("u"), col("w"))).as("m"))
-      val matched = live
+      val mv = inc.groupBy(col("v")).agg(max(key).as("m"))
+      live
         .join(mv.select(col("v").as("u"), col("m").as("ma")), "u")
         .join(mv.select(col("v").as("w"), col("m").as("mb")), "w")
-        .filter(struct(col("h"), col("u"), col("w")) === col("ma") &&
-          struct(col("h"), col("u"), col("w")) === col("mb"))
-        .select(col("u"), col("w"))
-        .barrier
-      // left_anti tolerates duplicate right-side rows — the former
-      // distinct() on the matched-endpoint set was a pure extra
-      // exchange (guide §2.4)
+        .select(col("u"), col("w"), col("h"),
+          (key === col("ma") && key === col("mb")).as("_m"))
+    }
+    // the next live set drops every edge touching a matched endpoint;
+    // left_anti tolerates duplicate right-side rows (guide §2.4).
+    // Convergence is the empty round after the last matching one.
+    Iterate.fixpoint("matching",
+        flag(edges.select(col("u"), col("w"), col("h"))
+          .localCheckpoint(true)),
+        maxRounds + 1, mustConverge = true) { rounds =>
+      val matched = rounds.last._1.filter(col("_m"))
       val mvs = matched.select(col("u").as("v"))
         .unionAll(matched.select(col("w").as("v")))
-      // remaining-count rides the barrier (Iterate.barrierCounted) —
-      // no separate count() job per round
-      val (nextLive, nextRemaining) = graft.ops.Iterate.barrierCounted(
-        live
-          .join(mvs.select(col("v").as("u")), Seq("u"), "left_anti")
-          .join(mvs.select(col("v").as("w")), Seq("w"), "left_anti"))
-      live = nextLive
-      remaining = nextRemaining
-      val o = matched.select(lit(r.toLong).as("round"), col("u"),
+      flag(rounds.last._1.filter(!col("_m"))
+        .select(col("u"), col("w"), col("h"))
+        .join(mvs.select(col("v").as("u")), Seq("u"), "left_anti")
+        .join(mvs.select(col("v").as("w")), Seq("w"), "left_anti"))
+    }.zipWithIndex.map { case ((f, _), i) =>
+      f.filter(col("_m")).select(lit(i + 1L).as("round"), col("u"),
         col("w"))
-      out = if (out == null) o else out.unionAll(o)
-    }
-    if (out == null)
-      edges.sparkSession.emptyDataFrame
-        .select(lit(0L).as("round"), lit(0L).as("u"), lit(0L).as("w"))
-        .limit(0)
-    else out
+    }.reduce(_ unionAll _)
   }
 
   /** DuckDB mirror of [[maximalMatching]] as unrolled round CTEs.

@@ -1,8 +1,9 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Iterate
 import graft.pipeline.Sampling
 
 /** Minimum spanning tree by Borůvka (1926) with randomized star
@@ -26,12 +27,6 @@ object Mst {
 
   private def coin(c: Column, round: Int): Column =
     pmod(Sampling.hash60("coin", c * 131 + round), lit(2L))
-
-  /** The loop's materialization barrier — lineage truncation WITH a
-    * statistics reset; see [[graft.ops.Iterate.barrier]] for why a
-    * bare localCheckpoint multiplies sizeInBytes round over round. */
-  private def barrier(df: DataFrame): DataFrame =
-    graft.ops.Iterate.barrier(df)
 
   /** Run Borůvka to convergence (no cross-component edge left).
     * `vertices` must select (v); `edges` (a, b, w) CANONICAL a < b,
@@ -77,7 +72,7 @@ object Mst {
     // rows reference the merge-map checkpoints, so the terminal union
     // replays nothing.
     val RelabelDepth = 4
-    var (ec, ecn) = graft.ops.Iterate.barrierCounted(
+    var (ec, ecn) = Iterate.barrierCounted(
       edges.filter(col("a") =!= col("b"))
         .select(col("a"), col("b"), col("w"),
           col("a").as("ca"), col("b").as("cb")))
@@ -86,12 +81,10 @@ object Mst {
     var out: DataFrame = null
     var r = 0
     var done = ecn == 0
-    val debug = sys.env.contains("GRAFT_MST_DEBUG")
     while (!done) {
       r += 1
       require(r <= maxRounds,
         s"Boruvka did not converge in $maxRounds rounds")
-      val t0 = System.nanoTime()
       // both orientations from ONE scan (explode), not two unionAll
       // branches — halves the map work feeding the per-component min
       // (guide §2.3)
@@ -115,12 +108,10 @@ object Mst {
           coin(col("cv"), r) === 1L)
         .observe(mrgName, count(lit(1)).as("n"))
       val cp = dfo.localCheckpoint(eager = true)
-      val selN = org.apache.spark.sql.execution.GraftBarrier
-        .collectedMetricRow(dfo, selName)
-        .map(_.getAs[Long]("n")).getOrElse(sel.count())
-      val mrgN = org.apache.spark.sql.execution.GraftBarrier
-        .collectedMetricRow(dfo, mrgName)
-        .map(_.getAs[Long]("n")).getOrElse(cp.count())
+      val selN = Iterate.observed(dfo, selName)(Row(sel.count()))
+        .getLong(0)
+      val mrgN = Iterate.observed(dfo, mrgName)(Row(cp.count()))
+        .getLong(0)
       if (selN == 0) done = true
       else {
         val merges = org.apache.spark.sql.execution.GraftBarrier
@@ -143,17 +134,12 @@ object Mst {
           .filter(col("ca") =!= col("cb"))
         depth += 1
         if (depth >= RelabelDepth) {
-          val (ec2, _) = graft.ops.Iterate.barrierCounted(ecLazy)
+          val (ec2, _) = Iterate.barrierCounted(ecLazy)
           ec = ec2
           ecLazy = ec
           depth = 0
         }
       }
-      if (debug)
-        println(f"MSTDEBUG round $r done=$done depth=$depth " +
-          f"dt=${(System.nanoTime() - t0) / 1e9}%.2f " +
-          s"statDigits=${ecLazy.queryExecution.optimizedPlan.stats
-            .sizeInBytes.toString.length}")
     }
     if (out == null)
       vertices.sparkSession.emptyDataFrame

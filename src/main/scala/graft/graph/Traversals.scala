@@ -6,7 +6,6 @@ import org.apache.spark.storage.StorageLevel
 import org.apache.spark.graphx.{Edge, Graph, Pregel, EdgeDirection, EdgeTriplet}
 
 import graft.ops.Iterate
-import graft.ops.Iterate.BarrierOps
 
 /** Variable-length traversal layer — the one capability with no Catalyst
   * analog (SURVEY §4.2). Implements the reference's bounded var-length
@@ -39,31 +38,22 @@ object Traversals {
   def reachable(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
+    def expand(frontier: DataFrame): DataFrame =
+      frontier.join(e, frontier("id") === e("src"))
+        .select(e("dst").as("id")).distinct()
     try {
-      var frontier = Iterate.barrier(
-        seeds.select(col("id")).distinct())
       // found = nodes discovered via ≥1 edge; seeds are NOT pre-seeded
-      // here so a cycle can rediscover them. Kept as a LAZY union of the
-      // per-level checkpointed frontiers: one materialization job per
-      // superstep (the new frontier), not two — the union is never
-      // re-copied.
-      var levels = Vector.empty[DataFrame]
-      var depth = 0
-      while (depth < maxHops && !frontier.isEmpty) {
-        depth += 1
-        val expanded = frontier.join(e, frontier("id") === e("src"))
-          .select(e("dst").as("id")).distinct()
-        val next = Iterate.barrier(
-          if (levels.isEmpty) expanded
-          else expanded.join(levels.map(_.select("id"))
-            .reduce(_ unionByName _), Seq("id"), "left_anti"))
-        levels = levels :+ next.withColumn("depth", lit(depth))
-        frontier = next
-      }
-      if (levels.isEmpty)
-        seeds.select(col("id")).withColumn("depth", lit(0))
-          .filter(lit(false))
-      else levels.reduce(_ unionByName _)
+      // here so a cycle can rediscover them. The answer is a LAZY union
+      // of the per-level checkpointed frontiers: one materialization
+      // job per superstep, the union is never re-copied.
+      Iterate.fixpoint("reachable",
+          expand(seeds.select(col("id")).distinct())
+            .withColumn("depth", lit(1)), maxHops) { levels =>
+        expand(levels.last._1)
+          .join(levels.map(_._1.select("id")).reduce(_ unionByName _),
+            Seq("id"), "left_anti")
+          .withColumn("depth", lit(levels.size + 1))
+      }.map(_._1).reduce(_ unionByName _)
     } finally e.unpersist()
   }
 
@@ -77,28 +67,20 @@ object Traversals {
     val e = edges.select(col("src"), col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      var level = Iterate.barrier(
-        e.select(col("src").as("ancestor"),
-          col("dst").as("descendant"), lit(1).as("depth")))
-      // accumulator = LAZY union of checkpointed levels — one
-      // materialization job per level, the union is never re-copied
-      var levels = Vector(level)
-      var d = 1
-      while (d < maxDepth && !level.isEmpty) {
-        d += 1
-        val seen = levels.map(_.select(col("ancestor"), col("descendant")))
-          .reduce(_ unionByName _)
-        val next = level.join(e, level("descendant") === e("src"))
+      // lazy union of checkpointed levels (see [[reachable]])
+      Iterate.fixpoint("closure",
+          e.select(col("src").as("ancestor"), col("dst").as("descendant"),
+            lit(1).as("depth")), maxDepth) { levels =>
+        val level = levels.last._1
+        val seen = levels.map(_._1.select(col("ancestor"),
+          col("descendant"))).reduce(_ unionByName _)
+        level.join(e, level("descendant") === e("src"))
           .select(level("ancestor"), e("dst").as("descendant"),
-            lit(d).as("depth"))
+            lit(levels.size + 1).as("depth"))
           // keep min-depth pairs only (DISTINCT-node semantics)
           .join(seen, Seq("ancestor", "descendant"), "left_anti")
           .distinct()
-          .barrier
-        levels = levels :+ next
-        level = next
-      }
-      levels.reduce(_ unionByName _)
+      }.map(_._1).reduce(_ unionByName _)
     } finally e.unpersist()
   }
 
@@ -148,25 +130,20 @@ object Traversals {
       .filter(col("src") =!= col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      var level = Iterate.barrier(
-        seeds.select(col("id").as("start"))
-          .join(e, col("start") === e("src"))
-          .select(col("start"), e("dst").as("end"), lit(1).as("depth"),
-            array(col("start"), col("dst")).as("path")))
-      // lazy union of checkpointed levels (see [[closure]])
-      var levels = Vector(level)
-      var d = 1
-      while (d < maxHops && !level.isEmpty) {
-        d += 1
-        val next = Iterate.barrier(
-          level.join(e, level("end") === e("src"))
-            .filter(!array_contains(level("path"), e("dst"))) // simple
-            .select(level("start"), e("dst").as("end"), lit(d).as("depth"),
-              concat(level("path"), array(e("dst"))).as("path")))
-        levels = levels :+ next
-        level = next
-      }
-      levels.reduce(_ unionByName _)
+      // lazy union of checkpointed levels (see [[reachable]])
+      Iterate.fixpoint("paths",
+          seeds.select(col("id").as("start"))
+            .join(e, col("start") === e("src"))
+            .select(col("start"), e("dst").as("end"), lit(1).as("depth"),
+              array(col("start"), col("dst")).as("path")),
+          maxHops) { levels =>
+        val level = levels.last._1
+        level.join(e, level("end") === e("src"))
+          .filter(!array_contains(level("path"), e("dst"))) // simple
+          .select(level("start"), e("dst").as("end"),
+            lit(levels.size + 1).as("depth"),
+            concat(level("path"), array(e("dst"))).as("path"))
+      }.map(_._1).reduce(_ unionByName _)
     } finally e.unpersist()
   }
 

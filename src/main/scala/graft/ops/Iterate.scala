@@ -1,10 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.GraftBarrier
 
-/** Materialization barrier for iterative DataFrame loops (Pregel-style
-  * fixpoints: MST, SALSA, HITS, power iteration, LPA, coloring,
-  * matching).
+/** Materialization barrier and the one loop driver for iterative
+  * DataFrame loops (Pregel-style fixpoints: MST, SALSA, HITS, power
+  * iteration, LPA, coloring, matching, traversals).
+  *
+  * [[fixpoint]] is the one loop driver: a convergence loop states
+  * only its step and, when "empty" is not enough, its `done` test.
+  * Fixed-round loops (`for` + `.barrier`) need no driver.
   *
   * `localCheckpoint` truncates the LINEAGE but carries the origin
   * plan's `sizeInBytes` statistic forward — and in a loop whose next
@@ -34,8 +39,7 @@ object Iterate {
     * the q347 coloring loop whose per-round anti joins ride the
     * checkpoint's hash partitioning). */
   def barrier(df: DataFrame): DataFrame =
-    org.apache.spark.sql.execution.GraftBarrier.resetStats(
-      df.localCheckpoint(eager = true))
+    GraftBarrier.resetStats(df.localCheckpoint(eager = true))
     // NOT barrierCounted: CollectMetrics evaluates its aggregate
     // row-by-row on every materialized row and splits the codegen
     // pipeline — measured as a uniform per-barrier cost across the
@@ -59,18 +63,53 @@ object Iterate {
     import org.apache.spark.sql.functions.{count, lit}
     val dfo = df.observe("graft_barrier_count", count(lit(1)).as("n"))
     val cp = dfo.localCheckpoint(eager = true)
-    // SYNCHRONOUS accumulator read off the executed plan — the
-    // Observation listener path waits on the async listener bus and
-    // its drain latency showed up as a uniform per-barrier cost in
-    // every loop (see GraftBarrier.collectedMetricRow). Fall back to
-    // a direct count of the materialized blocks if the node is not
-    // found (never wrong, just one cheap extra job).
-    val n = org.apache.spark.sql.execution.GraftBarrier
-      .collectedMetricRow(dfo, "graft_barrier_count")
-      .map(_.getAs[Long]("n"))
-      .getOrElse(cp.count())
-    (org.apache.spark.sql.execution.GraftBarrier.resetStats(cp, Some(n)),
-      n)
+    val n = observed(dfo, "graft_barrier_count")(Row(cp.count()))
+      .getLong(0)
+    (GraftBarrier.resetStats(cp, Some(n)), n)
+  }
+
+  /** The row of the completed `observe` metric `name` on `df`, read
+    * SYNCHRONOUSLY off the executed plan: the Observation listener
+    * path waits on the async listener bus, and its drain latency
+    * showed up as a uniform per-barrier cost in every loop (see
+    * GraftBarrier.collectedMetricRow). When the plan shape hides the
+    * metric, `fallback` computes the same row with one cheap extra
+    * job — a miss costs time, never correctness (the round-12 q136
+    * lesson). */
+  def observed(df: DataFrame, name: String)(fallback: => Row): Row =
+    GraftBarrier.collectedMetricRow(df, name).getOrElse(fallback)
+
+  /** The loop driver (Pregelix's generic superstep driver: the
+    * caller's `step` is the join + group-by, this owns the rest).
+    * Round 1 is `init`; each later round is `step(rounds so far)`.
+    * Every round is materialized by [[barrierCounted]], so its row
+    * count rides the checkpoint job and no stop test pays a probe job.
+    * The loop stops after an EMPTY round, or once `done(previous,
+    * current)` holds, or at `maxRounds` rounds: there a depth-capped
+    * traversal returns, and a `mustConverge` loop throws (an
+    * unconverged state is not an answer). Returns every round's
+    * (state, rows), init first, so callers union levels lazily. */
+  def fixpoint(name: String, init: DataFrame, maxRounds: Int,
+      mustConverge: Boolean = false,
+      done: ((DataFrame, Long), (DataFrame, Long)) => Boolean =
+        (_, _) => false)(
+      step: Vector[(DataFrame, Long)] => DataFrame)
+      : Vector[(DataFrame, Long)] = {
+    require(maxRounds >= 1, s"$name: maxRounds ($maxRounds) < 1")
+    @annotation.tailrec
+    def loop(rounds: Vector[(DataFrame, Long)])
+        : Vector[(DataFrame, Long)] = {
+      val cur = rounds.last
+      if (cur._2 == 0 ||
+          rounds.size > 1 && done(rounds(rounds.size - 2), cur)) rounds
+      else if (rounds.size < maxRounds)
+        loop(rounds :+ barrierCounted(step(rounds)))
+      else if (mustConverge)
+        throw new IllegalStateException(s"$name did not converge in " +
+          s"$maxRounds rounds (${cur._2} rows left)")
+      else rounds
+    }
+    loop(Vector(barrierCounted(init)))
   }
 
   /** `.barrier` as a chainable drop-in for an in-loop
@@ -98,10 +137,10 @@ object Iterate {
     (fa.value.get.get, fb.value.get.get)
   }
 
-  /** Decimal digit count of the optimized plan's `sizeInBytes` stat —
-    * the probe behind the MSTDEBUG finding, exposed so specs can
-    * assert the statistic stays FLAT across rounds (a loop whose digit
-    * count grows round-over-round has the multiplication trap). */
+  /** Decimal digit count of the optimized plan's `sizeInBytes` stat,
+    * so specs can assert the statistic stays FLAT across rounds (a
+    * loop whose digit count grows round-over-round has the
+    * multiplication trap). */
   def statDigits(df: DataFrame): Int =
     df.queryExecution.optimizedPlan.stats.sizeInBytes.toString.length
 }

@@ -58,22 +58,9 @@ object Clusters {
     */
   def connectedComponentsStar(pairs: DataFrame, aCol: String,
       bCol: String, maxIter: Int = 30): DataFrame = {
-    // edge counts ride each barrier as observe metrics
-    // (Iterate.barrierCounted): the fixpoint test compares counts for
-    // free and pays the anti-join only when they match
-    var (e, en) = graft.ops.Iterate.barrierCounted(
-      pairs.select(col(aCol).cast("long").as("u"),
-          col(bCol).cast("long").as("v"))
-        .filter(col("u") =!= col("v"))
-        .select(least(col("u"), col("v")).as("u"),
-          greatest(col("u"), col("v")).as("v"))
-        .distinct()) // canonical u < v
-    var it = 0
-    var done = false
     val wU = org.apache.spark.sql.expressions.Window
       .partitionBy(col("u"))
-    while (!done && it < maxIter) {
-      it += 1
+    def starRound(e: DataFrame): DataFrame = {
       // ROUND 13: each star phase computes its per-node minimum as a
       // WINDOW over the adjacency (one exchange, partition-local sort
       // by u) instead of a groupBy + join-back (two data paths whose
@@ -101,21 +88,26 @@ object Clusters {
         large.select(col("v").as("u"), col("u").as("v")))
       val below = adjS.filter(col("v") < col("u"))
         .withColumn("m", min(col("v")).over(wU))
-      val (small, smalln) = graft.ops.Iterate.barrierCounted(
-        below
-          .filter(col("v") =!= col("m"))
-          .select(col("m").as("u"), col("v")) // m ≤ v < u ⇒ canonical
-          .unionByName(below.select(col("m").as("u"),
-            col("u").as("v")))
-          .distinct())
-      done = smalln == en &&
-        small.join(e, Seq("u", "v"), "left_anti").isEmpty
-      e = small
-      en = smalln
+      below
+        .filter(col("v") =!= col("m"))
+        .select(col("m").as("u"), col("v")) // m ≤ v < u ⇒ canonical
+        .unionByName(below.select(col("m").as("u"), col("u").as("v")))
+        .distinct()
     }
-    if (!done)
-      throw new IllegalStateException(
-        s"star CC did not converge in $maxIter rounds")
+    // edge counts ride each barrier (Iterate.fixpoint): the fixpoint
+    // test compares counts for free and pays the anti-join only when
+    // they match
+    val e = graft.ops.Iterate.fixpoint("star CC",
+        pairs.select(col(aCol).cast("long").as("u"),
+            col(bCol).cast("long").as("v"))
+          .filter(col("u") =!= col("v"))
+          .select(least(col("u"), col("v")).as("u"),
+            greatest(col("u"), col("v")).as("v"))
+          .distinct(), // canonical u < v
+        maxIter + 1, mustConverge = true,
+        done = (prev, cur) => cur._2 == prev._2 &&
+          cur._1.join(prev._1, Seq("u", "v"), "left_anti").isEmpty)(
+      rounds => starRound(rounds.last._1)).last._1
     e.select(col("v").as("node"), col("u").as("cluster_id"))
       .unionByName(e.select(col("u").as("node"),
         col("u").as("cluster_id")))
@@ -128,26 +120,6 @@ object Clusters {
     labels.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("n_members"))
 
-  /** One Lloyd (k-means) centroid-recompute step over an assigned
-    * corpus — the embedding-clustering reduce that pairs with
-    * [[Similarity.ivfAssign]]'s assignment step to make the IVF
-    * codebook trainable instead of fixed.
-    *
-    * `assigned` is (vid, cid); `vectors` is (vid, vec: array<double>).
-    * Returns (cid, dim, n_members, dim_sum_ppm): the per-dimension
-    * component sums in integer parts-per-million (decimal-exact
-    * accumulation, so the result is order-independent and
-    * engine-portable; the new centroid coordinate is
-    * dim_sum_ppm / (1e6 · n_members), a division deferred to the
-    * caller to keep every emitted value integer).
-    *
-    * Scale shape: vectors explode to (cid, dim, component) rows and
-    * reduce in ONE hash aggregation keyed by (cid, dim) with map-side
-    * partial sums — the long-format wide-mean that spreads a
-    * billion-vector reduce across the cluster instead of folding
-    * whole arrays on few keys (k keys would bottleneck k tasks; k·dims
-    * keys parallelize fully).
-    */
   /** k-means|| seeding (Bahmani et al. 2012, "Scalable k-means++",
     * VLDB): pick an initial candidate center set in a constant number
     * of corpus passes instead of k-means++'s k sequential ones. Each
@@ -213,6 +185,26 @@ object Clusters {
       .orderBy(col("cid"))
   }
 
+  /** One Lloyd (k-means) centroid-recompute step over an assigned
+    * corpus — the embedding-clustering reduce that pairs with
+    * [[Similarity.ivfAssign]]'s assignment step to make the IVF
+    * codebook trainable instead of fixed.
+    *
+    * `assigned` is (vid, cid); `vectors` is (vid, vec: array<double>).
+    * Returns (cid, dim, n_members, dim_sum_ppm): the per-dimension
+    * component sums in integer parts-per-million (decimal-exact
+    * accumulation, so the result is order-independent and
+    * engine-portable; the new centroid coordinate is
+    * dim_sum_ppm / (1e6 · n_members), a division deferred to the
+    * caller to keep every emitted value integer).
+    *
+    * Scale shape: vectors explode to (cid, dim, component) rows and
+    * reduce in ONE hash aggregation keyed by (cid, dim) with map-side
+    * partial sums — the long-format wide-mean that spreads a
+    * billion-vector reduce across the cluster instead of folding
+    * whole arrays on few keys (k keys would bottleneck k tasks; k·dims
+    * keys parallelize fully).
+    */
   def centroidRecompute(assigned: DataFrame,
       vectors: DataFrame): DataFrame =
     assigned.join(vectors, "vid")

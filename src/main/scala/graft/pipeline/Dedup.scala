@@ -1224,9 +1224,8 @@ object Dedup {
       .repartition(col("doc_id"))
       .sortWithinPartitions(col("doc_id"), col("p"))
     var rank = rank0.localCheckpoint(eager = true)
-    var stats = lvlOf(1L, org.apache.spark.sql.execution.GraftBarrier
-      .collectedMetricRow(rank0, "graft_sd_lvl1")
-      .getOrElse(vr.agg(statCols.head, statCols.tail: _*).head()))
+    var stats = lvlOf(1L, graft.ops.Iterate.observed(rank0,
+      "graft_sd_lvl1")(vr.agg(statCols.head, statCols.tail: _*).head()))
     val levels = scala.collection.mutable.ArrayBuffer(stats)
     var k = 1L
     // EARLY EXIT, two tiers (round-10 stretch, widened round 12), both
@@ -1293,9 +1292,8 @@ object Dedup {
             .repartition(col("doc_id"))
             .sortWithinPartitions(col("doc_id"), col("p"))
           rank = rank1.localCheckpoint(eager = true)
-          stats = lvlOf(k, org.apache.spark.sql.execution.GraftBarrier
-            .collectedMetricRow(rank1, name)
-            .getOrElse(dr.agg(statCols.head, statCols.tail: _*).head()))
+          stats = lvlOf(k, graft.ops.Iterate.observed(rank1, name)(
+            dr.agg(statCols.head, statCols.tail: _*).head()))
         }
         levels += stats
         converged = stats.dupGroups == 0L ||

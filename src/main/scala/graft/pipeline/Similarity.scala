@@ -41,6 +41,16 @@ object Similarity {
         org.apache.spark.sql.GraftBridge.expression(a),
         org.apache.spark.sql.GraftBridge.expression(b)))
 
+  /** `round(cosineFast(a, b), roundTo)` keeping the sign of a rounded
+    * zero, as DuckDB's round does: Spark's round turns a cosine in
+    * (−0.5·10^−roundTo, 0) into +0.0 where DuckDB gives −0.0. Every
+    * non-zero rounded value already carries the cosine's sign, so
+    * |rounded| · signum(cosine) changes only those zeros. */
+  def roundedCosine(a: Column, b: Column, roundTo: Int): Column = {
+    val c = cosineFast(a, b)
+    abs(round(c, roundTo)) * signum(c)
+  }
+
   /** Native-expression integer dot product over array<bigint>
     * (graft.functions.IntDotProduct) — the exact, order-independent
     * scoring kernel for int8-quantized vectors ([[quantizeInt8]]). */
@@ -64,7 +74,7 @@ object Similarity {
     val c = corpus.select(col(idCol).as("neighbor_id"),
       asDouble(col(vecCol)).as("cv"))
     val scored = q.join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", round(cosineFast(col("qv"), col("cv")), roundTo))
+      .withColumn("sim", roundedCosine(col("qv"), col("cv"), roundTo))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("neighbor_id"))
@@ -188,7 +198,7 @@ object Similarity {
       .join(v.toDF("id_a", "qv"), Seq("id_a"))
       .join(v.toDF("id_b", "cv"), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
-        round(cosineFast(col("qv"), col("cv")), roundTo).as("sim"))
+        roundedCosine(col("qv"), col("cv"), roundTo).as("sim"))
       .localCheckpoint(eager = true)
     val scored = scoredOnce.select(col("id_a").as("query_id"),
         col("id_b").as("neighbor_id"), col("sim"))
@@ -288,7 +298,7 @@ object Similarity {
     val scored = directed
       .join(v.toDF("query_id", "qv"), Seq("query_id"))
       .join(v.toDF("neighbor_id", "cv"), Seq("neighbor_id"))
-      .withColumn("sim", round(cosineFast(col("qv"), col("cv")), roundTo))
+      .withColumn("sim", roundedCosine(col("qv"), col("cv"), roundTo))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("neighbor_id"))
@@ -332,7 +342,7 @@ object Similarity {
     cands
       .join(v.toDF("id_a", "va"), Seq("id_a"))
       .join(v.toDF("id_b", "vb"), Seq("id_b"))
-      .withColumn("sim", round(cosineFast(col("va"), col("vb")), roundTo))
+      .withColumn("sim", roundedCosine(col("va"), col("vb"), roundTo))
       .filter(col("sim") >= threshold)
       .select(col("id_a"), col("id_b"), col("sim"))
   }
@@ -353,7 +363,7 @@ object Similarity {
   def ivfAssign(vectors: DataFrame, centroids: DataFrame,
       roundTo: Int = 5): DataFrame = {
     val scored = vectors.join(broadcast(centroids))
-      .withColumn("csim", round(cosineFast(col("v"), col("cv")), roundTo))
+      .withColumn("csim", roundedCosine(col("v"), col("cv"), roundTo))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("vid")).orderBy(col("csim").desc, col("cid"))
     scored.withColumn("rn", row_number().over(w))
@@ -372,7 +382,7 @@ object Similarity {
     val queries = v.filter(col("vid") % queryMod === 0)
       .select(col("vid").as("query_id"), col("v").as("qv"))
     val probeScored = queries.join(broadcast(cents))
-      .withColumn("csim", round(cosineFast(col("qv"), col("cv")), roundTo))
+      .withColumn("csim", roundedCosine(col("qv"), col("cv"), roundTo))
     val wp = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("csim").desc, col("cid"))
     val probes = probeScored.withColumn("rn", row_number().over(wp))
@@ -381,7 +391,7 @@ object Similarity {
     val scored = probes.join(assign, Seq("cid"))
       .filter(col("vid") =!= col("query_id"))
       .join(v.select(col("vid"), col("v").as("cv2")), Seq("vid"))
-      .withColumn("sim", round(cosineFast(col("qv"), col("cv2")), roundTo))
+      .withColumn("sim", roundedCosine(col("qv"), col("cv2"), roundTo))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("vid"))
@@ -420,7 +430,7 @@ object Similarity {
       .localCheckpoint(eager = true)
     val dropped = assigned.as("a").join(assigned.as("b"),
         col("a.cid") === col("b.cid") && col("a.vid") < col("b.vid"))
-      .filter(round(cosineFast(col("a.v"), col("b.v")), roundTo)
+      .filter(roundedCosine(col("a.v"), col("b.v"), roundTo)
         >= threshold)
       .select(col("b.vid").as("vid")).distinct()
     assigned
@@ -506,12 +516,12 @@ object Similarity {
       .partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("neighbor_id"))
     q.join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("psim", round(cosineFast(
+      .withColumn("psim", roundedCosine(
         slice(col("qv"), 1, prefixDims),
-        slice(col("cv"), 1, prefixDims)), roundTo))
+        slice(col("cv"), 1, prefixDims), roundTo))
       .withColumn("crank", row_number().over(wC))
       .filter(col("crank") <= m)
-      .withColumn("sim", round(cosineFast(col("qv"), col("cv")), roundTo))
+      .withColumn("sim", roundedCosine(col("qv"), col("cv"), roundTo))
       .withColumn("rank", row_number().over(wF))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("sim"), col("rank"))

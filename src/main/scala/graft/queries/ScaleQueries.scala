@@ -347,10 +347,11 @@ object ScaleQueries {
   // over part keys (keep ⟺ h(a,s) mod 10 < 7): density is constant
   // per node, so the truss grows linearly with the corpus and the
   // peeling depth stays FLAT (~4 rounds at every measured scale, see
-  // SCALING.md). Both engines run the same fixed 10 rounds (a
-  // converged fixpoint is idempotent under extra rounds) and emit a
-  // `converged` audit column that the spec asserts = 1; k = 4
-  // (every surviving edge in ≥ 2 triangles).
+  // SCALING.md). The oracle unrolls a fixed 10 rounds (a converged
+  // fixpoint is idempotent under extra rounds), the engine stops at
+  // the fixpoint within the same 10 peels; both emit a `converged`
+  // audit column that the spec asserts = 1; k = 4 (every surviving
+  // edge in ≥ 2 triangles).
   // -------------------------------------------------------------------
   private val TrussRounds = 10
   private val TrussMinSup = 2 // k − 2 for k = 4
@@ -377,22 +378,19 @@ object ScaleQueries {
         .agg(count(lit(1)).as("sup"))
     }
     // in-loop checkpoints are JOINED next round (support(e) is a
-    // double self-join) — barrier, not bare localCheckpoint, per the
+    // double self-join) — barriered by Iterate.fixpoint, per the
     // Iterate.scala rule: carried origin stats multiply round over
-    // round (bounded here by the fixed 10 rounds, but the rule is
-    // uniform and Round11GateSpec asserts it stays flat)
-    var e = graft.ops.Iterate.barrier(cand)
-    var prevCount = e.count()
-    var lastCount = prevCount
-    for (_ <- 1 to TrussRounds) {
-      prevCount = lastCount
-      e = graft.ops.Iterate.barrier(
-        support(e).filter(col("sup") >= TrussMinSup)
-          .select(col("a"), col("b")))
-      lastCount = e.count()
+    // round (Round11GateSpec asserts it stays flat). Peeling only
+    // drops edges, so an unchanged count IS the fixpoint: every
+    // further round of the fixed 10 would reproduce the same set.
+    val rounds = graft.ops.Iterate.fixpoint("k-truss", cand,
+        TrussRounds + 1, done = (prev, cur) => cur._2 == prev._2) {
+      rounds => support(rounds.last._1)
+        .filter(col("sup") >= TrussMinSup).select(col("a"), col("b"))
     }
-    support(e)
-      .withColumn("converged", lit(if (lastCount == prevCount) 1 else 0))
+    val converged = rounds.takeRight(2).map(_._2).distinct.size == 1
+    support(rounds.last._1)
+      .withColumn("converged", lit(if (converged) 1 else 0))
       .select(col("a"), col("b"), col("sup"), col("converged"))
       .orderBy(col("a"), col("b"))
   }

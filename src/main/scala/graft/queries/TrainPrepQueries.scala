@@ -618,16 +618,22 @@ object TrainPrepQueries {
     var v = spark.range(CovDims).select(col("id").cast("int").as("i"),
       lit(1000000L).as("v"))
     for (_ <- 1 to PowIters) {
-      // per-round barrier (graft.ops.Iterate): mv feeds TWO consumers
-      // (the max side and the probe side) and is re-joined next round —
-      // without it the lineage recomputes 2^rounds times and the
-      // carried sizeInBytes statistic multiplies round over round
-      val mv = graft.ops.Iterate.barrier(
-        cells.join(v.select(col("i").as("j"), col("v")), Seq("j"))
-          .groupBy(col("i"))
-          .agg(sum(expr("m * v")).as("w")))
-      val mx = mv.agg(max(abs(col("w"))).as("mx"))
-      v = mv.crossJoin(broadcast(mx))
+      // per-round barrier (graft.ops.Iterate): mv is re-joined next
+      // round — without it the carried sizeInBytes statistic
+      // multiplies round over round. The max rides the barrier job as
+      // an observe metric and lands in the projection as a literal of
+      // w's type (the HITS normalize shape): no 1-row aggregation job
+      // and no broadcast per round.
+      val mvObs = cells.join(v.select(col("i").as("j"), col("v")),
+          Seq("j"))
+        .groupBy(col("i"))
+        .agg(sum(expr("m * v")).as("w"))
+        .observe("graft_pow_max", max(abs(col("w"))).as("mx"))
+      val mv = graft.ops.Iterate.barrier(mvObs)
+      val mx = graft.ops.Iterate.observed(mvObs, "graft_pow_max")(
+        mv.agg(max(abs(col("w"))).as("mx")).head())
+      v = mv
+        .withColumn("mx", lit(mx.get(0)).cast(mv.schema("w").dataType))
         .withColumn("v", expr(
           "cast(sign(w) * (abs(w) * 1000000 div mx) as bigint)"))
         .select(col("i"), col("v"))

@@ -21,19 +21,6 @@ import org.apache.spark.sql.classic.{Dataset, SparkSession}
   */
 object GraftBarrier {
 
-  /** `df` must be the result of `localCheckpoint` (its analyzed plan
-    * is a single `LogicalRDD`); returns the same data with the
-    * carried statistic replaced by the TRUE materialized block size
-    * from the block manager. Clearing the statistic outright is NOT
-    * enough: a stats-less `LogicalRDD` reports `defaultSizeInBytes`
-    * (effectively infinite), which forbids broadcast planning for the
-    * small per-round frames these loops join — measured +30% on the
-    * coloring loop. The checkpoint's blocks are already materialized,
-    * so their exact size is a free lookup; it is bounded by the data
-    * (no round-over-round product) AND keeps broadcast decisions
-    * honest. Falls back to no statistic (flat default) when the
-    * storage info is not yet visible, and to the external-Row rebuild
-    * for any non-LogicalRDD plan. */
   /** Synchronous, listener-free read of a completed `observe` metric:
     * walk the EXECUTED plan (through AQE nesting) to the named
     * CollectMetricsExec and read its accumulator directly. The public
@@ -42,7 +29,8 @@ object GraftBarrier {
     * await — measured as a uniform per-barrier regression across every
     * iterative loop when `Iterate.barrierCounted` first used it. After
     * an eager action the accumulator is already merged (task
-    * completion is synchronous with job end), so this read is exact. */
+    * completion is synchronous with job end), so this read is exact.
+    * Callers go through `Iterate.observed`, which owns the fallback. */
   def collectedMetricRow(df: DataFrame,
       name: String): Option[org.apache.spark.sql.Row] = {
     def find(p: SparkPlan): Option[org.apache.spark.sql.Row] = p match {
@@ -63,21 +51,31 @@ object GraftBarrier {
       .queryExecution.executedPlan)
   }
 
-  def resetStats(df: DataFrame): DataFrame = resetStats(df, None)
-
-  /** As [[resetStats]], but with a caller-known exact ROW COUNT (from
-    * `Iterate.barrierCounted`'s observe metric). The block-manager
-    * storage lookup is ASYNCHRONOUS on the driver: under load the
+  /** `df` must be the result of `localCheckpoint` (its analyzed plan
+    * is a single `LogicalRDD`); returns the same data with the
+    * carried statistic replaced by the TRUE materialized block size
+    * from the block manager. Clearing the statistic outright is NOT
+    * enough: a stats-less `LogicalRDD` reports `defaultSizeInBytes`
+    * (effectively infinite), which forbids broadcast planning for the
+    * small per-round frames these loops join — measured +30% on the
+    * coloring loop. The checkpoint's blocks are already materialized,
+    * so their exact size is a free lookup; it is bounded by the data
+    * (no round-over-round product) AND keeps broadcast decisions
+    * honest.
+    *
+    * The storage lookup is ASYNCHRONOUS on the driver: under load the
     * status report can lag the eager materialization, and the former
     * None fallback then reported the flat default (~9.2e18, 19
     * digits) — planning-safe but nondeterministic, and it both forbade
     * broadcasts of genuinely small frames and tripped the
-    * Round11GateSpec digit gates intermittently (seen in this round's
-    * inherited-state suite run). A schema-width × rowCount estimate is
-    * deterministic, bounded by the data, and carries rowCount into the
-    * planner. Preference order: measured blocks, then count-based,
-    * then flat default. */
-  def resetStats(df: DataFrame, rowCount: Option[Long]): DataFrame = {
+    * Round11GateSpec digit gates intermittently. A caller-known exact
+    * `rowCount` (from `Iterate.barrierCounted`'s observe metric) gives
+    * a schema-width × rowCount estimate that is deterministic, bounded
+    * by the data, and carries rowCount into the planner. Preference
+    * order: measured blocks, then count-based, then flat default;
+    * any non-LogicalRDD plan takes the external-Row rebuild. */
+  def resetStats(df: DataFrame,
+      rowCount: Option[Long] = None): DataFrame = {
     val classic = df.asInstanceOf[Dataset[org.apache.spark.sql.Row]]
     val session = classic.sparkSession.asInstanceOf[SparkSession]
     classic.queryExecution.analyzed match {

@@ -22,6 +22,22 @@ class CosineSpec extends SparkSpec {
     }
   }
 
+  test("a negative cosine that rounds to zero keeps its sign, as " +
+      "DuckDB's round does") {
+    // cos(v1, v2) ≈ −1e-6 and cos(v1, v3) ≈ +1e-6: both round to zero
+    // at 5 decimals, and only the sign tells them apart
+    val vecs = Seq((1L, Array(1.0, 0.0)), (2L, Array(-1e-6, 1.0)),
+      (3L, Array(1e-6, 1.0)), (4L, Array(1.0, 1.0))).toDF("id", "vec")
+    val sims = Similarity.bruteForceTopK(vecs.filter(col("id") === 1L),
+        vecs, "id", "vec", 3)
+      .select(col("neighbor_id"), col("sim")).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+    assert(bits(sims(2L)) === bits(-0.0), s"got ${sims(2L)}")
+    assert(bits(sims(3L)) === bits(0.0), s"got ${sims(3L)}")
+    assert(sims(4L) === 0.70711)
+  }
+
   test("null and length-mismatch handling") {
     val df = Seq(
       (Some(Array(1.0, 2.0)), Some(Array(1.0, 2.0, 3.0))), // length mismatch

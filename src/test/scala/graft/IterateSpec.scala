@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Iterate
@@ -99,6 +100,88 @@ class IterateSpec extends SparkSpec {
     val d = digits.result()
     // 52..63 rows: at most one digit apart, never the multiplied trap
     assert(d.max - d.min <= 1, s"barrierCounted loop statistic drifted: $d")
+  }
+
+  /** `body`'s result and the number of Spark jobs it launched. The
+    * listener bus is asynchronous, so a marker job run after `body`
+    * bounds the wait: the shared queue delivers job starts in order,
+    * so once the marker's start is seen every earlier one has been. */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener,
+      SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        groups.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("iterate-spec-body", "counted")
+      val a = try body finally sc.clearJobGroup()
+      sc.setJobGroup("iterate-spec-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("iterate-spec-marker") &&
+          System.nanoTime() < deadline) Thread.sleep(5)
+      assert(groups.contains("iterate-spec-marker"),
+        "marker job start never reached the listener")
+      (a, groups.toArray.count(_ == "iterate-spec-body"))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  // 64 rows; round r keeps ids above 16·(r − 1): 64, 48, 32, 16, 0
+  private def shrinking(rounds: Vector[(DataFrame, Long)]): DataFrame =
+    rounds.last._1.filter(col("id") > rounds.size * 16)
+
+  test("fixpoint: R non-empty rounds and one empty round launch " +
+      "exactly R + 1 jobs, with no probe job") {
+    val (rounds, jobs) = jobsOf(
+      Iterate.fixpoint("shrink", loopFrame(), maxRounds = 10)(shrinking))
+    assert(rounds.map(_._2) === Vector(64L, 48L, 32L, 16L, 0L))
+    assert(jobs === 5, s"expected one job per round, got $jobs")
+    // each round is the materialized state its count describes
+    assert(rounds.map(_._1.count()) === rounds.map(_._2))
+  }
+
+  test("fixpoint: done(prev, cur) stops the loop; a capped loop " +
+      "returns exactly maxRounds rounds") {
+    val still = Iterate.fixpoint("still", loopFrame(), maxRounds = 10,
+      done = (prev, cur) => prev._2 == cur._2)(_.last._1)
+    assert(still.map(_._2) === Vector(64L, 64L))
+    val capped = Iterate.fixpoint("capped", loopFrame(),
+      maxRounds = 3)(shrinking)
+    assert(capped.map(_._2) === Vector(64L, 48L, 32L))
+  }
+
+  test("fixpoint: a mustConverge loop past maxRounds throws, naming " +
+      "the loop") {
+    val e = intercept[IllegalStateException] {
+      Iterate.fixpoint("shrink-loop", loopFrame(), maxRounds = 3,
+        mustConverge = true)(shrinking)
+    }
+    assert(e.getMessage.contains("shrink-loop"), e.getMessage)
+    assert(e.getMessage.contains("3 rounds"), e.getMessage)
+    // the same loop converges when the cap admits its empty round
+    assert(Iterate.fixpoint("shrink-loop", loopFrame(), maxRounds = 5,
+      mustConverge = true)(shrinking).last._2 === 0L)
+  }
+
+  test("observed: a metric missing from the plan returns the same " +
+      "value through its fallback") {
+    val dfo = loopFrame().observe("graft_spec_count",
+      count(lit(1)).as("n"))
+    val cp = dfo.localCheckpoint(eager = true)
+    var fallbacks = 0
+    def fallback = { fallbacks += 1; Row(cp.count()) }
+    val hit = Iterate.observed(dfo, "graft_spec_count")(fallback)
+    assert(hit.getLong(0) === 64L)
+    assert(fallbacks === 0, "the metric was present, yet the fallback ran")
+    val miss = Iterate.observed(dfo, "graft_spec_absent")(fallback)
+    assert(miss.getLong(0) === 64L)
+    assert(fallbacks === 1)
   }
 
   test("concurrently returns both sides' results in argument order") {
