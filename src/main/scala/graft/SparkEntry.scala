@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * `queries` aggregates every implemented operator family:
-  *   - graft.queries.Relational — SURVEY §2.2–§2.7 relational ops
-  *   - graft.queries.GraphQueries — traversal/closure ops (§2.3 J2/J4/J5)
-  *   - graft.pipeline.* — training-data ops (dedup, similarity, text)
+import graft.queries._
+
+/** The query surface: one registry of every query family under
+  * `graft.queries`. Each family's `registry` lists its queries one entry
+  * each, pairing the Spark engine with the DuckDB oracle SQL that
+  * `graft.Verify` + `tools/selfcheck.py` and perfbench check it against.
+  * `queries` and `oracleSql` are the name-keyed views of that one list.
   */
 object SparkEntry {
 
@@ -18,60 +19,38 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q03_search_rank")(spark, "/root/testdata/sf0.001")
 
-  /** SINGLE source of truth for every registered query family.
-    * `queries`/`oracleSql` fold over this list, and GateSpec's
-    * registry-uniqueness test iterates it too — a new family added
-    * here is automatically covered by the duplicate-key and
-    * oracle-alignment gates (round-8 defect: the gate hard-coded its
-    * own family list and drifted two families behind). */
-  val registries: Seq[(String,
-      Map[String, (SparkSession, String) => DataFrame],
-      Map[String, String])] = Seq(
-    ("Relational", graft.queries.Relational.queries,
-      graft.queries.Relational.oracles),
-    ("GraphQueries", graft.queries.GraphQueries.queries,
-      graft.queries.GraphQueries.oracles),
-    ("PipelineQueries", graft.queries.PipelineQueries.queries,
-      graft.queries.PipelineQueries.oracles),
-    ("EventQueries", graft.queries.EventQueries.queries,
-      graft.queries.EventQueries.oracles),
-    ("ExtendedQueries", graft.queries.ExtendedQueries.queries,
-      graft.queries.ExtendedQueries.oracles),
-    ("CurationQueries", graft.queries.CurationQueries.queries,
-      graft.queries.CurationQueries.oracles),
-    ("QualityQueries", graft.queries.QualityQueries.queries,
-      graft.queries.QualityQueries.oracles),
-    ("ApiQueries", graft.queries.ApiQueries.queries,
-      graft.queries.ApiQueries.oracles),
-    ("RetrievalQueries", graft.queries.RetrievalQueries.queries,
-      graft.queries.RetrievalQueries.oracles),
-    ("ProfilingQueries", graft.queries.ProfilingQueries.queries,
-      graft.queries.ProfilingQueries.oracles),
-    ("AugmentQueries", graft.queries.AugmentQueries.queries,
-      graft.queries.AugmentQueries.oracles),
-    ("StatQueries", graft.queries.StatQueries.queries,
-      graft.queries.StatQueries.oracles),
-    ("IntegrityQueries", graft.queries.IntegrityQueries.queries,
-      graft.queries.IntegrityQueries.oracles),
-    ("TrainPrepQueries", graft.queries.TrainPrepQueries.queries,
-      graft.queries.TrainPrepQueries.oracles),
-    ("MetricQueries", graft.queries.MetricQueries.queries,
-      graft.queries.MetricQueries.oracles),
-    ("LinkageQueries", graft.queries.LinkageQueries.queries,
-      graft.queries.LinkageQueries.oracles),
-    ("ScaleQueries", graft.queries.ScaleQueries.queries,
-      graft.queries.ScaleQueries.oracles),
-    ("SelectQueries", graft.queries.SelectQueries.queries,
-      graft.queries.SelectQueries.oracles),
-    ("PlannerQueries", graft.queries.PlannerQueries.queries,
-      graft.queries.PlannerQueries.oracles))
+  /** One family's queries: each entry is (name, engine, DuckDB oracle
+    * SQL over the same parquet tables), so no query can be registered
+    * without its oracle. */
+  type Registry = Seq[(String, (SparkSession, String) => DataFrame, String)]
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    registries.iterator.map(_._2).reduce(_ ++ _)
+  /** Every registered query family. `queries`/`oracleSql` are derived
+    * from this list, and GateSpec's duplicate-name gate flattens it, so
+    * a family added here is covered by both. */
+  val registries: Seq[(String, Registry)] = Seq(
+    ("Relational", Relational.registry),
+    ("GraphQueries", GraphQueries.registry),
+    ("PipelineQueries", PipelineQueries.registry),
+    ("EventQueries", EventQueries.registry),
+    ("ExtendedQueries", ExtendedQueries.registry),
+    ("CurationQueries", CurationQueries.registry),
+    ("QualityQueries", QualityQueries.registry),
+    ("ApiQueries", ApiQueries.registry),
+    ("RetrievalQueries", RetrievalQueries.registry),
+    ("ProfilingQueries", ProfilingQueries.registry),
+    ("AugmentQueries", AugmentQueries.registry),
+    ("StatQueries", StatQueries.registry),
+    ("IntegrityQueries", IntegrityQueries.registry),
+    ("TrainPrepQueries", TrainPrepQueries.registry),
+    ("MetricQueries", MetricQueries.registry),
+    ("LinkageQueries", LinkageQueries.registry),
+    ("ScaleQueries", ScaleQueries.registry),
+    ("SelectQueries", SelectQueries.registry),
+    ("PlannerQueries", PlannerQueries.registry))
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    registries.iterator.map(_._3).reduce(_ ++ _)
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registries.flatMap(_._2).map(e => e._1 -> e._2).toMap
+
+  lazy val oracleSql: Map[String, String] =
+    registries.flatMap(_._2).map(e => e._1 -> e._3).toMap
 }

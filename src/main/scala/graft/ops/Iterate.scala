@@ -16,11 +16,9 @@ import org.apache.spark.sql.execution.GraftBarrier
   * round JOINS the checkpointed frame, those statistics MULTIPLY round
   * over round (measured in SCALING.md: ×3 digits per round,
   * megabyte-BigInteger statistics arithmetic on the driver and 85 s
-  * planning stalls by round 15 of the q344 loop). Rebuilding the frame
-  * from the checkpointed RDD resets the statistic to the flat
-  * `defaultSizeInBytes`, so every round plans in constant time. The
-  * Row round-trip is partition-local and costs the same order as the
-  * round's own join — no shuffle, no driver collect.
+  * planning stalls by round 15 of the q344 loop). [[barrier]] replaces
+  * that statistic with one bounded by the round's own data (see
+  * `GraftBarrier.resetStats`), so every round plans in constant time.
   *
   * Use this INSTEAD of a bare `localCheckpoint` whenever the
   * checkpointed frame is joined again inside the loop. For a terminal
@@ -31,13 +29,9 @@ import org.apache.spark.sql.execution.GraftBarrier
 object Iterate {
 
   /** Materialize `df` eagerly and return a frame with TRUNCATED
-    * lineage and RESET statistics (flat default `sizeInBytes`) —
-    * KEEPING the checkpoint's internal row format, partitioning, and
-    * ordering (see [[org.apache.spark.sql.execution.GraftBarrier]]:
-    * the naive external-Row rebuild also resets the statistic, but
-    * drops the partitioning and re-encodes every row — measured 2× on
-    * the q347 coloring loop whose per-round anti joins ride the
-    * checkpoint's hash partitioning). */
+    * lineage and RESET statistics, keeping the checkpoint's row format,
+    * partitioning and ordering. `GraftBarrier.resetStats` states which
+    * size the planner then sees and when it falls back. */
   def barrier(df: DataFrame): DataFrame =
     GraftBarrier.resetStats(df.localCheckpoint(eager = true))
     // NOT barrierCounted: CollectMetrics evaluates its aggregate

@@ -335,13 +335,8 @@ object ApiQueries {
       |  CAST(checksum AS BIGINT) AS checksum
       |FROM m ORDER BY metric""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q101_callers_callees" -> q101_callers_callees _,
-    "q102_analyze_function" -> q102_analyze_function _,
-    "q254_incremental_index" -> q254_incremental_index _)
-
-  val oracles: Map[String, String] = Map(
-    "q101_callers_callees" -> q101_sql,
-    "q102_analyze_function" -> q102_sql,
-    "q254_incremental_index" -> q254_sql)
+  val registry: graft.SparkEntry.Registry = Seq(
+    ("q101_callers_callees", q101_callers_callees _, q101_sql),
+    ("q102_analyze_function", q102_analyze_function _, q102_sql),
+    ("q254_incremental_index", q254_incremental_index _, q254_sql))
 }

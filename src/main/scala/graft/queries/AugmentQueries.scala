@@ -395,13 +395,8 @@ object AugmentQueries {
        |ORDER BY exp.digit""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q205_image_phash" -> q205_image_phash _,
-    "q206_span_corruption" -> q206_span_corruption _,
-    "q207_benford_audit" -> q207_benford_audit _)
-
-  val oracles: Map[String, String] = Map(
-    "q205_image_phash" -> q205_sql,
-    "q206_span_corruption" -> q206_sql,
-    "q207_benford_audit" -> q207_sql)
+  val registry: graft.SparkEntry.Registry = Seq(
+    ("q205_image_phash", q205_image_phash _, q205_sql),
+    ("q206_span_corruption", q206_span_corruption _, q206_sql),
+    ("q207_benford_audit", q207_benford_audit _, q207_sql))
 }

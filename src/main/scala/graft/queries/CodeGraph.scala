@@ -27,14 +27,6 @@ class CodeGraph(nodes: DataFrame, edges: DataFrame) {
     edges.filter(col("relType") === relType)
       .select(col("src").as(s), col("dst").as(d))
 
-  /** P1 — `MATCH (n:Label) RETURN n LIMIT k` (`query.go:25-37`). */
-  def findNodesByLabel(label: String, limit: Int = 100): DataFrame =
-    n(label).orderBy(col("id")).limit(limit)
-
-  /** P2 — property equality lookup (`query.go:40-50`). */
-  def findByProperty(label: String, prop: String, value: String): DataFrame =
-    n(label).filter(col(prop) === value)
-
   /** P3 + O1 — multi-field case-insensitive search with the reference's
     * CASE-ranked ordering (`query.go:348-414`): rank 1 Function/Method,
     * 2 Class/Interface, 3 Variable/Parameter, 4 File/Feature/Document,
@@ -186,40 +178,6 @@ class CodeGraph(nodes: DataFrame, edges: DataFrame) {
       .select(col("start"), col("end"), col("depth"), col("path"),
         col("methodName"))
       .orderBy(col("depth"), col("end"))
-  }
-
-  /** J6 — service dependencies (`query.go:288-323`): for a service, every
-    * foreign service whose symbols its code calls; extracts the foreign
-    * service name from the SCIP symbol's 3rd field (`split(symbol,' ')[2]`),
-    * excluding self. Go-side grouping `advanced.go:148-177` (A6) included:
-    * per foreign service, the calling functions + call count.
-    */
-  def serviceDependencies(serviceName: String, maxDepth: Int = 10): DataFrame = {
-    val svc = n(Labels.Service).filter(col("name") === serviceName)
-      .select(col("id"))
-    val contains = e(RelTypes.Contains).select(col("src"), col("dst"))
-    val descendants = Traversals.reachable(contains, svc, maxDepth)
-      .select(col("id").as("callerId"))
-    val calls = hop(RelTypes.Calls, "callSrc", "callDst")
-    val defs = hop(RelTypes.Defines, "defSrc", "defDst")
-    val syms = n(Labels.Symbol)
-      .filter(col("symbol").contains(" ") &&
-        !col("symbol").contains(serviceName))
-      .select(col("id").as("symId"), col("symbol"))
-    val callerNames = nodes.select(col("id").as("cnId"),
-      col("name").as("callingFunction"))
-    descendants
-      .join(calls, descendants("callerId") === col("callSrc"))
-      .join(defs, col("callDst") === col("defSrc"))
-      .join(syms, col("defDst") === syms("symId"))
-      .join(callerNames, descendants("callerId") === callerNames("cnId"))
-      .select(split(col("symbol"), " ").getItem(2)
-        .as("foreignServiceName"), col("callingFunction"))
-      .groupBy(col("foreignServiceName"))
-      .agg(array_sort(collect_set(col("callingFunction")))
-        .as("callingFunctions"),
-        count(lit(1)).as("callCount"))
-      .orderBy(col("foreignServiceName"))
   }
 
   /** J7 — callers / callees (`mcp-server/main.go:479-506`), LIMIT 10. */

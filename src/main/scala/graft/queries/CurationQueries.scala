@@ -190,26 +190,19 @@ object CurationQueries {
   }
 
   val q60_sql: String =
-    """WITH d AS (SELECT doc_id, text FROM documents
-      |           WHERE trim(text) <> ''),
-      |toks AS (
-      |  SELECT doc_id,
-      |         unnest(regexp_split_to_array(trim(text), '\s+')) AS term
-      |  FROM d),
-      |tf AS (SELECT doc_id, term, COUNT(*) AS tf
-      |       FROM toks GROUP BY doc_id, term),
-      |dft AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-      |n AS (SELECT COUNT(*) AS n_total FROM d),
-      |scored AS (
-      |  SELECT tf.doc_id, tf.term, tf.tf, dft.df,
-      |         tf.tf * ((n.n_total * 1000000) // dft.df) AS score
-      |  FROM tf JOIN dft ON tf.term = dft.term CROSS JOIN n),
-      |r AS (
-      |  SELECT *, ROW_NUMBER() OVER (
-      |    PARTITION BY doc_id ORDER BY score DESC, term) AS rk
-      |  FROM scored)
-      |SELECT doc_id, term, tf, df, score, rk FROM r WHERE rk <= 3
-      |ORDER BY doc_id, rk""".stripMargin
+    s"""WITH ${OracleSql.termTf},
+       |dft AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
+       |n AS (SELECT COUNT(*) AS n_total FROM d),
+       |scored AS (
+       |  SELECT tf.doc_id, tf.term, tf.tf, dft.df,
+       |         tf.tf * ((n.n_total * 1000000) // dft.df) AS score
+       |  FROM tf JOIN dft ON tf.term = dft.term CROSS JOIN n),
+       |r AS (
+       |  SELECT *, ROW_NUMBER() OVER (
+       |    PARTITION BY doc_id ORDER BY score DESC, term) AS rk
+       |  FROM scored)
+       |SELECT doc_id, term, tf, df, score, rk FROM r WHERE rk <= 3
+       |ORDER BY doc_id, rk""".stripMargin
 
   // -------------------------------------------------------------------
   // q61 — duplicate clusters: bigram-Jaccard near-dup pairs (q50's
@@ -277,19 +270,14 @@ object CurationQueries {
       .orderBy(col("doc_id"), col("chunk_idx"))
 
   val q62_sql: String =
-    """WITH t AS (
-      |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-      |  FROM documents WHERE trim(text) <> ''),
-      |pos AS (
-      |  SELECT doc_id, u.i AS i, toks[u.i] AS tok
-      |  FROM t, unnest(generate_series(1, len(toks))) AS u(i)),
-      |c AS (
-      |  SELECT doc_id, (i - 1) // 40 AS chunk_idx,
-      |         COUNT(*) AS n_words,
-      |         md5(string_agg(tok, ' ' ORDER BY i)) AS chunk_md5
-      |  FROM pos GROUP BY doc_id, (i - 1) // 40)
-      |SELECT doc_id, chunk_idx, n_words, chunk_md5 FROM c
-      |ORDER BY doc_id, chunk_idx""".stripMargin
+    s"""WITH ${OracleSql.wordPositions},
+       |c AS (
+       |  SELECT doc_id, (i - 1) // 40 AS chunk_idx,
+       |         COUNT(*) AS n_words,
+       |         md5(string_agg(tok, ' ' ORDER BY i)) AS chunk_md5
+       |  FROM pos GROUP BY doc_id, (i - 1) // 40)
+       |SELECT doc_id, chunk_idx, n_words, chunk_md5 FROM c
+       |ORDER BY doc_id, chunk_idx""".stripMargin
 
   // -------------------------------------------------------------------
   // q141 — sliding-window chunking with overlap (window 64, stride 40):
@@ -495,16 +483,12 @@ object CurationQueries {
   }
 
   val q64_sql: String =
-    """WITH toks AS (
-      |  SELECT DISTINCT doc_id, tok FROM (
-      |    SELECT doc_id,
-      |           unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
-      |    FROM documents WHERE trim(text) <> ''))
-      |SELECT tok AS token, COUNT(*) AS df,
-      |  array_to_string(list_slice(list_sort(list(doc_id)), 1, 8), ',')
-      |    AS postings_head
-      |FROM toks GROUP BY tok HAVING COUNT(*) >= 20
-      |ORDER BY token""".stripMargin
+    s"""WITH ${OracleSql.toks}
+       |SELECT tok AS token, COUNT(*) AS df,
+       |  array_to_string(list_slice(list_sort(list(doc_id)), 1, 8), ',')
+       |    AS postings_head
+       |FROM toks GROUP BY tok HAVING COUNT(*) >= 20
+       |ORDER BY token""".stripMargin
 
   // -------------------------------------------------------------------
   // q65 — multimodal frame fan-out, byte-exact: the documents' UTF-8
@@ -1045,23 +1029,16 @@ object CurationQueries {
   }
 
   val q177_sql: String =
-    """WITH d AS (SELECT doc_id, text FROM documents
-      |           WHERE trim(text) <> ''),
-      |toks AS (
-      |  SELECT doc_id,
-      |         unnest(regexp_split_to_array(trim(text), '\s+')) AS term
-      |  FROM d),
-      |tf AS (SELECT doc_id, term, COUNT(*) AS tf
-      |       FROM toks GROUP BY doc_id, term),
-      |qterms AS (SELECT term FROM
-      |             (SELECT term, COUNT(*) AS df FROM tf GROUP BY term)
-      |           ORDER BY df DESC, term LIMIT 3 OFFSET 3)
-      |SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS total_tf
-      |FROM tf JOIN qterms USING (term)
-      |GROUP BY doc_id
-      |HAVING COUNT(*) = 3
-      |ORDER BY total_tf DESC, doc_id
-      |LIMIT 20""".stripMargin
+    s"""WITH ${OracleSql.termTf},
+       |qterms AS (SELECT term FROM
+       |             (SELECT term, COUNT(*) AS df FROM tf GROUP BY term)
+       |           ORDER BY df DESC, term LIMIT 3 OFFSET 3)
+       |SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS total_tf
+       |FROM tf JOIN qterms USING (term)
+       |GROUP BY doc_id
+       |HAVING COUNT(*) = 3
+       |ORDER BY total_tf DESC, doc_id
+       |LIMIT 20""".stripMargin
 
   // -------------------------------------------------------------------
   // q181 — PHRASE retrieval over a positional index: docs containing
@@ -1182,53 +1159,41 @@ object CurationQueries {
   }
 
   val q189_sql: String =
-    """WITH d AS (SELECT doc_id, text FROM documents
-      |           WHERE trim(text) <> ''),
-      |toks AS (
-      |  SELECT doc_id,
-      |         unnest(regexp_split_to_array(trim(text), '\s+')) AS term
-      |  FROM d),
-      |tf AS (SELECT doc_id, term, COUNT(*) AS tf
-      |       FROM toks GROUP BY doc_id, term),
-      |dl AS (SELECT doc_id, COUNT(*) AS dl FROM toks GROUP BY doc_id),
-      |dft AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-      |totals AS (SELECT COUNT(*) AS n_total,
-      |                  CAST(SUM(dl) AS BIGINT) AS dls FROM dl),
-      |qterms AS (SELECT term, df FROM dft
-      |           ORDER BY df DESC, term LIMIT 3),
-      |fb AS (
-      |  SELECT tf.doc_id, CAST(SUM(
-      |    ((n_total * 1000000) // q.df) * (22 * dls * tf.tf) //
-      |      (10 * dls * tf.tf + 3 * dls + 9 * dl.dl * n_total))
-      |    AS BIGINT) AS fb_score
-      |  FROM tf JOIN qterms q ON tf.term = q.term
-      |  JOIN dl ON dl.doc_id = tf.doc_id
-      |  CROSS JOIN totals
-      |  GROUP BY tf.doc_id
-      |  ORDER BY fb_score DESC, tf.doc_id LIMIT 10),
-      |expansion AS (
-      |  SELECT term FROM (
-      |    SELECT tf.term, CAST(SUM(tf.tf * fb.fb_score // dl.dl)
-      |      AS BIGINT) AS mass
-      |    FROM tf JOIN fb ON tf.doc_id = fb.doc_id
-      |    JOIN dl ON dl.doc_id = tf.doc_id
-      |    WHERE tf.term NOT IN (SELECT term FROM qterms)
-      |    GROUP BY tf.term)
-      |  ORDER BY mass DESC, term LIMIT 5),
-      |weighted AS (
-      |  SELECT q.term, 2 AS mult, q.df FROM qterms q
-      |  UNION ALL
-      |  SELECT e.term, 1, dft.df FROM expansion e
-      |  JOIN dft ON dft.term = e.term)
-      |SELECT tf.doc_id,
-      |  CAST(SUM(mult * tf.tf * ((n_total * 1000000) // w.df))
-      |    AS BIGINT) AS score,
-      |  COUNT(*) AS n_terms_hit
-      |FROM tf JOIN weighted w ON tf.term = w.term
-      |CROSS JOIN totals
-      |GROUP BY tf.doc_id
-      |ORDER BY score DESC, tf.doc_id
-      |LIMIT 20""".stripMargin
+    s"""WITH ${OracleSql.termTf},
+       |${OracleSql.bm25Stats},
+       |fb AS (
+       |  SELECT tf.doc_id, CAST(SUM(
+       |    ((n_total * 1000000) // q.df) * (22 * dls * tf.tf) //
+       |      (10 * dls * tf.tf + 3 * dls + 9 * dl.dl * n_total))
+       |    AS BIGINT) AS fb_score
+       |  FROM tf JOIN qterms q ON tf.term = q.term
+       |  JOIN dl ON dl.doc_id = tf.doc_id
+       |  CROSS JOIN totals
+       |  GROUP BY tf.doc_id
+       |  ORDER BY fb_score DESC, tf.doc_id LIMIT 10),
+       |expansion AS (
+       |  SELECT term FROM (
+       |    SELECT tf.term, CAST(SUM(tf.tf * fb.fb_score // dl.dl)
+       |      AS BIGINT) AS mass
+       |    FROM tf JOIN fb ON tf.doc_id = fb.doc_id
+       |    JOIN dl ON dl.doc_id = tf.doc_id
+       |    WHERE tf.term NOT IN (SELECT term FROM qterms)
+       |    GROUP BY tf.term)
+       |  ORDER BY mass DESC, term LIMIT 5),
+       |weighted AS (
+       |  SELECT q.term, 2 AS mult, q.df FROM qterms q
+       |  UNION ALL
+       |  SELECT e.term, 1, dft.df FROM expansion e
+       |  JOIN dft ON dft.term = e.term)
+       |SELECT tf.doc_id,
+       |  CAST(SUM(mult * tf.tf * ((n_total * 1000000) // w.df))
+       |    AS BIGINT) AS score,
+       |  COUNT(*) AS n_terms_hit
+       |FROM tf JOIN weighted w ON tf.term = w.term
+       |CROSS JOIN totals
+       |GROUP BY tf.doc_id
+       |ORDER BY score DESC, tf.doc_id
+       |LIMIT 20""".stripMargin
 
   // -------------------------------------------------------------------
   // q194 — posting-list compression audit: what would the inverted
@@ -1445,32 +1410,20 @@ object CurationQueries {
   }
 
   val q66_sql: String =
-    """WITH d AS (SELECT doc_id, text FROM documents
-      |           WHERE trim(text) <> ''),
-      |toks AS (
-      |  SELECT doc_id,
-      |         unnest(regexp_split_to_array(trim(text), '\s+')) AS term
-      |  FROM d),
-      |tf AS (SELECT doc_id, term, COUNT(*) AS tf
-      |       FROM toks GROUP BY doc_id, term),
-      |dl AS (SELECT doc_id, COUNT(*) AS dl FROM toks GROUP BY doc_id),
-      |dft AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-      |totals AS (SELECT COUNT(*) AS n_total,
-      |                  CAST(SUM(dl) AS BIGINT) AS dls FROM dl),
-      |qterms AS (SELECT term, df FROM dft
-      |           ORDER BY df DESC, term LIMIT 3),
-      |scored AS (
-      |  SELECT tf.doc_id,
-      |    ((n_total * 1000000) // q.df) * (22 * dls * tf.tf) //
-      |      (10 * dls * tf.tf + 3 * dls + 9 * dl.dl * n_total) AS contrib
-      |  FROM tf JOIN qterms q ON tf.term = q.term
-      |  JOIN dl ON dl.doc_id = tf.doc_id
-      |  CROSS JOIN totals)
-      |SELECT doc_id, CAST(SUM(contrib) AS BIGINT) AS bm25_score,
-      |       COUNT(*) AS n_terms_hit
-      |FROM scored GROUP BY doc_id
-      |ORDER BY bm25_score DESC, doc_id
-      |LIMIT 20""".stripMargin
+    s"""WITH ${OracleSql.termTf},
+       |${OracleSql.bm25Stats},
+       |scored AS (
+       |  SELECT tf.doc_id,
+       |    ((n_total * 1000000) // q.df) * (22 * dls * tf.tf) //
+       |      (10 * dls * tf.tf + 3 * dls + 9 * dl.dl * n_total) AS contrib
+       |  FROM tf JOIN qterms q ON tf.term = q.term
+       |  JOIN dl ON dl.doc_id = tf.doc_id
+       |  CROSS JOIN totals)
+       |SELECT doc_id, CAST(SUM(contrib) AS BIGINT) AS bm25_score,
+       |       COUNT(*) AS n_terms_hit
+       |FROM scored GROUP BY doc_id
+       |ORDER BY bm25_score DESC, doc_id
+       |LIMIT 20""".stripMargin
 
   // -------------------------------------------------------------------
   // q67 — keeper selection by QUALITY: within each prefix-fingerprint
@@ -1612,29 +1565,24 @@ object CurationQueries {
   }
 
   val q78_sql: String =
-    """WITH t AS (
-      |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-      |  FROM documents WHERE trim(text) <> ''),
-      |pos AS (
-      |  SELECT doc_id, u.i AS i, toks[u.i] AS tok
-      |  FROM t, unnest(generate_series(1, len(toks))) AS u(i)),
-      |c AS (
-      |  SELECT doc_id, (i - 1) // 40 AS chunk_idx, COUNT(*) AS n_words
-      |  FROM pos GROUP BY doc_id, (i - 1) // 40),
-      |l AS (
-      |  SELECT c.doc_id, c.chunk_idx, c.n_words, d.lang
-      |  FROM c JOIN documents d ON d.doc_id = c.doc_id),
-      |r AS (
-      |  SELECT lang, n_words,
-      |    CAST(SUM(n_words) OVER (PARTITION BY lang
-      |      ORDER BY doc_id, chunk_idx ROWS UNBOUNDED PRECEDING)
-      |      AS BIGINT) AS cum
-      |  FROM l)
-      |SELECT lang, (cum - n_words) // 512 AS bin,
-      |       COUNT(*) AS n_chunks,
-      |       CAST(SUM(n_words) AS BIGINT) AS n_tokens
-      |FROM r GROUP BY lang, (cum - n_words) // 512
-      |ORDER BY lang, bin""".stripMargin
+    s"""WITH ${OracleSql.wordPositions},
+       |c AS (
+       |  SELECT doc_id, (i - 1) // 40 AS chunk_idx, COUNT(*) AS n_words
+       |  FROM pos GROUP BY doc_id, (i - 1) // 40),
+       |l AS (
+       |  SELECT c.doc_id, c.chunk_idx, c.n_words, d.lang
+       |  FROM c JOIN documents d ON d.doc_id = c.doc_id),
+       |r AS (
+       |  SELECT lang, n_words,
+       |    CAST(SUM(n_words) OVER (PARTITION BY lang
+       |      ORDER BY doc_id, chunk_idx ROWS UNBOUNDED PRECEDING)
+       |      AS BIGINT) AS cum
+       |  FROM l)
+       |SELECT lang, (cum - n_words) // 512 AS bin,
+       |       COUNT(*) AS n_chunks,
+       |       CAST(SUM(n_words) AS BIGINT) AS n_tokens
+       |FROM r GROUP BY lang, (cum - n_words) // 512
+       |ORDER BY lang, bin""".stripMargin
 
   // -------------------------------------------------------------------
   // q79 — benchmark decontamination: corpus documents sharing any
@@ -2535,95 +2483,49 @@ object CurationQueries {
        |WHERE df >= $FanoMinDf
        |ORDER BY fano_x1000 DESC, tok LIMIT $FanoTopK""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q349_lorenz_gini" -> q349_lorenz_gini _,
-    "q350_fano_burstiness" -> q350_fano_burstiness _,
-    "q313_wht_spectrum" -> q313_wht_spectrum _,
-    "q310_rake_keywords" -> q310_rake_keywords _,
-    "q311_textrank" -> q311_textrank _,
-    "q312_cdc_chunking" -> q312_cdc_chunking _,
-    "q126_leakfree_split" -> q126_leakfree_split _,
-    "q130_shard_manifest" -> q130_shard_manifest _,
-    "q109_chunk_dedup" -> q109_chunk_dedup _,
-    "q105_substring_dedup" -> q105_substring_dedup _,
-    "q83_exact_quota" -> q83_exact_quota _,
-    "q82_crosslingual_dups" -> q82_crosslingual_dups _,
-    "q81_repetitiveness" -> q81_repetitiveness _,
-    "q80_pii_redact" -> q80_pii_redact _,
-    "q79_decontamination" -> q79_decontamination _,
-    "q78_context_packing" -> q78_context_packing _,
-    "q75_fuzzy_join" -> q75_fuzzy_join _,
-    "q68_ann_recall" -> q68_ann_recall _,
-    "q67_cluster_keepers" -> q67_cluster_keepers _,
-    "q66_bm25" -> q66_bm25 _,
-    "q177_boolean_retrieval" -> q177_boolean_retrieval _,
-    "q181_phrase_retrieval" -> q181_phrase_retrieval _,
-    "q189_rm3_expansion" -> q189_rm3_expansion _,
-    "q194_posting_compression" -> q194_posting_compression _,
-    "q200_retrieval_ndcg" -> q200_retrieval_ndcg _,
-    "q57_stratified_sample" -> q57_stratified_sample _,
-    "q58_split_assign" -> q58_split_assign _,
-    "q59_curation_funnel" -> q59_curation_funnel _,
-    "q60_tfidf_terms" -> q60_tfidf_terms _,
-    "q61_dup_clusters" -> q61_dup_clusters _,
-    "q62_word_chunks" -> q62_word_chunks _,
-    "q141_sliding_chunks" -> q141_sliding_chunks _,
-    "q147_bpe_merge" -> q147_bpe_merge _,
-    "q157_score_calibration" -> q157_score_calibration _,
-    "q63_event_pivot" -> q63_event_pivot _,
-    "q64_posting_lists" -> q64_posting_lists _,
-    "q65_media_frames" -> q65_media_frames _,
-    "q161_image_decode" -> q161_image_decode _,
-    "q265_image_resize" -> q265_image_resize _,
-    "q164_audio_decode" -> q164_audio_decode _,
-    "q294_mulaw_roundtrip" -> q294_mulaw_roundtrip _,
-    "q238_audio_features" -> q238_audio_features _,
-    "q255_avi_frames" -> q255_avi_frames _,
-    "q250_curation_v2" -> q250_curation_v2 _)
-
-  val oracles: Map[String, String] = Map(
-    "q349_lorenz_gini" -> q349_sql,
-    "q350_fano_burstiness" -> q350_sql,
-    "q313_wht_spectrum" -> q313_sql,
-    "q310_rake_keywords" -> q310_sql,
-    "q311_textrank" -> q311_sql,
-    "q312_cdc_chunking" -> q312_sql,
-    "q126_leakfree_split" -> q126_sql,
-    "q130_shard_manifest" -> q130_sql,
-    "q109_chunk_dedup" -> q109_sql,
-    "q105_substring_dedup" -> q105_sql,
-    "q83_exact_quota" -> q83_sql,
-    "q82_crosslingual_dups" -> q82_sql,
-    "q81_repetitiveness" -> q81_sql,
-    "q80_pii_redact" -> q80_sql,
-    "q79_decontamination" -> q79_sql,
-    "q78_context_packing" -> q78_sql,
-    "q75_fuzzy_join" -> q75_sql,
-    "q68_ann_recall" -> q68_sql,
-    "q67_cluster_keepers" -> q67_sql,
-    "q66_bm25" -> q66_sql,
-    "q177_boolean_retrieval" -> q177_sql,
-    "q181_phrase_retrieval" -> q181_sql,
-    "q189_rm3_expansion" -> q189_sql,
-    "q194_posting_compression" -> q194_sql,
-    "q200_retrieval_ndcg" -> q200_sql,
-    "q57_stratified_sample" -> q57_sql,
-    "q58_split_assign" -> q58_sql,
-    "q59_curation_funnel" -> q59_sql,
-    "q60_tfidf_terms" -> q60_sql,
-    "q61_dup_clusters" -> q61_sql,
-    "q62_word_chunks" -> q62_sql,
-    "q141_sliding_chunks" -> q141_sql,
-    "q147_bpe_merge" -> q147_sql,
-    "q157_score_calibration" -> q157_sql,
-    "q63_event_pivot" -> q63_sql,
-    "q64_posting_lists" -> q64_sql,
-    "q65_media_frames" -> q65_sql,
-    "q161_image_decode" -> q161_sql,
-    "q265_image_resize" -> q265_sql,
-    "q164_audio_decode" -> q164_sql,
-    "q294_mulaw_roundtrip" -> q294_sql,
-    "q238_audio_features" -> q238_sql,
-    "q255_avi_frames" -> q255_sql,
-    "q250_curation_v2" -> q250_sql)
+  val registry: graft.SparkEntry.Registry = Seq(
+    ("q349_lorenz_gini", q349_lorenz_gini _, q349_sql),
+    ("q350_fano_burstiness", q350_fano_burstiness _, q350_sql),
+    ("q313_wht_spectrum", q313_wht_spectrum _, q313_sql),
+    ("q310_rake_keywords", q310_rake_keywords _, q310_sql),
+    ("q311_textrank", q311_textrank _, q311_sql),
+    ("q312_cdc_chunking", q312_cdc_chunking _, q312_sql),
+    ("q126_leakfree_split", q126_leakfree_split _, q126_sql),
+    ("q130_shard_manifest", q130_shard_manifest _, q130_sql),
+    ("q109_chunk_dedup", q109_chunk_dedup _, q109_sql),
+    ("q105_substring_dedup", q105_substring_dedup _, q105_sql),
+    ("q83_exact_quota", q83_exact_quota _, q83_sql),
+    ("q82_crosslingual_dups", q82_crosslingual_dups _, q82_sql),
+    ("q81_repetitiveness", q81_repetitiveness _, q81_sql),
+    ("q80_pii_redact", q80_pii_redact _, q80_sql),
+    ("q79_decontamination", q79_decontamination _, q79_sql),
+    ("q78_context_packing", q78_context_packing _, q78_sql),
+    ("q75_fuzzy_join", q75_fuzzy_join _, q75_sql),
+    ("q68_ann_recall", q68_ann_recall _, q68_sql),
+    ("q67_cluster_keepers", q67_cluster_keepers _, q67_sql),
+    ("q66_bm25", q66_bm25 _, q66_sql),
+    ("q177_boolean_retrieval", q177_boolean_retrieval _, q177_sql),
+    ("q181_phrase_retrieval", q181_phrase_retrieval _, q181_sql),
+    ("q189_rm3_expansion", q189_rm3_expansion _, q189_sql),
+    ("q194_posting_compression", q194_posting_compression _, q194_sql),
+    ("q200_retrieval_ndcg", q200_retrieval_ndcg _, q200_sql),
+    ("q57_stratified_sample", q57_stratified_sample _, q57_sql),
+    ("q58_split_assign", q58_split_assign _, q58_sql),
+    ("q59_curation_funnel", q59_curation_funnel _, q59_sql),
+    ("q60_tfidf_terms", q60_tfidf_terms _, q60_sql),
+    ("q61_dup_clusters", q61_dup_clusters _, q61_sql),
+    ("q62_word_chunks", q62_word_chunks _, q62_sql),
+    ("q141_sliding_chunks", q141_sliding_chunks _, q141_sql),
+    ("q147_bpe_merge", q147_bpe_merge _, q147_sql),
+    ("q157_score_calibration", q157_score_calibration _, q157_sql),
+    ("q63_event_pivot", q63_event_pivot _, q63_sql),
+    ("q64_posting_lists", q64_posting_lists _, q64_sql),
+    ("q65_media_frames", q65_media_frames _, q65_sql),
+    ("q161_image_decode", q161_image_decode _, q161_sql),
+    ("q265_image_resize", q265_image_resize _, q265_sql),
+    ("q164_audio_decode", q164_audio_decode _, q164_sql),
+    ("q294_mulaw_roundtrip", q294_mulaw_roundtrip _, q294_sql),
+    ("q238_audio_features", q238_audio_features _, q238_sql),
+    ("q255_avi_frames", q255_avi_frames _, q255_sql),
+    ("q250_curation_v2", q250_curation_v2 _, q250_sql))
 }

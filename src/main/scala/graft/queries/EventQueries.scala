@@ -1746,71 +1746,37 @@ object EventQueries {
       | AND (iv.valid_to IS NULL OR p.tp < iv.valid_to)
       |GROUP BY 1 ORDER BY status""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q197_scd2_lookup" -> q197_scd2_lookup _,
-    "q196_landing_exit" -> q196_landing_exit _,
-    "q195_percolate_alerts" -> q195_percolate_alerts _,
-    "q193_touch_attribution" -> q193_touch_attribution _,
-    "q191_survival_curve" -> q191_survival_curve _,
-    "q192_event_trigrams" -> q192_event_trigrams _,
-    "q187_markov_stationary" -> q187_markov_stationary _,
-    "q90_retention" -> q90_retention _,
-    "q103_stream_windows" -> q103_stream_windows _,
-    "q108_stream_dedup" -> q108_stream_dedup _,
-    "q162_stream_sessions" -> q162_stream_sessions _,
-    "q163_stream_state" -> q163_stream_state _,
-    "q165_stream_interval_join" -> q165_stream_interval_join _,
-    "q168_stream_static_join" -> q168_stream_static_join _,
-    "q173_stream_outer_join" -> q173_stream_outer_join _,
-    "q174_time_spine" -> q174_time_spine _,
-    "q175_mix_shift" -> q175_mix_shift _,
-    "q176_growth_accounting" -> q176_growth_accounting _,
-    "q30_hourly_windows" -> q30_hourly_windows _,
-    "q31_sessions" -> q31_sessions _,
-    "q70_transitions" -> q70_transitions _,
-    "q71_unpivot" -> q71_unpivot _,
-    "q77_conversion_funnel" -> q77_conversion_funnel _,
-    "q134_rate_anomaly" -> q134_rate_anomaly _,
-    "q135_scd2_intervals" -> q135_scd2_intervals _,
-    "q142_type_drift" -> q142_type_drift _,
-    "q149_forget_cascade" -> q149_forget_cascade _,
-    "q150_trending" -> q150_trending _,
-    "q151_stickiness" -> q151_stickiness _,
-    "q155_trend_slope" -> q155_trend_slope _,
-    "q156_lateness_profile" -> q156_lateness_profile _,
-    "q159_activity_streaks" -> q159_activity_streaks _)
-
-  val oracles: Map[String, String] = Map(
-    "q197_scd2_lookup" -> q197_sql,
-    "q196_landing_exit" -> q196_sql,
-    "q195_percolate_alerts" -> q195_sql,
-    "q193_touch_attribution" -> q193_sql,
-    "q191_survival_curve" -> q191_sql,
-    "q192_event_trigrams" -> q192_sql,
-    "q187_markov_stationary" -> q187_sql,
-    "q90_retention" -> q90_sql,
-    "q103_stream_windows" -> q103_sql,
-    "q108_stream_dedup" -> q108_sql,
-    "q162_stream_sessions" -> q162_sql,
-    "q163_stream_state" -> q163_sql,
-    "q165_stream_interval_join" -> q165_sql,
-    "q168_stream_static_join" -> q168_sql,
-    "q173_stream_outer_join" -> q173_sql,
-    "q174_time_spine" -> q174_sql,
-    "q175_mix_shift" -> q175_sql,
-    "q176_growth_accounting" -> q176_sql,
-    "q30_hourly_windows" -> q30_sql,
-    "q31_sessions" -> q31_sql,
-    "q70_transitions" -> q70_sql,
-    "q71_unpivot" -> q71_sql,
-    "q77_conversion_funnel" -> q77_sql,
-    "q134_rate_anomaly" -> q134_sql,
-    "q135_scd2_intervals" -> q135_sql,
-    "q142_type_drift" -> q142_sql,
-    "q149_forget_cascade" -> q149_sql,
-    "q150_trending" -> q150_sql,
-    "q151_stickiness" -> q151_sql,
-    "q155_trend_slope" -> q155_sql,
-    "q156_lateness_profile" -> q156_sql,
-    "q159_activity_streaks" -> q159_sql)
+  val registry: graft.SparkEntry.Registry = Seq(
+    ("q197_scd2_lookup", q197_scd2_lookup _, q197_sql),
+    ("q196_landing_exit", q196_landing_exit _, q196_sql),
+    ("q195_percolate_alerts", q195_percolate_alerts _, q195_sql),
+    ("q193_touch_attribution", q193_touch_attribution _, q193_sql),
+    ("q191_survival_curve", q191_survival_curve _, q191_sql),
+    ("q192_event_trigrams", q192_event_trigrams _, q192_sql),
+    ("q187_markov_stationary", q187_markov_stationary _, q187_sql),
+    ("q90_retention", q90_retention _, q90_sql),
+    ("q103_stream_windows", q103_stream_windows _, q103_sql),
+    ("q108_stream_dedup", q108_stream_dedup _, q108_sql),
+    ("q162_stream_sessions", q162_stream_sessions _, q162_sql),
+    ("q163_stream_state", q163_stream_state _, q163_sql),
+    ("q165_stream_interval_join", q165_stream_interval_join _, q165_sql),
+    ("q168_stream_static_join", q168_stream_static_join _, q168_sql),
+    ("q173_stream_outer_join", q173_stream_outer_join _, q173_sql),
+    ("q174_time_spine", q174_time_spine _, q174_sql),
+    ("q175_mix_shift", q175_mix_shift _, q175_sql),
+    ("q176_growth_accounting", q176_growth_accounting _, q176_sql),
+    ("q30_hourly_windows", q30_hourly_windows _, q30_sql),
+    ("q31_sessions", q31_sessions _, q31_sql),
+    ("q70_transitions", q70_transitions _, q70_sql),
+    ("q71_unpivot", q71_unpivot _, q71_sql),
+    ("q77_conversion_funnel", q77_conversion_funnel _, q77_sql),
+    ("q134_rate_anomaly", q134_rate_anomaly _, q134_sql),
+    ("q135_scd2_intervals", q135_scd2_intervals _, q135_sql),
+    ("q142_type_drift", q142_type_drift _, q142_sql),
+    ("q149_forget_cascade", q149_forget_cascade _, q149_sql),
+    ("q150_trending", q150_trending _, q150_sql),
+    ("q151_stickiness", q151_stickiness _, q151_sql),
+    ("q155_trend_slope", q155_trend_slope _, q155_sql),
+    ("q156_lateness_profile", q156_lateness_profile _, q156_sql),
+    ("q159_activity_streaks", q159_activity_streaks _, q159_sql))
 }

@@ -71,14 +71,8 @@ object ExtendedQueries {
        |  SELECT vec_id AS vid, embedding,
        |         ${wtaSigSql(16, "embedding")} AS sig
        |  FROM embeddings),
-       |banded AS (
-       |  SELECT vid, sig, g.i AS band, (sig >> (g.i * 8)) & 255 AS band_val
-       |  FROM s CROSS JOIN generate_series(0, 1) AS g(i)),
-       |cand AS (
-       |  SELECT DISTINCT a.vid AS id_a, b.vid AS id_b
-       |  FROM banded a JOIN banded b
-       |    ON a.band = b.band AND a.band_val = b.band_val
-       |   AND a.vid < b.vid)
+       |${OracleSql.wtaBanded},
+       |${OracleSql.bandCand}
        |SELECT id_a, id_b,
        |  round(list_cosine_similarity(
        |    CAST(x.embedding AS DOUBLE[]), CAST(y.embedding AS DOUBLE[])),
@@ -107,14 +101,8 @@ object ExtendedQueries {
        |  SELECT vec_id AS vid, embedding,
        |         ${wtaSigSql(16, "embedding")} AS sig
        |  FROM embeddings),
-       |banded AS (
-       |  SELECT vid, sig, g.i AS band, (sig >> (g.i * 8)) & 255 AS band_val
-       |  FROM s CROSS JOIN generate_series(0, 1) AS g(i)),
-       |cand AS (
-       |  SELECT DISTINCT a.vid AS id_a, b.vid AS id_b
-       |  FROM banded a JOIN banded b
-       |    ON a.band = b.band AND a.band_val = b.band_val
-       |   AND a.vid < b.vid),
+       |${OracleSql.wtaBanded},
+       |${OracleSql.bandCand},
        |directed AS (
        |  SELECT id_a AS query_id, id_b AS neighbor_id FROM cand
        |  UNION ALL
@@ -339,40 +327,36 @@ object ExtendedQueries {
       |ORDER BY cid""".stripMargin
 
   val q38_sql: String =
-    """WITH v AS (
-      |  SELECT vec_id AS vid, CAST(embedding AS DOUBLE[]) AS vec
-      |  FROM embeddings),
-      |cents AS (SELECT vid AS cid, vec AS cv FROM v WHERE vid % 25 = 0),
-      |asg0 AS (
-      |  SELECT vid, cid,
-      |         round(list_cosine_similarity(v.vec, cents.cv), 5) AS csim
-      |  FROM v CROSS JOIN cents),
-      |asg AS (
-      |  SELECT vid, cid FROM (
-      |    SELECT vid, cid, ROW_NUMBER() OVER (
-      |      PARTITION BY vid ORDER BY csim DESC, cid) AS rn
-      |    FROM asg0) WHERE rn = 1),
-      |q AS (SELECT vid AS query_id, vec AS qv FROM v WHERE vid % 50 = 0),
-      |ps AS (
-      |  SELECT query_id, qv, cid,
-      |         round(list_cosine_similarity(qv, cents.cv), 5) AS csim
-      |  FROM q CROSS JOIN cents),
-      |probes AS (
-      |  SELECT query_id, qv, cid FROM (
-      |    SELECT query_id, qv, cid, ROW_NUMBER() OVER (
-      |      PARTITION BY query_id ORDER BY csim DESC, cid) AS rn
-      |    FROM ps) WHERE rn <= 2),
-      |scored AS (
-      |  SELECT p.query_id, a.vid AS neighbor_id,
-      |         round(list_cosine_similarity(p.qv, v2.vec), 5) AS sim
-      |  FROM probes p JOIN asg a ON a.cid = p.cid AND a.vid <> p.query_id
-      |  JOIN v v2 ON v2.vid = a.vid),
-      |r AS (
-      |  SELECT query_id, neighbor_id, sim, ROW_NUMBER() OVER (
-      |    PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk
-      |  FROM scored)
-      |SELECT query_id, neighbor_id, sim, rk FROM r WHERE rk <= 3
-      |ORDER BY query_id, rk""".stripMargin
+    s"""WITH v AS (
+       |  SELECT vec_id AS vid, CAST(embedding AS DOUBLE[]) AS vec
+       |  FROM embeddings),
+       |cents AS (SELECT vid AS cid, vec AS cv FROM v WHERE vid % 25 = 0),
+       |asg0 AS (
+       |  SELECT vid, cid,
+       |         round(list_cosine_similarity(v.vec, cents.cv), 5) AS csim
+       |  FROM v CROSS JOIN cents),
+       |asg AS (
+       |  SELECT vid, cid FROM (
+       |    SELECT vid, cid, ROW_NUMBER() OVER (
+       |      PARTITION BY vid ORDER BY csim DESC, cid) AS rn
+       |    FROM asg0) WHERE rn = 1),
+       |q AS (SELECT vid AS query_id, vec AS qv FROM v WHERE vid % 50 = 0),
+       |ps AS (
+       |  SELECT query_id, qv, cid,
+       |         round(list_cosine_similarity(qv, cents.cv), 5) AS csim
+       |  FROM q CROSS JOIN cents),
+       |probes AS (
+       |  SELECT query_id, qv, cid FROM (
+       |    SELECT query_id, qv, cid, ROW_NUMBER() OVER (
+       |      PARTITION BY query_id ORDER BY csim DESC, cid) AS rn
+       |    FROM ps) WHERE rn <= 2),
+       |scored AS (
+       |  SELECT p.query_id, a.vid AS neighbor_id,
+       |         round(list_cosine_similarity(p.qv, v2.vec), 5) AS sim
+       |  FROM probes p JOIN asg a ON a.cid = p.cid AND a.vid <> p.query_id
+       |  JOIN v v2 ON v2.vid = a.vid),
+       |${OracleSql.simRank}
+       |${OracleSql.top3}""".stripMargin
 
   // -------------------------------------------------------------------
   // q39 — feature dedup/merge (SURVEY A7) through the gate: normalized
@@ -1295,61 +1279,32 @@ object ExtendedQueries {
        |ORDER BY rq, fq, mq""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q199_rfm_segments" -> q199_rfm_segments _,
-    "q190_cohort_ltv" -> q190_cohort_ltv _,
-    "q104_semdedup" -> q104_semdedup _,
-    "q56_minhash_estimate" -> q56_minhash_estimate _,
-    "q55_grouping_sets" -> q55_grouping_sets _,
-    "q54_range_join" -> q54_range_join _,
-    "q52_dep_grouping" -> q52_dep_grouping _,
-    "q53_running_window" -> q53_running_window _,
-    "q51_asof_join" -> q51_asof_join _,
-    "q50_bigram_jaccard" -> q50_bigram_jaccard _,
-    "q47_kmv_distinct" -> q47_kmv_distinct _,
-    "q48_salted_join" -> q48_salted_join _,
-    "q49_revenue_topn" -> q49_revenue_topn _,
-    "q37_embed_neardup" -> q37_embed_neardup _,
-    "q146_mutual_nn" -> q146_mutual_nn _,
-    "q152_centroid_drift" -> q152_centroid_drift _,
-    "q160_cluster_purity" -> q160_cluster_purity _,
-    "q38_ivf_ann" -> q38_ivf_ann _,
-    "q180_ivf_delta_maintenance" -> q180_ivf_delta_maintenance _,
-    "q39_feature_merge" -> q39_feature_merge _,
-    "q40_scip_parse" -> q40_scip_parse _,
-    "q41_token_budget" -> q41_token_budget _,
-    "q42_cube" -> q42_cube _,
-    "q43_multimodal_meta" -> q43_multimodal_meta _,
-    "q44_percentiles" -> q44_percentiles _,
-    "q45_doc_features" -> q45_doc_features _,
-    "q46_set_ops" -> q46_set_ops _)
-
-  val oracles: Map[String, String] = Map(
-    "q199_rfm_segments" -> q199_sql,
-    "q190_cohort_ltv" -> q190_sql,
-    "q104_semdedup" -> q104_sql,
-    "q56_minhash_estimate" -> q56_sql,
-    "q55_grouping_sets" -> q55_sql,
-    "q54_range_join" -> q54_sql,
-    "q52_dep_grouping" -> q52_sql,
-    "q53_running_window" -> q53_sql,
-    "q51_asof_join" -> q51_sql,
-    "q50_bigram_jaccard" -> q50_sql,
-    "q47_kmv_distinct" -> q47_sql,
-    "q48_salted_join" -> q48_sql,
-    "q49_revenue_topn" -> q49_sql,
-    "q37_embed_neardup" -> q37_sql,
-    "q146_mutual_nn" -> q146_sql,
-    "q152_centroid_drift" -> q152_sql,
-    "q160_cluster_purity" -> q160_sql,
-    "q38_ivf_ann" -> q38_sql,
-    "q180_ivf_delta_maintenance" -> q180_sql,
-    "q39_feature_merge" -> q39_sql,
-    "q40_scip_parse" -> q40_sql,
-    "q41_token_budget" -> q41_sql,
-    "q42_cube" -> q42_sql,
-    "q43_multimodal_meta" -> q43_sql,
-    "q44_percentiles" -> q44_sql,
-    "q45_doc_features" -> q45_sql,
-    "q46_set_ops" -> q46_sql)
+  val registry: graft.SparkEntry.Registry = Seq(
+    ("q199_rfm_segments", q199_rfm_segments _, q199_sql),
+    ("q190_cohort_ltv", q190_cohort_ltv _, q190_sql),
+    ("q104_semdedup", q104_semdedup _, q104_sql),
+    ("q56_minhash_estimate", q56_minhash_estimate _, q56_sql),
+    ("q55_grouping_sets", q55_grouping_sets _, q55_sql),
+    ("q54_range_join", q54_range_join _, q54_sql),
+    ("q52_dep_grouping", q52_dep_grouping _, q52_sql),
+    ("q53_running_window", q53_running_window _, q53_sql),
+    ("q51_asof_join", q51_asof_join _, q51_sql),
+    ("q50_bigram_jaccard", q50_bigram_jaccard _, q50_sql),
+    ("q47_kmv_distinct", q47_kmv_distinct _, q47_sql),
+    ("q48_salted_join", q48_salted_join _, q48_sql),
+    ("q49_revenue_topn", q49_revenue_topn _, q49_sql),
+    ("q37_embed_neardup", q37_embed_neardup _, q37_sql),
+    ("q146_mutual_nn", q146_mutual_nn _, q146_sql),
+    ("q152_centroid_drift", q152_centroid_drift _, q152_sql),
+    ("q160_cluster_purity", q160_cluster_purity _, q160_sql),
+    ("q38_ivf_ann", q38_ivf_ann _, q38_sql),
+    ("q180_ivf_delta_maintenance", q180_ivf_delta_maintenance _, q180_sql),
+    ("q39_feature_merge", q39_feature_merge _, q39_sql),
+    ("q40_scip_parse", q40_scip_parse _, q40_sql),
+    ("q41_token_budget", q41_token_budget _, q41_sql),
+    ("q42_cube", q42_cube _, q42_sql),
+    ("q43_multimodal_meta", q43_multimodal_meta _, q43_sql),
+    ("q44_percentiles", q44_percentiles _, q44_sql),
+    ("q45_doc_features", q45_doc_features _, q45_sql),
+    ("q46_set_ops", q46_set_ops _, q46_sql))
 }

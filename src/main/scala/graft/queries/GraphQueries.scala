@@ -167,6 +167,18 @@ object GraphQueries {
        |ORDER BY rank_ppm DESC, id
        |LIMIT 50""".stripMargin
 
+  /** The undirected part graph of q95/q137/q185: each part p ≥ 2 links
+    * to p div 2 and to p − 1, canonicalized to distinct pairs a < b. */
+  private def partEdges(spark: SparkSession, dir: String): DataFrame = {
+    val p = Tables.part(spark, dir).filter(col("p_partkey") >= 2)
+    p.select(col("p_partkey").as("s"), expr("p_partkey div 2").as("d"))
+      .unionAll(p.select(col("p_partkey").as("s"),
+        (col("p_partkey") - 1).as("d")))
+      .select(least(col("s"), col("d")).as("a"),
+        greatest(col("s"), col("d")).as("b"))
+      .filter(col("a") =!= col("b")).distinct()
+  }
+
   // ---------------------------------------------------------------------
   // q95 — triangle counting (per-node, top 10): the standard graph-
   // cohesion metric, on the tree ∪ predecessor-chain graph (every odd
@@ -181,14 +193,7 @@ object GraphQueries {
   // per-key fan-out; this graph's degree is ≤ 3 so id order suffices.
   // ---------------------------------------------------------------------
   def q95_triangles(spark: SparkSession, dir: String): DataFrame = {
-    val p = Tables.part(spark, dir).filter(col("p_partkey") >= 2)
-    val raw = p.select(col("p_partkey").as("s"),
-        expr("p_partkey div 2").as("d"))
-      .unionAll(p.select(col("p_partkey").as("s"),
-        (col("p_partkey") - 1).as("d")))
-    val und = raw.select(least(col("s"), col("d")).as("a"),
-        greatest(col("s"), col("d")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
+    val und = partEdges(spark, dir)
     val tri = und.as("e1")
       .join(und.as("e2"), col("e1.b") === col("e2.a"))
       .join(und.as("e3"), col("e3.a") === col("e1.a") &&
@@ -445,14 +450,7 @@ object GraphQueries {
   // combine is linear.
   // ---------------------------------------------------------------------
   def q137_clustering_coeff(spark: SparkSession, dir: String): DataFrame = {
-    val p = Tables.part(spark, dir).filter(col("p_partkey") >= 2)
-    val raw = p.select(col("p_partkey").as("s"),
-        expr("p_partkey div 2").as("d"))
-      .unionAll(p.select(col("p_partkey").as("s"),
-        (col("p_partkey") - 1).as("d")))
-    val und = raw.select(least(col("s"), col("d")).as("a"),
-        greatest(col("s"), col("d")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
+    val und = partEdges(spark, dir)
       .localCheckpoint(eager = true)
     val deg = und.select(col("a").as("node"))
       .unionAll(und.select(col("b").as("node")))
@@ -654,14 +652,7 @@ object GraphQueries {
   // collected; the candidate set never materializes corpus².
   // -------------------------------------------------------------------
   def q185_link_prediction(spark: SparkSession, dir: String): DataFrame = {
-    val p = Tables.part(spark, dir).filter(col("p_partkey") >= 2)
-    val raw = p.select(col("p_partkey").as("s"),
-        expr("p_partkey div 2").as("d"))
-      .unionAll(p.select(col("p_partkey").as("s"),
-        (col("p_partkey") - 1).as("d")))
-    val und = raw.select(least(col("s"), col("d")).as("a"),
-        greatest(col("s"), col("d")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
+    val und = partEdges(spark, dir)
       .localCheckpoint(eager = true) // neighbors + the edge anti-join
     val nbr = und.select(col("a").as("v"), col("b").as("n"))
       .unionAll(und.select(col("b").as("v"), col("a").as("n")))
@@ -1455,57 +1446,30 @@ object GraphQueries {
        |GROUP BY 1, 3, 4 ORDER BY round""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q355_maximal_matching" -> q355_maximal_matching _,
-    "q351_boruvka_mst" -> q351_boruvka_mst _,
-    "q346_salsa" -> q346_salsa _,
-    "q347_greedy_coloring" -> q347_greedy_coloring _,
-    "q343_assortativity" -> q343_assortativity _,
-    "q267_star_components" -> q267_star_components _,
-    "q257_landmark_distance" -> q257_landmark_distance _,
-    "q259_stress_centrality" -> q259_stress_centrality _,
-    "q217_harmonic_centrality" -> q217_harmonic_centrality _,
-    "q218_eccentricity" -> q218_eccentricity _,
-    "q185_link_prediction" -> q185_link_prediction _,
-    "q95_triangles" -> q95_triangles _,
-    "q17_bfs_reach" -> q17_bfs_reach _,
-    "q18_closure_depths" -> q18_closure_depths _,
-    "q19_path_capture" -> q19_path_capture _,
-    "q69_pagerank" -> q69_pagerank _,
-    "q136_hits" -> q136_hits _,
-    "q137_clustering_coeff" -> q137_clustering_coeff _,
-    "q140_personalized_pagerank" -> q140_personalized_pagerank _,
-    "q143_kcore" -> q143_kcore _,
-    "q154_sssp" -> q154_sssp _,
-    "q166_label_propagation" -> q166_label_propagation _,
-    "q169_neighborhood_function" -> q169_neighborhood_function _,
-    "q170_random_walks" -> q170_random_walks _,
-    "q302_modularity" -> q302_modularity _)
-
-  val oracles: Map[String, String] = Map(
-    "q355_maximal_matching" -> q355_sql,
-    "q351_boruvka_mst" -> q351_sql,
-    "q346_salsa" -> q346_sql,
-    "q347_greedy_coloring" -> q347_sql,
-    "q343_assortativity" -> q343_sql,
-    "q302_modularity" -> q302_sql,
-    "q257_landmark_distance" -> q257_sql,
-    "q259_stress_centrality" -> q259_sql,
-    "q267_star_components" -> q267_sql,
-    "q217_harmonic_centrality" -> q217_sql,
-    "q218_eccentricity" -> q218_sql,
-    "q185_link_prediction" -> q185_sql,
-    "q95_triangles" -> q95_sql,
-    "q17_bfs_reach" -> q17_sql,
-    "q18_closure_depths" -> q18_sql,
-    "q19_path_capture" -> q19_sql,
-    "q69_pagerank" -> q69_sql,
-    "q136_hits" -> q136_sql,
-    "q137_clustering_coeff" -> q137_sql,
-    "q140_personalized_pagerank" -> q140_sql,
-    "q143_kcore" -> q143_sql,
-    "q154_sssp" -> q154_sql,
-    "q166_label_propagation" -> q166_sql,
-    "q169_neighborhood_function" -> q169_sql,
-    "q170_random_walks" -> q170_sql)
+  val registry: graft.SparkEntry.Registry = Seq(
+    ("q355_maximal_matching", q355_maximal_matching _, q355_sql),
+    ("q351_boruvka_mst", q351_boruvka_mst _, q351_sql),
+    ("q346_salsa", q346_salsa _, q346_sql),
+    ("q347_greedy_coloring", q347_greedy_coloring _, q347_sql),
+    ("q343_assortativity", q343_assortativity _, q343_sql),
+    ("q267_star_components", q267_star_components _, q267_sql),
+    ("q257_landmark_distance", q257_landmark_distance _, q257_sql),
+    ("q259_stress_centrality", q259_stress_centrality _, q259_sql),
+    ("q217_harmonic_centrality", q217_harmonic_centrality _, q217_sql),
+    ("q218_eccentricity", q218_eccentricity _, q218_sql),
+    ("q185_link_prediction", q185_link_prediction _, q185_sql),
+    ("q95_triangles", q95_triangles _, q95_sql),
+    ("q17_bfs_reach", q17_bfs_reach _, q17_sql),
+    ("q18_closure_depths", q18_closure_depths _, q18_sql),
+    ("q19_path_capture", q19_path_capture _, q19_sql),
+    ("q69_pagerank", q69_pagerank _, q69_sql),
+    ("q136_hits", q136_hits _, q136_sql),
+    ("q137_clustering_coeff", q137_clustering_coeff _, q137_sql),
+    ("q140_personalized_pagerank", q140_personalized_pagerank _, q140_sql),
+    ("q143_kcore", q143_kcore _, q143_sql),
+    ("q154_sssp", q154_sssp _, q154_sql),
+    ("q166_label_propagation", q166_label_propagation _, q166_sql),
+    ("q169_neighborhood_function", q169_neighborhood_function _, q169_sql),
+    ("q170_random_walks", q170_random_walks _, q170_sql),
+    ("q302_modularity", q302_modularity _, q302_sql))
 }

@@ -490,19 +490,11 @@ object IntegrityQueries {
        |FROM b4 GROUP BY source ORDER BY source""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q329_rs_erasure_audit" -> q329_rs_erasure_audit _,
-    "q320_xor_parity_audit" -> q320_xor_parity_audit _,
-    "q211_behavior_fingerprint" -> q211_behavior_fingerprint _,
-    "q212_feature_hashing" -> q212_feature_hashing _,
-    "q213_merkle_diff" -> q213_merkle_diff _,
-    "q293_cdc_apply" -> q293_cdc_apply _)
-
-  val oracles: Map[String, String] = Map(
-    "q329_rs_erasure_audit" -> q329_sql,
-    "q320_xor_parity_audit" -> q320_sql,
-    "q211_behavior_fingerprint" -> q211_sql,
-    "q212_feature_hashing" -> q212_sql,
-    "q213_merkle_diff" -> q213_sql,
-    "q293_cdc_apply" -> q293_sql)
+  val registry: graft.SparkEntry.Registry = Seq(
+    ("q329_rs_erasure_audit", q329_rs_erasure_audit _, q329_sql),
+    ("q320_xor_parity_audit", q320_xor_parity_audit _, q320_sql),
+    ("q211_behavior_fingerprint", q211_behavior_fingerprint _, q211_sql),
+    ("q212_feature_hashing", q212_feature_hashing _, q212_sql),
+    ("q213_merkle_diff", q213_merkle_diff _, q213_sql),
+    ("q293_cdc_apply", q293_cdc_apply _, q293_sql))
 }

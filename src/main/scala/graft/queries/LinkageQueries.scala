@@ -836,33 +836,18 @@ object LinkageQueries {
       |FROM q
       |ORDER BY source""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q224_sorted_neighborhood" -> q224_sorted_neighborhood _,
-    "q225_chao1_richness" -> q225_chao1_richness _,
-    "q226_seasonal_anomaly" -> q226_seasonal_anomaly _,
-    "q227_spearman_corr" -> q227_spearman_corr _,
-    "q228_boilerplate_lines" -> q228_boilerplate_lines _,
-    "q231_market_share" -> q231_market_share _,
-    "q232_pr_curve" -> q232_pr_curve _,
-    "q233_gap_interpolation" -> q233_gap_interpolation _,
-    "q234_fanout_profile" -> q234_fanout_profile _,
-    "q235_vocab_shift" -> q235_vocab_shift _,
-    "q241_source_token_overlap" -> q241_source_token_overlap _,
-    "q246_ngram_novelty" -> q246_ngram_novelty _,
-    "q248_length_skew" -> q248_length_skew _)
-
-  val oracles: Map[String, String] = Map(
-    "q224_sorted_neighborhood" -> q224_sql,
-    "q225_chao1_richness" -> q225_sql,
-    "q226_seasonal_anomaly" -> q226_sql,
-    "q227_spearman_corr" -> q227_sql,
-    "q228_boilerplate_lines" -> q228_sql,
-    "q231_market_share" -> q231_sql,
-    "q232_pr_curve" -> q232_sql,
-    "q233_gap_interpolation" -> q233_sql,
-    "q234_fanout_profile" -> q234_sql,
-    "q235_vocab_shift" -> q235_sql,
-    "q241_source_token_overlap" -> q241_sql,
-    "q246_ngram_novelty" -> q246_sql,
-    "q248_length_skew" -> q248_sql)
+  val registry: graft.SparkEntry.Registry = Seq(
+    ("q224_sorted_neighborhood", q224_sorted_neighborhood _, q224_sql),
+    ("q225_chao1_richness", q225_chao1_richness _, q225_sql),
+    ("q226_seasonal_anomaly", q226_seasonal_anomaly _, q226_sql),
+    ("q227_spearman_corr", q227_spearman_corr _, q227_sql),
+    ("q228_boilerplate_lines", q228_boilerplate_lines _, q228_sql),
+    ("q231_market_share", q231_market_share _, q231_sql),
+    ("q232_pr_curve", q232_pr_curve _, q232_sql),
+    ("q233_gap_interpolation", q233_gap_interpolation _, q233_sql),
+    ("q234_fanout_profile", q234_fanout_profile _, q234_sql),
+    ("q235_vocab_shift", q235_vocab_shift _, q235_sql),
+    ("q241_source_token_overlap", q241_source_token_overlap _, q241_sql),
+    ("q246_ngram_novelty", q246_ngram_novelty _, q246_sql),
+    ("q248_length_skew", q248_length_skew _, q248_sql))
 }

@@ -1603,49 +1603,26 @@ object MetricQueries {
       |FROM mm CROSS JOIN did
       |ORDER BY treat, post""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q341_diff_in_diff" -> q341_diff_in_diff _,
-    "q330_kendall_daily" -> q330_kendall_daily _,
-    "q318_kaplan_meier" -> q318_kaplan_meier _,
-    "q307_haar_synopsis" -> q307_haar_synopsis _,
-    "q308_theil_sen" -> q308_theil_sen _,
-    "q309_cuped_readout" -> q309_cuped_readout _,
-    "q306_autocorrelation" -> q306_autocorrelation _,
-    "q219_rolling_wau" -> q219_rolling_wau _,
-    "q220_decayed_popularity" -> q220_decayed_popularity _,
-    "q221_cohens_kappa" -> q221_cohens_kappa _,
-    "q222_gini" -> q222_gini _,
-    "q230_simpson_diversity" -> q230_simpson_diversity _,
-    "q236_interarrival" -> q236_interarrival _,
-    "q242_tv_drift" -> q242_tv_drift _,
-    "q243_burstiness" -> q243_burstiness _,
-    "q244_stream_tv_drift" -> q244_stream_tv_drift _,
-    "q264_cusum_changepoint" -> q264_cusum_changepoint _,
-    "q266_bradley_terry" -> q266_bradley_terry _,
-    "q245_funnel_latency" -> q245_funnel_latency _,
-    "q247_leaderboard_churn" -> q247_leaderboard_churn _,
-    "q249_session_lift" -> q249_session_lift _)
-
-  val oracles: Map[String, String] = Map(
-    "q341_diff_in_diff" -> q341_sql,
-    "q330_kendall_daily" -> q330_sql,
-    "q318_kaplan_meier" -> q318_sql,
-    "q307_haar_synopsis" -> q307_sql,
-    "q308_theil_sen" -> q308_sql,
-    "q309_cuped_readout" -> q309_sql,
-    "q306_autocorrelation" -> q306_sql,
-    "q219_rolling_wau" -> q219_sql,
-    "q220_decayed_popularity" -> q220_sql,
-    "q221_cohens_kappa" -> q221_sql,
-    "q222_gini" -> q222_sql,
-    "q230_simpson_diversity" -> q230_sql,
-    "q236_interarrival" -> q236_sql,
-    "q242_tv_drift" -> q242_sql,
-    "q243_burstiness" -> q243_sql,
-    "q244_stream_tv_drift" -> q242_sql,
-    "q264_cusum_changepoint" -> q264_sql,
-    "q266_bradley_terry" -> q266_sql,
-    "q245_funnel_latency" -> q245_sql,
-    "q247_leaderboard_churn" -> q247_sql,
-    "q249_session_lift" -> q249_sql)
+  val registry: graft.SparkEntry.Registry = Seq(
+    ("q341_diff_in_diff", q341_diff_in_diff _, q341_sql),
+    ("q330_kendall_daily", q330_kendall_daily _, q330_sql),
+    ("q318_kaplan_meier", q318_kaplan_meier _, q318_sql),
+    ("q307_haar_synopsis", q307_haar_synopsis _, q307_sql),
+    ("q308_theil_sen", q308_theil_sen _, q308_sql),
+    ("q309_cuped_readout", q309_cuped_readout _, q309_sql),
+    ("q306_autocorrelation", q306_autocorrelation _, q306_sql),
+    ("q219_rolling_wau", q219_rolling_wau _, q219_sql),
+    ("q220_decayed_popularity", q220_decayed_popularity _, q220_sql),
+    ("q221_cohens_kappa", q221_cohens_kappa _, q221_sql),
+    ("q222_gini", q222_gini _, q222_sql),
+    ("q230_simpson_diversity", q230_simpson_diversity _, q230_sql),
+    ("q236_interarrival", q236_interarrival _, q236_sql),
+    ("q242_tv_drift", q242_tv_drift _, q242_sql),
+    ("q243_burstiness", q243_burstiness _, q243_sql),
+    ("q244_stream_tv_drift", q244_stream_tv_drift _, q242_sql),
+    ("q264_cusum_changepoint", q264_cusum_changepoint _, q264_sql),
+    ("q266_bradley_terry", q266_bradley_terry _, q266_sql),
+    ("q245_funnel_latency", q245_funnel_latency _, q245_sql),
+    ("q247_leaderboard_churn", q247_leaderboard_churn _, q247_sql),
+    ("q249_session_lift", q249_session_lift _, q249_sql))
 }

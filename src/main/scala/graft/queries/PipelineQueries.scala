@@ -15,14 +15,6 @@ import graft.pipeline.{Dedup, Similarity, TextAnalysis}
   */
 object PipelineQueries {
 
-  /** Distinct whitespace tokens per non-empty doc — shared CTE. */
-  private val toksCte =
-    """toks AS (
-      |  SELECT DISTINCT doc_id, tok FROM (
-      |    SELECT doc_id,
-      |           unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
-      |    FROM documents WHERE trim(text) <> ''))""".stripMargin
-
   private val stopwordsSqlList: String =
     TextAnalysis.defaultStopwords.map(w => s"'$w'").mkString(",")
 
@@ -105,7 +97,7 @@ object PipelineQueries {
   }
 
   val q23_sql: String =
-    s"""WITH $toksCte,
+    s"""WITH ${OracleSql.toks},
        |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM toks GROUP BY doc_id),
        |inter AS (
        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -132,22 +124,8 @@ object PipelineQueries {
       .orderBy(col("id_a"), col("id_b"))
 
   val q24_sql: String =
-    s"""WITH $toksCte,
-       |h AS (
-       |  SELECT doc_id,
-       |    CAST(('0x' || substr(md5(tok), 1, 7)) AS BIGINT) AS h1,
-       |    CAST(('0x' || substr(md5(tok), 8, 7)) AS BIGINT) AS h2
-       |  FROM toks),
-       |sigs AS (
-       |  SELECT doc_id, s.i AS seed,
-       |         min((h1 + s.i * h2) % 2147483647) AS sig
-       |  FROM h CROSS JOIN generate_series(0, 7) AS s(i)
-       |  GROUP BY doc_id, s.i),
-       |bands AS (
-       |  SELECT doc_id, seed // 2 AS band,
-       |         md5(string_agg(CAST(sig AS VARCHAR), '|' ORDER BY seed))
-       |           AS band_key
-       |  FROM sigs GROUP BY doc_id, seed // 2),
+    s"""WITH ${OracleSql.toks},
+       |${OracleSql.minHashBands("toks", 2)},
        |pairs AS (
        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        |         COUNT(*) AS shared_bands
@@ -181,21 +159,7 @@ object PipelineQueries {
        |    unnest([array_to_string(t[i:i+4], ' ')
        |            FOR i IN generate_series(1, len(t) - 4)]) AS tok
        |  FROM tk5 WHERE len(t) >= 5),
-       |h AS (
-       |  SELECT doc_id,
-       |    CAST(('0x' || substr(md5(tok), 1, 7)) AS BIGINT) AS h1,
-       |    CAST(('0x' || substr(md5(tok), 8, 7)) AS BIGINT) AS h2
-       |  FROM sh5),
-       |sigs AS (
-       |  SELECT doc_id, s.i AS seed,
-       |         min((h1 + s.i * h2) % 2147483647) AS sig
-       |  FROM h CROSS JOIN generate_series(0, 7) AS s(i)
-       |  GROUP BY doc_id, s.i),
-       |bands AS (
-       |  SELECT doc_id, seed // 4 AS band,
-       |         md5(string_agg(CAST(sig AS VARCHAR), '|' ORDER BY seed))
-       |           AS band_key
-       |  FROM sigs GROUP BY doc_id, seed // 4),
+       |${OracleSql.minHashBands("sh5", 4)},
        |pairs AS (
        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
        |  FROM bands a JOIN bands b
@@ -627,7 +591,7 @@ object PipelineQueries {
       .orderBy(col("id_a"), col("id_b"))
 
   val q26_sql: String =
-    s"""WITH $toksCte,
+    s"""WITH ${OracleSql.toks},
        |th AS (
        |  SELECT doc_id,
        |         CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) AS h
@@ -775,29 +739,11 @@ object PipelineQueries {
     val bits = ExtendedQueries.wtaSigSql(16, "embedding")
     s"""WITH s AS (
        |  SELECT vec_id AS vid, $bits AS sig FROM embeddings),
-       |banded AS (
-       |  SELECT vid, sig, g.i AS band, (sig >> (g.i * 8)) & 255 AS band_val
-       |  FROM s CROSS JOIN generate_series(0, 1) AS g(i)),
-       |cand AS (
-       |  SELECT DISTINCT a.vid AS id_a, b.vid AS id_b
-       |  FROM banded a JOIN banded b
-       |    ON a.band = b.band AND a.band_val = b.band_val
-       |   AND a.vid < b.vid),
-       |directed AS (
-       |  SELECT id_a AS query_id, id_b AS neighbor_id FROM cand
-       |  UNION ALL SELECT id_b, id_a FROM cand),
-       |scored AS (
-       |  SELECT query_id, neighbor_id,
-       |    round(list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-       |      CAST(c.embedding AS DOUBLE[])), 5) AS sim
-       |  FROM directed d JOIN embeddings q ON q.vec_id = d.query_id
-       |                  JOIN embeddings c ON c.vec_id = d.neighbor_id),
-       |r AS (
-       |  SELECT query_id, neighbor_id, sim, ROW_NUMBER() OVER (
-       |    PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, sim, rk FROM r WHERE rk <= 3
-       |ORDER BY query_id, rk""".stripMargin
+       |${OracleSql.wtaBanded},
+       |${OracleSql.bandCand},
+       |${OracleSql.annScored},
+       |${OracleSql.simRank}
+       |${OracleSql.top3}""".stripMargin
   }
 
   // -------------------------------------------------------------------
@@ -831,7 +777,7 @@ object PipelineQueries {
   }
 
   val q112_sql: String =
-    s"""WITH $toksCte,
+    s"""WITH ${OracleSql.toks},
        |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM toks GROUP BY doc_id),
        |inter AS (
        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -845,21 +791,7 @@ object PipelineQueries {
        |  JOIN sizes sb ON id_b = sb.doc_id
        |  WHERE CAST(intersection AS DOUBLE) /
        |        (sa.sz + sb.sz - intersection) >= 0.8),
-       |h AS (
-       |  SELECT doc_id,
-       |    CAST(('0x' || substr(md5(tok), 1, 7)) AS BIGINT) AS h1,
-       |    CAST(('0x' || substr(md5(tok), 8, 7)) AS BIGINT) AS h2
-       |  FROM toks),
-       |sigs AS (
-       |  SELECT doc_id, s.i AS seed,
-       |         min((h1 + s.i * h2) % 2147483647) AS sig
-       |  FROM h CROSS JOIN generate_series(0, 7) AS s(i)
-       |  GROUP BY doc_id, s.i),
-       |bands AS (
-       |  SELECT doc_id, seed // 2 AS band,
-       |         md5(string_agg(CAST(sig AS VARCHAR), '|' ORDER BY seed))
-       |           AS band_key
-       |  FROM sigs GROUP BY doc_id, seed // 2),
+       |${OracleSql.minHashBands("toks", 2)},
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
        |  FROM bands a JOIN bands b
@@ -896,9 +828,7 @@ object PipelineQueries {
     val bits = ExtendedQueries.wtaSigSql(16, "embedding")
     s"""WITH s AS (
        |  SELECT vec_id AS vid, $bits AS sig FROM embeddings),
-       |banded AS (
-       |  SELECT vid, sig, g.i AS band, (sig >> (g.i * 8)) & 255 AS band_val
-       |  FROM s CROSS JOIN generate_series(0, 1) AS g(i)),
+       |${OracleSql.wtaBanded},
        |probes AS (
        |  SELECT vid, band,
        |    CASE WHEN p.j < 0 THEN band_val
@@ -909,21 +839,9 @@ object PipelineQueries {
        |  FROM probes a JOIN banded b
        |    ON a.band = b.band AND a.probe_val = b.band_val
        |   AND a.vid < b.vid),
-       |directed AS (
-       |  SELECT id_a AS query_id, id_b AS neighbor_id FROM cand
-       |  UNION ALL SELECT id_b, id_a FROM cand),
-       |scored AS (
-       |  SELECT query_id, neighbor_id,
-       |    round(list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-       |      CAST(c.embedding AS DOUBLE[])), 5) AS sim
-       |  FROM directed d JOIN embeddings q ON q.vec_id = d.query_id
-       |                  JOIN embeddings c ON c.vec_id = d.neighbor_id),
-       |r AS (
-       |  SELECT query_id, neighbor_id, sim, ROW_NUMBER() OVER (
-       |    PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, sim, rk FROM r WHERE rk <= 3
-       |ORDER BY query_id, rk""".stripMargin
+       |${OracleSql.annScored},
+       |${OracleSql.simRank}
+       |${OracleSql.top3}""".stripMargin
   }
 
   // -------------------------------------------------------------------
@@ -944,49 +862,12 @@ object PipelineQueries {
       .withColumnRenamed("rank", "rk")
       .orderBy(col("query_id"), col("rk"))
 
-  val q253_sql: String = {
-    val bits = ExtendedQueries.wtaSigSqlMasked(30, "embedding", "bb")
-    s"""WITH nq AS (
-       |  SELECT GREATEST((GREATEST(COUNT(*), 2) - 1) // 16, 1) AS q
-       |  FROM embeddings),
-       |p AS (
-       |  SELECT LEAST(15, GREATEST(4, (
-       |    SELECT COUNT(*) FROM nq, generate_series(0, 62) g(i)
-       |    WHERE q >> i > 0))) AS bb),
-       |s AS (
-       |  SELECT vec_id AS vid, bb, $bits AS sig
-       |  FROM embeddings CROSS JOIN p),
-       |banded AS (
-       |  SELECT vid, bb, g.i AS band,
-       |    (sig >> (g.i * bb)) & ((1::BIGINT << bb) - 1) AS band_val
-       |  FROM s CROSS JOIN generate_series(0, 1) AS g(i)),
-       |probes AS (
-       |  SELECT vid, band,
-       |    CASE WHEN pr.j < 0 THEN band_val
-       |      ELSE xor(band_val, 1::BIGINT << pr.j) END AS probe_val
-       |  FROM banded CROSS JOIN generate_series(-1, 14) AS pr(j)
-       |  WHERE pr.j < bb),
-       |cand AS (
-       |  SELECT DISTINCT a.vid AS id_a, b.vid AS id_b
-       |  FROM probes a JOIN banded b
-       |    ON a.band = b.band AND a.probe_val = b.band_val
-       |   AND a.vid < b.vid),
-       |directed AS (
-       |  SELECT id_a AS query_id, id_b AS neighbor_id FROM cand
-       |  UNION ALL SELECT id_b, id_a FROM cand),
-       |scored AS (
-       |  SELECT query_id, neighbor_id,
-       |    round(list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-       |      CAST(c.embedding AS DOUBLE[])), 5) AS sim
-       |  FROM directed d JOIN embeddings q ON q.vec_id = d.query_id
-       |                  JOIN embeddings c ON c.vec_id = d.neighbor_id),
-       |r AS (
-       |  SELECT query_id, neighbor_id, sim, ROW_NUMBER() OVER (
-       |    PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, sim, rk FROM r WHERE rk <= 3
-       |ORDER BY query_id, rk""".stripMargin
-  }
+  val q253_sql: String =
+    s"""WITH ${OracleSql.sizedNq},
+       |${OracleSql.sizedProbeCand},
+       |${OracleSql.annScored},
+       |${OracleSql.simRank}
+       |${OracleSql.top3}""".stripMargin
 
 
   // -------------------------------------------------------------------
@@ -1017,33 +898,9 @@ object PipelineQueries {
       .orderBy(col("query_id"), col("rk"))
   }
 
-  val q357_sql: String = {
-    val bits = ExtendedQueries.wtaSigSqlMasked(30, "embedding", "bb")
-    s"""WITH nq AS (
-       |  SELECT GREATEST((GREATEST(COUNT(*), 2) - 1) // 16, 1) AS q
-       |  FROM embeddings),
-       |p AS (
-       |  SELECT LEAST(15, GREATEST(4, (
-       |    SELECT COUNT(*) FROM nq, generate_series(0, 62) g(i)
-       |    WHERE q >> i > 0))) AS bb),
-       |s AS (
-       |  SELECT vec_id AS vid, bb, $bits AS sig
-       |  FROM embeddings CROSS JOIN p),
-       |banded AS (
-       |  SELECT vid, bb, g.i AS band,
-       |    (sig >> (g.i * bb)) & ((1::BIGINT << bb) - 1) AS band_val
-       |  FROM s CROSS JOIN generate_series(0, 1) AS g(i)),
-       |probes AS (
-       |  SELECT vid, band,
-       |    CASE WHEN pr.j < 0 THEN band_val
-       |      ELSE xor(band_val, 1::BIGINT << pr.j) END AS probe_val
-       |  FROM banded CROSS JOIN generate_series(-1, 14) AS pr(j)
-       |  WHERE pr.j < bb),
-       |cand AS (
-       |  SELECT DISTINCT a.vid AS id_a, b.vid AS id_b
-       |  FROM probes a JOIN banded b
-       |    ON a.band = b.band AND a.probe_val = b.band_val
-       |   AND a.vid < b.vid),
+  val q357_sql: String =
+    s"""WITH ${OracleSql.sizedNq},
+       |${OracleSql.sizedProbeCand},
        |qd AS (
        |  SELECT query_id, neighbor_id FROM (
        |    SELECT id_a AS query_id, id_b AS neighbor_id FROM cand
@@ -1060,16 +917,12 @@ object PipelineQueries {
        |      CAST(c.embedding AS DOUBLE[])), 5) AS sim
        |  FROM qd d JOIN embeddings q ON q.vec_id = d.query_id
        |            JOIN embeddings c ON c.vec_id = d.neighbor_id),
-       |r AS (
-       |  SELECT query_id, neighbor_id, sim, ROW_NUMBER() OVER (
-       |    PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk
-       |  FROM scored)
+       |${OracleSql.simRank}
        |SELECT query_id, CAST(rk AS BIGINT) AS rk, neighbor_id, sim,
        |  CAST(n_cand AS BIGINT) AS n_cand,
        |  CAST(tc * 1000 // nqr AS BIGINT) AS cand_pq_x1000
        |FROM r JOIN nc USING (query_id) CROSS JOIN tot
        |WHERE rk <= 3 ORDER BY query_id, rk""".stripMargin
-  }
 
   // -------------------------------------------------------------------
   // q256 — RECALL AUDIT of the size-adaptive multiprobe (q253) against
@@ -1114,50 +967,15 @@ object PipelineQueries {
           .as("recall_ppm"))
   }
 
-  val q256_sql: String = {
-    val bits = ExtendedQueries.wtaSigSqlMasked(30, "embedding", "bb")
-    s"""WITH nq AS (
-       |  SELECT GREATEST((GREATEST(COUNT(*), 2) - 1) // 16, 1) AS q
-       |  FROM embeddings),
+  val q256_sql: String =
+    s"""WITH ${OracleSql.sizedNq},
        |qm AS (
        |  SELECT GREATEST(20, (COUNT(*) + ${QueryBudget256 - 1})
        |    // $QueryBudget256) AS m
        |  FROM embeddings),
-       |p AS (
-       |  SELECT LEAST(15, GREATEST(4, (
-       |    SELECT COUNT(*) FROM nq, generate_series(0, 62) g(i)
-       |    WHERE q >> i > 0))) AS bb),
-       |s AS (
-       |  SELECT vec_id AS vid, bb, $bits AS sig
-       |  FROM embeddings CROSS JOIN p),
-       |banded AS (
-       |  SELECT vid, bb, g.i AS band,
-       |    (sig >> (g.i * bb)) & ((1::BIGINT << bb) - 1) AS band_val
-       |  FROM s CROSS JOIN generate_series(0, 1) AS g(i)),
-       |probes AS (
-       |  SELECT vid, band,
-       |    CASE WHEN pr.j < 0 THEN band_val
-       |      ELSE xor(band_val, 1::BIGINT << pr.j) END AS probe_val
-       |  FROM banded CROSS JOIN generate_series(-1, 14) AS pr(j)
-       |  WHERE pr.j < bb),
-       |cand AS (
-       |  SELECT DISTINCT a.vid AS id_a, b.vid AS id_b
-       |  FROM probes a JOIN banded b
-       |    ON a.band = b.band AND a.probe_val = b.band_val
-       |   AND a.vid < b.vid),
-       |directed AS (
-       |  SELECT id_a AS query_id, id_b AS neighbor_id FROM cand
-       |  UNION ALL SELECT id_b, id_a FROM cand),
-       |scored AS (
-       |  SELECT query_id, neighbor_id,
-       |    round(list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-       |      CAST(c.embedding AS DOUBLE[])), 5) AS sim
-       |  FROM directed d JOIN embeddings q ON q.vec_id = d.query_id
-       |                  JOIN embeddings c ON c.vec_id = d.neighbor_id),
-       |r AS (
-       |  SELECT query_id, neighbor_id, sim, ROW_NUMBER() OVER (
-       |    PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk
-       |  FROM scored),
+       |${OracleSql.sizedProbeCand},
+       |${OracleSql.annScored},
+       |${OracleSql.simRank},
        |lsh AS (
        |  SELECT query_id, neighbor_id FROM r
        |  WHERE rk <= 3 AND query_id % (SELECT m FROM qm) = 0),
@@ -1185,7 +1003,6 @@ object PipelineQueries {
        |  CAST(COALESCE(SUM(hit), 0) * 1000000
        |    // GREATEST(COUNT(*), 1) AS BIGINT) AS recall_ppm
        |FROM hits""".stripMargin
-  }
 
   // -------------------------------------------------------------------
   // q353 — Johnson–Lindenstrauss distortion audit with ±1 projections
@@ -1310,59 +1127,31 @@ object PipelineQueries {
        |ORDER BY d2e.id_a, d2e.id_b""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q353_jl_distortion" -> q353_jl_distortion _,
-    "q240_multiprobe_lsh" -> q240_multiprobe_lsh _,
-    "q253_sized_multiprobe" -> q253_sized_multiprobe _,
-    "q357_composed_retrieval" -> q357_composed_retrieval _,
-    "q256_sized_recall" -> q256_sized_recall _,
-    "q112_lsh_recall" -> q112_lsh_recall _,
-    "q122_editsim_dedup" -> q122_editsim_dedup _,
-    "q128_winnow_pairs" -> q128_winnow_pairs _,
-    "q129_continuations" -> q129_continuations _,
-    "q131_pq_adc" -> q131_pq_adc _,
-    "q258_ivfpq_adc" -> q258_ivfpq_adc _,
-    "q262_suffix_doubling" -> q262_suffix_doubling _,
-    "q263_margin_mining" -> q263_margin_mining _,
-    "q132_prefix_rerank" -> q132_prefix_rerank _,
-    "q20_dedup_exact" -> q20_dedup_exact _,
-    "q21_text_stats" -> q21_text_stats _,
-    "q22_fingerprint" -> q22_fingerprint _,
-    "q23_jaccard_pairs" -> q23_jaccard_pairs _,
-    "q24_minhash_lsh" -> q24_minhash_lsh _,
-    "q25_cosine_topk" -> q25_cosine_topk _,
-    "q26_simhash" -> q26_simhash _,
-    "q27_langid" -> q27_langid _,
-    "q28_quality" -> q28_quality _,
-    "q29_ann_lsh" -> q29_ann_lsh _,
-    "q32_substring_join" -> q32_substring_join _,
-    "q33_dedup_keep" -> q33_dedup_keep _)
-
-  val oracles: Map[String, String] = Map(
-    "q353_jl_distortion" -> q353_sql,
-    "q240_multiprobe_lsh" -> q240_sql,
-    "q253_sized_multiprobe" -> q253_sql,
-    "q357_composed_retrieval" -> q357_sql,
-    "q256_sized_recall" -> q256_sql,
-    "q112_lsh_recall" -> q112_sql,
-    "q122_editsim_dedup" -> q122_sql,
-    "q128_winnow_pairs" -> q128_sql,
-    "q129_continuations" -> q129_sql,
-    "q131_pq_adc" -> q131_sql,
-    "q258_ivfpq_adc" -> q258_sql,
-    "q262_suffix_doubling" -> q262_sql,
-    "q263_margin_mining" -> q263_sql,
-    "q132_prefix_rerank" -> q132_sql,
-    "q20_dedup_exact" -> q20_sql,
-    "q21_text_stats" -> q21_sql,
-    "q22_fingerprint" -> q22_sql,
-    "q23_jaccard_pairs" -> q23_sql,
-    "q24_minhash_lsh" -> q24_sql,
-    "q25_cosine_topk" -> q25_sql,
-    "q26_simhash" -> q26_sql,
-    "q27_langid" -> q27_sql,
-    "q28_quality" -> q28_sql,
-    "q29_ann_lsh" -> q29_sql,
-    "q32_substring_join" -> q32_sql,
-    "q33_dedup_keep" -> q33_sql)
+  val registry: graft.SparkEntry.Registry = Seq(
+    ("q353_jl_distortion", q353_jl_distortion _, q353_sql),
+    ("q240_multiprobe_lsh", q240_multiprobe_lsh _, q240_sql),
+    ("q253_sized_multiprobe", q253_sized_multiprobe _, q253_sql),
+    ("q357_composed_retrieval", q357_composed_retrieval _, q357_sql),
+    ("q256_sized_recall", q256_sized_recall _, q256_sql),
+    ("q112_lsh_recall", q112_lsh_recall _, q112_sql),
+    ("q122_editsim_dedup", q122_editsim_dedup _, q122_sql),
+    ("q128_winnow_pairs", q128_winnow_pairs _, q128_sql),
+    ("q129_continuations", q129_continuations _, q129_sql),
+    ("q131_pq_adc", q131_pq_adc _, q131_sql),
+    ("q258_ivfpq_adc", q258_ivfpq_adc _, q258_sql),
+    ("q262_suffix_doubling", q262_suffix_doubling _, q262_sql),
+    ("q263_margin_mining", q263_margin_mining _, q263_sql),
+    ("q132_prefix_rerank", q132_prefix_rerank _, q132_sql),
+    ("q20_dedup_exact", q20_dedup_exact _, q20_sql),
+    ("q21_text_stats", q21_text_stats _, q21_sql),
+    ("q22_fingerprint", q22_fingerprint _, q22_sql),
+    ("q23_jaccard_pairs", q23_jaccard_pairs _, q23_sql),
+    ("q24_minhash_lsh", q24_minhash_lsh _, q24_sql),
+    ("q25_cosine_topk", q25_cosine_topk _, q25_sql),
+    ("q26_simhash", q26_simhash _, q26_sql),
+    ("q27_langid", q27_langid _, q27_sql),
+    ("q28_quality", q28_quality _, q28_sql),
+    ("q29_ann_lsh", q29_ann_lsh _, q29_sql),
+    ("q32_substring_join", q32_substring_join _, q32_sql),
+    ("q33_dedup_keep", q33_dedup_keep _, q33_sql))
 }

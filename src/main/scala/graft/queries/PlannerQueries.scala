@@ -1859,47 +1859,25 @@ object PlannerQueries {
        |ORDER BY c.cell""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q356_huffman_audit" -> q356_huffman_audit _,
-    "q348_haar_synopsis" -> q348_haar_synopsis _,
-    "q340_dyadic_range_audit" -> q340_dyadic_range_audit _,
-    "q338_rebalance_plan" -> q338_rebalance_plan _,
-    "q336_independence_audit" -> q336_independence_audit _,
-    "q334_bsi_aggregation_audit" -> q334_bsi_aggregation_audit _,
-    "q331_voptimal_histogram" -> q331_voptimal_histogram _,
-    "q332_join_cost_planner" -> q332_join_cost_planner _,
-    "q321_equidepth_audit" -> q321_equidepth_audit _,
-    "q301_encoding_audit" -> q301_encoding_audit _,
-    "q303_bloom_join_audit" -> q303_bloom_join_audit _,
-    "q296_range_partition_audit" -> q296_range_partition_audit _,
-    "q297_consistent_hash_ring" -> q297_consistent_hash_ring _,
-    "q289_sequence_packing" -> q289_sequence_packing _,
-    "q290_skew_split_plan" -> q290_skew_split_plan _,
-    "q283_neyman_allocation" -> q283_neyman_allocation _,
-    "q284_rendezvous_hashing" -> q284_rendezvous_hashing _,
-    "q285_histogram_selectivity" -> q285_histogram_selectivity _,
-    "q286_join_order_audit" -> q286_join_order_audit _,
-    "q287_roaring_audit" -> q287_roaring_audit _)
-
-  val oracles: Map[String, String] = Map(
-    "q356_huffman_audit" -> q356_sql,
-    "q348_haar_synopsis" -> q348_sql,
-    "q340_dyadic_range_audit" -> q340_sql,
-    "q338_rebalance_plan" -> q338_sql,
-    "q336_independence_audit" -> q336_sql,
-    "q334_bsi_aggregation_audit" -> q334_sql,
-    "q331_voptimal_histogram" -> q331_sql,
-    "q332_join_cost_planner" -> q332_sql,
-    "q321_equidepth_audit" -> q321_sql,
-    "q301_encoding_audit" -> q301_sql,
-    "q303_bloom_join_audit" -> q303_sql,
-    "q296_range_partition_audit" -> q296_sql,
-    "q297_consistent_hash_ring" -> q297_sql,
-    "q289_sequence_packing" -> q289_sql,
-    "q290_skew_split_plan" -> q290_sql,
-    "q283_neyman_allocation" -> q283_sql,
-    "q284_rendezvous_hashing" -> q284_sql,
-    "q285_histogram_selectivity" -> q285_sql,
-    "q286_join_order_audit" -> q286_sql,
-    "q287_roaring_audit" -> q287_sql)
+  val registry: graft.SparkEntry.Registry = Seq(
+    ("q356_huffman_audit", q356_huffman_audit _, q356_sql),
+    ("q348_haar_synopsis", q348_haar_synopsis _, q348_sql),
+    ("q340_dyadic_range_audit", q340_dyadic_range_audit _, q340_sql),
+    ("q338_rebalance_plan", q338_rebalance_plan _, q338_sql),
+    ("q336_independence_audit", q336_independence_audit _, q336_sql),
+    ("q334_bsi_aggregation_audit", q334_bsi_aggregation_audit _, q334_sql),
+    ("q331_voptimal_histogram", q331_voptimal_histogram _, q331_sql),
+    ("q332_join_cost_planner", q332_join_cost_planner _, q332_sql),
+    ("q321_equidepth_audit", q321_equidepth_audit _, q321_sql),
+    ("q301_encoding_audit", q301_encoding_audit _, q301_sql),
+    ("q303_bloom_join_audit", q303_bloom_join_audit _, q303_sql),
+    ("q296_range_partition_audit", q296_range_partition_audit _, q296_sql),
+    ("q297_consistent_hash_ring", q297_consistent_hash_ring _, q297_sql),
+    ("q289_sequence_packing", q289_sequence_packing _, q289_sql),
+    ("q290_skew_split_plan", q290_skew_split_plan _, q290_sql),
+    ("q283_neyman_allocation", q283_neyman_allocation _, q283_sql),
+    ("q284_rendezvous_hashing", q284_rendezvous_hashing _, q284_sql),
+    ("q285_histogram_selectivity", q285_histogram_selectivity _, q285_sql),
+    ("q286_join_order_audit", q286_join_order_audit _, q286_sql),
+    ("q287_roaring_audit", q287_roaring_audit _, q287_sql))
 }

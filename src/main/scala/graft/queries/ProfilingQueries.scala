@@ -440,17 +440,10 @@ object ProfilingQueries {
        |ORDER BY dim""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q201_embed_covariance" -> q201_embed_covariance _,
-    "q202_tcloseness" -> q202_tcloseness _,
-    "q203_kmv_intersection" -> q203_kmv_intersection _,
-    "q204_robust_outliers" -> q204_robust_outliers _,
-    "q229_embed_standardize" -> q229_embed_standardize _)
-
-  val oracles: Map[String, String] = Map(
-    "q201_embed_covariance" -> q201_sql,
-    "q202_tcloseness" -> q202_sql,
-    "q203_kmv_intersection" -> q203_sql,
-    "q204_robust_outliers" -> q204_sql,
-    "q229_embed_standardize" -> q229_sql)
+  val registry: graft.SparkEntry.Registry = Seq(
+    ("q201_embed_covariance", q201_embed_covariance _, q201_sql),
+    ("q202_tcloseness", q202_tcloseness _, q202_sql),
+    ("q203_kmv_intersection", q203_kmv_intersection _, q203_sql),
+    ("q204_robust_outliers", q204_robust_outliers _, q204_sql),
+    ("q229_embed_standardize", q229_embed_standardize _, q229_sql))
 }

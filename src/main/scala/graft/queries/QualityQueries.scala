@@ -3019,113 +3019,58 @@ object QualityQueries {
        |ORDER BY e.id_a, e.id_b""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q345_weighted_minhash" -> q345_weighted_minhash _,
-    "q344_weighted_jaccard" -> q344_weighted_jaccard _,
-    "q342_zipf_octaves" -> q342_zipf_octaves _,
-    "q335_texttiling" -> q335_texttiling _,
-    "q326_stupid_backoff" -> q326_stupid_backoff _,
-    "q239_filter_bias_audit" -> q239_filter_bias_audit _,
-    "q153_zorder_layout" -> q153_zorder_layout _,
-    "q182_pareto_skyline" -> q182_pareto_skyline _,
-    "q183_compaction_plan" -> q183_compaction_plan _,
-    "q184_zonemap_audit" -> q184_zonemap_audit _,
-    "q186_epoch_allocation" -> q186_epoch_allocation _,
-    "q188_l_diversity" -> q188_l_diversity _,
-    "q198_dict_audit" -> q198_dict_audit _,
-    "q148_skew_audit" -> q148_skew_audit _,
-    "q133_cms_estimate" -> q133_cms_estimate _,
-    "q260_cms_join_size" -> q260_cms_join_size _,
-    "q261_repetition_signals" -> q261_repetition_signals _,
-    "q268_format_roundtrip" -> q268_format_roundtrip _,
-    "q127_max_run" -> q127_max_run _,
-    "q125_line_filter" -> q125_line_filter _,
-    "q124_vocab_growth" -> q124_vocab_growth _,
-    "q123_collocations" -> q123_collocations _,
-    "q121_fertility" -> q121_fertility _,
-    "q119_dup_sources" -> q119_dup_sources _,
-    "q120_ngram_uniqueness" -> q120_ngram_uniqueness _,
-    "q118_kmeanspp_init" -> q118_kmeanspp_init _,
-    "q116_vocab_encode" -> q116_vocab_encode _,
-    "q117_dsir_select" -> q117_dsir_select _,
-    "q110_heavy_hitters" -> q110_heavy_hitters _,
-    "q111_lm_score" -> q111_lm_score _,
-    "q115_vocab_build" -> q115_vocab_build _,
-    "q107_hash_classifier" -> q107_hash_classifier _,
-    "q106_temp_mixture" -> q106_temp_mixture _,
-    "q84_gopher_rules" -> q84_gopher_rules _,
-    "q85_containment" -> q85_containment _,
-    "q86_embed_quantize" -> q86_embed_quantize _,
-    "q87_cdc_chunks" -> q87_cdc_chunks _,
-    "q88_source_mixture" -> q88_source_mixture _,
-    "q89_kmeans_step" -> q89_kmeans_step _,
-    "q91_snapshot_diff" -> q91_snapshot_diff _,
-    "q92_kmv_merge" -> q92_kmv_merge _,
-    "q93_quantized_ann" -> q93_quantized_ann _,
-    "q94_bloom_decontam" -> q94_bloom_decontam _,
-    "q96_weighted_sample" -> q96_weighted_sample _,
-    "q97_incremental_agg" -> q97_incremental_agg _,
-    "q167_incremental_join" -> q167_incremental_join _,
-    "q171_target_encoding" -> q171_target_encoding _,
-    "q172_expectations" -> q172_expectations _,
-    "q178_k_anonymity" -> q178_k_anonymity _,
-    "q179_rendezvous_routing" -> q179_rendezvous_routing _,
-    "q98_stat_moments" -> q98_stat_moments _,
-    "q99_frame_dedup" -> q99_frame_dedup _,
-    "q100_curate_e2e" -> q100_curate_e2e _)
-
-  val oracles: Map[String, String] = Map(
-    "q345_weighted_minhash" -> q345_sql,
-    "q344_weighted_jaccard" -> q344_sql,
-    "q342_zipf_octaves" -> q342_sql,
-    "q335_texttiling" -> q335_sql,
-    "q326_stupid_backoff" -> q326_sql,
-    "q239_filter_bias_audit" -> q239_sql,
-    "q153_zorder_layout" -> q153_sql,
-    "q182_pareto_skyline" -> q182_sql,
-    "q183_compaction_plan" -> q183_sql,
-    "q184_zonemap_audit" -> q184_sql,
-    "q186_epoch_allocation" -> q186_sql,
-    "q188_l_diversity" -> q188_sql,
-    "q198_dict_audit" -> q198_sql,
-    "q148_skew_audit" -> q148_sql,
-    "q133_cms_estimate" -> q133_sql,
-    "q260_cms_join_size" -> q260_sql,
-    "q261_repetition_signals" -> q261_sql,
-    "q268_format_roundtrip" -> q268_sql,
-    "q127_max_run" -> q127_sql,
-    "q125_line_filter" -> q125_sql,
-    "q124_vocab_growth" -> q124_sql,
-    "q123_collocations" -> q123_sql,
-    "q121_fertility" -> q121_sql,
-    "q119_dup_sources" -> q119_sql,
-    "q120_ngram_uniqueness" -> q120_sql,
-    "q118_kmeanspp_init" -> q118_sql,
-    "q116_vocab_encode" -> q116_sql,
-    "q117_dsir_select" -> q117_sql,
-    "q110_heavy_hitters" -> q110_sql,
-    "q111_lm_score" -> q111_sql,
-    "q115_vocab_build" -> q115_sql,
-    "q107_hash_classifier" -> q107_sql,
-    "q106_temp_mixture" -> q106_sql,
-    "q84_gopher_rules" -> q84_sql,
-    "q85_containment" -> q85_sql,
-    "q86_embed_quantize" -> q86_sql,
-    "q87_cdc_chunks" -> q87_sql,
-    "q88_source_mixture" -> q88_sql,
-    "q89_kmeans_step" -> q89_sql,
-    "q91_snapshot_diff" -> q91_sql,
-    "q92_kmv_merge" -> q92_sql,
-    "q93_quantized_ann" -> q93_sql,
-    "q94_bloom_decontam" -> q94_sql,
-    "q96_weighted_sample" -> q96_sql,
-    "q97_incremental_agg" -> q97_sql,
-    "q167_incremental_join" -> q167_sql,
-    "q171_target_encoding" -> q171_sql,
-    "q172_expectations" -> q172_sql,
-    "q178_k_anonymity" -> q178_sql,
-    "q179_rendezvous_routing" -> q179_sql,
-    "q98_stat_moments" -> q98_sql,
-    "q99_frame_dedup" -> q99_sql,
-    "q100_curate_e2e" -> q100_sql)
+  val registry: graft.SparkEntry.Registry = Seq(
+    ("q345_weighted_minhash", q345_weighted_minhash _, q345_sql),
+    ("q344_weighted_jaccard", q344_weighted_jaccard _, q344_sql),
+    ("q342_zipf_octaves", q342_zipf_octaves _, q342_sql),
+    ("q335_texttiling", q335_texttiling _, q335_sql),
+    ("q326_stupid_backoff", q326_stupid_backoff _, q326_sql),
+    ("q239_filter_bias_audit", q239_filter_bias_audit _, q239_sql),
+    ("q153_zorder_layout", q153_zorder_layout _, q153_sql),
+    ("q182_pareto_skyline", q182_pareto_skyline _, q182_sql),
+    ("q183_compaction_plan", q183_compaction_plan _, q183_sql),
+    ("q184_zonemap_audit", q184_zonemap_audit _, q184_sql),
+    ("q186_epoch_allocation", q186_epoch_allocation _, q186_sql),
+    ("q188_l_diversity", q188_l_diversity _, q188_sql),
+    ("q198_dict_audit", q198_dict_audit _, q198_sql),
+    ("q148_skew_audit", q148_skew_audit _, q148_sql),
+    ("q133_cms_estimate", q133_cms_estimate _, q133_sql),
+    ("q260_cms_join_size", q260_cms_join_size _, q260_sql),
+    ("q261_repetition_signals", q261_repetition_signals _, q261_sql),
+    ("q268_format_roundtrip", q268_format_roundtrip _, q268_sql),
+    ("q127_max_run", q127_max_run _, q127_sql),
+    ("q125_line_filter", q125_line_filter _, q125_sql),
+    ("q124_vocab_growth", q124_vocab_growth _, q124_sql),
+    ("q123_collocations", q123_collocations _, q123_sql),
+    ("q121_fertility", q121_fertility _, q121_sql),
+    ("q119_dup_sources", q119_dup_sources _, q119_sql),
+    ("q120_ngram_uniqueness", q120_ngram_uniqueness _, q120_sql),
+    ("q118_kmeanspp_init", q118_kmeanspp_init _, q118_sql),
+    ("q116_vocab_encode", q116_vocab_encode _, q116_sql),
+    ("q117_dsir_select", q117_dsir_select _, q117_sql),
+    ("q110_heavy_hitters", q110_heavy_hitters _, q110_sql),
+    ("q111_lm_score", q111_lm_score _, q111_sql),
+    ("q115_vocab_build", q115_vocab_build _, q115_sql),
+    ("q107_hash_classifier", q107_hash_classifier _, q107_sql),
+    ("q106_temp_mixture", q106_temp_mixture _, q106_sql),
+    ("q84_gopher_rules", q84_gopher_rules _, q84_sql),
+    ("q85_containment", q85_containment _, q85_sql),
+    ("q86_embed_quantize", q86_embed_quantize _, q86_sql),
+    ("q87_cdc_chunks", q87_cdc_chunks _, q87_sql),
+    ("q88_source_mixture", q88_source_mixture _, q88_sql),
+    ("q89_kmeans_step", q89_kmeans_step _, q89_sql),
+    ("q91_snapshot_diff", q91_snapshot_diff _, q91_sql),
+    ("q92_kmv_merge", q92_kmv_merge _, q92_sql),
+    ("q93_quantized_ann", q93_quantized_ann _, q93_sql),
+    ("q94_bloom_decontam", q94_bloom_decontam _, q94_sql),
+    ("q96_weighted_sample", q96_weighted_sample _, q96_sql),
+    ("q97_incremental_agg", q97_incremental_agg _, q97_sql),
+    ("q167_incremental_join", q167_incremental_join _, q167_sql),
+    ("q171_target_encoding", q171_target_encoding _, q171_sql),
+    ("q172_expectations", q172_expectations _, q172_sql),
+    ("q178_k_anonymity", q178_k_anonymity _, q178_sql),
+    ("q179_rendezvous_routing", q179_rendezvous_routing _, q179_sql),
+    ("q98_stat_moments", q98_stat_moments _, q98_sql),
+    ("q99_frame_dedup", q99_frame_dedup _, q99_sql),
+    ("q100_curate_e2e", q100_curate_e2e _, q100_sql))
 }

@@ -788,57 +788,30 @@ object Relational {
     s"WITH s AS (SELECT\n  $sels\nFROM lineitem)\n$rows\nORDER BY q"
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q113_col_profile" -> q113_col_profile _,
-    "q114_approx_quantiles" -> q114_approx_quantiles _,
-    "q76_ntile" -> q76_ntile _,
-    "q72_json_props" -> q72_json_props _,
-    "q73_exists_sql" -> q73_exists_sql _,
-    "q74_full_outer" -> q74_full_outer _,
-    "q01_pruned_agg" -> q01_pruned_agg _,
-    "q02_filter_project" -> q02_filter_project _,
-    "q03_search_rank" -> q03_search_rank _,
-    "q04_join_broadcast" -> q04_join_broadcast _,
-    "q05_chain_3hop" -> q05_chain_3hop _,
-    "q06_left_outer_count" -> q06_left_outer_count _,
-    "q07_anti_join" -> q07_anti_join _,
-    "q08_semi_join" -> q08_semi_join _,
-    "q09_multi_agg" -> q09_multi_agg _,
-    "q10_distinct_sort" -> q10_distinct_sort _,
-    "q11_topk" -> q11_topk _,
-    "q12_window_topk" -> q12_window_topk _,
-    "q13_scalar_funcs" -> q13_scalar_funcs _,
-    "q14_case_class" -> q14_case_class _,
-    "q15_merge_latest" -> q15_merge_latest _,
-    "q16_isin_not" -> q16_isin_not _,
-    "q34_completion" -> q34_completion _,
-    "q35_rollup" -> q35_rollup _,
-    "q36_approx_distinct" -> q36_approx_distinct _)
-
-  val oracles: Map[String, String] = Map(
-    "q113_col_profile" -> q113_sql,
-    "q114_approx_quantiles" -> q114_sql,
-    "q76_ntile" -> q76_sql,
-    "q72_json_props" -> q72_sql,
-    "q73_exists_sql" -> q73_sql,
-    "q74_full_outer" -> q74_sql,
-    "q01_pruned_agg" -> q01_sql,
-    "q02_filter_project" -> q02_sql,
-    "q03_search_rank" -> q03_sql,
-    "q04_join_broadcast" -> q04_sql,
-    "q05_chain_3hop" -> q05_sql,
-    "q06_left_outer_count" -> q06_sql,
-    "q07_anti_join" -> q07_sql,
-    "q08_semi_join" -> q08_sql,
-    "q09_multi_agg" -> q09_sql,
-    "q10_distinct_sort" -> q10_sql,
-    "q11_topk" -> q11_sql,
-    "q12_window_topk" -> q12_sql,
-    "q13_scalar_funcs" -> q13_sql,
-    "q14_case_class" -> q14_sql,
-    "q15_merge_latest" -> q15_sql,
-    "q16_isin_not" -> q16_sql,
-    "q34_completion" -> q34_sql,
-    "q35_rollup" -> q35_sql,
-    "q36_approx_distinct" -> q36_sql)
+  val registry: graft.SparkEntry.Registry = Seq(
+    ("q113_col_profile", q113_col_profile _, q113_sql),
+    ("q114_approx_quantiles", q114_approx_quantiles _, q114_sql),
+    ("q76_ntile", q76_ntile _, q76_sql),
+    ("q72_json_props", q72_json_props _, q72_sql),
+    ("q73_exists_sql", q73_exists_sql _, q73_sql),
+    ("q74_full_outer", q74_full_outer _, q74_sql),
+    ("q01_pruned_agg", q01_pruned_agg _, q01_sql),
+    ("q02_filter_project", q02_filter_project _, q02_sql),
+    ("q03_search_rank", q03_search_rank _, q03_sql),
+    ("q04_join_broadcast", q04_join_broadcast _, q04_sql),
+    ("q05_chain_3hop", q05_chain_3hop _, q05_sql),
+    ("q06_left_outer_count", q06_left_outer_count _, q06_sql),
+    ("q07_anti_join", q07_anti_join _, q07_sql),
+    ("q08_semi_join", q08_semi_join _, q08_sql),
+    ("q09_multi_agg", q09_multi_agg _, q09_sql),
+    ("q10_distinct_sort", q10_distinct_sort _, q10_sql),
+    ("q11_topk", q11_topk _, q11_sql),
+    ("q12_window_topk", q12_window_topk _, q12_sql),
+    ("q13_scalar_funcs", q13_scalar_funcs _, q13_sql),
+    ("q14_case_class", q14_case_class _, q14_sql),
+    ("q15_merge_latest", q15_merge_latest _, q15_sql),
+    ("q16_isin_not", q16_isin_not _, q16_sql),
+    ("q34_completion", q34_completion _, q34_sql),
+    ("q35_rollup", q35_rollup _, q35_sql),
+    ("q36_approx_distinct", q36_approx_distinct _, q36_sql))
 }

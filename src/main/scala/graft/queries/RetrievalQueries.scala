@@ -329,17 +329,10 @@ object RetrievalQueries {
       |ORDER BY lift_ppm DESC, part_a, part_b
       |LIMIT 25""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q138_negative_sampling" -> q138_negative_sampling _,
-    "q139_rrf_fusion" -> q139_rrf_fusion _,
-    "q144_copurchase" -> q144_copurchase _,
-    "q145_fk_containment" -> q145_fk_containment _,
-    "q158_association_rules" -> q158_association_rules _)
-
-  val oracles: Map[String, String] = Map(
-    "q138_negative_sampling" -> q138_sql,
-    "q139_rrf_fusion" -> q139_sql,
-    "q144_copurchase" -> q144_sql,
-    "q145_fk_containment" -> q145_sql,
-    "q158_association_rules" -> q158_sql)
+  val registry: graft.SparkEntry.Registry = Seq(
+    ("q138_negative_sampling", q138_negative_sampling _, q138_sql),
+    ("q139_rrf_fusion", q139_rrf_fusion _, q139_sql),
+    ("q144_copurchase", q144_copurchase _, q144_sql),
+    ("q145_fk_containment", q145_fk_containment _, q145_sql),
+    ("q158_association_rules", q158_association_rules _, q158_sql))
 }

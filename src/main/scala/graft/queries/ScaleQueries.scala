@@ -47,11 +47,7 @@ object ScaleQueries {
       .orderBy(col("id_a"), col("id_b"))
 
   val q269_sql: String =
-    s"""WITH toks AS (
-       |  SELECT DISTINCT doc_id, tok FROM (
-       |    SELECT doc_id,
-       |           unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
-       |    FROM documents WHERE trim(text) <> '')),
+    s"""WITH ${OracleSql.toks},
        |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM toks GROUP BY 1),
        |inter AS (
        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n
@@ -92,11 +88,7 @@ object ScaleQueries {
       BandWidth358, ExemplarK358)
 
   val q358_sql: String =
-    s"""WITH toks AS (
-       |  SELECT DISTINCT doc_id, tok FROM (
-       |    SELECT doc_id,
-       |           unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
-       |    FROM documents WHERE trim(text) <> '')),
+    s"""WITH ${OracleSql.toks},
        |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM toks GROUP BY 1),
        |inter AS (
        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n
@@ -660,23 +652,13 @@ object ScaleQueries {
       |FROM cand
       |ORDER BY cand.score DESC, id_a, id_b LIMIT 20""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q269_prefix_filter_join" -> q269_prefix_filter_join _,
-    "q270_seq_patterns" -> q270_seq_patterns _,
-    "q271_luby_mis" -> q271_luby_mis _,
-    "q272_butterflies" -> q272_butterflies _,
-    "q273_ktruss" -> q273_ktruss _,
-    "q274_hilbert_layout" -> q274_hilbert_layout _,
-    "q275_fellegi_sunter" -> q275_fellegi_sunter _,
-    "q358_similarity_report" -> q358_similarity_report _)
-
-  val oracles: Map[String, String] = Map(
-    "q358_similarity_report" -> q358_sql,
-    "q269_prefix_filter_join" -> q269_sql,
-    "q270_seq_patterns" -> q270_sql,
-    "q271_luby_mis" -> q271_sql,
-    "q272_butterflies" -> q272_sql,
-    "q273_ktruss" -> q273_sql,
-    "q274_hilbert_layout" -> q274_sql,
-    "q275_fellegi_sunter" -> q275_sql)
+  val registry: graft.SparkEntry.Registry = Seq(
+    ("q269_prefix_filter_join", q269_prefix_filter_join _, q269_sql),
+    ("q270_seq_patterns", q270_seq_patterns _, q270_sql),
+    ("q271_luby_mis", q271_luby_mis _, q271_sql),
+    ("q272_butterflies", q272_butterflies _, q272_sql),
+    ("q273_ktruss", q273_ktruss _, q273_sql),
+    ("q274_hilbert_layout", q274_hilbert_layout _, q274_sql),
+    ("q275_fellegi_sunter", q275_fellegi_sunter _, q275_sql),
+    ("q358_similarity_report", q358_similarity_report _, q358_sql))
 }

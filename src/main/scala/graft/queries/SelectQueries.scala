@@ -1090,31 +1090,17 @@ object SelectQueries {
        |FROM pairs
        |ORDER BY ta, tb""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q339_intersection_planner" -> q339_intersection_planner _,
-    "q333_front_coding_audit" -> q333_front_coding_audit _,
-    "q323_rice_postings_planner" -> q323_rice_postings_planner _,
-    "q319_lsh_scurve_planner" -> q319_lsh_scurve_planner _,
-    "q276_aho_corasick" -> q276_aho_corasick _,
-    "q288_maxscore_audit" -> q288_maxscore_audit _,
-    "q277_sorted_neighborhood" -> q277_sorted_neighborhood _,
-    "q278_threshold_topk" -> q278_threshold_topk _,
-    "q279_rrf_fusion" -> q279_rrf_fusion _,
-    "q280_greedy_set_cover" -> q280_greedy_set_cover _,
-    "q281_postings_varint" -> q281_postings_varint _,
-    "q282_skyline" -> q282_skyline _)
-
-  val oracles: Map[String, String] = Map(
-    "q339_intersection_planner" -> q339_sql,
-    "q333_front_coding_audit" -> q333_sql,
-    "q323_rice_postings_planner" -> q323_sql,
-    "q319_lsh_scurve_planner" -> q319_sql,
-    "q276_aho_corasick" -> q276_sql,
-    "q288_maxscore_audit" -> q288_sql,
-    "q277_sorted_neighborhood" -> q277_sql,
-    "q278_threshold_topk" -> q278_sql,
-    "q279_rrf_fusion" -> q279_sql,
-    "q280_greedy_set_cover" -> q280_sql,
-    "q281_postings_varint" -> q281_sql,
-    "q282_skyline" -> q282_sql)
+  val registry: graft.SparkEntry.Registry = Seq(
+    ("q339_intersection_planner", q339_intersection_planner _, q339_sql),
+    ("q333_front_coding_audit", q333_front_coding_audit _, q333_sql),
+    ("q323_rice_postings_planner", q323_rice_postings_planner _, q323_sql),
+    ("q319_lsh_scurve_planner", q319_lsh_scurve_planner _, q319_sql),
+    ("q276_aho_corasick", q276_aho_corasick _, q276_sql),
+    ("q288_maxscore_audit", q288_maxscore_audit _, q288_sql),
+    ("q277_sorted_neighborhood", q277_sorted_neighborhood _, q277_sql),
+    ("q278_threshold_topk", q278_threshold_topk _, q278_sql),
+    ("q279_rrf_fusion", q279_rrf_fusion _, q279_sql),
+    ("q280_greedy_set_cover", q280_greedy_set_cover _, q280_sql),
+    ("q281_postings_varint", q281_postings_varint _, q281_sql),
+    ("q282_skyline", q282_skyline _, q282_sql))
 }

@@ -1625,45 +1625,24 @@ object StatQueries {
        |ORDER BY event_type""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q354_conformal_coverage" -> q354_conformal_coverage _,
-    "q352_count_sketch" -> q352_count_sketch _,
-    "q328_welch_t2" -> q328_welch_t2 _,
-    "q327_spearman_by_source" -> q327_spearman_by_source _,
-    "q322_isotonic_calibration" -> q322_isotonic_calibration _,
-    "q314_pcsa_sketch" -> q314_pcsa_sketch _,
-    "q315_poisson_bootstrap" -> q315_poisson_bootstrap _,
-    "q295_kmv_setops" -> q295_kmv_setops _,
-    "q298_ols_regression" -> q298_ols_regression _,
-    "q299_mann_whitney" -> q299_mann_whitney _,
-    "q300_benford_audit" -> q300_benford_audit _,
-    "q292_ams_f2" -> q292_ams_f2 _,
-    "q252_histogram_quantiles" -> q252_histogram_quantiles _,
-    "q251_rolling_hll_wau" -> q251_rolling_hll_wau _,
-    "q208_hll_registers" -> q208_hll_registers _,
-    "q209_skipgram_pairs" -> q209_skipgram_pairs _,
-    "q210_ks_test" -> q210_ks_test _,
-    "q223_stream_hll" -> q223_stream_hll _,
-    "q237_chi2_proportions" -> q237_chi2_proportions _)
-
-  val oracles: Map[String, String] = Map(
-    "q354_conformal_coverage" -> q354_sql,
-    "q352_count_sketch" -> q352_sql,
-    "q328_welch_t2" -> q328_sql,
-    "q327_spearman_by_source" -> q327_sql,
-    "q322_isotonic_calibration" -> q322_sql,
-    "q314_pcsa_sketch" -> q314_sql,
-    "q315_poisson_bootstrap" -> q315_sql,
-    "q295_kmv_setops" -> q295_sql,
-    "q298_ols_regression" -> q298_sql,
-    "q299_mann_whitney" -> q299_sql,
-    "q300_benford_audit" -> q300_sql,
-    "q292_ams_f2" -> q292_sql,
-    "q252_histogram_quantiles" -> q252_sql,
-    "q251_rolling_hll_wau" -> q251_sql,
-    "q208_hll_registers" -> q208_sql,
-    "q209_skipgram_pairs" -> q209_sql,
-    "q210_ks_test" -> q210_sql,
-    "q223_stream_hll" -> q223_sql,
-    "q237_chi2_proportions" -> q237_sql)
+  val registry: graft.SparkEntry.Registry = Seq(
+    ("q354_conformal_coverage", q354_conformal_coverage _, q354_sql),
+    ("q352_count_sketch", q352_count_sketch _, q352_sql),
+    ("q328_welch_t2", q328_welch_t2 _, q328_sql),
+    ("q327_spearman_by_source", q327_spearman_by_source _, q327_sql),
+    ("q322_isotonic_calibration", q322_isotonic_calibration _, q322_sql),
+    ("q314_pcsa_sketch", q314_pcsa_sketch _, q314_sql),
+    ("q315_poisson_bootstrap", q315_poisson_bootstrap _, q315_sql),
+    ("q295_kmv_setops", q295_kmv_setops _, q295_sql),
+    ("q298_ols_regression", q298_ols_regression _, q298_sql),
+    ("q299_mann_whitney", q299_mann_whitney _, q299_sql),
+    ("q300_benford_audit", q300_benford_audit _, q300_sql),
+    ("q292_ams_f2", q292_ams_f2 _, q292_sql),
+    ("q252_histogram_quantiles", q252_histogram_quantiles _, q252_sql),
+    ("q251_rolling_hll_wau", q251_rolling_hll_wau _, q251_sql),
+    ("q208_hll_registers", q208_hll_registers _, q208_sql),
+    ("q209_skipgram_pairs", q209_skipgram_pairs _, q209_sql),
+    ("q210_ks_test", q210_ks_test _, q210_sql),
+    ("q223_stream_hll", q223_stream_hll _, q223_sql),
+    ("q237_chi2_proportions", q237_chi2_proportions _, q237_sql))
 }

@@ -956,29 +956,16 @@ object TrainPrepQueries {
        |FROM k GROUP BY cid ORDER BY cid""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q337_coreset_sample" -> q337_coreset_sample _,
-    "q325_group_kfold_leakage" -> q325_group_kfold_leakage _,
-    "q324_epoch_shuffle_audit" -> q324_epoch_shuffle_audit _,
-    "q316_dim_covariance" -> q316_dim_covariance _,
-    "q317_power_iteration" -> q317_power_iteration _,
-    "q304_gini_split" -> q304_gini_split _,
-    "q305_jl_distortion" -> q305_jl_distortion _,
-    "q214_length_batching" -> q214_length_batching _,
-    "q215_time_weighted_avg" -> q215_time_weighted_avg _,
-    "q216_auc_mannwhitney" -> q216_auc_mannwhitney _,
-    "q291_wordpiece" -> q291_wordpiece _)
-
-  val oracles: Map[String, String] = Map(
-    "q337_coreset_sample" -> q337_sql,
-    "q325_group_kfold_leakage" -> q325_sql,
-    "q324_epoch_shuffle_audit" -> q324_sql,
-    "q316_dim_covariance" -> q316_sql,
-    "q317_power_iteration" -> q317_sql,
-    "q304_gini_split" -> q304_sql,
-    "q305_jl_distortion" -> q305_sql,
-    "q214_length_batching" -> q214_sql,
-    "q215_time_weighted_avg" -> q215_sql,
-    "q216_auc_mannwhitney" -> q216_sql,
-    "q291_wordpiece" -> q291_sql)
+  val registry: graft.SparkEntry.Registry = Seq(
+    ("q337_coreset_sample", q337_coreset_sample _, q337_sql),
+    ("q325_group_kfold_leakage", q325_group_kfold_leakage _, q325_sql),
+    ("q324_epoch_shuffle_audit", q324_epoch_shuffle_audit _, q324_sql),
+    ("q316_dim_covariance", q316_dim_covariance _, q316_sql),
+    ("q317_power_iteration", q317_power_iteration _, q317_sql),
+    ("q304_gini_split", q304_gini_split _, q304_sql),
+    ("q305_jl_distortion", q305_jl_distortion _, q305_sql),
+    ("q214_length_batching", q214_length_batching _, q214_sql),
+    ("q215_time_weighted_avg", q215_time_weighted_avg _, q215_sql),
+    ("q216_auc_mannwhitney", q216_auc_mannwhitney _, q216_sql),
+    ("q291_wordpiece", q291_wordpiece _, q291_sql))
 }
