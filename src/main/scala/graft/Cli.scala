@@ -102,16 +102,14 @@ object Cli {
             .withColumnRenamed("relType", "label")))
       case "doc-stats" => Some(cg.documentStats())
       case "integrity" => Some(cg.integrityChecks())
-      case "source" =>
-        Some(cg.sourceLocation(rest.head))
+      case "source" => Some(cg.source(rest.head).drop("content"))
       case "mcp" =>
         // Serving process: pin the working set ONCE at startup — the
         // reference's graph lives resident in Neo4j (`pkg/neo4j/
         // client.go`), so its per-tool latency never includes a store
         // load. Without this every tool call re-reads the store
-        // parquet and re-scans it per closure round (findReferences
-        // runs a CONTAINS* closure — up to 10 self-joins per call),
-        // which costs seconds per request on a populated store. At
+        // parquet once for each scan in its plan, and one
+        // find_references call scans nodes and edges several times. At
         // deployment scale the same rule holds: a resident server
         // caches its hot graph tier (MEMORY_AND_DISK spills rather
         // than OOMs if the store outgrows executor memory).

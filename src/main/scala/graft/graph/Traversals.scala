@@ -13,8 +13,9 @@ import graft.ops.Iterate
   *
   *   - `CALLS*1..10` impact analysis (`pkg/neo4j/query.go:203-242`),
   *   - `FLOWS_TO*1..15` data lineage with path capture (`query.go:245-285`),
-  *   - `CONTAINS*` containment closure used by find-references and
-  *     service-deps (`query.go:121-163`, `query.go:288-323`).
+  *   - `CONTAINS*` File ancestors of find-references' usages
+  *     (`query.go:121-163`): [[paths]] seeded with the usages, over
+  *     reversed edges.
   *
   * Two engines:
   *   - DataFrame iterative BFS (default): frontier ⋈ edges per superstep,
@@ -57,40 +58,13 @@ object Traversals {
     } finally e.unpersist()
   }
 
-  /** Bounded transitive closure with depth: (ancestor, descendant, depth)
-    * for 1 ≤ depth ≤ maxDepth, following src→dst. The materialized
-    * `CONTAINS*` closure table of SURVEY §7.1 step 3. Doubling is not used
-    * — depth semantics require the linear expansion, and tree-shaped
-    * CONTAINS graphs stay small per level.
-    */
-  def closure(edges: DataFrame, maxDepth: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // lazy union of checkpointed levels (see [[reachable]])
-      Iterate.fixpoint("closure",
-          e.select(col("src").as("ancestor"), col("dst").as("descendant"),
-            lit(1).as("depth")), maxDepth) { levels =>
-        val level = levels.last._1
-        val seen = levels.map(_._1.select(col("ancestor"),
-          col("descendant"))).reduce(_ unionByName _)
-        level.join(e, level("descendant") === e("src"))
-          .select(level("ancestor"), e("dst").as("descendant"),
-            lit(levels.size + 1).as("depth"))
-          // keep min-depth pairs only (DISTINCT-node semantics)
-          .join(seen, Seq("ancestor", "descendant"), "left_anti")
-          .distinct()
-      }.map(_._1).reduce(_ unionByName _)
-    } finally e.unpersist()
-  }
-
   /** Tree closure by DOUBLING: valid only for forests (at most one path
     * per pair, so composing two closures never duplicates a pair and
     * depths add exactly). C(2k) = C(k) ∪ C(k)∘C(k) reaches depth cap D
     * in ⌈log2 D⌉ materializations instead of D — the right shape when
     * per-level scheduling, not data volume, dominates. On a forest the
-    * output equals [[closure]]'s, whose min-depth dedup never fires
-    * there. */
+    * output equals [[paths]] seeded with every node and projected to
+    * (start, end, depth): each pair has exactly one path. */
   def closureTreeDoubling(edges: DataFrame, maxDepth: Int): DataFrame = {
     var acc = Iterate.barrier(
       edges.select(col("src").as("ancestor"),

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -80,17 +80,6 @@ object IncrementalIndex {
       maxDriverFiles: Int = 4096): DataFrame = {
     val spark = files.sparkSession
     import spark.implicits._
-    val t0 = System.nanoTime()
-    def trace(tag: String): Unit =
-      if (sys.env.contains("GRAFT_INC_TRACE"))
-        println(f"INCTRACE $tag ${(System.nanoTime() - t0) / 1e9}%.2f")
-    reindexInner(store, files, service, maxDriverFiles, spark, trace)
-  }
-
-  private def reindexInner(store: GraphStore, files: DataFrame,
-      service: String, maxDriverFiles: Int, spark: SparkSession,
-      trace: String => Unit): DataFrame = {
-    import spark.implicits._
 
     val incoming = files
       .select(col("path").cast("string"), col("content").cast("string"))
@@ -116,10 +105,8 @@ object IncrementalIndex {
       .select(col("path"), col("new_hash").isNull.as("is_deleted"))
       .limit(maxDriverFiles + 1)
       .collect()
-    trace("delta_detected")
     if (delta.length > maxDriverFiles)
-      return reindexDistributed(store, files, service, oldNodes, oldEdges,
-        trace)
+      return reindexDistributed(store, files, service, oldNodes, oldEdges)
     val changedPaths = delta.filter(!_.getBoolean(1)).map(_.getString(0))
     val deleted = delta.filter(_.getBoolean(1)).map(_.getString(0))
     if (changedPaths.isEmpty && deleted.isEmpty)
@@ -132,8 +119,7 @@ object IncrementalIndex {
       .select(col("path").cast("string"), col("content").cast("string"))
       .collect()
       .map(r => (r.getString(0), r.getString(1)))
-    trace("delta_fetched")
-    reindexFast(store, changed, deleted, service, oldNodes, oldEdges, trace)
+    reindexFast(store, changed, deleted, service, oldNodes, oldEdges)
   }
 
   // -------------------------------------------------------------------
@@ -144,8 +130,7 @@ object IncrementalIndex {
 
   private def reindexFast(store: GraphStore,
       changed: Array[(String, String)], deleted: Array[String],
-      service: String, oldNodes: DataFrame, oldEdges: DataFrame,
-      trace: String => Unit): DataFrame = {
+      service: String, oldNodes: DataFrame, oldEdges: DataFrame): DataFrame = {
     val spark = oldNodes.sparkSession
     import spark.implicits._
     import scala.concurrent.{Await, Future}
@@ -168,7 +153,6 @@ object IncrementalIndex {
     val receiverNames = ents.collect {
       case (e, _) if e.label == Labels.Method => e.receiver
     }.distinct
-    trace("parsed")
 
     // ONE pruned scan covers every store lookup the composition needs:
     // nodes in affected files (stale detection + old ids), surviving
@@ -281,9 +265,7 @@ object IncrementalIndex {
     // like keepLatest collapses them on the distributed path
     val newNodeRows = allNs.map(n => rowOf(n, idOf(n)))
       .groupBy(_.getLong(0)).map(_._2.head).toArray
-    trace("ids_assigned")
     val _ = ctx // join the concurrent scan before composing edges
-    trace("context_built")
 
     // id lookup maps for edge composition
     val sIdx = graft.model.Model.nodeSchema.fieldIndex _
@@ -338,7 +320,6 @@ object IncrementalIndex {
     }.toSeq
     val newEdges =
       (svcFileE ++ fileEntE ++ clsMethE ++ definesE ++ callsE).distinct
-    trace("composed")
 
     val newIds = newNodeRows.map(_.getLong(0)).toSet
     val staleIds = oldAffectedIds -- newIds
@@ -372,7 +353,6 @@ object IncrementalIndex {
         fromNew ++ fromOld
       }
     val gcSyms = candSyms.filterNot(survivors).toSet
-    trace("gc_resolved")
 
     // two O(delta) LSM appends — DRIVER-written JSONL, no Spark job;
     // merge-on-read folds them, compaction amortizes the rewrite
@@ -390,7 +370,6 @@ object IncrementalIndex {
       (staleIds ++ gcSyms).toSeq.sorted.map(Seq(_)))
     store.appendDelta("edges", newEdges.map(edgeRowOf),
       edgeHits.toSeq.map { case (es, ed, et) => Seq(es, ed, et) })
-    trace("appended")
     Seq((changed.length.toLong, deleted.length.toLong,
       newNodeRows.length.toLong, staleIds.size.toLong))
       .toDF("n_changed_files", "n_deleted_files", "n_new_nodes",
@@ -402,8 +381,7 @@ object IncrementalIndex {
   // -------------------------------------------------------------------
 
   private def reindexDistributed(store: GraphStore, files: DataFrame,
-      service: String, oldNodes: DataFrame, oldEdges: DataFrame,
-      trace: String => Unit): DataFrame = {
+      service: String, oldNodes: DataFrame, oldEdges: DataFrame): DataFrame = {
     val spark = files.sparkSession
     import spark.implicits._
 
@@ -457,7 +435,6 @@ object IncrementalIndex {
         // fqn = "<pkg>.<name>" (GoFrontend entNodes)
         expr("substring_index(fqn, '.', 1)").as("clsPkg"))
 
-    trace("context_built")
     val (newNodesLazy, newEdgesLazy, done) = GoFrontend.derive(
       changed, service, Some(extFuncs), Some(extClasses))
     // delta-sized: pin both so the diff/union below evaluates them once
@@ -465,7 +442,6 @@ object IncrementalIndex {
     val newEdges = newEdgesLazy.localCheckpoint(true)
     done()
 
-    trace("derived")
     val newIds = newNodes.select(col("id")).distinct()
     val staleIds = oldAffected.join(newIds, Seq("id"), "left_anti")
       .localCheckpoint(true)
@@ -485,7 +461,6 @@ object IncrementalIndex {
       .filter(col("_rn") === 1).drop("_rn", "_gen")
       .localCheckpoint(true) // consumed by symbol GC AND the write
 
-    trace("final_edges")
     val finalNodesPre = GraphStore.keepLatest(
       oldNodes.join(broadcast(staleIds), Seq("id"), "left_anti"),
       newNodes)
@@ -504,7 +479,6 @@ object IncrementalIndex {
     val nStale = staleIds.count()
     store.replaceNodes(finalNodes)
     store.replaceEdges(finalEdges)
-    trace("replaced")
     Seq((nChanged, nDeleted, nNew, nStale)).toDF("n_changed_files",
       "n_deleted_files", "n_new_nodes", "n_stale_nodes")
   }

@@ -6,7 +6,6 @@ import scala.util.{Failure, Success, Try}
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.col
 import org.json4s._
 import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
@@ -23,10 +22,11 @@ import graft.queries.CodeGraph
   * names and argument schemas, so an MCP client of the reference can
   * point at this server unchanged.
   *
-  * Tool handlers collect to the driver and render markdown. That is the
-  * correct shape here: these are interactive point lookups bounded by
-  * the reference's own LIMITs (1–50 rows); the data-scale work happens
-  * inside the `CodeGraph` queries they call, which stay distributed.
+  * Each tool handler makes one `CodeGraph` call, collects it once and
+  * renders markdown; it holds no query code of its own. Collecting is
+  * the correct shape here: these are interactive point lookups bounded
+  * by the reference's own LIMITs (1–50 rows); the data-scale work
+  * happens inside the `CodeGraph` queries, which stay distributed.
   */
 class McpServer(nodes: DataFrame, edges: DataFrame) {
 
@@ -244,42 +244,27 @@ class McpServer(nodes: DataFrame, edges: DataFrame) {
     }
 
   // --------------------------------------------------- codegraph_get_source
-  /** `main.go:341-367` over `query.go:425-493`: locate the span, pull
-    * the indexed File content, cut bytes (line fallback). */
+  /** `main.go:341-367` over `query.go:425-493`: the located span and
+    * its File's indexed content in one row, cut by bytes (line
+    * fallback). */
   private def getSourceTool(args: JValue): (String, Boolean) =
     strArg(args, "function_name") match {
       case None => ("Error: function_name parameter is required", true)
       case Some(name) =>
-        val loc = nodes
-          .filter(col("label").isin(Labels.Function, Labels.Method) &&
-            col("name") === name)
-          .orderBy(col("filePath"), col("startLine"))
-          .limit(1).collect().headOption
-        loc match {
+        cg.source(name).collect().headOption match {
           case None =>
             (s"Error retrieving source for '$name': function not found", true)
+          case Some(r) if r.isNullAt(r.fieldIndex("content")) =>
+            (s"Error retrieving source for '$name': no indexed " +
+              s"content for file ${rs(r, "filePath")}", true)
           case Some(r) =>
-            val fp = rs(r, "filePath")
-            val content = nodes
-              .filter(col("label") === Labels.File && col("path") === fp)
-              .select(col("content")).collect()
-              .flatMap(row => Option(row.getString(0))).headOption
-            content match {
-              case None =>
-                (s"Error retrieving source for '$name': no indexed " +
-                  s"content for file $fp", true)
-              case Some(text) =>
-                val sb = Option(r.getAs[Any]("startByte")).map(_ match {
-                  case n: java.lang.Number => n.intValue()
-                })
-                val eb = Option(r.getAs[Any]("endByte")).map(_ match {
-                  case n: java.lang.Number => n.intValue()
-                })
-                val src = CodeGraph.extractSpan(text, sb, eb,
-                  ri(r, "startLine"), ri(r, "endLine"))
-                (s"Source code for function '$name':\n\n```go\n$src\n```\n",
-                  false)
-            }
+            def byte(c: String): Option[Int] =
+              Option(r.getAs[java.lang.Number](c)).map(_.intValue())
+            val src = CodeGraph.extractSpan(r.getAs[String]("content"),
+              byte("startByte"), byte("endByte"),
+              ri(r, "startLine"), ri(r, "endLine"))
+            (s"Source code for function '$name':\n\n```go\n$src\n```\n",
+              false)
         }
     }
 
@@ -307,19 +292,17 @@ class McpServer(nodes: DataFrame, edges: DataFrame) {
     }
 
   // ------------------------------------------- codegraph_analyze_function
-  /** `main.go:413-523`: the three-round-trip flow — metadata LIMIT 1,
-    * callers LIMIT 10, callees LIMIT 10 — rendered as one markdown
-    * analysis block. */
+  /** `main.go:413-523`: the reference's three round-trips — metadata
+    * LIMIT 1, callers LIMIT 10, callees LIMIT 10 — answered by one
+    * tagged `analyzeFunction` frame, rendered as one markdown analysis
+    * block. */
   private def analyzeFunctionTool(args: JValue): (String, Boolean) =
     strArg(args, "function_name") match {
       case None => ("Error: function_name parameter is required", true)
       case Some(name) =>
-        val meta = nodes
-          .filter(col("label").isin(Labels.Function, Labels.Method) &&
-            col("name") === name)
-          .orderBy(col("filePath"), col("startLine"))
-          .limit(1).collect().headOption
-        meta match {
+        val parts = cg.analyzeFunction(name, 10).collect()
+          .groupBy(rs(_, "part")).withDefaultValue(Array.empty[Row])
+        parts("metadata").headOption match {
           case None => (s"Function not found: $name", true)
           case Some(r) =>
             val sb = new StringBuilder
@@ -340,14 +323,14 @@ class McpServer(nodes: DataFrame, edges: DataFrame) {
               else "- **Exported**: No\n")
             sb ++= "\n"
 
-            val callers = cg.callersOf(name, 10).collect()
+            val callers = parts("caller")
             sb ++= "### Called By\n"
             if (callers.nonEmpty) callers.foreach { c =>
               sb ++= s"- **${rs(c, "name")}** (${rs(c, "filePath")})\n"
             } else sb ++= "- No callers found\n"
             sb ++= "\n"
 
-            val callees = cg.calleesOf(name, 10).collect()
+            val callees = parts("callee")
             sb ++= "### Calls\n"
             if (callees.nonEmpty) callees.foreach { c =>
               sb ++= s"- **${rs(c, "name")}** (${rs(c, "filePath")})\n"

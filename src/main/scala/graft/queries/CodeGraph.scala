@@ -18,6 +18,14 @@ class CodeGraph(nodes: DataFrame, edges: DataFrame) {
 
   private def n(label: String): DataFrame =
     nodes.filter(col("label") === label)
+  /** Function and Method nodes: what every by-name lookup targets. */
+  private def funcs: DataFrame =
+    nodes.filter(col("label").isin(Labels.Function, Labels.Method))
+  /** The Symbol node `symbol` as `symId` (plus `extra` columns),
+    * broadcast: one row heads each Symbol-anchored hop chain. */
+  private def symbolNode(symbol: String, extra: Column*): DataFrame =
+    broadcast(n(Labels.Symbol).filter(col("symbol") === symbol)
+      .select(col("id").as("symId") +: extra: _*))
   private def e(relType: String): DataFrame =
     edges.filter(col("relType") === relType)
   /** Edge projection with renamed endpoints — each hop gets unique column
@@ -72,8 +80,7 @@ class CodeGraph(nodes: DataFrame, edges: DataFrame) {
   /** J1 — go-to-definition (`query.go:53-118`):
     * `(s:Symbol {symbol:$s})<-[:DEFINES]-(def)`. */
   def goToDefinition(symbol: String): DataFrame = {
-    val sym = broadcast(n(Labels.Symbol).filter(col("symbol") === symbol)
-      .select(col("id").as("symId")))
+    val sym = symbolNode(symbol)
     val defs = e(RelTypes.Defines)
     sym.join(defs, sym("symId") === defs("dst"))
       .join(nodes.as("def"), defs("src") === col("def.id"))
@@ -85,13 +92,15 @@ class CodeGraph(nodes: DataFrame, edges: DataFrame) {
   }
 
   /** J2 — find-references (`query.go:121-163`):
-    * `(s:Symbol)<-[:REFERENCES]-(usage)`, then CONTAINS* ancestor File,
-    * ORDER BY file path, line. The closure is bounded (containment trees
-    * are shallow; reference depth is unbounded `*` but finite).
+    * `(s:Symbol)<-[:REFERENCES]-(usage)<-[:CONTAINS*]-(f:File)`, ORDER BY
+    * file path, line. The CONTAINS* walk goes UP from the usages only
+    * (reversed edges, seeded with the usage ids, ≤ `maxDepth` hops), so
+    * its rounds follow the usages' own ancestry, not the deepest chain
+    * in the graph. A usage without a File ancestor keeps its own
+    * `filePath`.
     */
   def findReferences(symbol: String, maxDepth: Int = 10): DataFrame = {
-    val sym = broadcast(n(Labels.Symbol).filter(col("symbol") === symbol)
-      .select(col("id").as("symId")))
+    val sym = symbolNode(symbol)
     val refs = e(RelTypes.References)
     val usages = sym.join(refs, sym("symId") === refs("dst"))
       .join(nodes.as("u"), refs("src") === col("u.id"))
@@ -99,16 +108,19 @@ class CodeGraph(nodes: DataFrame, edges: DataFrame) {
         col("u.filePath").as("usageFilePath"),
         col("u.startLine").as("startLine"),
         col("u.startColumn").as("startColumn"))
-    // ancestor File via CONTAINS closure: restrict the closure to File
-    // ancestors BEFORE joining, so non-File ancestors (Module, Class…)
-    // cannot fan a usage out into duplicate rows
-    val contains = e(RelTypes.Contains).select(col("src"), col("dst"))
+    // keep only File ancestors BEFORE joining, so non-File ancestors
+    // (Module, Class…) cannot fan a usage out into duplicate rows; the
+    // shortest walk to an ancestor is a simple path, so `paths` reaches
+    // every ancestor within maxDepth
+    val up = e(RelTypes.Contains)
+      .select(col("dst").as("src"), col("src").as("dst"))
     val files = n(Labels.File).select(col("id").as("fileId"),
       col("path").as("filePath"))
-    val fileAncestors = Traversals.closure(contains, maxDepth)
-      .join(broadcast(files), col("ancestor") === col("fileId"))
-      .select(col("descendant"), col("filePath"))
-    usages.join(fileAncestors, usages("usageId") === col("descendant"),
+    val fileAncestors = Traversals
+      .paths(up, usages.select(col("usageId").as("id")), maxDepth)
+      .join(broadcast(files), col("end") === col("fileId"))
+      .select(col("start"), col("filePath"))
+    usages.join(fileAncestors, usages("usageId") === col("start"),
         "left_outer")
       .select(col("usageId"), col("usageLabel"),
         coalesce(col("filePath"), col("usageFilePath")).as("path"),
@@ -120,8 +132,7 @@ class CodeGraph(nodes: DataFrame, edges: DataFrame) {
   /** J3 — find-implementations (`query.go:166-200`):
     * Symbol ←DEFINES− Interface ←IMPLEMENTS− Class. */
   def findImplementations(symbol: String): DataFrame = {
-    val sym = broadcast(n(Labels.Symbol).filter(col("symbol") === symbol)
-      .select(col("id").as("symId")))
+    val sym = symbolNode(symbol)
     val defs = hop(RelTypes.Defines, "defSrc", "defDst")
     val impls = hop(RelTypes.Implements, "implSrc", "implDst")
     val ifaces = sym.join(defs, col("symId") === col("defDst"))
@@ -181,46 +192,42 @@ class CodeGraph(nodes: DataFrame, edges: DataFrame) {
   }
 
   /** J7 — callers / callees (`mcp-server/main.go:479-506`), LIMIT 10. */
-  def callersOf(funcName: String, limit: Int = 10): DataFrame = {
-    val target = n(Labels.Function).unionByName(n(Labels.Method))
-      .filter(col("name") === funcName).select(col("id").as("tId"))
-    val calls = e(RelTypes.Calls)
-    target.join(calls, target("tId") === calls("dst"))
-      .join(nodes.as("c"), calls("src") === col("c.id"))
-      .select(col("c.id").as("callerId"), col("c.name").as("name"),
-        col("c.filePath").as("filePath"))
-      .orderBy(col("name"), col("callerId")).limit(limit)
-  }
+  def callersOf(funcName: String, limit: Int = 10): DataFrame =
+    callNeighbors(funcName, callers = true, limit)
 
-  def calleesOf(funcName: String, limit: Int = 10): DataFrame = {
-    val src = n(Labels.Function).unionByName(n(Labels.Method))
-      .filter(col("name") === funcName).select(col("id").as("sId"))
+  def calleesOf(funcName: String, limit: Int = 10): DataFrame =
+    callNeighbors(funcName, callers = false, limit)
+
+  private def callNeighbors(funcName: String, callers: Boolean,
+      limit: Int): DataFrame = {
+    val (at, to, idCol) =
+      if (callers) ("dst", "src", "callerId") else ("src", "dst", "calleeId")
+    val target = funcs.filter(col("name") === funcName)
+      .select(col("id").as("tId"))
     val calls = e(RelTypes.Calls)
-    src.join(calls, src("sId") === calls("src"))
-      .join(nodes.as("c"), calls("dst") === col("c.id"))
-      .select(col("c.id").as("calleeId"), col("c.name").as("name"),
+    target.join(calls, target("tId") === calls(at))
+      .join(nodes.as("c"), calls(to) === col("c.id"))
+      .select(col("c.id").as(idCol), col("c.name").as("name"),
         col("c.filePath").as("filePath"))
-      .orderBy(col("name"), col("calleeId")).limit(limit)
+      .orderBy(col("name"), col(idCol)).limit(limit)
   }
 
   /** MCP analyze-function tool (`mcp-server/main.go:423-519`): the
     * reference issues three sequential round-trips (metadata, callers,
-    * callees); here one call returns the union, tagged by part. */
+    * callees); here one call returns the union, tagged by part. The
+    * metadata row is the whole first Function/Method node named
+    * `funcName`; caller and callee rows carry `name` and `filePath`. */
   def analyzeFunction(funcName: String, limit: Int = 10): DataFrame = {
-    val meta = n(Labels.Function).unionByName(n(Labels.Method))
-      .filter(col("name") === funcName)
-      .select(lit("metadata").as("part"), col("name"),
-        col("filePath"), col("startLine"), col("signature"))
+    val meta = funcs.filter(col("name") === funcName)
       .orderBy(col("filePath"), col("startLine")).limit(1)
-    val callers = callersOf(funcName, limit)
-      .select(lit("caller").as("part"), col("name"), col("filePath"),
-        lit(null).cast("int").as("startLine"),
-        lit(null).cast("string").as("signature"))
-    val callees = calleesOf(funcName, limit)
-      .select(lit("callee").as("part"), col("name"), col("filePath"),
-        lit(null).cast("int").as("startLine"),
-        lit(null).cast("string").as("signature"))
-    meta.unionByName(callers).unionByName(callees)
+      .select(lit("metadata").as("part"), col("*"))
+    def tagged(part: String, df: DataFrame): DataFrame =
+      df.select(lit(part).as("part"), col("name"), col("filePath"))
+    meta
+      .unionByName(tagged("caller", callersOf(funcName, limit)),
+        allowMissingColumns = true)
+      .unionByName(tagged("callee", calleesOf(funcName, limit)),
+        allowMissingColumns = true)
   }
 
   /** A1/A2 — count by label / relType (`system_test.go:72,238`). */
@@ -277,9 +284,8 @@ class CodeGraph(nodes: DataFrame, edges: DataFrame) {
     * here): definition metadata + documentation for a symbol, the
     * content a hover tooltip renders. */
   def hover(symbol: String): DataFrame = {
-    val sym = broadcast(n(Labels.Symbol).filter(col("symbol") === symbol)
-      .select(col("id").as("symId"), col("displayName").as("symDisplay"),
-        col("documentation").as("symDoc")))
+    val sym = symbolNode(symbol, col("displayName").as("symDisplay"),
+      col("documentation").as("symDoc"))
     val defs = e(RelTypes.Defines)
     sym.join(defs, sym("symId") === defs("dst"))
       .join(nodes.as("def"), defs("src") === col("def.id"))
@@ -300,8 +306,7 @@ class CodeGraph(nodes: DataFrame, edges: DataFrame) {
     * real): per-file function totals, avg/max complexity, and the
     * high-complexity count (> threshold). */
   def complexitySummary(threshold: Int = 10): DataFrame =
-    n(Labels.Function).unionByName(n(Labels.Method))
-      .groupBy(col("filePath"))
+    funcs.groupBy(col("filePath"))
       .agg(count(lit(1)).as("totalFunctions"),
         avg(coalesce(col("complexity"), lit(0))).as("avgComplexity"),
         max(coalesce(col("complexity"), lit(0))).as("maxComplexity"),
@@ -315,8 +320,7 @@ class CodeGraph(nodes: DataFrame, edges: DataFrame) {
     * Returns the edge list with hop depth of the source node. */
   def callGraph(funcName: String, direction: String = "out",
       maxDepth: Int = 5): DataFrame = {
-    val root = n(Labels.Function).unionByName(n(Labels.Method))
-      .filter(col("name") === funcName).select(col("id"))
+    val root = funcs.filter(col("name") === funcName).select(col("id"))
     val calls = e(RelTypes.Calls).select(col("src"), col("dst"))
     val oriented =
       if (direction == "out") calls
@@ -341,15 +345,21 @@ class CodeGraph(nodes: DataFrame, edges: DataFrame) {
       .orderBy(col("srcDepth"), col("srcName"), col("dstName"))
   }
 
-  /** O4/S15 — source span lookup (`query.go:425-493`): location metadata
-    * for a named Function/Method, for byte-span extraction. */
-  def sourceLocation(name: String): DataFrame =
-    n(Labels.Function).unionByName(n(Labels.Method))
-      .filter(col("name") === name &&
-        col("startByte").isNotNull && col("endByte").isNotNull)
+  /** O4/S15 — source lookup (`query.go:425-493`): the first
+    * Function/Method named `name` by (filePath, startLine), with its
+    * span and its File's indexed `content` (null when the File has
+    * none). [[CodeGraph.extractSpan]] cuts the source out of it. */
+  def source(name: String): DataFrame = {
+    val loc = funcs.filter(col("name") === name)
+      .orderBy(col("filePath"), col("startLine")).limit(1)
       .select(col("name"), col("filePath"), col("startByte"), col("endByte"),
         col("startLine"), col("endLine"), col("linesOfCode"))
-      .orderBy(col("filePath"), col("startLine")).limit(1)
+    // right_outer so the one-row side is the broadcast one
+    n(Labels.File).filter(col("content").isNotNull)
+      .select(col("path").as("filePath"), col("content"))
+      .join(broadcast(loc), Seq("filePath"), "right_outer")
+      .select((loc.columns.toSeq :+ "content").map(col): _*)
+  }
 }
 
 object CodeGraph {

@@ -813,18 +813,10 @@ object GraphQueries {
       |      SELECT p_partkey, p_partkey - 1 FROM part WHERE p_partkey >= 2)
       |    WHERE s <> d)""".stripMargin
 
-  /** Symmetrized part tree∪chain graph (k→k/2 binary-tree hops plus
-    * k→k−1 chain hops, deduped undirected, both directions) — the
-    * shared substrate of q257/q259. */
+  /** [[partEdges]] in both directions — the shared substrate of
+    * q257/q259. */
   private def partGraphSym(spark: SparkSession, dir: String): DataFrame = {
-    val p = Tables.part(spark, dir)
-    val raw = p.filter(col("p_partkey") >= 2)
-      .select(col("p_partkey").as("s"), expr("p_partkey div 2").as("d"))
-      .unionAll(p.filter(col("p_partkey") >= 2)
-        .select(col("p_partkey").as("s"), (col("p_partkey") - 1).as("d")))
-    val und = raw.select(least(col("s"), col("d")).as("a"),
-        greatest(col("s"), col("d")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
+    val und = partEdges(spark, dir)
     und.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(und.select(col("b").as("src"), col("a").as("dst")))
   }

@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
+import graft.ingest.{GoFrontend, ScipIngest}
 import graft.queries.CodeGraph
-import graft.model.Model.Labels
+import graft.model.Model.{Labels, RelTypes}
+import graft.store.GraphStore
 
 class CodeGraphSpec extends SparkSpec {
   lazy val store = FixtureGraph.store(spark)
@@ -134,9 +137,12 @@ class CodeGraphSpec extends SparkSpec {
     assert(out.toSet === Set(("Main", "Helper", 0), ("Helper", "Main", 1)))
   }
 
-  test("sourceLocation + extractSpan byte-slice oracle") {
-    val loc = cg.sourceLocation("Main").collect()
+  test("source + extractSpan byte-slice oracle") {
+    val loc = cg.source("Main").collect()
     assert(loc.length === 1)
+    assert(loc(0).getAs[Int]("startByte") === 0)
+    assert(loc(0).getAs[Int]("endByte") === 120)
+    assert(loc(0).isNullAt(loc(0).fieldIndex("content"))) // no content
     val content = "0123456789" * 30
     val got = CodeGraph.extractSpan(content, Some(5), Some(15), 1, 10)
     assert(got === content.substring(5, 15))
@@ -144,5 +150,117 @@ class CodeGraphSpec extends SparkSpec {
     val text = (1 to 20).map(i => s"line$i").mkString("\n")
     val lines = CodeGraph.extractSpan(text, None, None, 2, 4)
     assert(lines === "line2\nline3\nline4")
+  }
+
+  // ------------------------------------------------- find-references walk
+  private type Ref = (Long, String, String, Option[Int], Option[Int])
+
+  private def opt(r: Row, c: String): Option[Int] =
+    Option(r.getAs[Any](c)).map(_.asInstanceOf[Int])
+
+  private def refsOf(g: CodeGraph, symbol: String): Seq[Ref] =
+    g.findReferences(symbol).collect().toSeq.map(r =>
+      (r.getAs[Long]("usageId"), r.getAs[String]("usageLabel"),
+        r.getAs[String]("path"), opt(r, "startLine"),
+        opt(r, "startColumn")))
+
+  /** Plain-Scala J2 over the collected graph: each usage of `symbol`
+    * with every File found within `maxDepth` CONTAINS hops above it
+    * (its own `filePath` when there is none), in the engine's order. */
+  private def refsWalk(st: GraphStore, symbol: String,
+      maxDepth: Int = 10): Seq[Ref] = {
+    val nodes = st.nodes.collect().map(r => r.getAs[Long]("id") -> r).toMap
+    val edges = st.edges.collect()
+      .map(r => (r.getAs[Long]("src"), r.getAs[Long]("dst"),
+        r.getAs[String]("relType")))
+    val parents = edges.filter(_._3 == RelTypes.Contains)
+      .groupBy(_._2).map { case (d, es) => d -> es.map(_._1).toSet }
+    val syms = nodes.values.filter(r =>
+      r.getAs[String]("label") == Labels.Symbol &&
+        r.getAs[String]("symbol") == symbol).map(_.getAs[Long]("id")).toSet
+    val usages = edges.collect {
+      case (u, d, t) if t == RelTypes.References && syms(d) => u
+    }.distinct.toSeq
+    usages.flatMap { u =>
+      val ancestors = Iterator.iterate(Set(u))(
+          _.flatMap(parents.getOrElse(_, Set.empty[Long])))
+        .slice(1, maxDepth + 1).flatten.toSet
+      val files = ancestors.toSeq.map(nodes).filter(
+        _.getAs[String]("label") == Labels.File).map(_.getAs[String]("path"))
+      val n = nodes(u)
+      (if (files.isEmpty) Seq(n.getAs[String]("filePath")) else files)
+        .map(p => (u, n.getAs[String]("label"), p, opt(n, "startLine"),
+          opt(n, "startColumn")))
+    }.distinct.sortBy(r => (Option(r._3), r._4, r._1)) // nulls first
+  }
+
+  private def symbolsOf(st: GraphStore): Seq[String] =
+    st.nodes.filter(col("label") === Labels.Symbol).select("symbol")
+      .collect().map(_.getString(0)).toSeq.sorted
+
+  test("findReferences equals a plain CONTAINS* ancestor walk: fixture") {
+    for (sym <- symbolsOf(store))
+      assert(refsOf(cg, sym) === refsWalk(store, sym), sym)
+  }
+
+  test("findReferences equals a plain CONTAINS* ancestor walk: SCIP + Go " +
+      "frontend store") {
+    import spark.implicits._
+    val a = "package pkg\n\nfunc Main() {\n\tHelper()\n\tHelper()\n}\n"
+    val b = "package pkg\n\nfunc Helper() {\n}\n\nfunc Use() {\n" +
+      "\tHelper()\n\tMain()\n}\n"
+    def occ(sym: String, line: Int, c0: Int, c1: Int, role: Int) =
+      ScipIngest.ScipOccurrence(s"scip-go go svc v1 pkg/$sym().",
+        Seq(line, c0, c1), role)
+    val index = ScipIngest.ScipIndex(
+      documents = Seq(
+        ScipIngest.ScipDocument("pkg/a.go", Seq(occ("Main", 2, 5, 9, 1),
+          occ("Helper", 3, 1, 7, 0), occ("Helper", 4, 1, 7, 0))),
+        ScipIngest.ScipDocument("pkg/b.go", Seq(occ("Helper", 2, 5, 11, 1),
+          occ("Use", 5, 5, 8, 1), occ("Helper", 6, 1, 7, 0),
+          occ("Main", 7, 1, 5, 0)))),
+      externalSymbols = Nil)
+    val dir = java.nio.file.Files.createTempDirectory("graft-refs")
+    try {
+      val st = new GraphStore(spark, dir.toString)
+      ScipIngest.ingest(st, spark, index, "svc",
+        Map("pkg/a.go" -> a, "pkg/b.go" -> b))
+      GoFrontend.ingest(st,
+        Seq("pkg/a.go" -> a, "pkg/b.go" -> b).toDF("path", "content"), "svc")
+      val g = CodeGraph(st)
+      val syms = symbolsOf(st)
+      assert(syms.nonEmpty)
+      for (sym <- syms) assert(refsOf(g, sym) === refsWalk(st, sym), sym)
+      assert(refsOf(g, "scip-go go svc v1 pkg/Helper().").map(_._3) ===
+        Seq("pkg/a.go", "pkg/a.go", "pkg/b.go"))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
+
+  test("findReferences launches no extra jobs for an unrelated deep " +
+      "CONTAINS chain") {
+    import spark.implicits._
+    // 13 Modules chained 12 CONTAINS hops deep, reachable from no usage
+    val chainNodes = (0 to 12).map(i =>
+      FixtureGraph.N(1000L + i, Labels.Module, name = s"deep$i")).toDF()
+    val chainEdges = (0 until 12).map(i =>
+      (1000L + i, 1001L + i, RelTypes.Contains)).toDF("src", "dst", "relType")
+    def storeOf(ns: DataFrame, es: DataFrame): GraphStore = {
+      val st = new GraphStore(spark,
+        java.nio.file.Files.createTempDirectory("graft-chain").toString)
+      st.mergeNodes(ns)
+      st.mergeEdges(es)
+      st
+    }
+    val plain = storeOf(FixtureGraph.nodes(spark), FixtureGraph.edges(spark))
+    val deep = storeOf(FixtureGraph.nodes(spark).unionByName(chainNodes),
+      FixtureGraph.edges(spark).unionByName(chainEdges))
+    val sym = "scip-go go test-service v1 pkg/Main()."
+    def counted(st: GraphStore) = jobsOf(refsOf(CodeGraph(st), sym))
+    val (rowsPlain, jobsPlain) = counted(plain)
+    val (rowsDeep, jobsDeep) = counted(deep)
+    assert(rowsDeep === rowsPlain)
+    assert(rowsPlain.map(_._3) === Seq("pkg/b.go"))
+    assert(jobsDeep === jobsPlain,
+      s"$jobsPlain jobs without the chain, $jobsDeep with it")
   }
 }

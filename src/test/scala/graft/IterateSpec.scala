@@ -102,36 +102,6 @@ class IterateSpec extends SparkSpec {
     assert(d.max - d.min <= 1, s"barrierCounted loop statistic drifted: $d")
   }
 
-  /** `body`'s result and the number of Spark jobs it launched. The
-    * listener bus is asynchronous, so a marker job run after `body`
-    * bounds the wait: the shared queue delivers job starts in order,
-    * so once the marker's start is seen every earlier one has been. */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    import org.apache.spark.scheduler.{SparkListener,
-      SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        groups.add(Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("iterate-spec-body", "counted")
-      val a = try body finally sc.clearJobGroup()
-      sc.setJobGroup("iterate-spec-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains("iterate-spec-marker") &&
-          System.nanoTime() < deadline) Thread.sleep(5)
-      assert(groups.contains("iterate-spec-marker"),
-        "marker job start never reached the listener")
-      (a, groups.toArray.count(_ == "iterate-spec-body"))
-    } finally sc.removeSparkListener(listener)
-  }
-
   // 64 rows; round r keeps ids above 16·(r − 1): 64, 48, 32, 16, 0
   private def shrinking(rounds: Vector[(DataFrame, Long)]): DataFrame =
     rounds.last._1.filter(col("id") > rounds.size * 16)

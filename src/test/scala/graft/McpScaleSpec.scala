@@ -106,43 +106,51 @@ class McpScaleSpec extends SparkSpec {
       // inflated find-references to 3.2 s in this round's inherited
       // suite run where the quiet-box reading is 1.1 s. A window
       // striking BOTH calls is what the bench protocol already treats
-      // as negligible.
+      // as negligible. The MAX is gated too, at twice the bound, so a
+      // stall on every other call still fails.
       var callId = 2
-      def timedMin(tool: String, argJson: String): (JValue, Double) = {
+      def timed(tool: String, argJson: String): (JValue, (Double, Double)) = {
         callId += 1
         val (r1, t1) = call(toolCall(callId, tool, argJson))
         callId += 1
         val (_, t2) = call(toolCall(callId, tool, argJson))
-        (r1, math.min(t1, t2))
+        (r1, (math.min(t1, t2), math.max(t1, t2)))
       }
 
       val (rs, tSearch) =
-        timedMin("codegraph_search", """{"query":"NewClient"}""")
+        timed("codegraph_search", """{"query":"NewClient"}""")
       val searchText = toolText(rs)
       assert(searchText.contains("NewClient"),
         s"search payload missing the replicated entity:\n$searchText")
 
-      val (rr, tRefs) = timedMin("codegraph_find_references",
+      val (rr, tRefs) = timed("codegraph_find_references",
         """{"symbol":"NewClient"}""")
       val refsText = toolText(rr)
       assert(refsText.contains("reference"),
         s"find-references payload empty over the 12x store:\n$refsText")
 
-      val (ra, tAnalyze) = timedMin("codegraph_analyze_function",
+      val (ra, tAnalyze) = timed("codegraph_analyze_function",
         """{"function_name":"NewClient"}""")
       val analyzeText = toolText(ra)
       assert(analyzeText.contains("Analysis for function 'NewClient'"),
         s"analyze payload malformed:\n$analyzeText")
 
-      info(f"12x-store MCP latencies: search=$tSearch%.2f s " +
-        f"refs=$tRefs%.2f s analyze=$tAnalyze%.2f s")
+      def both(t: (Double, Double)): String = f"${t._1}%.2f/${t._2}%.2f s"
+      info(s"12x-store MCP latencies (min/max of two calls): " +
+        s"search=${both(tSearch)} refs=${both(tRefs)} " +
+        s"analyze=${both(tAnalyze)}")
       if (gateLatency) {
-        assert(tSearch < 2.0,
-          f"search $tSearch%.2f s misses BASELINE.md's 2 s gate at 12x")
-        assert(tRefs < 2.0,
-          f"find-references $tRefs%.2f s misses the 2 s gate at 12x")
-        assert(tAnalyze < 1.0,
-          f"analyze-function $tAnalyze%.2f s misses the 1 s gate at 12x")
+        // BASELINE.md's gates: search ≤ 2 s, find-references ≤ 2 s,
+        // analyze-function ≤ 1 s
+        def gate(tool: String, t: (Double, Double), bound: Double): Unit = {
+          assert(t._1 < bound,
+            f"$tool min ${t._1}%.2f s misses the $bound%.0f s gate at 12x")
+          assert(t._2 < 2 * bound, f"$tool max ${t._2}%.2f s exceeds " +
+            f"twice the $bound%.0f s gate at 12x")
+        }
+        gate("search", tSearch, 2.0)
+        gate("find-references", tRefs, 2.0)
+        gate("analyze-function", tAnalyze, 1.0)
       } else {
         info("latency gate skipped (set GRAFT_SCALE_LATENCY_GATE=1 " +
           "to assert the BASELINE.md bounds)")

@@ -66,12 +66,6 @@ class Round11GateSpec extends SparkSpec {
       Traversals.reachable(e, seeds, 14))
   }
 
-  test("Traversals.closure: stats flat in depth") {
-    val e = pathEdges(30)
-    gate("closure", Traversals.closure(e, 3),
-      Traversals.closure(e, 12))
-  }
-
   test("Traversals.closureTreeDoubling: stats flat in depth") {
     val e = pathEdges(40)
     gate("closureTreeDoubling", Traversals.closureTreeDoubling(e, 4),

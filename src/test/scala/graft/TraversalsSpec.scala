@@ -34,13 +34,6 @@ class TraversalsSpec extends SparkSpec {
     assert(gx === df)
   }
 
-  test("closure on a tree gives (ancestor, descendant, depth)") {
-    val tree = Seq((1L, 2L), (1L, 3L), (2L, 4L)).toDF("src", "dst")
-    val got = Traversals.closure(tree, 10).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(got === Set((1L, 2L, 1), (1L, 3L, 1), (2L, 4L, 1), (1L, 4L, 2)))
-  }
-
   test("paths enumerates simple paths only (no cycles)") {
     val seeds = Seq(1L).toDF("id")
     val got = Traversals.paths(edges, seeds, 10).collect()
@@ -58,8 +51,14 @@ class TraversalsSpec extends SparkSpec {
     val forest = Seq((100L, 101L), (100L, 102L), (101L, 103L),
       (101L, 104L), (103L, 105L))
     val es = (chain ++ forest).toDF("src", "dst")
+    // the independent reference: on a forest each (ancestor,
+    // descendant) pair has exactly one path, so the simple paths from
+    // every node, projected to (start, end, depth), are the closure
+    val every = (chain ++ forest).flatMap(e => Seq(e._1, e._2)).distinct
+      .toDF("id")
     for (cap <- Seq(1, 2, 5, 12, 30)) {
-      val linear = Traversals.closure(es, cap).collect()
+      val linear = Traversals.paths(es, every, cap)
+        .select("start", "end", "depth").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       val doubling = Traversals.closureTreeDoubling(es, cap).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
