@@ -88,12 +88,9 @@ object Cli {
       case "impact" =>
         val name = rest.head
         val depth = rest.lift(1).map(_.toInt).getOrElse(10)
-        val ids = store.nodes
-          .filter(col("label").isin("Function", "Method") &&
-            col("name") === name)
-          .select("id").collect().map(_.getLong(0))
-        if (ids.isEmpty) { println(s"no function named $name"); None }
-        else Some(cg.impactAnalysis(ids.head, depth))
+        val impact = cg.impactAnalysis(name, depth)
+        if (impact.isEmpty) println(s"no function named $name")
+        impact
       case "callers" => Some(cg.callersOf(rest.head))
       case "callees" => Some(cg.calleesOf(rest.head))
       case "stats" =>

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.model.Model.{Labels, RelTypes}
@@ -258,17 +258,9 @@ object GoFrontend {
     * entities, DEFINES symbols, Class CONTAINS Method (receiver match),
     * heuristic same-service CALLS edges (call-site token ⋈ known
     * function names — the reference's symbolMap lookup,
-    * `indexer.go:647-685`, as a broadcast join).
-    *
-    * `extFuncs` (calleeId, calleeName) and `extClasses` (clsId, clsName,
-    * clsPkg) extend the call-target / receiver-class context BEYOND the
-    * given files — the incremental path passes the surviving entities of
-    * unchanged files here, so a changed file's calls into unchanged code
-    * (and methods whose receiver type lives in an unchanged file) still
-    * link. Full ingest uses the batch itself as the only context. */
-  def derive(files: DataFrame, service: String,
-      extFuncs: Option[DataFrame] = None,
-      extClasses: Option[DataFrame] = None)
+    * `indexer.go:647-685`, as a broadcast join). The batch itself is
+    * the only linking context. */
+  def derive(files: DataFrame, service: String)
       : (DataFrame, DataFrame, () => Unit) = {
     val spark = files.sparkSession
     import spark.implicits._
@@ -321,8 +313,6 @@ object GoFrontend {
       .join(entPkgs, Seq("label", "name", "signature", "filePath"))
       .select(col("id").as("clsId"), col("name").as("clsName"),
         col("pkg").as("clsPkg"))
-      .unionByName(extClasses.getOrElse(
-        emptyCtx(spark, Seq("clsId", "clsName", "clsPkg"))))
     val methodRecv = ents.filter(col("label") === Labels.Method)
       .join(entIds.filter(col("label") === Labels.Method)
           .withColumnRenamed("id", "methId"),
@@ -347,13 +337,9 @@ object GoFrontend {
         lit(RelTypes.Defines).as("relType"), lit(true).as("isExported"))
       .distinct()
     // heuristic CALLS: function-name tokens in a body ⋈ known functions
-    // (this batch plus, on the incremental path, the survivors of
-    // unchanged files)
     val funcs = entIds.filter(col("label").isin(Labels.Function,
         Labels.Method))
       .select(col("id").as("calleeId"), col("name").as("calleeName"))
-      .unionByName(extFuncs.getOrElse(
-        emptyCtx(spark, Seq("calleeId", "calleeName"))))
       .distinct()
     val bodies = ents.filter(col("label").isin(Labels.Function,
         Labels.Method))
@@ -382,14 +368,4 @@ object GoFrontend {
     // invokes the cleanup thunk after materializing both
     (nodes, edges, () => { ents.unpersist(); () })
   }
-
-  /** Empty external-context frame with the right column names. The
-    * first column is the id (long), the rest strings. */
-  private def emptyCtx(spark: SparkSession, names: Seq[String]): DataFrame =
-    GraphStore.emptyDf(spark, org.apache.spark.sql.types.StructType(
-      names.zipWithIndex.map { case (n, i) =>
-        org.apache.spark.sql.types.StructField(n,
-          if (i == 0) org.apache.spark.sql.types.LongType
-          else org.apache.spark.sql.types.StringType)
-      }))
 }

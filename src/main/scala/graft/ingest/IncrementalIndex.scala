@@ -2,7 +2,6 @@ package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 import graft.model.Model.{Labels, RelTypes}
 import graft.store.GraphStore
@@ -12,11 +11,11 @@ import graft.store.GraphStore
   * `research.md:280-323`: edit detection → delta re-derivation → atomic
   * graph update, <1 s target), composed from the pieces that already
   * exist: content-hash change detection against the stored File nodes,
-  * the GoFrontend derivation restricted to the changed files (with the
+  * the GoFrontend parser restricted to the changed files (with the
   * SURVIVING functions/classes of unchanged files as linking context),
   * and the store's write machinery.
   *
-  * Semantics (the delta algebra, shared by both execution paths):
+  * Semantics (the delta algebra):
   *   - changed file  = new path, or stored File-node hash ≠ sha2(content)
   *   - deleted file  = stored path absent from the input file set
   *   - stale node    = old node in a changed/deleted file whose identity
@@ -29,25 +28,16 @@ import graft.store.GraphStore
   *     re-parsed, their nodes/edges never rewritten
   *   - symbol GC     = Symbol nodes with no remaining DEFINES edge
   *
-  * Two execution strategies, chosen by delta size (the AQE idea applied
-  * to ingest; their equivalence is equality-tested in GoFrontendSpec,
-  * same discipline as the Pregel/DataFrame dual traversal engines):
-  *
-  *   - FAST PATH (delta ≤ maxDriverFiles): the every-save case. Parse
-  *     and edge composition run on the driver (the delta is bounded by
-  *     construction); the store is touched by THREE pruned scans
-  *     (File-label hashes for detection; affected/ctx nodes; affected
-  *     edges + DEFINES survival) and TWO O(delta) LSM appends
-  *     ([[GraphStore.appendDelta]] — adds + key tombstones, folded by
-  *     merge-on-read, compacted after K deltas). Nothing corpus-sized
-  *     is shuffled or rewritten, which is what makes the <1 s per-save
-  *     target reachable on a warm session — and is the only shape that
-  *     survives 100 TB, where a per-edit table rewrite is absurd.
-  *   - DISTRIBUTED PATH (big refactors, branch switches): the same
-  *     algebra as DataFrame ops — GoFrontend.derive over the changed
-  *     set, anti-join stale/dangling removal, one keep-latest rewrite
-  *     per table. O(graph) write, amortized-correct for deltas
-  *     comparable to the corpus.
+  * Execution: the delta is detected by one (path, hash) join, then
+  * parsed and composed ON THE DRIVER (the same families
+  * [[GoFrontend.derive]] builds for a full ingest, which the spec's
+  * incremental-equals-full graph equality checks it against). The
+  * store is touched by THREE pruned scans (File-label hashes for
+  * detection; affected/ctx nodes; affected edges + DEFINES survival)
+  * and TWO O(delta) LSM appends ([[GraphStore.appendDelta]] — adds +
+  * key tombstones, folded by merge-on-read, compacted after K deltas).
+  * Nothing corpus-sized is shuffled or rewritten, which is what makes
+  * the <1 s per-save target reachable on a warm session.
   *
   * Known limit (shared with the reference's design, research.md:301):
   * a caller in an UNCHANGED file that references a symbol which did not
@@ -57,7 +47,7 @@ import graft.store.GraphStore
   */
 object IncrementalIndex {
 
-  /** Node-row staging shape for the fast path (object-level so the
+  /** Node-row staging shape for the delta (object-level so the
     * Spark product encoder can resolve it; Option fields become
     * nullable columns that ensureNodeIds/align cast onto the canonical
     * schema). */
@@ -72,14 +62,27 @@ object IncrementalIndex {
     lineCount: Option[Int] = None, hash: String = null,
     content: String = null)
 
+  private val callSiteRe = """(\w+)\s*\(""".r
+
   /** Bring `store` up to date with `files` (the full current tree as
     * (path, content)); only changed files are parsed. Returns a one-row
     * summary (n_changed_files, n_deleted_files, n_new_nodes,
-    * n_stale_nodes). */
-  def reindex(store: GraphStore, files: DataFrame, service: String,
-      maxDriverFiles: Int = 4096): DataFrame = {
+    * n_stale_nodes).
+    *
+    * The driver holds the delta uncapped: the changed paths, the
+    * changed files' text and the rows composed from them. Its size
+    * follows the edit, not the tree. The callers' deltas are small: an
+    * editor save, perfbench's 5-file batches, and q254's 286 changed
+    * rows, whose `files` is a ≤ 2,000-row `part` slice; the others
+    * build `files` from a driver-local `Seq`, so the driver holds all
+    * of it anyway. */
+  def reindex(store: GraphStore, files: DataFrame, service: String)
+      : DataFrame = {
     val spark = files.sparkSession
     import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
 
     val incoming = files
       .select(col("path").cast("string"), col("content").cast("string"))
@@ -96,17 +99,13 @@ object IncrementalIndex {
     // tree's file CONTENTS never enter the detection shuffle (a
     // full-outer join can't broadcast, and shuffling every byte of a
     // 100 TB tree to discover that three files changed is the scale
-    // anti-pattern this operator exists to avoid); the cap+1 limit
-    // bounds the collect
+    // anti-pattern this operator exists to avoid)
     val delta = incoming.select(col("path"), col("new_hash"))
       .join(storedFiles, Seq("path"), "full_outer")
       .filter((col("new_hash").isNotNull && (col("old_hash").isNull ||
         col("old_hash") =!= col("new_hash"))) || col("new_hash").isNull)
       .select(col("path"), col("new_hash").isNull.as("is_deleted"))
-      .limit(maxDriverFiles + 1)
       .collect()
-    if (delta.length > maxDriverFiles)
-      return reindexDistributed(store, files, service, oldNodes, oldEdges)
     val changedPaths = delta.filter(!_.getBoolean(1)).map(_.getString(0))
     val deleted = delta.filter(_.getBoolean(1)).map(_.getString(0))
     if (changedPaths.isEmpty && deleted.isEmpty)
@@ -119,29 +118,12 @@ object IncrementalIndex {
       .select(col("path").cast("string"), col("content").cast("string"))
       .collect()
       .map(r => (r.getString(0), r.getString(1)))
-    reindexFast(store, changed, deleted, service, oldNodes, oldEdges)
-  }
-
-  // -------------------------------------------------------------------
-  // fast path
-  // -------------------------------------------------------------------
-
-  private val callSiteRe = """(\w+)\s*\(""".r
-
-  private def reindexFast(store: GraphStore,
-      changed: Array[(String, String)], deleted: Array[String],
-      service: String, oldNodes: DataFrame, oldEdges: DataFrame): DataFrame = {
-    val spark = oldNodes.sparkSession
-    import spark.implicits._
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
 
     val ents = changed.flatMap { case (p, c) =>
       GoFrontend.parseFile(p, c).map(e => (e, c))
     }
     val affected: Array[String] = changed.map(_._1) ++ deleted
-    // call-site tokens per caller (matches the distributed path's
+    // call-site tokens per caller (matches GoFrontend.derive's
     // regexp_extract_all over the byte-span body)
     val callSites = ents.collect {
       case (e, c) if e.label == Labels.Function || e.label == Labels.Method =>
@@ -189,7 +171,7 @@ object IncrementalIndex {
     // Ids are computed ON THE DRIVER through the same catalyst
     // XxHash64Function the xxhash64 expression evaluates — bit-equal to
     // ensureNodeIds without spending a ~150 ms job slot; the spec's
-    // fast-equals-full graph equality is the parity gate for this.
+    // incremental-equals-full graph equality is the parity gate.
     def sha256(s: String): String =
       java.security.MessageDigest.getInstance("SHA-256")
         .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -234,7 +216,7 @@ object IncrementalIndex {
         case Labels.Class | Labels.Interface | Labels.Module => Seq(n.fqn)
         case Labels.Function | Labels.Method => Seq(n.signature, n.filePath)
         case Labels.Variable => Seq(n.name, n.filePath)
-        case other => sys.error(s"fast path: no merge key for $other")
+        case other => sys.error(s"reindex: no merge key for $other")
       }
       // ensureNodeIds: xxhash64(label, key₁…keyₙ) — seed 42, each input
       // folded through XXH64 in order
@@ -262,7 +244,7 @@ object IncrementalIndex {
       Row.fromSeq(nodeSchema.fields.toSeq.map(f => m.getOrElse(f.name, null)))
     }
     // duplicate identities inside one delta collapse here, exactly
-    // like keepLatest collapses them on the distributed path
+    // like GraphStore.keepLatest collapses them in a merge write
     val newNodeRows = allNs.map(n => rowOf(n, idOf(n)))
       .groupBy(_.getLong(0)).map(_._2.head).toArray
     val _ = ctx // join the concurrent scan before composing edges
@@ -374,112 +356,5 @@ object IncrementalIndex {
       newNodeRows.length.toLong, staleIds.size.toLong))
       .toDF("n_changed_files", "n_deleted_files", "n_new_nodes",
         "n_stale_nodes")
-  }
-
-  // -------------------------------------------------------------------
-  // distributed path
-  // -------------------------------------------------------------------
-
-  private def reindexDistributed(store: GraphStore, files: DataFrame,
-      service: String, oldNodes: DataFrame, oldEdges: DataFrame): DataFrame = {
-    val spark = files.sparkSession
-    import spark.implicits._
-
-    val incoming = files
-      .select(col("path").cast("string"), col("content").cast("string"))
-      .withColumn("new_hash", sha2(col("content"), 256))
-    // oldNodes/oldEdges were bound by the caller — store reads resolve
-    // the snapshot pointer at creation time and snapshot dirs are
-    // retained, so they stay consistent across the replace writes below
-    val storedFiles = oldNodes.filter(col("label") === Labels.File)
-      .select(col("path"), col("hash").as("old_hash"))
-
-    val changed = incoming
-      .join(storedFiles, Seq("path"), "left_outer")
-      .filter(col("old_hash").isNull || col("old_hash") =!= col("new_hash"))
-      .select(col("path"), col("content"))
-      .localCheckpoint(true)
-    val deletedPaths = storedFiles.select(col("path"))
-      .join(incoming.select(col("path")), Seq("path"), "left_anti")
-      .localCheckpoint(true)
-    val nChanged = changed.count()
-    val nDeleted = deletedPaths.count()
-    if (nChanged == 0 && nDeleted == 0)
-      return Seq((0L, 0L, 0L, 0L)).toDF("n_changed_files",
-        "n_deleted_files", "n_new_nodes", "n_stale_nodes")
-
-    val affectedPaths = changed.select(col("path"))
-      .unionByName(deletedPaths).distinct()
-    // old nodes living in affected files: File nodes key on `path`,
-    // entities on `filePath` — two equi-joins (delta side broadcasts),
-    // never an OR-join
-    val oldAffected = oldNodes
-      .join(broadcast(affectedPaths), Seq("path"))
-      .select(col("id"))
-      .unionByName(oldNodes.join(
-          broadcast(affectedPaths.withColumnRenamed("path", "filePath")),
-          Seq("filePath"))
-        .select(col("id")))
-      .distinct()
-
-    // linking context = survivors of UNCHANGED files
-    val extFuncs = oldNodes
-      .filter(col("label").isin(Labels.Function, Labels.Method))
-      .join(broadcast(affectedPaths.withColumnRenamed("path", "filePath")),
-        Seq("filePath"), "left_anti")
-      .select(col("id").as("calleeId"), col("name").as("calleeName"))
-    val extClasses = oldNodes.filter(col("label") === Labels.Class)
-      .join(broadcast(affectedPaths.withColumnRenamed("path", "filePath")),
-        Seq("filePath"), "left_anti")
-      .select(col("id").as("clsId"), col("name").as("clsName"),
-        // fqn = "<pkg>.<name>" (GoFrontend entNodes)
-        expr("substring_index(fqn, '.', 1)").as("clsPkg"))
-
-    val (newNodesLazy, newEdgesLazy, done) = GoFrontend.derive(
-      changed, service, Some(extFuncs), Some(extClasses))
-    // delta-sized: pin both so the diff/union below evaluates them once
-    val newNodes = newNodesLazy.localCheckpoint(true)
-    val newEdges = newEdgesLazy.localCheckpoint(true)
-    done()
-
-    val newIds = newNodes.select(col("id")).distinct()
-    val staleIds = oldAffected.join(newIds, Seq("id"), "left_anti")
-      .localCheckpoint(true)
-
-    // edges: drop src ∈ affected (re-derived from new content) and
-    // anything touching a stale node; new edges win on key collision
-    val keptEdges = oldEdges
-      .join(broadcast(oldAffected.withColumnRenamed("id", "src")),
-        Seq("src"), "left_anti")
-      .join(broadcast(staleIds.withColumnRenamed("id", "dst")),
-        Seq("dst"), "left_anti")
-    val eW = Window.partitionBy(col("src"), col("dst"), col("relType"))
-      .orderBy(col("_gen").desc)
-    val finalEdges = keptEdges.withColumn("_gen", lit(0))
-      .unionByName(newEdges.withColumn("_gen", lit(1)))
-      .withColumn("_rn", row_number().over(eW))
-      .filter(col("_rn") === 1).drop("_rn", "_gen")
-      .localCheckpoint(true) // consumed by symbol GC AND the write
-
-    val finalNodesPre = GraphStore.keepLatest(
-      oldNodes.join(broadcast(staleIds), Seq("id"), "left_anti"),
-      newNodes)
-    // symbol GC: a Symbol whose every definer vanished has no DEFINES
-    // edge left — remove it (the graph analog of a dropped index key)
-    val definedSyms = finalEdges
-      .filter(col("relType") === RelTypes.Defines)
-      .select(col("dst").as("id")).distinct()
-    val finalNodes = finalNodesPre
-      .join(finalNodesPre.filter(col("label") === Labels.Symbol)
-          .select(col("id"))
-          .join(definedSyms, Seq("id"), "left_anti"),
-        Seq("id"), "left_anti")
-
-    val nNew = newNodes.count()
-    val nStale = staleIds.count()
-    store.replaceNodes(finalNodes)
-    store.replaceEdges(finalEdges)
-    Seq((nChanged, nDeleted, nNew, nStale)).toDF("n_changed_files",
-      "n_deleted_files", "n_new_nodes", "n_stale_nodes")
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.model.Model.{Labels, RelTypes}
 import graft.graph.Traversals
+import graft.ops.Iterate
 import graft.store.GraphStore
 
 /** The reference's query layer (`pkg/neo4j/query.go`, `pkg/query/lsp.go`,
@@ -21,6 +22,12 @@ class CodeGraph(nodes: DataFrame, edges: DataFrame) {
   /** Function and Method nodes: what every by-name lookup targets. */
   private def funcs: DataFrame =
     nodes.filter(col("label").isin(Labels.Function, Labels.Method))
+  /** The id of the Function/Method named `name`, the smallest when
+    * several share the name (one job). */
+  private def funcId(name: String): Option[Long] = {
+    val id = funcs.filter(col("name") === name).agg(min(col("id"))).head()
+    if (id.isNullAt(0)) None else Some(id.getLong(0))
+  }
   /** The Symbol node `symbol` as `symId` (plus `extra` columns),
     * broadcast: one row heads each Symbol-anchored hop chain. */
   private def symbolNode(symbol: String, extra: Column*): DataFrame =
@@ -97,17 +104,29 @@ class CodeGraph(nodes: DataFrame, edges: DataFrame) {
     * (reversed edges, seeded with the usage ids, ≤ `maxDepth` hops), so
     * its rounds follow the usages' own ancestry, not the deepest chain
     * in the graph. A usage without a File ancestor keeps its own
-    * `filePath`.
+    * `filePath`. The usages are materialized once, as the walk's seed
+    * and the final join's left side; with none, the empty answer
+    * returns without the walk.
     */
   def findReferences(symbol: String, maxDepth: Int = 10): DataFrame = {
     val sym = symbolNode(symbol)
     val refs = e(RelTypes.References)
-    val usages = sym.join(refs, sym("symId") === refs("dst"))
-      .join(nodes.as("u"), refs("src") === col("u.id"))
-      .select(col("u.id").as("usageId"), col("u.label").as("usageLabel"),
-        col("u.filePath").as("usageFilePath"),
-        col("u.startLine").as("startLine"),
-        col("u.startColumn").as("startColumn"))
+    // a symbol's references are few, so they are broadcast: with no
+    // shuffle stage beside them, AQE cannot drop an empty join while the
+    // other side's stage still runs (it left that job running past the
+    // caller's collect)
+    val (usages, nUsages) = Iterate.barrierCounted(
+      broadcast(sym.join(refs, sym("symId") === refs("dst")))
+        .join(nodes.as("u"), refs("src") === col("u.id"))
+        .select(col("u.id").as("usageId"), col("u.label").as("usageLabel"),
+          col("u.filePath").as("usageFilePath"),
+          col("u.startLine").as("startLine"),
+          col("u.startColumn").as("startColumn")))
+    // limit(0) plans as an empty local relation: its collect runs no job
+    if (nUsages == 0)
+      return usages.select(col("usageId"), col("usageLabel"),
+        col("usageFilePath").as("path"), col("startLine"),
+        col("startColumn")).limit(0)
     // keep only File ancestors BEFORE joining, so non-File ancestors
     // (Module, Class…) cannot fan a usage out into duplicate rows; the
     // shortest walk to an ancestor is a simple path, so `paths` reaches
@@ -167,6 +186,11 @@ class CodeGraph(nodes: DataFrame, edges: DataFrame) {
       .distinct()
       .orderBy(col("depth"), col("name"), col("affectedId"))
   }
+
+  /** [[impactAnalysis]] of the Function/Method named `funcName`; None
+    * when there is none. */
+  def impactAnalysis(funcName: String, maxDepth: Int): Option[DataFrame] =
+    funcId(funcName).map(impactAnalysis(_, maxDepth))
 
   /** J5 — data lineage with path capture (`query.go:245-285`):
     * `path = (param)-[:FLOWS_TO*1..15]->(usage)` where the terminal usage

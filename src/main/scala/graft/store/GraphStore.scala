@@ -265,10 +265,17 @@ class GraphStore(spark: SparkSession, val basePath: String) {
   }
 
   /** Fold pending deltas of `kind` into a fresh base snapshot (the
-    * amortized corpus-sized rewrite). No-op when already compacted. */
+    * amortized corpus-sized rewrite): one snapshot write, with the same
+    * version-dir + pointer-swap atomicity as every other write. The
+    * merge-on-read frame it writes resolved the pointer at creation
+    * time, and old snapshot dirs are retained, so that frame stays
+    * consistent while the pointer moves. No-op when already compacted. */
   def compact(kind: String): Unit =
     if (pendingDeltas(kind) > 0) {
-      if (kind == "nodes") replaceNodes(nodes) else replaceEdges(edges)
+      if (kind == "nodes")
+        writeSnapshot(align(nodes, Model.nodeSchema), "nodes", Seq("label"))
+      else
+        writeSnapshot(align(edges, Model.edgeSchema), "edges", Seq("relType"))
     }
 
   def nodesByLabel(label: String): DataFrame =
@@ -297,22 +304,6 @@ class GraphStore(spark: SparkSession, val basePath: String) {
     val merged = keepLatest(existing, aligned).drop("id")
     writeSnapshot(merged, "edges", Seq("relType"))
   }
-
-  /** Atomically replace the full node set with `df` (schema-aligned).
-    * The incremental-index path composes its final frame (old − stale
-    * ∪ re-derived) and lands it in ONE snapshot write instead of a
-    * merge write plus a delete write; same version-dir + pointer-swap
-    * atomicity as every other write. The input must be bound to the
-    * CURRENT snapshot before calling (store reads resolve the pointer
-    * at DataFrame-creation time, and old snapshot dirs are retained,
-    * so a frame built from `nodes`/`edges` stays consistent while the
-    * pointer moves). */
-  def replaceNodes(df: DataFrame): Unit =
-    writeSnapshot(align(df, Model.nodeSchema), "nodes", Seq("label"))
-
-  /** Edge analog of [[replaceNodes]]. */
-  def replaceEdges(df: DataFrame): Unit =
-    writeSnapshot(align(df, Model.edgeSchema), "edges", Seq("relType"))
 
   /** Drop edges whose endpoints are absent from `nodes` — the existence
     * join the reference performs before each relationship insert

@@ -236,6 +236,24 @@ class CodeGraphSpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 
+  test("findReferences with no usages answers empty and leaves no job " +
+      "of its call running") {
+    // an unknown symbol, and a defined one that nothing references; a
+    // leak is a race, so each runs three times
+    for (sym <- Seq("scip-go go test-service v1 pkg/Absent().",
+        "scip-go go test-service v1 pkg/Doer#"); _ <- 1 to 3) {
+      val (rows, returned, jobs) =
+        jobTimesOf(cg.findReferences(sym).collect())
+      assert(rows.isEmpty, sym)
+      // the scheduler posts a job's end before it releases the waiting
+      // action, so every job the call itself waited for ended by then
+      val late = jobs.filter(_._2 > returned)
+      assert(late.isEmpty, s"$sym: ${late.size} of ${jobs.size} jobs " +
+        s"ended after collect returned (ms late: " +
+        s"${late.map(_._2 - returned).mkString(",")})")
+    }
+  }
+
   test("findReferences launches no extra jobs for an unrelated deep " +
       "CONTAINS chain") {
     import spark.implicits._

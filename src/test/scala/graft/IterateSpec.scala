@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.GraftBarrier
 import org.apache.spark.sql.functions._
 
 import graft.ops.Iterate
@@ -100,6 +101,32 @@ class IterateSpec extends SparkSpec {
     val d = digits.result()
     // 52..63 rows: at most one digit apart, never the multiplied trap
     assert(d.max - d.min <= 1, s"barrierCounted loop statistic drifted: $d")
+  }
+
+  test("resetStats: a storage-lookup miss takes its statistics from " +
+      "the known row count") {
+    import org.apache.spark.sql.catalyst.plans.logical.statsEstimation
+      .EstimationUtils
+    val df = loopFrame()
+    // a lazy checkpoint has no cached blocks yet, so the lookup misses
+    val cp = df.localCheckpoint(eager = false)
+    val b = GraftBarrier.resetStats(cp, rowCount = Some(64L))
+    val stats = b.queryExecution.optimizedPlan.stats
+    assert(stats.rowCount === Some(BigInt(64)))
+    assert(stats.sizeInBytes === BigInt(64) *
+      EstimationUtils.getSizePerRow(cp.queryExecution.analyzed.output))
+    assert(b.collect().sortBy(_.getLong(0)).toSeq ===
+      df.collect().sortBy(_.getLong(0)).toSeq)
+  }
+
+  test("resetStats: an empty checkpoint with no row count probes to " +
+      "exact empty statistics") {
+    val cp = loopFrame().filter(col("id") < 0L).localCheckpoint(eager = true)
+    val b = GraftBarrier.resetStats(cp)
+    val stats = b.queryExecution.optimizedPlan.stats
+    assert(stats.sizeInBytes === BigInt(1))
+    assert(stats.rowCount === Some(BigInt(0)))
+    assert(b.isEmpty)
   }
 
   // 64 rows; round r keeps ids above 16·(r − 1): 64, 48, 32, 16, 0
