@@ -1,7 +1,7 @@
 package graft.graph
 
 import org.apache.spark.graphx.{Edge, Graph}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Iterate.BarrierOps
@@ -16,47 +16,12 @@ import graft.ops.Iterate.BarrierOps
   * integers and every step is add/multiply/floor-div: synchronized
   * iterations produce exactly one answer everywhere (and the fixed
   * iteration count unrolls into plain SQL CTEs for the oracle).
+  *
+  * PageRank has ONE engine, the GraphX [[personalizedPageRankInteger]]
+  * (q69, q140, q311), checked against its SQL mirror
+  * [[personalizedPageRankIntegerSql]] by every oracle.
   */
 object Centrality {
-
-  /** Integer PageRank on GraphX: the [[personalizedPageRankInteger]]
-    * recurrence with every node seeded, as aggregateMessages per
-    * synchronized iteration (bit-identical to the DataFrame engine —
-    * integer arithmetic has no accumulation-order drift; equality is
-    * spec-tested). This is the engine q69 runs on:
-    * the graph is partitioned ONCE and iterations exchange only
-    * messages, where the DataFrame loop pays two shuffles per
-    * iteration. An explicit loop (not `Pregel`) because Pregel's
-    * active-set semantics skip vprog on vertices that received no
-    * message, which would freeze a source-only node at its initial rank
-    * instead of decaying it to the 150 000 ppm base.
-    */
-  def pageRankIntegerGraphX(spark: SparkSession, edges: DataFrame,
-      iters: Int): DataFrame = {
-    require(iters >= 1 && iters <= 20,
-      s"iters ($iters) out of the sane unrolled range")
-    import spark.implicits._
-    val eRdd = edges
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)].rdd.map { case (s, d) => Edge(s, d, ()) }
-    // Graph.fromEdges keeps parallel edges — a multigraph contributes
-    // once per edge, matching the DataFrame engine and the SQL mirror.
-    val base = Graph.fromEdges(eRdd, ())
-    // vertex attr = (rank_ppm, outdeg); dangling nodes keep outdeg 0 and
-    // never send (aggregateMessages walks edges, so no div-by-zero).
-    var g = base.outerJoinVertices(base.outDegrees)(
-      (_, _, d) => (1000000L, d.getOrElse(0))).cache()
-    for (i <- 1 to iters) {
-      val msgs = g.aggregateMessages[Long](
-        ctx => ctx.sendToDst(ctx.srcAttr._1 / ctx.srcAttr._2),
-        _ + _)
-      g = g.outerJoinVertices(msgs)((_, attr, s) =>
-        (150000L + (850000L * s.getOrElse(0L)) / 1000000L, attr._2))
-      if (i % 8 == 0) g.cache()
-    }
-    g.vertices.map { case (vid, (rank, _)) => (vid, rank) }
-      .toDF("id", "rank_ppm")
-  }
 
   /** Integer HITS over `edges(src, dst)`: `iters` synchronized
     * hub/authority sweeps in ppm fixed-point, max-normalized so the
@@ -161,94 +126,47 @@ object Centrality {
     * iterations, with the teleport mass landing ONLY on the seed set —
     * the "related code" ranking seeded at a function of interest
     * (Haveliwala 2002 restricted to one topic). Seeding every node
-    * (`lit(true)`) gives plain PageRank from a uniform 10⁶ start.
+    * (`_ => true`) gives plain PageRank from a uniform 10⁶ start.
     *
     *   r₀(v)    = seed(v)·10⁶
     *   rₖ₊₁(v) = seed(v)·150000
     *              + (850000 · Σ_{(u,v)∈E} (rₖ(u) div outdeg(u))) div 10⁶
     *
     * Dangling nodes (no out-edges) leak rank mass — the standard
-    * simplification, applied identically by any mirror. Seeds arrive as
-    * a COLUMN PREDICATE over node ids (not a collected Seq): membership
-    * evaluates distributedly inside the projection, so an unbounded
-    * seed set never touches the driver. Returns (id, rank_ppm).
+    * simplification, applied identically by the SQL mirror. Seeds are a
+    * predicate on the node id, evaluated in the vertex initialiser: no
+    * seed table, no distinct-nodes job and nothing collected. Returns
+    * (id, rank_ppm).
     *
-    * Scale shape: one join per iteration keyed on the edge endpoint
-    * (partial-aggregated). `outdeg` is static across iterations, so it
-    * is folded into the edge table ONCE before the loop — and that join
-    * is NOT hint-broadcast (`deg` has one row per non-dangling node; at
-    * 10⁹ nodes a forced broadcast ships GBs to every executor). It is a
-    * plain shuffle join keyed on `src`, co-partitioned with the edge
-    * table, and AQE still broadcasts at runtime when it measures small.
-    * Each iteration then performs exactly ONE join: rank ⋈ edges.
-    * Unlike the traversal loops (whose frontier feeds TWO consumers and
-    * must materialize per level), each rank is consumed exactly once by
-    * the next iteration — so iterations chain LAZILY into one job, and
-    * a localCheckpoint barrier is inserted only every few iterations to
-    * bound plan-analysis depth on long runs.
+    * Scale shape: the graph is partitioned ONCE, and each iteration is
+    * one aggregateMessages pass that exchanges only messages. An
+    * explicit loop (not `Pregel`) because Pregel's active-set semantics
+    * skip vprog on vertices that received no message, which would
+    * freeze a source-only node at its initial rank instead of decaying
+    * it to its teleport base.
     */
-  def personalizedPageRankInteger(edges: DataFrame, seedPred: Column,
+  def personalizedPageRankInteger(edges: DataFrame, seed: Long => Boolean,
       iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 20,
       s"iters ($iters) out of the sane unrolled range")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .localCheckpoint(eager = true)
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    // outdeg is iteration-invariant: fold it into the edges once, so the
-    // loop body is a single join per iteration instead of two. The
-    // checkpoint is taken AFTER a repartition on `src` (LogicalRDD keeps
-    // the child's output partitioning), so every iteration's rank join
-    // reuses this layout and only the rank side moves.
-    val eDeg = e.join(deg, Seq("src"))
-      .repartition(col("src")).localCheckpoint(eager = true)
-    val nodes = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id")))
-      .distinct()
-      .withColumn("is_seed", when(seedPred, 1L).otherwise(0L))
-      .localCheckpoint(eager = true)
-    var rank = nodes
-      .select(col("id"), (col("is_seed") * 1000000L).as("rank_ppm"))
-    for (i <- 1 to iters) {
-      val contrib = eDeg
-        .join(rank.select(col("id").as("src"), col("rank_ppm")), Seq("src"))
-        .select(col("dst").as("id"),
-          expr("rank_ppm div outdeg").as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("s"))
-      rank = nodes.join(contrib, Seq("id"), "left_outer")
-        .select(col("id"),
-          expr("is_seed * 150000 + (850000 * coalesce(s, 0L)) div 1000000")
-            .as("rank_ppm"))
-      if (i % 8 == 0) rank = rank.barrier
-    }
-    rank
-  }
-
-  /** The vertex-parallel engine for the personalized recurrence —
-    * bit-identical to [[personalizedPageRankInteger]] (equality
-    * spec-tested). Seeds arrive as a DataFrame of ids and join into
-    * vertex state as a VertexRDD (never collected), the unbounded-seed
-    * form of the q17 DataFrame-seed convention. */
-  def personalizedPageRankIntegerGraphX(spark: SparkSession,
-      edges: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
-    require(iters >= 1 && iters <= 20,
-      s"iters ($iters) out of the sane unrolled range")
+    val spark = edges.sparkSession
     import spark.implicits._
     val eRdd = edges
       .select(col("src").cast("long"), col("dst").cast("long"))
       .as[(Long, Long)].rdd.map { case (s, d) => Edge(s, d, ()) }
+    // Graph.fromEdges keeps parallel edges — a multigraph contributes
+    // once per edge, matching the SQL mirror.
     val base = Graph.fromEdges(eRdd, ())
-    val seedRdd = seeds.select(col("id").cast("long")).as[Long].rdd
-      .map(id => (id, true))
-    // vertex attr = (rank_ppm, outdeg, isSeed)
-    var g = base.outerJoinVertices(base.outDegrees)(
-        (_, _, d) => (0L, d.getOrElse(0), false))
-      .outerJoinVertices(org.apache.spark.graphx.VertexRDD(seedRdd))(
-        (_, attr, s) => (if (s.isDefined) 1000000L else 0L, attr._2,
-          s.isDefined)).cache()
+    // vertex attr = (rank_ppm, outdeg, isSeed); dangling nodes keep
+    // outdeg 0 and never send (aggregateMessages walks edges, so no
+    // div-by-zero).
+    var g = base.outerJoinVertices(base.outDegrees) { (id, _, d) =>
+      val isSeed = seed(id)
+      (if (isSeed) 1000000L else 0L, d.getOrElse(0), isSeed)
+    }.cache()
     for (i <- 1 to iters) {
       val msgs = g.aggregateMessages[Long](
-        ctx => if (ctx.srcAttr._2 > 0)
-          ctx.sendToDst(ctx.srcAttr._1 / ctx.srcAttr._2),
+        ctx => ctx.sendToDst(ctx.srcAttr._1 / ctx.srcAttr._2),
         _ + _)
       g = g.outerJoinVertices(msgs)((_, attr, s) =>
         ((if (attr._3) 150000L else 0L) +

@@ -113,22 +113,28 @@ object Iterate {
   }
 
   /** Run two INDEPENDENT eager computations (e.g. two BFS passes,
-    * each a chain of per-level barrier jobs) on separate driver
-    * threads, so one pass's small jobs back-fill the executor slots
-    * the other's stragglers leave idle (guide §2.6 — Spark schedules
-    * concurrent jobs FIFO, which is exactly the back-fill behavior).
-    * Results are deterministic: thread scheduling affects only WHEN
-    * jobs run, never what they compute. Both sides are awaited before
-    * a failure is rethrown (`a`'s first), so no job outlives the call. */
+    * each a chain of per-level barrier jobs) on two driver threads, so
+    * one pass's small jobs back-fill the executor slots the other's
+    * stragglers leave idle (guide §2.6 — Spark schedules concurrent
+    * jobs FIFO, which is exactly the back-fill behavior). Results are
+    * deterministic: thread scheduling affects only WHEN jobs run, never
+    * what they compute. `b` runs on the calling thread and `a` on a
+    * thread started here, which inherits a copy of the caller's Spark
+    * local properties (job group, description, tags) and active
+    * session — SparkContext keeps them in cloning InheritableThreadLocals,
+    * the copy `SQLExecution.withThreadLocalCaptured` makes for broadcast
+    * futures — so a caller's `cancelJobGroup` reaches both sides. Both
+    * sides are awaited before a failure is rethrown (`a`'s first), so no
+    * job outlives the call. */
   def concurrently[A, B](a: => A, b: => B): (A, B) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fa = Future(a)
-    val fb = Future(b)
-    Await.ready(fa, Duration.Inf)
-    Await.ready(fb, Duration.Inf)
-    (fa.value.get.get, fb.value.get.get)
+    import scala.util.{Failure, Success, Try}
+    def attempt[T](body: => T): Try[T] =
+      try Success(body) catch { case e: Throwable => Failure(e) }
+    var ra: Try[A] = null
+    val side = new Thread(() => ra = attempt(a), "graft-concurrently")
+    side.start()
+    val rb = try attempt(b) finally side.join()
+    (ra.get, rb.get)
   }
 
   /** Decimal digit count of the optimized plan's `sizeInBytes` stat,

@@ -2076,9 +2076,9 @@ object CurationQueries {
   // q311 — TextRank keywords (Mihalcea & Tarau 2004): PageRank over
   // the word co-occurrence graph (consecutive non-stopword tokens,
   // symmetrized), run on the SAME integer-ppm PageRank engine as q69
-  // (Centrality.personalizedPageRankInteger with every node seeded —
-  // 150000/850000 damping, unrolled DuckDB CTEs emitted from one
-  // module so the engines cannot drift).
+  // (the GraphX Centrality.personalizedPageRankInteger with every node
+  // seeded — 150000/850000 damping; its SQL mirror emits the unrolled
+  // DuckDB CTEs, so engine and oracle cannot drift).
   // Word ids come from a deterministic vocabulary rank (vocabulary-
   // sized window). Output: top-20 words by rank.
   // -------------------------------------------------------------------
@@ -2120,7 +2120,7 @@ object CurationQueries {
       .join(broadcast(vocab.select(col("w").as("w2"),
         col("wid").as("dst"))), Seq("w2"))
       .select(col("src"), col("dst"))
-    graft.graph.Centrality.personalizedPageRankInteger(edges, lit(true),
+    graft.graph.Centrality.personalizedPageRankInteger(edges, _ => true,
         TrIters)
       .join(broadcast(vocab.select(col("wid").as("id"), col("w"))),
         Seq("id"))

@@ -71,7 +71,8 @@ object GraphQueries {
       .select(expr("p_partkey div 2").as("src"),
         col("p_partkey").as("dst"))
     // doubling engine: ⌈log2 12⌉ = 4 materializations instead of 12
-    // (equality with the linear Traversals.closure is spec-tested)
+    // (spec-tested against Traversals.paths from every node, which on
+    // a forest yields exactly the closure)
     Traversals.closureTreeDoubling(parentChild, 12)
       .groupBy(col("depth"))
       .agg(count(lit(1)).as("n_pairs"))
@@ -156,7 +157,7 @@ object GraphQueries {
 
   def q69_pagerank(spark: SparkSession, dir: String): DataFrame =
     graft.graph.Centrality
-      .pageRankIntegerGraphX(spark, prEdges(spark, dir), PrIters)
+      .personalizedPageRankInteger(prEdges(spark, dir), _ => true, PrIters)
       .orderBy(col("rank_ppm").desc, col("id"))
       .limit(50)
 
@@ -506,14 +507,14 @@ object GraphQueries {
   // q140 — personalized PageRank: teleport mass restricted to a seed
   // set (every 97th node, same derived-seed flavor as q17) — the
   // "related to THIS function" ranking, vs q69's global importance.
-  // Seeds are a column predicate evaluated distributedly; nothing is
-  // collected. Same one-join-per-iteration shape as q69.
+  // Seeds are an id predicate evaluated in the vertex initialiser;
+  // nothing is collected. Same engine and edges as q69.
   // ---------------------------------------------------------------------
   def q140_personalized_pagerank(spark: SparkSession, dir: String)
       : DataFrame =
     graft.graph.Centrality
-      .personalizedPageRankInteger(prEdges(spark, dir),
-        col("id") % 97 === 0, PrIters)
+      .personalizedPageRankInteger(prEdges(spark, dir), _ % 97 == 0,
+        PrIters)
       .filter(col("rank_ppm") > 0)
       .orderBy(col("rank_ppm").desc, col("id"))
       .limit(50)

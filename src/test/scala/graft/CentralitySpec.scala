@@ -1,55 +1,61 @@
 package graft
 
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 
 import graft.graph.Centrality
 
 class CentralitySpec extends SparkSpec {
   import spark.implicits._
 
-  /** Naive single-threaded mirror of the integer PageRank recurrence. */
-  private def naive(edges: Seq[(Long, Long)], iters: Int)
-      : Map[Long, Long] = {
+  /** Naive single-threaded mirror of the integer personalized PageRank
+    * recurrence: the independent reference for the GraphX engine. */
+  private def naive(edges: Seq[(Long, Long)], seed: Long => Boolean,
+      iters: Int): Map[Long, Long] = {
     val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
     val outdeg = edges.groupBy(_._1).view.mapValues(_.size.toLong).toMap
     val inEdges = edges.groupBy(_._2)
-    var rank = nodes.map(_ -> 1000000L).toMap
+    val teleport = nodes.map(v => v -> (if (seed(v)) 1L else 0L)).toMap
+    var rank = nodes.map(v => v -> teleport(v) * 1000000L).toMap
     for (_ <- 1 to iters) {
       rank = nodes.map { v =>
         val s = inEdges.getOrElse(v, Seq.empty)
           .map { case (u, _) => rank(u) / outdeg(u) }.sum
-        v -> (150000L + (850000L * s) / 1000000L)
+        v -> (teleport(v) * 150000L + (850000L * s) / 1000000L)
       }.toMap
     }
     rank
   }
+
+  private def ppr(edges: Seq[(Long, Long)], seed: Long => Boolean,
+      iters: Int): Map[Long, Long] =
+    Centrality
+      .personalizedPageRankInteger(edges.toDF("src", "dst"), seed, iters)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("all-seeded personalized PageRank matches the naive recurrence " +
       "exactly") {
     // a cycle, a chain feeding it, a dangling sink, parallel edges
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L), (5L, 4L),
       (1L, 6L), (4L, 1L)) // (4,1) duplicated: multigraph contribution
-    val got = Centrality
-      .personalizedPageRankInteger(edges.toDF("src", "dst"), lit(true), 5)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === naive(edges, 5))
+    val got = ppr(edges, _ => true, 5)
+    assert(got === naive(edges, _ => true, 5))
     // sink node 6 exists with base rank flowing in from 1
     assert(got(6L) > 150000L)
     // cycle members outrank the chain tail
     assert(got(1L) > got(5L))
   }
 
-  test("GraphX engine equals the DataFrame engine exactly") {
+  test("personalized PageRank over a seed subset matches the naive " +
+      "recurrence exactly") {
+    // cycle + feeder chain + dangling sink + parallel edge + island
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L), (5L, 4L),
-      (1L, 6L), (4L, 1L)) ++ (1L to 200L).map(i => (i, i * i % 97))
-        .filter { case (a, b) => a != b }
-    val df = Centrality
-      .personalizedPageRankInteger(edges.toDF("src", "dst"), lit(true), 6)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val gx = Centrality.pageRankIntegerGraphX(spark,
-        edges.toDF("src", "dst"), 6)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(gx === df)
+      (1L, 6L), (4L, 1L), (7L, 8L))
+    val seed = (id: Long) => id % 3 == 1 // seeds 1, 4 and 7
+    val got = ppr(edges, seed, 6)
+    assert(got === naive(edges, seed, 6))
+    assert(got.keySet === (1L to 8L).toSet)
+    // the island's seed feeds its unseeded sink
+    assert(got(7L) === 150000L && got(8L) > 0L)
   }
 
   test("labelPropagation separates two cliques across a bridge") {
@@ -124,14 +130,11 @@ class CentralitySpec extends SparkSpec {
       "partitionings") {
     val edges = (1L to 200L).map(i => (i, i * i % 97))
       .filter { case (a, b) => a != b }
-    val df1 = edges.toDF("src", "dst").repartition(1)
-    val df7 = edges.toDF("src", "dst").repartition(7)
-    val r1 = Centrality.personalizedPageRankInteger(df1, lit(true), 4)
+    def run(parts: Int) = Centrality
+      .personalizedPageRankInteger(
+        edges.toDF("src", "dst").repartition(parts), _ => true, 4)
       .collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val r7 = Centrality.personalizedPageRankInteger(df7, lit(true), 4)
-      .collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(r1 === r7) // integer arithmetic: no partition-order drift
+    assert(run(1) === run(7)) // integer arithmetic: no partition-order drift
   }
 }

@@ -83,6 +83,24 @@ class IngestSpec extends SparkSpec {
       gs(0).getAs[String]("description").length >= 100)
   }
 
+  test("mergeFeatures is independent of partitioning") {
+    val many = (1 to 100).map(i => ("F", s"desc$i" * (i % 7),
+        if (i % 3 == 0) "completed" else "planned", Seq(s"t${i % 5}")))
+      .toDF("featureName", "description", "status", "tags")
+      .repartition(8)
+    val merged = DocumentPipeline.mergeFeatures(many).collect()
+    assert(merged.length === 1)
+    assert(merged(0).getAs[String]("status") === "completed")
+    // array_distinct(flatten(collect_list)) has no order: compare a set
+    assert(merged(0).getAs[Seq[String]]("tags").toSet ===
+      (0 until 5).map(i => s"t$i").toSet)
+    // longest description whatever the partitioning; length ties are
+    // broken lexicographically (greater wins)
+    val expected = (1 to 100).map(i => s"desc$i" * (i % 7))
+      .max(Ordering.by((s: String) => (s.length, s)))
+    assert(merged(0).getAs[String]("description") === expected)
+  }
+
   test("full document ingest through the store: nodes + DESCRIBES + MENTIONS") {
     val store = FixtureGraph.store(spark) // has Symbols for MENTIONS
     DocumentPipeline.ingest(store, docsDf)

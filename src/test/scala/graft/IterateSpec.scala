@@ -187,6 +187,16 @@ class IterateSpec extends SparkSpec {
     assert(b === 42)
   }
 
+  test("concurrently runs both sides' jobs under the caller's job group") {
+    def job(): Long = spark.sparkContext.parallelize(1 to 8, 2).count()
+    // a prior call outside any group, so that no thread left over from
+    // it can carry the counted group into the call below by accident
+    Iterate.concurrently({ Thread.sleep(50); job() }, job())
+    val ((x, y), jobs) = jobsOf(Iterate.concurrently(job(), job()))
+    assert((x, y) === ((8L, 8L)))
+    assert(jobs === 2, "a side's job ran outside the caller's job group")
+  }
+
   test("concurrently rethrows a side's failure after the sibling ends") {
     val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
     val boom = new IllegalStateException("boom")

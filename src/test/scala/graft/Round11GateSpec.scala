@@ -79,15 +79,6 @@ class Round11GateSpec extends SparkSpec {
       Traversals.paths(e, seeds, 12))
   }
 
-  test("Centrality.personalizedPageRankInteger: stats flat") {
-    val e = pathEdges(24)
-    // multiples of the documented every-8 in-loop barrier cadence, so
-    // both runs end a constant distance from their last barrier
-    gate("ppr",
-      Centrality.personalizedPageRankInteger(e, col("id") === 1L, 8),
-      Centrality.personalizedPageRankInteger(e, col("id") === 1L, 16))
-  }
-
   test("Centrality.hitsInteger: stats flat in iteration count") {
     val e = pathEdges(24)
     gate("hits", Centrality.hitsInteger(e, 3),
