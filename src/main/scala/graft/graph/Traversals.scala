@@ -17,46 +17,14 @@ import graft.ops.Iterate
   *     (`query.go:121-163`): [[paths]] seeded with the usages, over
   *     reversed edges.
   *
-  * Two engines:
-  *   - DataFrame iterative BFS (default): frontier ⋈ edges per superstep,
-  *     `localCheckpoint` to truncate lineage, anti-join against visited for
-  *     DISTINCT-node semantics. At cluster scale each superstep is one
-  *     shuffle on the join key; the frontier is usually small → Spark
-  *     auto-broadcasts it (AQE), so the big edge table never re-shuffles.
-  *   - GraphX Pregel (for dense fan-out): vertex-parallel, no per-hop
-  *     driver sync beyond the superstep barrier.
+  * Reachability runs on GraphX Pregel ([[reachable]]); path
+  * enumeration has a DataFrame engine ([[paths]]: frontier ⋈ edges per
+  * superstep, `localCheckpoint` to truncate lineage) and a GraphX one
+  * ([[pathsGraphX]]).
   *
   * Depth caps mirror the reference's blow-up guards (≤10 / ≤15).
   */
 object Traversals {
-
-  /** Minimum-depth reachability from `seeds` following `edges` (cols
-    * src, dst) forward, up to `maxHops`. Returns (id, depth) with depth =
-    * min #hops ≥ 1. A seed that a cycle leads back to IS returned (at its
-    * discovery depth), matching Cypher `CALLS*1..10` semantics where the
-    * start node appears if reachable from itself.
-    */
-  def reachable(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    def expand(frontier: DataFrame): DataFrame =
-      frontier.join(e, frontier("id") === e("src"))
-        .select(e("dst").as("id")).distinct()
-    try {
-      // found = nodes discovered via ≥1 edge; seeds are NOT pre-seeded
-      // here so a cycle can rediscover them. The answer is a LAZY union
-      // of the per-level checkpointed frontiers: one materialization
-      // job per superstep, the union is never re-copied.
-      Iterate.fixpoint("reachable",
-          expand(seeds.select(col("id")).distinct())
-            .withColumn("depth", lit(1)), maxHops) { levels =>
-        expand(levels.last._1)
-          .join(levels.map(_._1.select("id")).reduce(_ unionByName _),
-            Seq("id"), "left_anti")
-          .withColumn("depth", lit(levels.size + 1))
-      }.map(_._1).reduce(_ unionByName _)
-    } finally e.unpersist()
-  }
 
   /** Tree closure by DOUBLING: valid only for forests (at most one path
     * per pair, so composing two closures never duplicates a pair and
@@ -104,7 +72,8 @@ object Traversals {
       .filter(col("src") =!= col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // lazy union of checkpointed levels (see [[reachable]])
+      // lazy union of the per-level checkpointed frontiers: one
+      // materialization job per superstep, the union is never re-copied
       Iterate.fixpoint("paths",
           seeds.select(col("id").as("start"))
             .join(e, col("start") === e("src"))
@@ -185,18 +154,22 @@ object Traversals {
       .toDF("start", "end", "depth", "path")
   }
 
-  /** GraphX Pregel min-depth reachability — the vertex-parallel engine for
-    * dense call graphs where the DataFrame frontier grows large. Returns
-    * (id, depth) like [[reachable]].
+  /** Minimum-depth reachability from `seeds` following `edges` (cols
+    * src, dst) forward, up to `maxHops`, on GraphX Pregel: one
+    * vertex-parallel superstep per hop, no per-hop driver-scheduled job.
+    * Returns (id, depth) with depth = min #hops ≥ 1. A seed that a cycle
+    * leads back to IS returned (at its discovery depth), matching Cypher
+    * `CALLS*1..10` semantics where the start node appears if reachable
+    * from itself.
     *
     * `seeds` is a single-column frame of vertex ids; membership arrives
     * at each vertex via `outerJoinVertices` (RDD join, nothing collected
     * to the driver), so seed sets are unbounded — e.g. "impact of every
     * function in this service" at 100 TB.
     */
-  def reachableGraphX(spark: SparkSession, edges: DataFrame,
-      seeds: DataFrame, maxHops: Int): DataFrame = {
-    import spark.implicits._
+  def reachable(edges: DataFrame, seeds: DataFrame,
+      maxHops: Int): DataFrame = {
+    import edges.sparkSession.implicits._
     val edgeRdd = edges.select(col("src"), col("dst")).as[(Long, Long)]
       .rdd.map { case (s, d) => Edge(s, d, ()) }
     val graph = Graph.fromEdges(edgeRdd, ())
@@ -205,7 +178,7 @@ object Traversals {
     val Inf = Int.MaxValue
     // attr = (propagation depth, reported discovery depth): a seed
     // propagates at 0 but its own discovery via a cycle is tracked in the
-    // report slot, matching [[reachable]].
+    // report slot.
     val init = graph.outerJoinVertices(seedRdd)((_, _, s) =>
       if (s.isDefined) (0, Inf) else (Inf, Inf))
     val result = Pregel(init, Inf, maxHops, EdgeDirection.Out)(

@@ -3,7 +3,7 @@ package graft.ingest
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.Model.{Labels, RelTypes, ScipSymbol}
+import graft.model.Model.{Labels, RelTypes}
 import graft.store.GraphStore
 
 /** SCIP-occurrence ingest frontend — the Spark-native re-expression of the
@@ -46,14 +46,6 @@ object ScipIngest {
       case _ => "unknown"
     }
   }
-
-  /** Display name from the descriptor's last segment, stripped of SCIP
-    * suffix punctuation (`scip_parser.go:223-246`). */
-  def displayNameOf(symbol: String): String =
-    ScipSymbol.parse(symbol).map { s =>
-      s.descriptor.split('/').lastOption.getOrElse(s.descriptor)
-        .stripSuffix("().").stripSuffix("#").stripSuffix(".")
-    }.getOrElse(symbol)
 
   import org.apache.spark.sql.Column
 

@@ -156,15 +156,5 @@ object Model {
         Some(ScipSymbol(parts(0), parts(1), parts(2), parts(3), parts(4)))
       else None
     }
-
-    /** Symbol-kind inference from descriptor shape — reference
-      * `scip_parser.go:208-221`: `#`→class, `().`→method-ish, trailing `.`
-      * →term, `/`→namespace. */
-    def inferKind(descriptor: String): String =
-      if (descriptor.endsWith("#")) "class"
-      else if (descriptor.endsWith("().")) "method"
-      else if (descriptor.endsWith(".")) "term"
-      else if (descriptor.endsWith("/")) "namespace"
-      else "unknown"
   }
 }

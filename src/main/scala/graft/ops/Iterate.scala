@@ -136,11 +136,4 @@ object Iterate {
     val rb = try attempt(b) finally side.join()
     (ra.get, rb.get)
   }
-
-  /** Decimal digit count of the optimized plan's `sizeInBytes` stat,
-    * so specs can assert the statistic stays FLAT across rounds (a
-    * loop whose digit count grows round-over-round has the
-    * multiplication trap). */
-  def statDigits(df: DataFrame): Int =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes.toString.length
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-mitigation utilities for hot join keys at cluster scale.
@@ -28,9 +28,4 @@ object Skew {
     val replicated = small.crossJoin(broadcast(buckets))
     salted.join(replicated, Seq(key, "_salt")).drop("_salt")
   }
-
-  /** Top-n most frequent values of `key` — the skew diagnostic used to
-    * pick salting candidates. */
-  def hotKeys(df: DataFrame, key: String, n: Int = 10): DataFrame =
-    df.groupBy(col(key)).count().orderBy(col("count").desc).limit(n)
 }

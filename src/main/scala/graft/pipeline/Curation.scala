@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   * Everything is a pure function of row content + id hashes, so the
   * whole build is reproducible: re-running over the same corpus yields
   * byte-identical train/val/test sets on any cluster shape. One
-  * corpus scan plus two key shuffles (fingerprint window, nothing
-  * else) — the funnel report reuses the same flagged projection.
+  * corpus scan plus the fingerprint-window shuffle.
   */
 object Curation {
 
@@ -24,63 +23,27 @@ object Curation {
 
   /** Returns the curated corpus: input columns plus `predicted` (lang),
     * `q_ppm`, and `split`, containing only rows that pass every filter
-    * and win their prefix-fingerprint dup group on quality. */
+    * and win their prefix-fingerprint dup group on quality (among
+    * filter survivors — losers of a dup group don't block its keeper). */
   def curate(docs: DataFrame, idCol: String, textCol: String,
       nCharsCol: String, cfg: Config = Config()): DataFrame = {
-    val flagged = flaggedView(docs, idCol, textCol, nCharsCol, cfg)
-    Sampling.splitAssign(
-      flagged.filter(col("_pass")).drop("_pass", "_fp"),
-      idCol, cfg.trainPct, cfg.valPct)
-  }
-
-  /** The funnel report over the same flagged projection (q59's shape):
-    * (stage, n_docs) with cumulative filters. */
-  def funnelReport(docs: DataFrame, idCol: String, textCol: String,
-      nCharsCol: String, cfg: Config = Config()): DataFrame = {
-    val f = flaggedView(docs, idCol, textCol, nCharsCol, cfg)
-    val one = f.agg(
-      count(lit(1)).as("c0"),
-      sum(when(col("_f1"), 1L).otherwise(0L)).as("c1"),
-      sum(when(col("_f1") && col("_f2"), 1L).otherwise(0L)).as("c2"),
-      sum(when(col("_f1") && col("_f2") && col("_f3"), 1L).otherwise(0L))
-        .as("c3"),
-      sum(when(col("_f1") && col("_f2") && col("_f3") && col("_f4"), 1L)
-        .otherwise(0L)).as("c4"),
-      sum(when(col("_pass"), 1L).otherwise(0L)).as("c5"))
-    one.select(explode(array(
-        struct(lit("00_total").as("stage"), col("c0").as("n_docs")),
-        struct(lit("10_nonempty").as("stage"), col("c1").as("n_docs")),
-        struct(lit("20_lang_known").as("stage"), col("c2").as("n_docs")),
-        struct(lit("30_quality").as("stage"), col("c3").as("n_docs")),
-        struct(lit("40_length").as("stage"), col("c4").as("n_docs")),
-        struct(lit("50_keeper").as("stage"), col("c5").as("n_docs"))))
-        .as("s"))
-      .select(col("s.stage").as("stage"), col("s.n_docs").as("n_docs"))
-  }
-
-  /** Shared projection: language, quality, the filter flags, the
-    * prefix fingerprint, and `_pass` (all filters AND best-quality
-    * keeper within the fingerprint group among filter survivors —
-    * losers of a dup group don't block the group's keeper). */
-  private def flaggedView(docs: DataFrame, idCol: String, textCol: String,
-      nCharsCol: String, cfg: Config): DataFrame = {
     val scored = TextAnalysis.langIdDf(docs, textCol)
       .withColumn("q_ppm",
         TextAnalysis.qualityScorePpm(textCol, nCharsCol))
-      .withColumn("_f1", trim(col(textCol)) =!= "")
-      .withColumn("_f2", col("predicted") =!= "und")
-      .withColumn("_f3", col("q_ppm") >= cfg.minQualityPpm)
-      .withColumn("_f4", col(nCharsCol) >= cfg.minChars)
       .withColumn("_fp", md5(concat_ws(" ",
         slice(TextAnalysis.tokens(col(textCol)), 1, cfg.prefixTokens))))
-    val filtersOk = col("_f1") && col("_f2") && col("_f3") && col("_f4")
+    val filtersOk = trim(col(textCol)) =!= "" &&
+      col("predicted") =!= "und" &&
+      col("q_ppm") >= cfg.minQualityPpm && col(nCharsCol) >= cfg.minChars
     // rank only filter survivors inside each dup group: a filtered-out
     // doc must not shadow a valid keeper
     val w = Window.partitionBy(col("_fp"))
       .orderBy(when(filtersOk, 0).otherwise(1),
         col("q_ppm").desc, col(idCol))
-    scored.withColumn("_pass",
-      filtersOk && row_number().over(w) === 1)
+    Sampling.splitAssign(
+      scored.withColumn("_pass", filtersOk && row_number().over(w) === 1)
+        .filter(col("_pass")).drop("_pass", "_fp"),
+      idCol, cfg.trainPct, cfg.valPct)
   }
 
   /** Snapshot diff — the change-detection pass that drives incremental

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
@@ -119,48 +119,6 @@ object Multimodal {
       }
   }
 
-  /** Resize: per-partition batched payload transform preserving the
-    * media schema. BMP payloads get a REAL decode → nearest-neighbor
-    * pixel resize → re-encode ([[MediaCodecs.resizeBmp]]); PNG/JPEG/GIF
-    * get a REAL ImageIO decode → pixel resize → lossless PNG re-encode;
-    * everything else takes the STUB byte-downsample (deterministic and
-    * proportion-correct: n_bytes scales with the pixel ratio). The
-    * plumbing — schema in = schema out, partition-batched iteration,
-    * metadata rewrite — is the production shape any further codec
-    * drops into. */
-  def resizeStub(media: Dataset[MediaRow], targetW: Int,
-      targetH: Int): Dataset[MediaRow] = {
-    import media.sparkSession.implicits._
-    require(targetW > 0 && targetH > 0, "target dims must be positive")
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val real = if (MediaCodecs.isBmp(r.bytes))
-          MediaCodecs.decodeBmp(r.bytes).map(img =>
-            MediaCodecs.encodeBmp(
-              MediaCodecs.resizeBmp(img, targetW, targetH)))
-        else if (MediaCodecs.isImageIoDecodable(r.bytes))
-          MediaCodecs.decodeImage(r.bytes).map(img =>
-            MediaCodecs.encodePng(
-              MediaCodecs.resizeBmp(img, targetW, targetH)))
-        else None
-        real match {
-          case Some(out) =>
-            r.copy(bytes = out, width = targetW, height = targetH)
-          case None =>
-            val srcPixels = math.max(1L, r.width.toLong * r.height)
-            val outLen = math.max(1L,
-              r.bytes.length.toLong * targetW * targetH / srcPixels)
-              .min(r.bytes.length.toLong).toInt
-            val out =
-              if (r.bytes.isEmpty) r.bytes
-              else Array.tabulate[Byte](outLen)(i =>
-                r.bytes((i.toLong * r.bytes.length / outLen).toInt))
-            r.copy(bytes = out, width = targetW, height = targetH)
-        }
-      }
-    }
-  }
-
   case class FrameRow(media_id: Long, frame_index: Int, frame_bytes: Int,
       head_hex: String)
 
@@ -184,19 +142,5 @@ object Multimodal {
             chunk.take(headBytes).map("%02X".format(_)).mkString)
         }
       }
-  }
-
-  /** Synthesize a deterministic media table from any numeric id column —
-    * used by specs and demos in lieu of real binaries. */
-  def syntheticMedia(spark: SparkSession, n: Int): Dataset[MediaRow] = {
-    import spark.implicits._
-    spark.range(n).map { i =>
-      val bytes = Array.tabulate[Byte](64 + (i % 64).toInt)(j =>
-        ((i * 31 + j * 7) % 251).toByte)
-      val modality = (i % 3) match {
-        case 0 => "image"; case 1 => "audio"; case _ => "video"
-      }
-      MediaRow(i, modality, bytes, 32, 32, 16000)
-    }
   }
 }

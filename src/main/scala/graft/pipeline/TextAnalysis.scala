@@ -319,17 +319,6 @@ object TextAnalysis {
       .when(fr > 0, "fr")
       .otherwise("und")
 
-  /** Language-ID heuristic (n-gram/stopword profile, no model):
-    * CJK/Cyrillic by script, then Latin languages by distinctive-
-    * stopword hit counts. Single-expression form; prefer
-    * [[langIdDf]]-style materialized hits for bulk scoring. */
-  def langId(text: Column): Column = {
-    val Seq(en, es, de, fr) = langProfiles.map { case (_, ws) =>
-      stopwordHits(tokens(lower(text)), ws)
-    }
-    langIdFromHits(text, en, es, de, fr)
-  }
-
   /** DuckDB mirror of the per-language stopword hit counts (select-list
     * fragment producing `h_<code>` columns from a `toks` array column) —
     * kept NEXT to [[langProfiles]] so the two sides cannot drift; every

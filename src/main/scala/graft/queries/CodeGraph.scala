@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 import graft.model.Model.{Labels, RelTypes}
 import graft.graph.Traversals
@@ -323,50 +322,6 @@ class CodeGraph(nodes: DataFrame, edges: DataFrame) {
         col("def.startLine").as("startLine"))
       .orderBy(col("filePath"), col("startLine"))
       .limit(1)
-  }
-
-  /** A9 — complexity summary (`advanced.go` AnalyzeComplexity — a
-    * placeholder returning zeros in the reference; implemented for
-    * real): per-file function totals, avg/max complexity, and the
-    * high-complexity count (> threshold). */
-  def complexitySummary(threshold: Int = 10): DataFrame =
-    funcs.groupBy(col("filePath"))
-      .agg(count(lit(1)).as("totalFunctions"),
-        avg(coalesce(col("complexity"), lit(0))).as("avgComplexity"),
-        max(coalesce(col("complexity"), lit(0))).as("maxComplexity"),
-        count(when(col("complexity") > threshold, 1))
-          .as("highComplexityCount"))
-      .orderBy(col("filePath"))
-
-  /** Call graph (`advanced.go` BuildCallGraph — a placeholder returning
-    * empty in the reference): depth-capped CALLS neighborhood of a root
-    * function, callee-direction ("out") or caller-direction ("in").
-    * Returns the edge list with hop depth of the source node. */
-  def callGraph(funcName: String, direction: String = "out",
-      maxDepth: Int = 5): DataFrame = {
-    val root = funcs.filter(col("name") === funcName).select(col("id"))
-    val calls = e(RelTypes.Calls).select(col("src"), col("dst"))
-    val oriented =
-      if (direction == "out") calls
-      else calls.select(col("dst").as("src"), col("src").as("dst"))
-    val reach = Traversals.reachable(oriented, root, maxDepth)
-      .select(col("id"), col("depth"))
-    // min depth per node: reachable() rediscovers a root via a cycle at
-    // depth ≥ 1, which would duplicate the root's edges at two depths
-    val inScope = root.select(col("id")).withColumn("depth", lit(0))
-      .unionByName(reach)
-      .groupBy(col("id")).agg(min(col("depth")).as("depth"))
-    val scoped = oriented
-      .join(inScope.withColumnRenamed("id", "src"), Seq("src"))
-      .filter(col("depth") < maxDepth)
-    scoped
-      .join(nodes.select(col("id").as("src"), col("name").as("srcName")),
-        Seq("src"))
-      .join(nodes.select(col("id").as("dst"), col("name").as("dstName")),
-        Seq("dst"))
-      .select(col("srcName"), col("dstName"), col("depth").as("srcDepth"))
-      .distinct()
-      .orderBy(col("srcDepth"), col("srcName"), col("dstName"))
   }
 
   /** O4/S15 — source lookup (`query.go:425-493`): the first

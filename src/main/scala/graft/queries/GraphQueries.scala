@@ -32,19 +32,18 @@ object GraphQueries {
   // ---------------------------------------------------------------------
   // q17 — bounded min-depth reachability (J4 impact-analysis shape:
   // `CALLS*1..10` from a seed set, DISTINCT nodes with min depth).
-  // Runs on the GraphX Pregel engine: one superstep barrier instead of
-  // one driver-scheduled job per level (2× faster even locally); the
-  // DataFrame BFS (Traversals.reachable) is the equivalent relational
-  // engine, equality-tested in TraversalsSpec. The seed set here is
-  // DERIVED (every 97th part key), so it grows with the data — it goes
-  // in as a DataFrame (vertex-join init), never collected: the form
-  // that holds at 100 TB.
+  // Runs on Traversals.reachable, the GraphX Pregel engine that also
+  // serves CodeGraph.impactAnalysis: one superstep barrier instead of
+  // one driver-scheduled job per level. The seed set here is DERIVED
+  // (every 97th part key), so it grows with the data — it goes in as a
+  // DataFrame (vertex-join init), never collected: the form that holds
+  // at 100 TB.
   // ---------------------------------------------------------------------
   def q17_bfs_reach(spark: SparkSession, dir: String): DataFrame = {
     val seeds = Tables.part(spark, dir)
       .filter(col("p_partkey") % 97 === 0)
       .select(col("p_partkey").as("id"))
-    Traversals.reachableGraphX(spark, treeEdges(spark, dir), seeds, 10)
+    Traversals.reachable(treeEdges(spark, dir), seeds, 10)
       .orderBy(col("id"))
   }
 

@@ -2352,7 +2352,7 @@ object QualityQueries {
   // balance bucketed at width w ∈ {100, 1000, 10000}); sensitive =
   // market segment. Per level: group count, the worst (minimum)
   // per-group distinct-sensitive count, rows in groups with < 3
-  // distinct values, and the l≥3 verdict. Bucketing uses floor() on
+  // distinct values, and the l≥3 verdict. Bucket assignment uses floor() on
   // the double BEFORE any cast — DuckDB CAST rounds while Spark's
   // truncates, so the floor is the only portable boundary. Shape: one
   // two-level aggregation per ladder rung sharing a single scan.

@@ -44,36 +44,4 @@ object Sources {
   def binaryFiles(spark: SparkSession, glob: String): DataFrame =
     spark.read.format("binaryFile").load(glob)
       .select(col("path"), col("length"), col("content"))
-
-  /** Interchange formats the engine's tables round-trip through
-    * losslessly: columnar (parquet, orc), row-wise (json lines, csv).
-    * Write always partitions like the source DataFrame — at 100 TB the
-    * format choice changes bytes-on-disk and scan pushdown, never the
-    * plan shape above the scan. */
-  val interchangeFormats: Seq[String] = Seq("parquet", "orc", "json", "csv")
-
-  /** Write `df` at `path` in `format`. CSV gets a header plus explicit
-    * quote/escape so free text (embedded delimiters, quotes, newlines)
-    * survives; json/orc/parquet are self-describing. */
-  def writeInterchange(df: DataFrame, path: String, format: String): Unit = {
-    require(interchangeFormats.contains(format), s"unknown format $format")
-    val w = df.write.mode("overwrite").format(format)
-    (if (format == "csv")
-       w.option("header", "true").option("quote", "\"")
-         .option("escape", "\"")
-     else w).save(path)
-  }
-
-  /** Read an interchange table with an EXPLICIT schema — inference is a
-    * sampling pass (a second full scan at scale) and type-guesses
-    * drift between formats; the engine always knows its schema. */
-  def readInterchange(spark: SparkSession, path: String, format: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    require(interchangeFormats.contains(format), s"unknown format $format")
-    val r = spark.read.format(format).schema(schema)
-    (if (format == "csv")
-       r.option("header", "true").option("quote", "\"")
-         .option("escape", "\"").option("multiLine", "true")
-     else r).load(path)
-  }
 }

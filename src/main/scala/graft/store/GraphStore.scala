@@ -281,9 +281,6 @@ class GraphStore(spark: SparkSession, val basePath: String) {
   def nodesByLabel(label: String): DataFrame =
     nodes.filter(col("label") === label)
 
-  def edgesByType(relType: String): DataFrame =
-    edges.filter(col("relType") === relType)
-
   /** Upsert nodes. Incoming rows may carry any subset of the node schema
     * plus `label`; ids are derived from merge keys when absent. Keep-latest
     * per id (incoming wins over existing; within incoming, greatest
@@ -345,12 +342,6 @@ class GraphStore(spark: SparkSession, val basePath: String) {
       .sortBy(_.getModificationTime)
       .map(_.getPath.getName)
   }
-
-  /** Read a specific retained snapshot version (from [[versions]]). */
-  def nodesAt(version: String): DataFrame =
-    spark.read.parquet(s"$basePath/$version")
-      .select(Model.nodeSchema.fields.map(f =>
-        col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
 
   /** Delete all non-current snapshot versions. */
   def vacuum(): Unit = {

@@ -1,21 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
-
-import graft.store.GraphStore
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Structured Streaming layer — the incremental pipeline the reference
   * designed but never implemented (`docs/rfc/001:76-80`,
-  * `research.md:280-323`): continuous node/edge upserts plus streaming
-  * event analytics.
+  * `research.md:280-323`): streaming event analytics.
   *
-  * Batch/stream symmetry: the same MERGE semantics as GraphStore, applied
-  * per micro-batch via foreachBatch; windowed aggregations carry
-  * watermarks so state is bounded on an unbounded stream (the property
-  * that matters at cluster scale — state store size is O(open windows),
-  * not O(stream length)).
+  * Batch/stream symmetry: every operator runs the same plan on a batch
+  * or a streaming DataFrame; windowed aggregations carry watermarks so
+  * state is bounded on an unbounded stream (the property that matters
+  * at cluster scale — state store size is O(open windows), not
+  * O(stream length)).
   */
 object Incremental {
 
@@ -119,56 +116,9 @@ object Incremental {
         col("right_id"), col("right_ts"))
   }
 
-  /** Continuous MERGE upsert of node rows into the graph store — one
-    * idempotent MERGE write per micro-batch (exactly-once via
-    * checkpointed offsets + deterministic ids). */
-  def upsertNodes(stream: DataFrame, store: GraphStore,
-      checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) store.mergeNodes(GraphStore.ensureNodeIds(batch))
-      }
-      .start()
-
   case class UserEvent(user_id: Long, event_id: Long, value: Double)
   case class UserRunning(user_id: Long, n_events: Long, total: Double,
       max_event_id: Long)
-
-  case class SessionOut(user_id: Long, n_events: Long, total: Double,
-      closed: Boolean)
-
-  /** Custom keyed state with multi-row emission: per-user event
-    * accumulation that EMITS a closed-session row once a user's running
-    * total crosses `emitAt`, then resets that user's state — the
-    * flatMapGroupsWithState shape (0..n output rows per group per
-    * trigger) that mapGroupsWithState's exactly-one-row contract cannot
-    * express. State is one small struct per active user. */
-  def thresholdSessions(events: Dataset[UserEvent], emitAt: Double)
-      : Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionOut, SessionOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, rows, state: GroupState[SessionOut]) =>
-          var cur = state.getOption.getOrElse(SessionOut(uid, 0L, 0.0,
-            closed = false))
-          val out = scala.collection.mutable.ArrayBuffer.empty[SessionOut]
-          // within-batch iteration order is arbitrary — fold in
-          // event_id order so session boundaries are deterministic
-          rows.toSeq.sortBy(_.event_id).foreach { e =>
-            cur = SessionOut(uid, cur.n_events + 1, cur.total + e.value,
-              closed = false)
-            if (cur.total >= emitAt) {
-              out += cur.copy(closed = true)
-              cur = SessionOut(uid, 0L, 0.0, closed = false)
-            }
-          }
-          state.update(cur)
-          out.iterator
-      }
-  }
 
   /** Custom keyed state: running per-user totals via mapGroupsWithState —
     * the escape hatch for stateful logic windows can't express

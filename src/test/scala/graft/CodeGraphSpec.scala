@@ -101,42 +101,6 @@ class CodeGraphSpec extends SparkSpec {
     assert(rows(0).getAs[String]("filePath") === "pkg/a.go")
   }
 
-  test("complexitySummary aggregates per file") {
-    val rows = cg.complexitySummary().collect()
-      .map(r => r.getAs[String]("filePath") ->
-        r.getAs[Long]("totalFunctions")).toMap
-    assert(rows("pkg/a.go") === 2L) // Main, Helper
-    assert(rows.values.sum >= 4L)
-  }
-
-  test("callGraph walks the CALLS chain with depths, both directions") {
-    val out = cg.callGraph("Main", "out", 10).collect()
-      .map(r => (r.getAs[String]("srcName"), r.getAs[String]("dstName"),
-        r.getAs[Int]("srcDepth")))
-    assert(out.contains(("Main", "Helper", 0)))
-    assert(out.contains(("Helper", "Deep", 1)))
-    assert(out.contains(("Deep", "Handler", 2)))
-    val in = cg.callGraph("Handler", "in", 10).collect()
-      .map(r => (r.getAs[String]("srcName"), r.getAs[String]("dstName")))
-    assert(in.contains(("Handler", "Deep")))
-    assert(in.contains(("Deep", "Helper")))
-  }
-
-  test("callGraph on a recursive cycle reports one edge row at min depth") {
-    import spark.implicits._
-    val ns = Seq((1L, Labels.Function, "Main"), (2L, Labels.Function, "Helper"))
-      .toDF("id", "label", "name")
-    val es = Seq((1L, 2L, "CALLS"), (2L, 1L, "CALLS"))
-      .toDF("src", "dst", "relType")
-    val out = new CodeGraph(ns, es).callGraph("Main", "out", 5).collect()
-      .map(r => (r.getAs[String]("srcName"), r.getAs[String]("dstName"),
-        r.getAs[Int]("srcDepth")))
-    // Main's out-edge appears once at depth 0, not again at its
-    // cycle-rediscovery depth
-    assert(out.count(e => e._1 == "Main" && e._2 == "Helper") === 1)
-    assert(out.toSet === Set(("Main", "Helper", 0), ("Helper", "Main", 1)))
-  }
-
   test("source + extractSpan byte-slice oracle") {
     val loc = cg.source("Main").collect()
     assert(loc.length === 1)
@@ -203,8 +167,9 @@ class CodeGraphSpec extends SparkSpec {
       assert(refsOf(cg, sym) === refsWalk(store, sym), sym)
   }
 
-  test("findReferences equals a plain CONTAINS* ancestor walk: SCIP + Go " +
-      "frontend store") {
+  /** `body` over a store built by ScipIngest then GoFrontend from two
+    * Go files: Main calls Helper twice, Use calls Helper and Main. */
+  private def withScipGoStore(body: GraphStore => Unit): Unit = {
     import spark.implicits._
     val a = "package pkg\n\nfunc Main() {\n\tHelper()\n\tHelper()\n}\n"
     val b = "package pkg\n\nfunc Helper() {\n}\n\nfunc Use() {\n" +
@@ -227,13 +192,99 @@ class CodeGraphSpec extends SparkSpec {
         Map("pkg/a.go" -> a, "pkg/b.go" -> b))
       GoFrontend.ingest(st,
         Seq("pkg/a.go" -> a, "pkg/b.go" -> b).toDF("path", "content"), "svc")
+      body(st)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
+
+  test("findReferences equals a plain CONTAINS* ancestor walk: SCIP + Go " +
+      "frontend store") {
+    withScipGoStore { st =>
       val g = CodeGraph(st)
       val syms = symbolsOf(st)
       assert(syms.nonEmpty)
       for (sym <- syms) assert(refsOf(g, sym) === refsWalk(st, sym), sym)
       assert(refsOf(g, "scip-go go svc v1 pkg/Helper().").map(_._3) ===
         Seq("pkg/a.go", "pkg/a.go", "pkg/b.go"))
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+    }
+  }
+
+  // ---------------------------------------------------- impact analysis
+  private type Impact = (Long, String, String, Int, Option[String])
+
+  private def impactOf(g: CodeGraph, root: Long): Seq[Impact] =
+    g.impactAnalysis(root).collect().toSeq.map(r =>
+      (r.getAs[Long]("affectedId"), r.getAs[String]("name"),
+        r.getAs[String]("label"), r.getAs[Int]("depth"),
+        Option(r.getAs[String]("routePath"))))
+
+  /** Plain-Scala J4 over the collected graph: every node within
+    * `maxDepth` CALLS hops of `root` ([[TraversalsSpec.minDepthBfs]]),
+    * once per EXPOSES_API edge it has (with the route's path when the
+    * target is an APIRoute) or once with no route. */
+  private def impactWalk(st: GraphStore, root: Long,
+      maxDepth: Int = 10): Seq[Impact] = {
+    val nodes = st.nodes.collect().map(r => r.getAs[Long]("id") -> r).toMap
+    val edges = st.edges.collect()
+      .map(r => (r.getAs[Long]("src"), r.getAs[Long]("dst"),
+        r.getAs[String]("relType")))
+    def ofType(t: String) = edges.toSeq.collect {
+      case (s, d, `t`) => (s, d) }
+    val exposes = ofType(RelTypes.ExposesApi).groupMap(_._1)(_._2)
+    val routePath = (id: Long) => nodes.get(id)
+      .filter(_.getAs[String]("label") == Labels.APIRoute)
+      .map(_.getAs[String]("path"))
+    TraversalsSpec.minDepthBfs(ofType(RelTypes.Calls), Set(root), maxDepth)
+      .toSeq.filter(x => nodes.contains(x._1)).flatMap { case (id, d) =>
+        val n = nodes(id)
+        exposes.get(id).fold(Seq(Option.empty[String]))(_.map(routePath))
+          .map(p => (id, n.getAs[String]("name"), n.getAs[String]("label"),
+            d, p))
+      }.distinct
+  }
+
+  /** impactAnalysis of every Function/Method in `st` equals
+    * [[impactWalk]] (as row lists up to the order of rows that tie on
+    * the engine's sort key), and at least one answer is non-empty. */
+  private def assertImpactWalk(g: CodeGraph, st: GraphStore): Unit = {
+    val roots = st.nodes
+      .filter(col("label").isin(Labels.Function, Labels.Method))
+      .select("id").collect().map(_.getLong(0)).toSeq
+    val answers = roots.map(r => r -> impactOf(g, r))
+    for ((r, got) <- answers)
+      assert(got.sortBy(_.toString) === impactWalk(st, r).sortBy(_.toString),
+        s"root=$r")
+    assert(answers.exists(_._2.nonEmpty))
+  }
+
+  test("impactAnalysis equals a plain CALLS* walk plus exposed routes: " +
+      "fixture") {
+    assertImpactWalk(cg, store)
+  }
+
+  test("impactAnalysis equals a plain CALLS* walk plus exposed routes: " +
+      "SCIP + Go store") {
+    withScipGoStore(st => assertImpactWalk(CodeGraph(st), st))
+  }
+
+  test("impactAnalysis on a recursive cycle returns the root once, at " +
+      "depth 2") {
+    import spark.implicits._
+    val ns = Seq((1L, Labels.Function, "Main", Option.empty[String]),
+        (2L, Labels.Function, "Helper", None))
+      .toDF("id", "label", "name", "path")
+    val es = Seq((1L, 2L, RelTypes.Calls), (2L, 1L, RelTypes.Calls))
+      .toDF("src", "dst", "relType")
+    val got = impactOf(new CodeGraph(ns, es), 1L).map(r => (r._2, r._4))
+    assert(got === Seq(("Helper", 1), ("Main", 2)))
+  }
+
+  test("impactAnalysis over a graph with no CALLS edges answers empty") {
+    import spark.implicits._
+    val ns = Seq((1L, Labels.File, "a.go", Option("a.go")),
+        (2L, Labels.Function, "Main", None))
+      .toDF("id", "label", "name", "path")
+    val es = Seq((1L, 2L, RelTypes.Contains)).toDF("src", "dst", "relType")
+    assert(impactOf(new CodeGraph(ns, es), 2L).isEmpty)
   }
 
   test("findReferences with no usages answers empty and leaves no job " +

@@ -50,7 +50,7 @@ class CrossContextSpec extends SparkSpec {
     assert(labels.contains(Labels.Symbol)) // symbol matches too
 
     // MENTIONS traceability: the guide doc points at the Connect symbol
-    val mentions = store.edgesByType("MENTIONS").count()
+    val mentions = store.edges.filter($"relType" === "MENTIONS").count()
     assert(mentions >= 1L)
     val stats = cg.documentStats().collect()(0)
     assert(stats.getAs[Long]("nDocuments") === 1L)

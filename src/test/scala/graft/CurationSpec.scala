@@ -204,14 +204,6 @@ class CurationSpec extends SparkSpec {
     assert(ids === Set(2L, 3L)) // keeper 2 beats 1 on quality
     assert(rows.forall(r =>
       Set("train", "val", "test")(r.getAs[String]("split"))))
-    // funnel is cumulative and consistent with the final set
-    val funnel = graft.pipeline.Curation.funnelReport(docs, "doc_id",
-      "text", "n_chars").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(funnel("00_total") === 6L)
-    assert(funnel("10_nonempty") === 5L)
-    assert(funnel("50_keeper") === 2L)
-    assert(funnel("50_keeper") <= funnel("40_length"))
     // reproducible: second run identical
     val again = graft.pipeline.Curation.curate(docs, "doc_id", "text",
       "n_chars").collect().map(r =>

@@ -131,7 +131,9 @@ class ExtendedSpec extends SparkSpec {
     val df = Seq(
       "scip-go gomod example.com/mod v1.0 pkg/Client#",
       "scip-go gomod example.com/mod v1.0 pkg/Client#run().",
-      "scip-go gomod example.com/mod v1.0 pkg/ns/").toDF("symbol")
+      "scip-go gomod example.com/mod v1.0 pkg/ns/",
+      "scip-go gomod example.com/mod v1.0 pkg/x.",
+      "scip-go gomod example.com/mod v1.0 weird").toDF("symbol")
     val out = df.select(
         ScipIngest.parseSymbolCol(col("symbol")).as("p"))
       .select(col("p.scheme"), col("p.descriptor"),
@@ -140,9 +142,9 @@ class ExtendedSpec extends SparkSpec {
       .collect()
     assert(out.forall(_.getString(0) == "scip-go"))
     assert(out.map(_.getString(2)).toSeq ==
-      Seq("class", "method", "namespace"))
+      Seq("class", "method", "namespace", "term", "unknown"))
     assert(out.map(_.getString(3)).toSeq ==
-      Seq("Client", "Client#run", ""))
+      Seq("Client", "Client#run", "", "x", "weird"))
   }
 
   test("graft_* SQL functions match their DataFrame columns exactly") {

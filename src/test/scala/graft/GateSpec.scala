@@ -218,6 +218,47 @@ class GateSpec extends SparkSpec {
         s"or it doesn't ship): ${unreferenced.toSeq.sorted.mkString(", ")}")
   }
 
+  /** Public defs that only specs call, each kept for a stated reason.
+    * Any other such def is deleted with its spec, or its case moves
+    * onto the production form it duplicates. */
+  private val specOnlyOk: Map[String, String] = Map(
+    "dataLineage" -> "J5 mirror: README's coverage map names q19 for it",
+    "danglingEdges" -> "J10/J11 mirror: README's coverage map names q07/q08",
+    "logicalRddShape" -> ("Spark-upgrade canary for the barrier; it must " +
+      "live in the Spark package to reach LogicalRDD"),
+    "encodeBmp" -> ("round-trip fixture: MediaCodecsSpec encodes the BMPs " +
+      "that decodeBmp and decodeFeatures read"))
+
+  test("no public def in src/main is called only from specs") {
+    import scala.jdk.CollectionConverters._
+    def sources(dir: String): Seq[String] = {
+      val root = java.nio.file.Paths.get(dir)
+      assert(java.nio.file.Files.isDirectory(root),
+        s"$dir not found from ${System.getProperty("user.dir")}")
+      java.nio.file.Files.walk(root).iterator().asScala.toSeq
+        .filter(_.toString.endsWith(".scala"))
+        .map(p => java.nio.file.Files.readString(p))
+    }
+    val main = sources("src/main/scala") ++ sources("perfbench/src")
+    val defs = """(?m)^[ \t]*((?:[\w\[\]]+[ \t]+)*)def[ \t]+(\w+)""".r
+      .findAllMatchIn(main.mkString("\n")).toSeq
+      .filterNot(m => m.group(1).matches(
+        """.*\b(private|protected|override)\b.*"""))
+      .map(_.group(2))
+      .filterNot(n => n == "main" || n.matches("""q\d+_.*"""))
+    val uses = """\w+""".r.findAllIn(main.mkString("\n")).toSeq
+      .groupBy(identity).view.mapValues(_.size).toMap
+    val defCount = defs.groupBy(identity).view.mapValues(_.size).toMap
+    val specOnly = defCount.collect {
+      case (n, k) if uses(n) <= k => n }.toSet
+    val bad = specOnly -- specOnlyOk.keySet
+    assert(bad.isEmpty, "public defs named nowhere in src/main or " +
+      "perfbench/src but at their own definition (delete them with " +
+      s"their specs): ${bad.toSeq.sorted.mkString(", ")}")
+    val stale = specOnlyOk.keySet -- specOnly
+    assert(stale.isEmpty, s"allowlisted names now called from main: $stale")
+  }
+
   test("bench JSON line is totals-only and fits a hard byte budget " +
       "including a trailing sbt line, at any suite size") {
     // Round-7 defect #1: the per-query map overflowed the collector's

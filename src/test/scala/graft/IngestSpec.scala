@@ -193,9 +193,8 @@ class IngestSpec extends SparkSpec {
     assert(ScipIngest.decodeRange(Seq(1, 2, 3, 4)) === ((1, 2, 3, 4)))
     assert(ScipIngest.languageOf("x/y.go") === "go")
     assert(ScipIngest.languageOf("a.scala") === "scala")
-    assert(ScipIngest.displayNameOf(
-      "scip-go go svc v1 pkg/Main().") === "Main")
-    assert(ScipIngest.displayNameOf(
-      "scip-go go svc v1 pkg/Doer#") === "Doer")
+    val names = Seq("pkg/Main().", "pkg/Doer#", "pkg/x.", "pkg/sub/").toDF("d")
+      .select(ScipIngest.displayNameCol($"d")).collect().map(_.getString(0))
+    assert(names.toSeq === Seq("Main", "Doer", "x", ""))
   }
 }

@@ -44,8 +44,8 @@ class IterateSpec extends SparkSpec {
         withBarrier.join(fixed, Seq("id")).select(col("id"), col("grp")))
       bare = bare.join(fixed, Seq("id")).select(col("id"), col("grp"))
         .localCheckpoint(true)
-      barrierDigits += Iterate.statDigits(withBarrier)
-      bareDigits += Iterate.statDigits(bare)
+      barrierDigits += statDigits(withBarrier)
+      bareDigits += statDigits(bare)
     }
     val bd = barrierDigits.result()
     val rd = bareDigits.result()
@@ -95,7 +95,7 @@ class IterateSpec extends SparkSpec {
       assert(n === 64L - round)
       assert(next.queryExecution.optimizedPlan.stats.rowCount ===
         Some(BigInt(n)), s"round $round: rowCount is not the count")
-      digits += Iterate.statDigits(next)
+      digits += statDigits(next)
       state = next
     }
     val d = digits.result()

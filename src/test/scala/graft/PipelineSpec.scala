@@ -1,11 +1,24 @@
 package graft
 
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{Dedup, Frequency, Multimodal, Sampling, Selection, Similarity, TextAnalysis}
 
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
+
+  /** A deterministic media table of `n` rows: 32x32, 16 kHz metadata,
+    * 64–127 payload bytes, modality cycling image/audio/video. */
+  private def syntheticMedia(n: Int): Dataset[Multimodal.MediaRow] =
+    spark.range(n).map { i =>
+      val bytes = Array.tabulate[Byte](64 + (i % 64).toInt)(j =>
+        ((i * 31 + j * 7) % 251).toByte)
+      val modality = (i % 3) match {
+        case 0 => "image"; case 1 => "audio"; case _ => "video"
+      }
+      Multimodal.MediaRow(i, modality, bytes, 32, 32, 16000)
+    }
 
   private lazy val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog"),
@@ -76,9 +89,10 @@ class PipelineSpec extends SparkSpec {
       (4L, "你好 世界 这是 中文 文本"),
       (5L, "")
     ).toDF("id", "text")
-    val out = t.select($"id", TextAnalysis.tokenCount($"text").as("n"),
-      TextAnalysis.langId($"text").as("lang")).collect()
-      .map(r => r.getLong(0) -> (r.getInt(1), r.getString(2))).toMap
+    val out = TextAnalysis.langIdDf(t, "text")
+      .select($"id", TextAnalysis.tokenCount($"text").as("n"), $"predicted")
+      .collect().map(r => r.getLong(0) -> (r.getInt(1), r.getString(2)))
+      .toMap
     assert(out(1L) === ((12, "en")))
     assert(out(2L)._2 === "es")
     assert(out(3L)._2 === "de")
@@ -95,7 +109,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("multimodal: batched feature extraction + frame sampling shapes") {
-    val media = Multimodal.syntheticMedia(spark, 30)
+    val media = syntheticMedia(30)
     val feats = Multimodal.extractFeatures(media)
     assert(feats.count() === 30L)
     val f0 = feats.filter($"media_id" === 0L).collect()(0)
@@ -109,22 +123,6 @@ class PipelineSpec extends SparkSpec {
     assert(frames.count() > 0)
     assert(frames.columns.toSeq ===
       Seq("media_id", "frame_index", "frame_bytes", "frame_features"))
-  }
-
-  test("multimodal: resize stub scales payload with pixel ratio") {
-    val media = Multimodal.syntheticMedia(spark, 10) // 32x32 sources
-    val out = Multimodal.resizeStub(media, 16, 16).collect()
-      .sortBy(_.media_id)
-    val in = media.collect().sortBy(_.media_id)
-    assert(out.forall(r => r.width == 16 && r.height == 16))
-    // quarter of the pixels → quarter of the bytes (nearest-neighbor)
-    in.zip(out).foreach { case (a, b) =>
-      assert(b.bytes.length === math.max(1, a.bytes.length / 4))
-      assert(b.bytes.toSeq === b.bytes.toSeq) // deterministic content
-    }
-    val again = Multimodal.resizeStub(media, 16, 16).collect()
-      .sortBy(_.media_id)
-    assert(out.map(_.bytes.toSeq).toSeq === again.map(_.bytes.toSeq).toSeq)
   }
 
   test("semDedup drops the higher id of within-cluster near-dups only") {

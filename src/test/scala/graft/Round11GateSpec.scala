@@ -37,8 +37,8 @@ class Round11GateSpec extends SparkSpec {
     val s = short
     val l = long
     assert(s.limit(1).count() > 0, s"$name: short run returned no rows")
-    val ds = Iterate.statDigits(s)
-    val dl = Iterate.statDigits(l)
+    val ds = statDigits(s)
+    val dl = statDigits(l)
     assert(dl - ds <= MaxGrowthDigits,
       s"$name: plan statistic grew with round count ($ds -> $dl " +
         "digits) — an in-loop bare localCheckpoint is multiplying " +
@@ -58,13 +58,6 @@ class Round11GateSpec extends SparkSpec {
   private def pathNodes(n: Int): DataFrame =
     (1 to n).map(_.toLong).toDF("v")
       .withColumn("h", Sampling.hash60("gaten", col("v")))
-
-  test("Traversals.reachable: stats flat in hop count") {
-    val e = pathEdges(40)
-    val seeds = Seq(1L).toDF("id")
-    gate("reachable", Traversals.reachable(e, seeds, 4),
-      Traversals.reachable(e, seeds, 14))
-  }
 
   test("Traversals.closureTreeDoubling: stats flat in depth") {
     val e = pathEdges(40)

@@ -73,7 +73,7 @@ class Round11Spec extends SparkSpec {
     // infinite defaultSizeInBytes that forbids broadcasts)
     assert(rs.orderBy("id").collect().toSeq ===
       cp.orderBy("id").collect().toSeq)
-    val digits = Iterate.statDigits(rs)
+    val digits = statDigits(rs)
     assert(digits <= 8, s"resetStats statistic suspiciously large " +
       s"($digits digits) — measured-size lookup may have broken")
   }

@@ -38,12 +38,4 @@ class ScipSymbolSpec extends AnyFunSuite {
     assert(ScipSymbol.parse("a b c d").isEmpty)
     assert(ScipSymbol.parse("").isEmpty)
   }
-
-  test("kind inference from descriptor shape") {
-    assert(ScipSymbol.inferKind("pkg/Doer#") === "class")
-    assert(ScipSymbol.inferKind("pkg/Main().") === "method")
-    assert(ScipSymbol.inferKind("pkg/x.") === "term")
-    assert(ScipSymbol.inferKind("pkg/") === "namespace")
-    assert(ScipSymbol.inferKind("weird") === "unknown")
-  }
 }

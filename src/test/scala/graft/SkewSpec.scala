@@ -21,13 +21,6 @@ class SkewSpec extends SparkSpec {
     assert(plain === salted)
   }
 
-  test("hotKeys surfaces the skewed key first") {
-    val df = spark.range(1000)
-      .selectExpr("CASE WHEN id % 10 < 8 THEN 99 ELSE id END AS k")
-    val top = Skew.hotKeys(df, "k", 1).collect()(0)
-    assert(top.getLong(0) === 99L)
-  }
-
   test("completions: prefix lookup ranked, capped") {
     val cg = graft.queries.CodeGraph(FixtureGraph.store(spark))
     val rows = cg.completions("H").collect()

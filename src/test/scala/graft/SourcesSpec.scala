@@ -57,18 +57,4 @@ class SourcesSpec extends SparkSpec {
     val expected = docs.filter(col("lang") === "en").count()
     assert(back.count() === expected)
   }
-
-  test("interchange formats round-trip the documents table losslessly") {
-    val docs = spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-    val want = docs.orderBy("doc_id").collect().toSeq
-    for (f <- Seq("orc", "json", "csv")) {
-      val dir = Files.createTempDirectory(s"graft-ic-$f")
-      Sources.writeInterchange(docs, dir.toString, f)
-      val back = Sources.readInterchange(spark, dir.toString, f,
-        docs.schema)
-      assert(back.orderBy("doc_id").collect().toSeq === want,
-        s"round-trip mismatch via $f")
-    }
-  }
 }

@@ -1,12 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** Shared local session for specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Decimal digit count of the optimized plan's `sizeInBytes` stat,
+    * so specs can assert the statistic stays FLAT across rounds (a
+    * loop whose digit count grows round-over-round has the
+    * multiplication trap). */
+  protected def statDigits(df: DataFrame): Int =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes.toString.length
 
   /** `body`'s result and the number of Spark jobs it launched. */
   protected def jobsOf[A](body: => A): (A, Int) = {

@@ -5,7 +5,6 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.store.GraphStore
 import graft.streaming.Incremental
 
 class StreamingSpec extends SparkSpec {
@@ -213,66 +212,6 @@ class StreamingSpec extends SparkSpec {
     val out = Incremental.streamingDedup(batch, "text")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(out.size === 2 && out.contains(3L))
-  }
-
-  test("foreachBatch streaming upsert MERGEs into the graph store") {
-    implicit val sql = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
-    val store = new GraphStore(spark, dir)
-    val input = MemoryStream[(String, String)]
-    val nodes = input.toDF().toDF("name", "label")
-    val q = Incremental.upsertNodes(nodes, store, s"$dir/_checkpoint")
-    try {
-      input.addData(("svc-a", "Service"), ("svc-b", "Service"))
-      q.processAllAvailable()
-      assert(store.nodes.count() === 2L)
-      // same key again → MERGE, not duplicate
-      input.addData(("svc-a", "Service"))
-      q.processAllAvailable()
-      assert(store.nodes.count() === 2L)
-    } finally q.stop()
-  }
-
-  test("flatMapGroupsWithState emits closed sessions at threshold") {
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[Incremental.UserEvent]
-    val out = Incremental.thresholdSessions(input.toDS(), emitAt = 5.0)
-    val q = out.writeStream.format("memory").queryName("sessions")
-      .outputMode("append").start()
-    try {
-      // user 1 crosses 5.0 twice (2+4=6, then 5); user 2 never does
-      input.addData(Incremental.UserEvent(1L, 1L, 2.0),
-        Incremental.UserEvent(1L, 2L, 4.0),
-        Incremental.UserEvent(2L, 3L, 1.0))
-      q.processAllAvailable()
-      input.addData(Incremental.UserEvent(1L, 4L, 5.0))
-      q.processAllAvailable()
-      val rows = spark.sql(
-        "SELECT user_id, n_events, total FROM sessions ORDER BY total DESC")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      assert(rows.toSeq === Seq((1L, 2L, 6.0), (1L, 1L, 5.0)))
-    } finally q.stop()
-  }
-
-  test("thresholdSessions folds in event_id order regardless of arrival") {
-    implicit val sql = spark.sqlContext
-    // arrival order reversed vs event_id: deterministic fold must emit
-    // (2.0 then 4.0 crosses at 6.0), not (4.0+2.0 regrouped differently)
-    val input = MemoryStream[Incremental.UserEvent]
-    val out = Incremental.thresholdSessions(input.toDS(), emitAt = 5.0)
-    val q = out.writeStream.format("memory").queryName("sessions_ord")
-      .outputMode("append").start()
-    try {
-      input.addData(Incremental.UserEvent(1L, 2L, 4.0),
-        Incremental.UserEvent(1L, 3L, 5.0),
-        Incremental.UserEvent(1L, 1L, 2.0))
-      q.processAllAvailable()
-      val rows = spark.sql(
-        "SELECT n_events, total FROM sessions_ord ORDER BY total")
-        .collect().map(r => (r.getLong(0), r.getDouble(1)))
-      // id order 1,2,3: 2.0+4.0=6.0 closes; then 5.0 closes
-      assert(rows.toSeq === Seq((1L, 5.0), (2L, 6.0)))
-    } finally q.stop()
   }
 
   test("mapGroupsWithState running totals") {

@@ -13,7 +13,8 @@ class TimeTravelSpec extends SparkSpec {
     val vs = st.versions("nodes")
     assert(vs.length === 2)
     // time travel: first snapshot still has the old name
-    val old = st.nodesAt(vs.head).select("name").collect().map(_.getString(0))
+    val old = spark.read.parquet(s"$dir/${vs.head}").select("name")
+      .collect().map(_.getString(0))
     assert(old.toSeq === Seq("v1"))
     assert(st.nodes.select("name").collect().map(_.getString(0)).toSeq ===
       Seq("v2"))

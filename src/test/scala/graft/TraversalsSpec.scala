@@ -25,13 +25,9 @@ class TraversalsSpec extends SparkSpec {
 
   test("a seed reachable from itself via a cycle IS returned (Cypher parity)") {
     val cyc = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
-    val df = Traversals.reachable(cyc, Seq(1L).toDF("id"), 10).collect()
+    val got = Traversals.reachable(cyc, Seq(1L).toDF("id"), 10).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(df === Map(2L -> 1, 1L -> 2))
-    val gx = Traversals.reachableGraphX(spark, cyc, Seq(1L).toDF("id"), 10)
-      .collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(gx === df)
+    assert(got === Map(2L -> 1, 1L -> 2))
   }
 
   test("paths enumerates simple paths only (no cycles)") {
@@ -95,15 +91,29 @@ class TraversalsSpec extends SparkSpec {
     }
   }
 
-  test("GraphX Pregel reachability agrees with DataFrame BFS") {
-    for (seeds <- Seq(Seq(1L), Seq(1L, 5L, 99L))) {
-      val s = seeds.toDF("id")
-      val df = Traversals.reachable(edges, s, 10).collect()
-        .map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val gx = Traversals.reachableGraphX(spark, edges, s, 10).collect()
-        .map(r => r.getLong(0) -> r.getInt(1)).toMap
-      assert(df === gx, s"seeds=$seeds")
-      assert(gx.nonEmpty)
+  test("reachable equals a plain-Scala BFS") {
+    val es = edges.as[(Long, Long)].collect().toSeq
+    for (seeds <- Seq(Set(1L), Set(1L, 5L, 99L)); cap <- Seq(1, 2, 10)) {
+      val got = Traversals.reachable(edges, seeds.toSeq.toDF("id"), cap)
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      assert(got === TraversalsSpec.minDepthBfs(es, seeds, cap),
+        s"seeds=$seeds cap=$cap")
     }
+  }
+}
+
+object TraversalsSpec {
+  /** Plain-Scala reference for [[Traversals.reachable]]: every node that
+    * a path of 1..maxHops edges from a seed reaches, at the length of
+    * its shortest such path. A seed counts only when such a path
+    * reaches it. */
+  def minDepthBfs(edges: Seq[(Long, Long)], seeds: Set[Long],
+      maxHops: Int): Map[Long, Int] = {
+    val out = edges.groupMap(_._1)(_._2)
+    (1 to maxHops).foldLeft((seeds, Map.empty[Long, Int])) {
+      case ((frontier, found), depth) =>
+        val next = frontier.flatMap(out.getOrElse(_, Nil)) -- found.keySet
+        (next, found ++ next.map(_ -> depth))
+    }._2
   }
 }
