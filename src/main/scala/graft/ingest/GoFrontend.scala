@@ -1,15 +1,16 @@
 package graft.ingest
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 
 import graft.model.Model.{Labels, RelTypes}
 import graft.store.GraphStore
 
 /** Go source frontend (SURVEY S9) — the Spark-native counterpart of the
   * reference's AST indexer (`pkg/indexer/static/indexer.go`): per-file
-  * parse inside a distributed flatMap producing node/edge rows, then two
-  * MERGE writes (vs one Bolt round-trip per entity, `indexer.go:100-161`).
+  * parse and row composition on the driver ([[compose]]), then two
+  * MERGE writes of one local batch each (vs one Bolt round-trip per
+  * entity, `indexer.go:100-161`).
   *
   * The reference uses `go/parser`; this container has no Go toolchain, so
   * the frontend is a line/brace scanner covering the same entity surface:
@@ -39,7 +40,7 @@ object GoFrontend {
   private val varRe = """^(?:var|const)\s+(\w+)""".r
   private val pkgRe = """^package\s+(\w+)""".r
 
-  /** Scan one file into entities. Pure Scala — runs inside flatMap. */
+  /** Scan one file into entities. Pure Scala, no Spark. */
   def parseFile(path: String, content: String): Seq[Entity] = {
     val lines = content.split("\n", -1)
     val lineOffsets = lines.scanLeft(0)((acc, l) => acc + l.length + 1)
@@ -236,136 +237,118 @@ object GoFrontend {
     s"scip-go go $service v0 $desc"
   }
 
-  /** Distributed parse: files(path, content) → entity rows. */
-  def entities(files: DataFrame): DataFrame = {
-    val spark = files.sparkSession
-    import spark.implicits._
-    files.select(col("path").cast("string"), col("content").cast("string"))
-      .as[(String, String)]
-      .flatMap { case (p, c) => parseFile(p, c) }
-      .toDF()
+  /** Functions (by name) and classes (by (package, name)) outside a
+    * composed file set that its call sites and methods may link to,
+    * each with its node id. */
+  case class Linking(funcs: Seq[(String, Long)],
+      classes: Seq[((String, String), Long)])
+
+  private val callSiteRe = """(\w+)\s*\(""".r
+
+  /** The Go graph of a file set (path, content), composed on the driver
+    * as canonical, key-unique (nodes, edges) rows: Service, File,
+    * Module, entity and Symbol nodes; Service CONTAINS File, File
+    * CONTAINS entity, Class CONTAINS Method (receiver type in the same
+    * package — same-named structs in different packages must not both
+    * claim the method), entity DEFINES Symbol, and heuristic CALLS
+    * edges (call-site tokens of a body ⋈ function names, the
+    * reference's symbolMap lookup, `indexer.go:647-685`).
+    *
+    * `link` receives the callee names and method receivers the set
+    * uses and returns their matches outside the set; a full ingest
+    * links within the set only. Duplicate identities keep their first
+    * row in file order ([[GraphStore.firstPerKey]]): two `func init()`
+    * in one file are one node with the first one's span and the CALLS
+    * edges of both bodies. */
+  def compose(files: Seq[(String, String)], service: String,
+      link: (Seq[String], Seq[String]) => Linking =
+        (_, _) => Linking(Nil, Nil)): (Seq[Row], Seq[Row]) = {
+    import GraphStore.{edgeRow, firstPerKey, nodeRow}
+    val ents = files.flatMap { case (p, c) => parseFile(p, c).map((_, c)) }
+    val isFunc = Set(Labels.Function, Labels.Method)
+    val hasSym = isFunc ++ Set(Labels.Class, Labels.Interface)
+    // call-site tokens per caller, over its byte-span body
+    val callSites = ents.collect { case (e, c) if isFunc(e.label) =>
+      (e, callSiteRe.findAllMatchIn(c.substring(e.startByte, e.endByte))
+        .map(_.group(1)).filter(_ != e.name).toSeq.distinct)
+    }
+    val linking = link(callSites.flatMap(_._2).distinct,
+      ents.map(_._1).filter(_.label == Labels.Method).map(_.receiver)
+        .distinct)
+
+    def sha256(s: String): String =
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val svc = nodeRow("label" -> Labels.Service, "name" -> service)
+    val fileNs = files.map { case (p, c) =>
+      nodeRow("label" -> Labels.File, "name" -> p.split('/').last,
+        "path" -> p, "size" -> c.codePointCount(0, c.length),
+        "lineCount" -> c.split("\n", -1).length, "hash" -> sha256(c),
+        "content" -> c)
+    }
+    val modNs = ents.map(_._1.pkg).distinct.map(pkg =>
+      nodeRow("label" -> Labels.Module, "name" -> pkg,
+        "fqn" -> s"$service/$pkg"))
+    val entNs = ents.map { case (e, _) =>
+      e -> nodeRow("label" -> e.label, "name" -> e.name,
+        "signature" -> e.signature, "filePath" -> e.filePath,
+        "startLine" -> e.startLine, "endLine" -> e.endLine,
+        "startByte" -> e.startByte, "endByte" -> e.endByte,
+        "linesOfCode" -> (e.endLine - e.startLine + 1),
+        "docstring" -> e.docstring, "complexity" -> e.complexity,
+        "isExported" -> e.isExported,
+        "fqn" -> (if (e.label == Labels.Class ||
+          e.label == Labels.Interface) s"${e.pkg}.${e.name}" else null))
+    }
+    val symEnts = ents.map(_._1).filter(e => hasSym(e.label))
+    val symNs = symEnts.map(e => nodeRow("label" -> Labels.Symbol,
+      "symbol" -> symbolOf(service, e), "displayName" -> e.name,
+      "kind" -> e.label.toLowerCase))
+    val nodes = firstPerKey("nodes",
+      Seq(svc) ++ fileNs ++ modNs ++ entNs.map(_._2) ++ symNs)
+
+    // every key of one identity derives the same id, so these maps are
+    // exact whichever duplicate row they saw
+    val pathIdx = graft.model.Model.nodeSchema.fieldIndex("path")
+    val fileId = fileNs.map(r => r.getString(pathIdx) -> r.getLong(0)).toMap
+    val entId = entNs.map { case (e, r) => e -> r.getLong(0) }.toMap
+    val symId = symEnts.map(symbolOf(service, _)).zip(symNs.map(_.getLong(0)))
+      .toMap
+    def byKey[K](kvs: Seq[(K, Long)]): Map[K, Seq[Long]] =
+      kvs.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).distinct }
+    val classIds = byKey(linking.classes ++ ents.map(_._1)
+      .filter(_.label == Labels.Class).map(e => ((e.pkg, e.name), entId(e))))
+    val funcIds = byKey(linking.funcs ++ ents.map(_._1)
+      .filter(e => isFunc(e.label)).map(e => (e.name, entId(e))))
+
+    val svcFiles = fileNs.map(f =>
+      edgeRow(svc.getLong(0), f.getLong(0), RelTypes.Contains))
+    val fileEnts = ents.map { case (e, _) =>
+      edgeRow(fileId(e.filePath), entId(e), RelTypes.Contains)
+    }
+    val clsMethods = ents.map(_._1).filter(_.label == Labels.Method)
+      .flatMap(m => classIds.getOrElse((m.pkg, m.receiver), Nil)
+        .map(edgeRow(_, entId(m), RelTypes.Contains)))
+    val defines = symEnts.map(e => edgeRow(entId(e),
+      symId(symbolOf(service, e)), RelTypes.Defines, "isExported" -> true))
+    val calls = callSites.flatMap { case (caller, callees) =>
+      val cid = entId(caller)
+      callees.flatMap(funcIds.getOrElse(_, Nil)).filter(_ != cid)
+        .map(edgeRow(cid, _, RelTypes.Calls))
+    }
+    (nodes, firstPerKey("edges",
+      svcFiles ++ fileEnts ++ clsMethods ++ defines ++ calls))
   }
 
-  /** Full ingest: [[derive]] over the whole tree, then exactly two
-    * snapshot writes. */
+  /** Full ingest: [[compose]] over the whole tree, then one MERGE of
+    * each batch. The driver holds the tree's text, as
+    * [[IncrementalIndex.reindex]] holds each changed file's, and the
+    * rows composed from it: a repository's source, not a corpus. */
   def ingest(store: GraphStore, files: DataFrame, service: String): Unit = {
-    val (nodes, edges, done) = derive(files, service)
-    try { store.mergeNodes(nodes); store.mergeEdges(edges) }
-    finally done()
-  }
-
-  /** Derive the (nodes, edges) frames for a file set: Service → Files →
-    * entities, DEFINES symbols, Class CONTAINS Method (receiver match),
-    * heuristic same-service CALLS edges (call-site token ⋈ known
-    * function names — the reference's symbolMap lookup,
-    * `indexer.go:647-685`, as a broadcast join). The batch itself is
-    * the only linking context. */
-  def derive(files: DataFrame, service: String)
-      : (DataFrame, DataFrame, () => Unit) = {
-    val spark = files.sparkSession
-    import spark.implicits._
-    val ents = entities(files).cache()
-
-    val svcNode = Seq((Labels.Service, service)).toDF("label", "name")
-    val fileNodes = files.select(lit(Labels.File).as("label"),
-      col("path"), element_at(split(col("path"), "/"), -1).as("name"),
-      length(col("content")).cast("int").as("size"),
-      (size(split(col("content"), "\n")) - 0).as("lineCount"),
-      sha2(col("content"), 256).as("hash"), col("content"))
-    val modNodes = ents.select(lit(Labels.Module).as("label"),
-      col("pkg").as("name"), concat(lit(service), lit("/"), col("pkg"))
-        .as("fqn")).distinct()
-    val entNodes = ents.select(col("label"), col("name"),
-      col("signature"), col("filePath"), col("startLine"), col("endLine"),
-      col("startByte"), col("endByte"),
-      (col("endLine") - col("startLine") + 1).as("linesOfCode"),
-      col("docstring"), col("complexity"), col("isExported"),
-      when(col("label").isin(Labels.Class, Labels.Interface),
-        concat(col("pkg"), lit("."), col("name"))).as("fqn"))
-    val symNodes = ents
-      .filter(col("label").isin(Labels.Function, Labels.Method,
-        Labels.Class, Labels.Interface))
-      .as[Entity].map(e => (Labels.Symbol, symbolOf(service, e),
-        e.name, e.label.toLowerCase))
-      .toDF("label", "symbol", "displayName", "kind").distinct()
-
-    val svcId = GraphStore.ensureNodeIds(svcNode).select(col("id").as("svcId"))
-    val fileIds = GraphStore.ensureNodeIds(fileNodes)
-      .select(col("id").as("fileId"), col("path"))
-    val entIds = GraphStore.ensureNodeIds(entNodes).select(col("id"),
-      col("label"), col("name"), col("signature"), col("filePath"))
-    val symIds = GraphStore.ensureNodeIds(symNodes)
-      .select(col("id").as("symId"), col("symbol"))
-
-    val svcFiles = svcId.crossJoin(fileIds)
-      .select(col("svcId").as("src"), col("fileId").as("dst"),
-        lit(RelTypes.Contains).as("relType"))
-    val fileEnts = entIds.join(fileIds,
-        entIds("filePath") === fileIds("path"))
-      .select(col("fileId").as("src"), col("id").as("dst"),
-        lit(RelTypes.Contains).as("relType"))
-    // Class CONTAINS Method via receiver type, scoped by package —
-    // same-named structs in different packages must not both claim the
-    // method
-    val entPkgs = ents.select(col("label"), col("name"), col("signature"),
-      col("filePath"), col("pkg"))
-    val classes = entIds.filter(col("label") === Labels.Class)
-      .join(entPkgs, Seq("label", "name", "signature", "filePath"))
-      .select(col("id").as("clsId"), col("name").as("clsName"),
-        col("pkg").as("clsPkg"))
-    val methodRecv = ents.filter(col("label") === Labels.Method)
-      .join(entIds.filter(col("label") === Labels.Method)
-          .withColumnRenamed("id", "methId"),
-        Seq("label", "name", "signature", "filePath"))
-      .select(col("methId"), col("receiver"), col("pkg"))
-    val clsMethods = methodRecv.join(broadcast(classes),
-        methodRecv("receiver") === classes("clsName") &&
-        methodRecv("pkg") === classes("clsPkg"))
-      .select(col("clsId").as("src"), col("methId").as("dst"),
-        lit(RelTypes.Contains).as("relType"))
-    // DEFINES: entity → its symbol
-    val defines = ents
-      .filter(col("label").isin(Labels.Function, Labels.Method,
-        Labels.Class, Labels.Interface))
-      .as[Entity]
-      .map(e => (e.label, e.name, e.signature, e.filePath,
-        symbolOf(service, e)))
-      .toDF("label", "name", "signature", "filePath", "symbol")
-      .join(entIds, Seq("label", "name", "signature", "filePath"))
-      .join(symIds, Seq("symbol"))
-      .select(col("id").as("src"), col("symId").as("dst"),
-        lit(RelTypes.Defines).as("relType"), lit(true).as("isExported"))
-      .distinct()
-    // heuristic CALLS: function-name tokens in a body ⋈ known functions
-    val funcs = entIds.filter(col("label").isin(Labels.Function,
-        Labels.Method))
-      .select(col("id").as("calleeId"), col("name").as("calleeName"))
-      .distinct()
-    val bodies = ents.filter(col("label").isin(Labels.Function,
-        Labels.Method))
-      .join(entIds, Seq("label", "name", "signature", "filePath"))
-      .join(files.select(col("path"), col("content")),
-        col("filePath") === col("path"))
-      .select(col("id").as("callerId"), col("name").as("callerName"),
-        expr("substring(content, startByte + 1, endByte - startByte)")
-          .as("body"))
-    val calls = bodies
-      .select(col("callerId"), col("callerName"),
-        explode(expr("regexp_extract_all(body, '(\\\\w+)\\\\s*\\\\(', 1)"))
-          .as("calleeName"))
-      .filter(col("calleeName") =!= col("callerName"))
-      .join(broadcast(funcs), Seq("calleeName"))
-      .filter(col("callerId") =!= col("calleeId"))
-      .select(col("callerId").as("src"), col("calleeId").as("dst"),
-        lit(RelTypes.Calls).as("relType"))
-      .distinct()
-
-    val nodes = GraphStore.unionNodeFamilies(
-      Seq(svcNode, fileNodes, modNodes, entNodes, symNodes))
-    val edges = GraphStore.unionEdgeFamilies(
-      Seq(svcFiles, fileEnts, clsMethods, defines, calls))
-    // the returned frames are LAZY over the cached ents — the caller
-    // invokes the cleanup thunk after materializing both
-    (nodes, edges, () => { ents.unpersist(); () })
+    val (nodes, edges) = compose(files
+      .select(col("path").cast("string"), col("content").cast("string"))
+      .collect().toSeq.map(r => (r.getString(0), r.getString(1))), service)
+    store.mergeRows("nodes", nodes)
+    store.mergeRows("edges", edges)
   }
 }

@@ -29,9 +29,9 @@ import graft.store.GraphStore
   *   - symbol GC     = Symbol nodes with no remaining DEFINES edge
   *
   * Execution: the delta is detected by one (path, hash) join, then
-  * parsed and composed ON THE DRIVER (the same families
-  * [[GoFrontend.derive]] builds for a full ingest, which the spec's
-  * incremental-equals-full graph equality checks it against). The
+  * parsed and composed ON THE DRIVER by [[GoFrontend.compose]], the
+  * composition a full ingest runs over the whole tree, here with the
+  * store's surviving functions and classes as linking context. The
   * store is touched by THREE pruned scans (File-label hashes for
   * detection; affected/ctx nodes; affected edges + DEFINES survival)
   * and TWO O(delta) LSM appends ([[GraphStore.appendDelta]] — adds +
@@ -46,23 +46,6 @@ import graft.store.GraphStore
   * bodies, which is exactly what incremental indexing avoids.
   */
 object IncrementalIndex {
-
-  /** Node-row staging shape for the delta (object-level so the
-    * Spark product encoder can resolve it; Option fields become
-    * nullable columns that ensureNodeIds/align cast onto the canonical
-    * schema). */
-  private case class N(label: String, name: String = null,
-    fqn: String = null, path: String = null, signature: String = null,
-    symbol: String = null, kind: String = null, displayName: String = null,
-    filePath: String = null, startLine: Option[Int] = None,
-    endLine: Option[Int] = None, startByte: Option[Int] = None,
-    endByte: Option[Int] = None, linesOfCode: Option[Int] = None,
-    docstring: String = null, complexity: Option[Int] = None,
-    isExported: Option[Boolean] = None, size: Option[Int] = None,
-    lineCount: Option[Int] = None, hash: String = null,
-    content: String = null)
-
-  private val callSiteRe = """(\w+)\s*\(""".r
 
   /** Bring `store` up to date with `files` (the full current tree as
     * (path, content)); only changed files are parsed. Returns a one-row
@@ -80,9 +63,6 @@ object IncrementalIndex {
       : DataFrame = {
     val spark = files.sparkSession
     import spark.implicits._
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
 
     val incoming = files
       .select(col("path").cast("string"), col("content").cast("string"))
@@ -119,189 +99,40 @@ object IncrementalIndex {
       .collect()
       .map(r => (r.getString(0), r.getString(1)))
 
-    val ents = changed.flatMap { case (p, c) =>
-      GoFrontend.parseFile(p, c).map(e => (e, c))
-    }
     val affected: Array[String] = changed.map(_._1) ++ deleted
-    // call-site tokens per caller (matches GoFrontend.derive's
-    // regexp_extract_all over the byte-span body)
-    val callSites = ents.collect {
-      case (e, c) if e.label == Labels.Function || e.label == Labels.Method =>
-        val body = c.substring(e.startByte, e.endByte)
-        (e, callSiteRe.findAllMatchIn(body).map(_.group(1))
-          .filter(_ != e.name).toSeq.distinct)
-    }
-    val calleeNames = callSites.flatMap(_._2).distinct
-    val receiverNames = ents.collect {
-      case (e, _) if e.label == Labels.Method => e.receiver
-    }.distinct
-
-    // ONE pruned scan covers every store lookup the composition needs:
-    // nodes in affected files (stale detection + old ids), surviving
-    // call targets by name, surviving receiver classes by name. It is
-    // independent of the local id-assignment job below, so the two run
-    // concurrently (every ~150 ms job slot counts against <1 s).
-    val affLit = affected.toSeq
-    val ctxF = Future(oldNodes.filter(
-        col("path").isin(affLit: _*) ||
-        col("filePath").isin(affLit: _*) ||
-        (col("label").isin(Labels.Function, Labels.Method) &&
-          col("name").isin(calleeNames.toSeq: _*)) ||
-        (col("label") === Labels.Class &&
-          col("name").isin(receiverNames.toSeq: _*)))
-      .select(col("id"), col("label"), col("name"), col("path"),
-        col("filePath"), col("fqn"))
-      .collect())
     val inAffected: Row => Boolean = r =>
       (!r.isNullAt(3) && affected.contains(r.getString(3))) ||
         (!r.isNullAt(4) && affected.contains(r.getString(4)))
-    lazy val ctx = Await.result(ctxF, Duration.Inf)
-    lazy val oldAffectedIds = ctx.filter(inAffected).map(_.getLong(0)).toSet
-    lazy val extFuncs = ctx.filter(r => !inAffected(r) &&
-        (r.getString(1) == Labels.Function || r.getString(1) == Labels.Method))
-      .map(r => r.getString(2) -> r.getLong(0))
-    lazy val extClasses = ctx.filter(r => !inAffected(r) &&
-        r.getString(1) == Labels.Class && !r.isNullAt(5))
-      .map { r =>
-        val fqn = r.getString(5)
-        ((fqn.takeWhile(_ != '.'), r.getString(2)), r.getLong(0))
-      }
-
-    // node rows (the GoFrontend.derive families, composed locally).
-    // Ids are computed ON THE DRIVER through the same catalyst
-    // XxHash64Function the xxhash64 expression evaluates — bit-equal to
-    // ensureNodeIds without spending a ~150 ms job slot; the spec's
-    // incremental-equals-full graph equality is the parity gate.
-    def sha256(s: String): String =
-      java.security.MessageDigest.getInstance("SHA-256")
-        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val svcN = N(Labels.Service, name = service)
-    val fileNs = changed.map { case (p, c) =>
-      N(Labels.File, name = p.split('/').last, path = p,
-        size = Some(c.codePointCount(0, c.length)),
-        lineCount = Some(c.split("\n", -1).length), hash = sha256(c),
-        content = c)
+    // ONE pruned scan covers every store lookup the composition needs:
+    // nodes in affected files (stale detection + old ids), surviving
+    // call targets by name, surviving receiver classes by name
+    var ctx = Array.empty[Row]
+    def link(calleeNames: Seq[String], receiverNames: Seq[String]) = {
+      ctx = oldNodes.filter(
+          col("path").isin(affected.toSeq: _*) ||
+          col("filePath").isin(affected.toSeq: _*) ||
+          (col("label").isin(Labels.Function, Labels.Method) &&
+            col("name").isin(calleeNames: _*)) ||
+          (col("label") === Labels.Class &&
+            col("name").isin(receiverNames: _*)))
+        .select(col("id"), col("label"), col("name"), col("path"),
+          col("filePath"), col("fqn"))
+        .collect()
+      val outside = ctx.filterNot(inAffected)
+      GoFrontend.Linking(
+        outside.filter(r => r.getString(1) == Labels.Function ||
+            r.getString(1) == Labels.Method)
+          .map(r => r.getString(2) -> r.getLong(0)).toSeq,
+        outside.filter(r => r.getString(1) == Labels.Class &&
+            !r.isNullAt(5))
+          .map { r =>
+            val fqn = r.getString(5)
+            ((fqn.takeWhile(_ != '.'), r.getString(2)), r.getLong(0))
+          }.toSeq)
     }
-    val modNs = ents.map(_._1.pkg).distinct.map(pkg =>
-      N(Labels.Module, name = pkg, fqn = s"$service/$pkg"))
-    val entNs = ents.map { case (e, _) =>
-      N(e.label, name = e.name, signature = e.signature,
-        filePath = e.filePath, startLine = Some(e.startLine),
-        endLine = Some(e.endLine), startByte = Some(e.startByte),
-        endByte = Some(e.endByte),
-        linesOfCode = Some(e.endLine - e.startLine + 1),
-        docstring = e.docstring, complexity = Some(e.complexity),
-        isExported = Some(e.isExported),
-        fqn = if (e.label == Labels.Class || e.label == Labels.Interface)
-          s"${e.pkg}.${e.name}" else null)
-    }
-    val symEnts = ents.map(_._1).filter(e =>
-      e.label == Labels.Function || e.label == Labels.Method ||
-        e.label == Labels.Class || e.label == Labels.Interface)
-    val symNs = symEnts.map(e => (GoFrontend.symbolOf(service, e), e))
-      .groupBy(_._1).toSeq.sortBy(_._1).map { case (sym, es) =>
-        val e = es.head._2
-        N(Labels.Symbol, symbol = sym, displayName = e.name,
-          kind = e.label.toLowerCase)
-      }
-    val allNs = Seq(svcN) ++ fileNs ++ modNs ++ entNs ++ symNs
-    def idOf(n: N): Long = {
-      import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-      import org.apache.spark.sql.types.StringType
-      import org.apache.spark.unsafe.types.UTF8String
-      val keys: Seq[String] = n.label match {
-        case Labels.Symbol => Seq(n.symbol)
-        case Labels.Service => Seq(n.name)
-        case Labels.File => Seq(n.path)
-        case Labels.Class | Labels.Interface | Labels.Module => Seq(n.fqn)
-        case Labels.Function | Labels.Method => Seq(n.signature, n.filePath)
-        case Labels.Variable => Seq(n.name, n.filePath)
-        case other => sys.error(s"reindex: no merge key for $other")
-      }
-      // ensureNodeIds: xxhash64(label, key₁…keyₙ) — seed 42, each input
-      // folded through XXH64 in order
-      (n.label +: keys).foldLeft(42L)((h, v) =>
-        XxHash64Function.hash(UTF8String.fromString(v), StringType, h))
-    }
-    val nodeSchema = graft.model.Model.nodeSchema
-    def rowOf(n: N, id: Long): Row = {
-      val m: Map[String, Any] = Map(
-        "id" -> Long.box(id), "label" -> n.label, "name" -> n.name,
-        "fqn" -> n.fqn, "path" -> n.path, "signature" -> n.signature,
-        "symbol" -> n.symbol, "kind" -> n.kind,
-        "displayName" -> n.displayName, "filePath" -> n.filePath,
-        "startLine" -> n.startLine.map(Int.box).orNull,
-        "endLine" -> n.endLine.map(Int.box).orNull,
-        "startByte" -> n.startByte.map(Int.box).orNull,
-        "endByte" -> n.endByte.map(Int.box).orNull,
-        "linesOfCode" -> n.linesOfCode.map(Int.box).orNull,
-        "docstring" -> n.docstring,
-        "complexity" -> n.complexity.map(Int.box).orNull,
-        "isExported" -> n.isExported.map(Boolean.box).orNull,
-        "size" -> n.size.map(Int.box).orNull,
-        "lineCount" -> n.lineCount.map(Int.box).orNull,
-        "hash" -> n.hash, "content" -> n.content)
-      Row.fromSeq(nodeSchema.fields.toSeq.map(f => m.getOrElse(f.name, null)))
-    }
-    // duplicate identities inside one delta collapse here, exactly
-    // like GraphStore.keepLatest collapses them in a merge write
-    val newNodeRows = allNs.map(n => rowOf(n, idOf(n)))
-      .groupBy(_.getLong(0)).map(_._2.head).toArray
-    val _ = ctx // join the concurrent scan before composing edges
-
-    // id lookup maps for edge composition
-    val sIdx = graft.model.Model.nodeSchema.fieldIndex _
-    def str(r: Row, f: String): String =
-      if (r.isNullAt(sIdx(f))) null else r.getString(sIdx(f))
-    val byLabel = newNodeRows.groupBy(_.getString(sIdx("label")))
-      .withDefaultValue(Array.empty[Row])
-    val svcId = byLabel(Labels.Service).head.getLong(0)
-    val fileIdByPath = byLabel(Labels.File)
-      .map(r => str(r, "path") -> r.getLong(0)).toMap
-    val entIdByKey = (byLabel(Labels.Function) ++ byLabel(Labels.Method) ++
-      byLabel(Labels.Class) ++ byLabel(Labels.Interface) ++
-      byLabel(Labels.Variable))
-      .map(r => (str(r, "label"), str(r, "name"), str(r, "signature"),
-        str(r, "filePath")) -> r.getLong(0)).toMap
-    val symIdBySym = byLabel(Labels.Symbol)
-      .map(r => str(r, "symbol") -> r.getLong(0)).toMap
-    def entId(e: GoFrontend.Entity): Long =
-      entIdByKey((e.label, e.name, e.signature, e.filePath))
-
-    // edge families (src, dst, relType, isExported)
-    type EdgeT = (Long, Long, String, Option[Boolean])
-    val none: Option[Boolean] = None
-    val svcFileE: Seq[EdgeT] = fileIdByPath.values.toSeq
-      .map(fid => (svcId, fid, RelTypes.Contains, none))
-    val fileEntE: Seq[EdgeT] = ents.map { case (e, _) =>
-      (fileIdByPath(e.filePath), entId(e), RelTypes.Contains, none)
-    }.toSeq
-    val newClasses = ents.map(_._1).filter(_.label == Labels.Class)
-      .map(e => ((e.pkg, e.name), entId(e)))
-    val classId = (extClasses ++ newClasses).groupBy(_._1)
-      .map { case (k, vs) => k -> vs.map(_._2).distinct.toSeq }
-    val clsMethE: Seq[EdgeT] = ents.map(_._1)
-      .filter(_.label == Labels.Method).flatMap { m =>
-        classId.getOrElse((m.pkg, m.receiver), Seq.empty[Long])
-          .map(cid => (cid, entId(m), RelTypes.Contains, none))
-      }.toSeq
-    val tru: Option[Boolean] = Some(true)
-    val definesE: Seq[EdgeT] = symEnts.map(e =>
-      (entId(e), symIdBySym(GoFrontend.symbolOf(service, e)),
-        RelTypes.Defines, tru)).distinct
-    val newFuncs = ents.map(_._1).filter(e =>
-      e.label == Labels.Function || e.label == Labels.Method)
-      .map(e => (e.name, entId(e)))
-    val funcIdsByName = (extFuncs ++ newFuncs).groupBy(_._1)
-      .map { case (k, vs) => k -> vs.map(_._2).distinct.toSeq }
-    val callsE: Seq[EdgeT] = callSites.flatMap { case (caller, callees) =>
-      val cid = entId(caller)
-      callees.flatMap(n => funcIdsByName.getOrElse(n, Seq.empty[Long]))
-        .filter(_ != cid).distinct
-        .map(calleeId => (cid, calleeId, RelTypes.Calls, none))
-    }.toSeq
-    val newEdges =
-      (svcFileE ++ fileEntE ++ clsMethE ++ definesE ++ callsE).distinct
+    val (newNodeRows, newEdges) =
+      GoFrontend.compose(changed.toSeq, service, link)
+    val oldAffectedIds = ctx.filter(inAffected).map(_.getLong(0)).toSet
 
     val newIds = newNodeRows.map(_.getLong(0)).toSet
     val staleIds = oldAffectedIds -- newIds
@@ -324,9 +155,8 @@ object IncrementalIndex {
     val survivors: Set[Long] =
       if (candSyms.isEmpty) Set.empty
       else {
-        val fromNew = newEdges.collect {
-          case (_, d, t, _) if t == RelTypes.Defines => d
-        }.toSet
+        val fromNew = newEdges.filter(_.getString(2) == RelTypes.Defines)
+          .map(_.getLong(1)).toSet
         val fromOld = oldEdges
           .filter(col("relType") === RelTypes.Defines &&
             col("dst").isin(candSyms.toSeq: _*) &&
@@ -338,19 +168,9 @@ object IncrementalIndex {
 
     // two O(delta) LSM appends — DRIVER-written JSONL, no Spark job;
     // merge-on-read folds them, compaction amortizes the rewrite
-    val edgeRowOf: ((Long, Long, String, Option[Boolean])) => Row = {
-      case (es, ed, et, ex) => Row.fromSeq(
-        graft.model.Model.edgeSchema.fields.toSeq.map(_.name).map {
-          case "src" => Long.box(es)
-          case "dst" => Long.box(ed)
-          case "relType" => et
-          case "isExported" => ex.map(Boolean.box).orNull
-          case _ => null
-        })
-    }
-    store.appendDelta("nodes", newNodeRows.toSeq,
+    store.appendDelta("nodes", newNodeRows,
       (staleIds ++ gcSyms).toSeq.sorted.map(Seq(_)))
-    store.appendDelta("edges", newEdges.map(edgeRowOf),
+    store.appendDelta("edges", newEdges,
       edgeHits.toSeq.map { case (es, ed, et) => Seq(es, ed, et) })
     Seq((changed.length.toLong, deleted.length.toLong,
       newNodeRows.length.toLong, staleIds.size.toLong))

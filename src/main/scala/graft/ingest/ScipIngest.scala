@@ -1,7 +1,9 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.Model.{Labels, RelTypes}
 import graft.store.GraphStore
@@ -9,12 +11,13 @@ import graft.store.GraphStore
 /** SCIP-occurrence ingest frontend — the Spark-native re-expression of the
   * reference's SCIP indexer (`pkg/indexer/static/scip_parser.go`,
   * `scip_indexer.go`). Input is a `scip.Index` — either real protobuf
-  * `.scip` bytes (decoded by [[ScipProto]]; distributed boundary in
-  * [[occurrencesFromBinary]], SURVEY S11) or its JSON rendering
+  * `.scip` bytes (decoded by [[ScipProto]]) or its JSON rendering
   * (documents[] with occurrences, externalSymbols[]).
   *
   * The reference's two sequential passes with one Bolt MERGE per entity
-  * (`scip_indexer.go:174-229`) collapse into two DataFrame MERGE writes.
+  * (`scip_indexer.go:174-229`) collapse into rows composed on the
+  * driver, which holds the index anyway, and two MERGE writes of one
+  * local batch each.
   */
 object ScipIngest {
 
@@ -51,7 +54,9 @@ object ScipIngest {
 
   /** Column form of the 5-field SCIP symbol parse
     * (`pkg/models/symbol.go:25-38`, SplitN(symbol," ",5)): struct of
-    * (scheme, manager, name, version, descriptor). */
+    * (scheme, manager, name, version, descriptor). get() (0-based, null
+    * out of bounds) instead of element_at: ANSI mode would throw on
+    * symbols with fewer than 5 fields (SCIP locals like "local 0"). */
   def parseSymbolCol(symbol: Column): Column = {
     val parts = split(symbol, " ", 5)
     struct(
@@ -86,29 +91,6 @@ object ScipIngest {
     before + math.min(col, lines.lift(line).map(_.length).getOrElse(0))
   }
 
-  /** S11 — distributed decode boundary for real `.scip` protobuf files:
-    * binaryFile scan → per-partition [[ScipProto.decodeIndex]] → one
-    * occurrence row per (file, occurrence), same schema as
-    * [[occurrences]]. For multi-index directories this is the shape
-    * that scales: bytes never leave the executor that read them. */
-  def occurrencesFromBinary(spark: SparkSession, glob: String): DataFrame = {
-    import spark.implicits._
-    graft.sources.Sources.binaryFiles(spark, glob)
-      .select(col("content")).as[Array[Byte]]
-      .mapPartitions(_.flatMap { bytes =>
-        val index = ScipProto.decodeIndex(bytes)
-        index.documents.iterator.flatMap { d =>
-          d.occurrences.iterator.map { o =>
-            val (sl, sc, el, ec) = decodeRange(o.range)
-            (d.relativePath, o.symbol, sl, sc, el, ec,
-              (o.symbolRoles & 1) == 1)
-          }
-        }
-      })
-      .toDF("filePath", "symbol", "startLine", "startColumn", "endLine",
-        "endColumn", "isDefinition")
-  }
-
   /** Decode one binary `.scip` file and run the standard two-pass graph
     * build — the protobuf twin of the JSON entry point (the reference's
     * `ParseFile`, `scip_parser.go:25-38`, feeding its indexer). */
@@ -121,119 +103,93 @@ object ScipIngest {
       fileContents)
   }
 
-  /** Flatten an index into one occurrence row per (file, occurrence). */
-  def occurrences(spark: SparkSession,
-      index: ScipIndex): DataFrame = {
-    import spark.implicits._
-    index.documents.flatMap { d =>
-      d.occurrences.map { o =>
-        val (sl, sc, el, ec) = decodeRange(o.range)
-        (d.relativePath, o.symbol, sl, sc, el, ec,
-          (o.symbolRoles & 1) == 1) // scip SymbolRole_Definition bit
-      }
-    }.toDF("filePath", "symbol", "startLine", "startColumn", "endLine",
-      "endColumn", "isDefinition")
-  }
-
-  /** Two-pass graph build from a parsed index (+ optional file contents
-    * for byte-offset backfill). */
+  /** Build the graph of a parsed index (+ optional file contents for
+    * byte-offset backfill) on the driver, which already holds the
+    * index, and MERGE it as one node batch and one edge batch.
+    *
+    * Pass 1 gives Service, File and Symbol nodes (occurrence symbols ∪
+    * external symbols, the latter carrying kind and documentation) with
+    * Service CONTAINS File, File DEFINES Symbol and File CONTAINS
+    * Symbol; pass 2 gives one Reference node per non-definition
+    * occurrence with Reference REFERENCES Symbol and File CONTAINS
+    * Reference. Duplicates follow the index's order: a symbol defined
+    * twice in one file keeps the FIRST definition's line and column on
+    * its DEFINES edge, and two occurrences at one (path, line, column)
+    * are one Reference node with the first one's span and an edge to
+    * each distinct symbol. */
   def ingest(store: GraphStore, spark: SparkSession, index: ScipIndex,
       serviceName: String,
       fileContents: Map[String, String] = Map.empty): Unit = {
-    import spark.implicits._
-    val occ = occurrences(spark, index).cache()
+    import GraphStore.{edgeRow, nodeRow}
+    val docs = index.documents
+    val occs = for (d <- docs; o <- d.occurrences)
+      yield (d.relativePath, o.symbol, decodeRange(o.range),
+        (o.symbolRoles & 1) == 1) // scip SymbolRole_Definition bit
 
     // --- pass 1: Service, Files, Symbols, CONTAINS/DEFINES ------------
-    val svcNode = Seq((Labels.Service, serviceName))
-      .toDF("label", "name")
-    val fileNodes = index.documents.map(d =>
-        (Labels.File, d.relativePath, d.relativePath.split('/').last,
-          languageOf(d.relativePath)))
-      .toDF("label", "path", "name", "language")
-
-    val extSyms = index.externalSymbols.map(s =>
-        (s.symbol, Option(s.kind).getOrElse(""), s.documentation))
-      .toDF("symbol", "kind", "documentation")
-    val occSyms = occ.select(col("symbol")).distinct()
-      .withColumn("kind", lit(null).cast("string"))
-      .withColumn("documentation", lit(null).cast("string"))
-    val symNodes = extSyms.unionByName(occSyms)
-      .groupBy(col("symbol"))
-      .agg(max(col("kind")).as("kindRaw"),
-        max(col("documentation")).as("documentation"))
-      .select(lit(Labels.Symbol).as("label"), col("symbol"),
-        // get() (0-based, null on out-of-bounds) instead of element_at:
-        // ANSI mode would throw on symbols with fewer than 5 fields
-        // (e.g. SCIP local symbols like "local 0")
-        coalesce(nullif(col("kindRaw"), lit("")),
-          get(split(col("symbol"), " ", 5), lit(4)), col("symbol"))
-          .as("descriptor"),
-        col("documentation"))
-      .withColumn("kind", kindCol(col("descriptor")))
-      .withColumn("displayName", displayNameCol(col("descriptor")))
-      .drop("descriptor")
-
-    val svcId = GraphStore.ensureNodeIds(svcNode)
-      .select(col("id").as("svcId"))
-    val fileIds = GraphStore.ensureNodeIds(fileNodes)
-      .select(col("id").as("fileId"), col("path"))
-    val symIds = GraphStore.ensureNodeIds(symNodes)
-      .select(col("id").as("symId"), col("symbol"))
-
-    val svcContains = svcId.crossJoin(fileIds)
-      .select(col("svcId").as("src"), col("fileId").as("dst"),
-        lit(RelTypes.Contains).as("relType"))
-    val defs = occ.filter(col("isDefinition"))
-      .join(fileIds, occ("filePath") === fileIds("path"))
-      .join(symIds, Seq("symbol"))
-    val fileDefines = defs.select(col("fileId").as("src"),
-        col("symId").as("dst"), lit(RelTypes.Defines).as("relType"),
-        lit(true).as("isDefinition"), col("startLine").as("line"),
-        col("startColumn").as("column"))
-      .dropDuplicates("src", "dst")
-    val fileContainsSym = defs.select(col("fileId").as("src"),
-        col("symId").as("dst"), lit(RelTypes.Contains).as("relType"))
-      .dropDuplicates("src", "dst")
-    // --- pass 2: Reference nodes + REFERENCES edges -------------------
-    val contents = fileContents.toSeq.toDF("cPath", "content")
-    val refs = occ.filter(!col("isDefinition"))
-      .join(contents, occ("filePath") === col("cPath"), "left_outer")
-      .as[(String, String, Int, Int, Int, Int, Boolean, String, String)]
-      .map { case (path, symbol, sl, sc, el, ec, _, _, content) =>
-        val span = Option(content).map(c =>
-          (byteOffset(c, sl, sc), byteOffset(c, el, ec)))
-        (path, symbol, sl, sc, el, ec, span.map(_._1), span.map(_._2))
+    val svc = nodeRow("label" -> Labels.Service, "name" -> serviceName)
+    val files = docs.map(d => nodeRow("label" -> Labels.File,
+      "path" -> d.relativePath, "name" -> d.relativePath.split('/').last,
+      "language" -> languageOf(d.relativePath)))
+    val fileId = files.map(r => r.getString(fieldIdx("path")) -> r.getLong(0))
+      .toMap
+    // per symbol the greatest kind and documentation of its external
+    // entries (Spark's max: binary UTF-8 order); occurrence-only
+    // symbols have neither
+    def maxOf(xs: Seq[String]): String = xs.filter(_ != null)
+      .maxByOption(UTF8String.fromString).orNull
+    val ext = index.externalSymbols.groupBy(_.symbol)
+    val rawSyms = (occs.map(_._2) ++ index.externalSymbols.map(_.symbol))
+      .distinct.map { sym =>
+        val es = ext.getOrElse(sym, Nil)
+        Row(sym, maxOf(es.map(e => Option(e.kind).getOrElse(""))),
+          maxOf(es.map(_.documentation)))
       }
-      .toDF("filePath", "symbol", "startLine", "startColumn", "endLine",
-        "endColumn", "startByte", "endByte")
-      .cache()
-
-    val refNodes = refs.select(lit(Labels.Reference).as("label"),
-      col("filePath"), col("startLine"), col("startColumn"),
-      col("endLine"), col("endColumn"), col("startByte"), col("endByte"))
-    val refIds = GraphStore.ensureNodeIds(refNodes)
-      .select(col("id").as("refId"), col("filePath"), col("startLine"),
-        col("startColumn"))
-
-    val refEdges = refs
-      .join(refIds, Seq("filePath", "startLine", "startColumn"))
-      .join(symIds, Seq("symbol"))
-      .select(col("refId").as("src"), col("symId").as("dst"),
-        lit(RelTypes.References).as("relType"),
-        col("startLine").as("line"), col("startColumn").as("column"))
-      .dropDuplicates("src", "dst")
-    val fileContainsRef = refs
-      .join(refIds, Seq("filePath", "startLine", "startColumn"))
-      .join(fileIds, refs("filePath") === fileIds("path"))
-      .select(col("fileId").as("src"), col("refId").as("dst"),
-        lit(RelTypes.Contains).as("relType"))
-      .dropDuplicates("src", "dst")
-    // exactly two snapshot writes for the whole index
-    store.mergeNodes(GraphStore.unionNodeFamilies(
-      Seq(svcNode, fileNodes, symNodes, refNodes)))
-    store.mergeEdges(GraphStore.unionEdgeFamilies(
-      Seq(svcContains, fileDefines, fileContainsSym, refEdges,
-        fileContainsRef)))
-    occ.unpersist(); refs.unpersist()
+    // kind and display name through their Column forms over a local
+    // relation: the optimizer folds the projection into the relation,
+    // so collecting it runs no Spark job
+    val syms = spark.createDataFrame(java.util.Arrays.asList(rawSyms: _*),
+        StructType(Seq("symbol", "kindRaw", "documentation")
+          .map(StructField(_, StringType))))
+      .select(col("symbol"), col("documentation"),
+        coalesce(nullif(col("kindRaw"), lit("")),
+          parseSymbolCol(col("symbol")).getField("descriptor"),
+          col("symbol")).as("descriptor"))
+      .select(col("symbol"), col("documentation"),
+        kindCol(col("descriptor")), displayNameCol(col("descriptor")))
+      .collect().toSeq
+      .map(r => nodeRow("label" -> Labels.Symbol, "symbol" -> r.getString(0),
+        "documentation" -> r.getString(1), "kind" -> r.getString(2),
+        "displayName" -> r.getString(3)))
+    val symId = syms.map(r => r.getString(fieldIdx("symbol")) -> r.getLong(0))
+      .toMap
+    val svcContains = files.map(f =>
+      edgeRow(svc.getLong(0), f.getLong(0), RelTypes.Contains))
+    val defs = occs.filter(_._4)
+    val fileDefines = defs.map { case (path, sym, (sl, sc, _, _), _) =>
+      edgeRow(fileId(path), symId(sym), RelTypes.Defines,
+        "isDefinition" -> true, "line" -> sl, "column" -> sc)
+    }
+    val fileContainsSym = defs.map { case (path, sym, _, _) =>
+      edgeRow(fileId(path), symId(sym), RelTypes.Contains)
+    }
+    // --- pass 2: Reference nodes + REFERENCES edges -------------------
+    val refs = occs.filterNot(_._4).map {
+      case (path, sym, (sl, sc, el, ec), _) =>
+        val span = fileContents.get(path).map(c =>
+          (byteOffset(c, sl, sc), byteOffset(c, el, ec)))
+        val ref = nodeRow("label" -> Labels.Reference, "filePath" -> path,
+          "startLine" -> sl, "startColumn" -> sc, "endLine" -> el,
+          "endColumn" -> ec, "startByte" -> span.map(b => Int.box(b._1)).orNull,
+          "endByte" -> span.map(b => Int.box(b._2)).orNull)
+        (ref, edgeRow(ref.getLong(0), symId(sym), RelTypes.References,
+          "line" -> sl, "column" -> sc),
+          edgeRow(fileId(path), ref.getLong(0), RelTypes.Contains))
+    }
+    store.mergeRows("nodes", Seq(svc) ++ files ++ syms ++ refs.map(_._1))
+    store.mergeRows("edges", svcContains ++ fileDefines ++ fileContainsSym ++
+      refs.map(_._2) ++ refs.map(_._3))
   }
+
+  private val fieldIdx = graft.model.Model.nodeSchema.fieldIndex _
 }

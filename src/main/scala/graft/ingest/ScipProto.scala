@@ -18,9 +18,8 @@ import java.nio.charset.StandardCharsets.UTF_8
   *   SymbolInformation: symbol=1, documentation=3 (repeated, joined with
   *                      " " like the reference), kind=5 (enum)
   *
-  * Pure function of the byte array — safe inside `mapPartitions`, which
-  * is how multi-file index directories decode distributed
-  * (see [[ScipIngest.occurrencesFromBinary]]).
+  * Pure function of the byte array; [[ScipIngest.ingestScipFile]] reads
+  * the file and decodes it on the driver.
   */
 object ScipProto {
 

@@ -77,20 +77,6 @@ object Multimodal {
     }
   }
 
-  /** Frame-sampling shape for video: emit every `stride`-th chunk of the
-    * payload as a frame row (a real impl samples decoded frames; the
-    * chunking and fan-out schema are what matter at the Spark layer). */
-  def sampleFrames(media: Dataset[MediaRow], stride: Int,
-      frameSize: Int): DataFrame = {
-    import media.sparkSession.implicits._
-    media.flatMap { r =>
-      r.bytes.grouped(frameSize).zipWithIndex
-        .filter { case (_, idx) => idx % stride == 0 }
-        .map { case (chunk, idx) =>
-          (r.media_id, idx, chunk.length, decodeStub(chunk)) }
-    }.toDF("media_id", "frame_index", "frame_bytes", "frame_features")
-  }
-
   case class BinMeta(media_id: Long, n_bytes: Int, sha_hex: String,
       n_frames: Int)
 
@@ -125,10 +111,10 @@ object Multimodal {
   /** Byte-exact frame fan-out over an opaque binary column: split the
     * payload into `frameSize`-byte frames and emit per-frame rows with
     * the frame's size and the hex digest of its first `headBytes` bytes
-    * (the "magic number" probe a real decoder starts with). Unlike
-    * [[sampleFrames]] this emits no stubbed features, so the output is
-    * a pure function of the bytes — oracle-comparable in any engine
-    * that can hex the same payload. Null payload ≡ empty ≡ no frames. */
+    * (the "magic number" probe a real decoder starts with). It emits
+    * no stubbed features, so the output is a pure function of the
+    * bytes — oracle-comparable in any engine that can hex the same
+    * payload. Null payload ≡ empty ≡ no frames. */
   def frameHex(df: DataFrame, idCol: String, binCol: String,
       frameSize: Int, headBytes: Int): Dataset[FrameRow] = {
     import df.sparkSession.implicits._

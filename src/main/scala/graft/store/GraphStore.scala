@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.StructType
@@ -20,8 +20,10 @@ import graft.model.Model
   *   - `nodes` partitioned by `label`, `edges` by `relType` → label/type
   *     predicates become partition pruning, the Parquet analog of Neo4j's
   *     label indexes (`schema.go:82-203`);
-  *   - MERGE = union + window keep-latest: one hash shuffle on `id`, no
-  *     driver loops;
+  *   - MERGE = `existing ⋈anti batch keys ∪ batch`: only the batch's
+  *     key set moves (broadcast), the snapshot is scanned, never
+  *     shuffled; a driver batch ([[mergeRows]]) is de-duplicated on the
+  *     driver, a DataFrame batch by one window over the batch alone;
   *   - writes go to a new snapshot directory then swap, so readers never
   *     see a half-written graph (job-atomic, SURVEY §4.2).
   */
@@ -189,12 +191,11 @@ class GraphStore(spark: SparkSession, val basePath: String) {
     * merge-key tuples (nodes: id; edges: (src, dst, relType)). */
   def appendDelta(kind: String, adds: Seq[org.apache.spark.sql.Row],
       tombKeys: Seq[Seq[Any]], autoCompactAfter: Int = 8): Unit = {
-    val schema = if (kind == "nodes") Model.nodeSchema else Model.edgeSchema
+    val schema = schemaOf(kind)
     // a delta needs a base to patch — first write becomes the base
     if (currentDir(kind).isEmpty) {
       writeSnapshot(spark.createDataFrame(
-          java.util.Arrays.asList(adds: _*), schema),
-        kind, if (kind == "nodes") Seq("label") else Seq("relType"))
+          java.util.Arrays.asList(adds: _*), schema), kind)
       return
     }
     val baseVersion = new Path(currentDir(kind).get).getName
@@ -272,34 +273,43 @@ class GraphStore(spark: SparkSession, val basePath: String) {
     * consistent while the pointer moves. No-op when already compacted. */
   def compact(kind: String): Unit =
     if (pendingDeltas(kind) > 0) {
-      if (kind == "nodes")
-        writeSnapshot(align(nodes, Model.nodeSchema), "nodes", Seq("label"))
-      else
-        writeSnapshot(align(edges, Model.edgeSchema), "edges", Seq("relType"))
+      writeSnapshot(align(if (kind == "nodes") nodes else edges,
+        schemaOf(kind)), kind)
     }
 
   def nodesByLabel(label: String): DataFrame =
     nodes.filter(col("label") === label)
 
   /** Upsert nodes. Incoming rows may carry any subset of the node schema
-    * plus `label`; ids are derived from merge keys when absent. Keep-latest
-    * per id (incoming wins over existing; within incoming, greatest
-    * updatedAt then arbitrary-but-deterministic).
+    * plus `label`; ids are derived from merge keys when absent. Incoming
+    * wins over existing; duplicate ids within the batch keep the
+    * greatest `updatedAt`, ties the least row in its JSON form.
     */
-  def mergeNodes(incoming: DataFrame): Unit = {
-    val withId = ensureNodeIds(incoming)
-    val aligned = align(withId, Model.nodeSchema)
-    writeSnapshot(keepLatest(nodes, aligned), "nodes", Seq("label"))
-  }
+  def mergeNodes(incoming: DataFrame): Unit =
+    merge("nodes", latestInBatch("nodes",
+      align(ensureNodeIds(incoming), Model.nodeSchema)))
 
-  /** Upsert edges: identity = (src, dst, relType). */
-  def mergeEdges(incoming: DataFrame): Unit = {
-    def keyed(df: DataFrame): DataFrame =
-      df.withColumn("id", xxhash64(col("src"), col("dst"), col("relType")))
-    val aligned = keyed(align(incoming, Model.edgeSchema))
-    val existing = keyed(edges)
-    val merged = keepLatest(existing, aligned).drop("id")
-    writeSnapshot(merged, "edges", Seq("relType"))
+  /** Upsert edges: identity = (src, dst, relType), duplicates within
+    * the batch resolved as in [[mergeNodes]]. */
+  def mergeEdges(incoming: DataFrame): Unit =
+    merge("edges", latestInBatch("edges", align(incoming, Model.edgeSchema)))
+
+  /** Upsert a driver-held batch of `kind` ("nodes" | "edges") whose rows
+    * follow the kind's canonical schema (node ids set, as
+    * [[nodeRow]] sets them). Duplicate keys collapse on the driver by
+    * [[firstPerKey]]; the batch enters the plan as a local relation. */
+  def mergeRows(kind: String, rows: Seq[Row]): Unit =
+    merge(kind, spark.createDataFrame(
+      java.util.Arrays.asList(firstPerKey(kind, rows): _*), schemaOf(kind)))
+
+  /** The one MERGE write: the existing rows whose key the key-unique
+    * `batch` does not carry, plus the batch. */
+  private def merge(kind: String, batch: DataFrame): Unit = {
+    val keys = mergeKeyCols(kind)
+    val existing = if (kind == "nodes") nodes else edges
+    writeSnapshot(existing
+      .join(broadcast(batch.select(keys.map(col): _*)), keys, "left_anti")
+      .unionByName(batch), kind)
   }
 
   /** Drop edges whose endpoints are absent from `nodes` — the existence
@@ -314,13 +324,17 @@ class GraphStore(spark: SparkSession, val basePath: String) {
       .distinct()
   }
 
-  private def writeSnapshot(df: DataFrame, kind: String,
-      partitionBy: Seq[String]): Unit = {
+  /** Write `df` as the new base snapshot of `kind`, partitioned by
+    * label / relType. The REBALANCE on the partition column lets
+    * adaptive execution pack each directory into few files (one at
+    * small sizes) whatever the partitioning of the plan above it. */
+  private def writeSnapshot(df: DataFrame, kind: String): Unit = {
     deltaMem.remove(kind) // a fresh base snapshot carries no deltas
 
+    val part = if (kind == "nodes") "label" else "relType"
     val version = s"${kind}_v${java.util.UUID.randomUUID().toString.take(8)}"
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*)
-      .parquet(s"$basePath/$version")
+    df.hint("rebalance", col(part)).write.mode(SaveMode.Overwrite)
+      .partitionBy(part).parquet(s"$basePath/$version")
     // atomic repoint: write pointer to a tmp file, rename over.
     // Previous snapshot dirs are retained (snapshot isolation — handles
     // created against an older version stay readable); reclaim with
@@ -386,17 +400,71 @@ object GraphStore {
           .filterNot(_ == "id").sorted.map(col): _*)))))
   }
 
-  /** Union + keep one row per id: incoming beats existing, newer updatedAt
-    * beats older. One shuffle; no driver round-trips. */
-  def keepLatest(existing: DataFrame, incoming: DataFrame): DataFrame = {
-    val e = existing.withColumn("_gen", lit(0))
-    val i = incoming.withColumn("_gen", lit(1))
-    val w = Window.partitionBy(col("id"))
-      .orderBy(col("_gen").desc, col("updatedAt").desc_nulls_last)
-    e.unionByName(i)
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn", "_gen")
+  def schemaOf(kind: String): StructType =
+    if (kind == "nodes") Model.nodeSchema else Model.edgeSchema
+
+  /** [[ensureNodeIds]] on the driver: xxhash64(label, key₁…keyₙ), seed
+    * 42, each key in its string form (a null key leaves the hash as
+    * is) — bit-equal to the Column form for every label with merge
+    * keys, without a Spark job. */
+  def nodeIdOf(label: String, field: String => Any): Long = {
+    import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    val keys = Model.MergeKeys.getOrElse(label,
+      sys.error(s"no merge key for label $label"))
+    (label +: keys.map(k => Option(field(k)).map(_.toString).orNull))
+      .foldLeft(42L)((h, v) =>
+        XxHash64Function.hash(UTF8String.fromString(v), StringType, h))
+  }
+
+  /** A canonical node row from its non-null fields (label included),
+    * its id derived by [[nodeIdOf]]. */
+  def nodeRow(fields: (String, Any)*): Row = {
+    val m = fields.toMap
+    val id = nodeIdOf(m("label").toString, m.getOrElse(_, null))
+    Row.fromSeq(Model.nodeSchema.fieldNames.toSeq.map {
+      case "id" => id
+      case f => m.getOrElse(f, null)
+    })
+  }
+
+  /** A canonical edge row from its key and its other non-null fields. */
+  def edgeRow(src: Long, dst: Long, relType: String,
+      fields: (String, Any)*): Row = {
+    val m = fields.toMap ++ Seq("src" -> src, "dst" -> dst,
+      "relType" -> relType)
+    Row.fromSeq(Model.edgeSchema.fieldNames.toSeq.map(m.getOrElse(_, null)))
+  }
+
+  /** The duplicate rule of a driver batch: per merge key, the row with
+    * the greatest `updatedAt` wins (null oldest), and among equals the
+    * FIRST in batch order. A frontend's emission order is therefore its
+    * tie-break; the result keeps first-occurrence order. */
+  def firstPerKey(kind: String, rows: Seq[Row]): Seq[Row] = {
+    val schema = schemaOf(kind)
+    val keyIdx = mergeKeyCols(kind).map(schema.fieldIndex)
+    val ts = schema.fieldIndex("updatedAt")
+    def newer(a: Row, b: Row): Boolean = !a.isNullAt(ts) &&
+      (b.isNullAt(ts) || a.getTimestamp(ts).after(b.getTimestamp(ts)))
+    val out = scala.collection.mutable.LinkedHashMap.empty[Seq[Any], Row]
+    rows.foreach { r =>
+      val k = keyIdx.map(r.get)
+      if (out.get(k).forall(newer(r, _))) out(k) = r
+    }
+    out.values.toSeq
+  }
+
+  /** The duplicate rule of a DataFrame batch, one window over the batch
+    * alone: per merge key the greatest `updatedAt` wins (null oldest),
+    * ties the least row in its JSON form — deterministic whatever the
+    * batch's partitioning. */
+  def latestInBatch(kind: String, batch: DataFrame): DataFrame = {
+    val w = Window.partitionBy(mergeKeyCols(kind).map(col): _*)
+      .orderBy(col("updatedAt").desc_nulls_last,
+        to_json(struct(batch.columns.map(col): _*)))
+    batch.withColumn("_rn", row_number().over(w))
+      .filter(col("_rn") === 1).drop("_rn")
   }
 
   /** Project a loosely-shaped DataFrame onto `schema`: missing columns
@@ -410,9 +478,10 @@ object GraphStore {
     df.select(cols.toSeq: _*)
   }
 
+  /** An empty local relation: the optimizer sees it is empty, so a
+    * MERGE into a fresh store plans no join. */
   def emptyDf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      schema)
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
   /** Union heterogenous node-row families into one schema-aligned frame
     * (ids filled per family) so an ingest can MERGE once instead of once

@@ -431,4 +431,25 @@ class GoFrontendSpec extends SparkSpec {
       .map(_.getAs[String]("name")).toSet
     assert(!gone.contains("Fn9"), "stale CALLS edge survived reindex")
   }
+
+  test("two func init() in one file are one node: the first one's span, " +
+      "the CALLS of both bodies") {
+    val src = "package p\n\nfunc init() {\n\tA()\n}\n\nfunc init() {\n" +
+      "\tB()\n}\n\nfunc A() {}\n\nfunc B() {}\n"
+    val inits = GoFrontend.parseFile("p/a.go", src).filter(_.name == "init")
+    assert(inits.size === 2)
+    val (nodes, edges) = GoFrontend.compose(Seq(("p/a.go", src)), "svc")
+    val idx = graft.model.Model.nodeSchema.fieldIndex _
+    val initNodes = nodes.filter(r => r.getString(idx("name")) == "init" &&
+      r.getString(1) == Labels.Function)
+    assert(initNodes.size === 1)
+    assert(initNodes.head.getInt(idx("startLine")) === inits.head.startLine)
+    assert(initNodes.head.getInt(idx("endLine")) === inits.head.endLine)
+    val byName = nodes.map(r => r.getLong(0) -> r.getString(idx("name")))
+      .toMap
+    val calls = edges.filter(_.getString(2) == RelTypes.Calls)
+      .map(e => (byName(e.getLong(0)), byName(e.getLong(1))))
+    assert(calls.toSet === Set(("init", "A"), ("init", "B")))
+    assert(calls.size === 2)
+  }
 }

@@ -92,4 +92,104 @@ class GraphStoreSpec extends SparkSpec {
     assert(st.pendingDeltas("nodes") < 3)
     assert(names(st) === Set("a2", "b2", "c2", "x1", "x2", "x3", "x4"))
   }
+
+  test("nodeIdOf equals ensureNodeIds for every label the frontends emit") {
+    import org.apache.spark.sql.Row
+    import Model.Labels._
+    val rows = Seq(
+      GraphStore.nodeRow("label" -> Service, "name" -> "svc"),
+      GraphStore.nodeRow("label" -> File, "path" -> "p/ä.go"),
+      GraphStore.nodeRow("label" -> Module, "name" -> "p", "fqn" -> "svc/p"),
+      GraphStore.nodeRow("label" -> Class, "fqn" -> "p.T"),
+      GraphStore.nodeRow("label" -> Interface, "fqn" -> "p.I"),
+      GraphStore.nodeRow("label" -> Function, "signature" -> "func F()",
+        "filePath" -> "p/a.go"),
+      GraphStore.nodeRow("label" -> Method,
+        "signature" -> "func (t *T) M(x int) int", "filePath" -> "p/a.go"),
+      GraphStore.nodeRow("label" -> Variable, "name" -> "v",
+        "filePath" -> "p/a.go"),
+      GraphStore.nodeRow("label" -> Symbol,
+        "symbol" -> "scip-go go svc v0 p/F()."),
+      GraphStore.nodeRow("label" -> Reference, "filePath" -> "p/a.go",
+        "startLine" -> 0, "startColumn" -> 12),
+      GraphStore.nodeRow("label" -> Reference, "filePath" -> "p/a.go",
+        "startLine" -> 31, "startColumn" -> 0))
+    assert(rows.map(_.getString(1)).toSet === Set(Service, File, Module,
+      Class, Interface, Function, Method, Variable, Symbol, Reference))
+    val fromColumns = GraphStore.ensureNodeIds(spark.createDataFrame(
+        java.util.Arrays.asList(rows: _*), Model.nodeSchema).drop("id"))
+      .select("id").collect().map(_.getLong(0)).toSeq
+    assert(fromColumns === rows.map(_.getLong(0)))
+    assert(rows.map(_.getLong(0)).distinct.size === rows.size)
+  }
+
+  test("an edge merge replaces only the rows whose (src, dst, relType) " +
+      "matches") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-em").toString
+    val st = new GraphStore(spark, dir)
+    st.mergeEdges(Seq((1L, 2L, "CALLS", 1), (1L, 2L, "CONTAINS", 2),
+      (1L, 3L, "CALLS", 3), (2L, 1L, "CALLS", 4))
+      .toDF("src", "dst", "relType", "line"))
+    def lines = st.edges.select("src", "dst", "relType", "line").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getInt(3)))
+      .toSet
+    st.mergeEdges(Seq((1L, 2L, "CALLS", 9)).toDF("src", "dst", "relType",
+      "line"))
+    assert(lines === Set((1L, 2L, "CALLS", 9), (1L, 2L, "CONTAINS", 2),
+      (1L, 3L, "CALLS", 3), (2L, 1L, "CALLS", 4)))
+    st.mergeRows("edges", Seq(GraphStore.edgeRow(2L, 1L, "CALLS",
+      "line" -> 7), GraphStore.edgeRow(3L, 1L, "CALLS", "line" -> 8)))
+    assert(lines === Set((1L, 2L, "CALLS", 9), (1L, 2L, "CONTAINS", 2),
+      (1L, 3L, "CALLS", 3), (2L, 1L, "CALLS", 7), (3L, 1L, "CALLS", 8)))
+  }
+
+  test("a merge into a fresh store plans no join; a later one plans the " +
+      "anti-join") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.command.DataWritingCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val writes = new java.util.concurrent.LinkedBlockingQueue[Int]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.optimizedPlan.collectFirst { case w: DataWritingCommand => w }
+          .foreach(w => writes.put(w.collect { case j: Join => j }.size))
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-fj").toString
+    val st = new GraphStore(spark, dir)
+    spark.listenerManager.register(listener)
+    try {
+      def joinsOfNextWrite: Int =
+        Option(writes.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+          .getOrElse(fail("the write never reached the listener"))
+      st.mergeRows("nodes", Seq(GraphStore.nodeRow(
+        "label" -> Model.Labels.Service, "name" -> "a")))
+      assert(joinsOfNextWrite === 0)
+      st.mergeNodes(Seq(("Service", "b")).toDF("label", "name"))
+      assert(joinsOfNextWrite === 1)
+    } finally spark.listenerManager.unregister(listener)
+    assert(st.nodes.select("name").collect().map(_.getString(0)).toSet ===
+      Set("a", "b"))
+  }
+
+  test("a batch's duplicate keys resolve by fixed rules: the driver " +
+      "batch keeps its first row, the DataFrame batch its least") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-dk").toString
+    val st = new GraphStore(spark, dir)
+    st.mergeRows("nodes", Seq(
+      GraphStore.nodeRow("label" -> "Service", "name" -> "s",
+        "title" -> "z"),
+      GraphStore.nodeRow("label" -> "Service", "name" -> "s",
+        "title" -> "a")))
+    def titles = st.nodes.select("title").collect().map(_.getString(0)).toSeq
+    assert(titles === Seq("z"))
+    // every partitioning of the same batch keeps the same row
+    (1 to 4).foreach { n =>
+      st.mergeNodes(Seq(("Service", "s", "b"), ("Service", "s", "a"),
+          ("Service", "s", "c")).toDF("label", "name", "title")
+        .repartition(n))
+      assert(titles === Seq("a"))
+    }
+  }
 }

@@ -197,4 +197,84 @@ class IngestSpec extends SparkSpec {
       .select(ScipIngest.displayNameCol($"d")).collect().map(_.getString(0))
     assert(names.toSeq === Seq("Main", "Doer", "x", ""))
   }
+
+  /** Files of each label / relType directory of `kind`'s current base
+    * snapshot. */
+  private def parquetFilesPerDir(st: GraphStore, kind: String)
+      : Map[String, Int] = {
+    val base = java.nio.file.Paths.get(st.basePath)
+    val version = java.nio.file.Files.readString(
+      base.resolve(s"$kind.current")).trim
+    base.resolve(version).toFile.listFiles().toSeq.filter(_.isDirectory)
+      .map(d => d.getName ->
+        d.listFiles().count(_.getName.endsWith(".parquet")))
+      .toMap
+  }
+
+  test("index job-count gate and layout: a small SCIP + Go index runs " +
+      "<= 12 jobs and writes one parquet file per label and relType") {
+    import graft.ingest.{GoFrontend, IncrementalIndex}
+    def body(i: Int, callee: Int) =
+      s"package p${i % 3}\n\nfunc Fn$i(x int) int {\n\treturn Fn$callee(x)\n}\n"
+    val files = (0 until 12).map(i =>
+      (s"p${i % 3}/f$i.go", body(i, (i + 1) % 12)))
+    val docs = files.zipWithIndex.map { case ((p, _), i) =>
+      ScipIngest.ScipDocument(p, Seq(
+        ScipIngest.ScipOccurrence(s"scip-go go svc v0 p${i % 3}/Fn$i().",
+          Seq(2, 5, 2, 8), 1),
+        ScipIngest.ScipOccurrence(
+          s"scip-go go svc v0 p${(i + 1) % 3}/Fn${(i + 1) % 12}().",
+          Seq(3, 8, 3, 11), 0)))
+    }
+    val index = ScipIngest.ScipIndex(docs, Nil)
+    val dir = java.nio.file.Files.createTempDirectory("graft-ij").toString
+    val store = new GraphStore(spark, dir)
+    val (_, jobs) = jobsOf {
+      ScipIngest.ingest(store, spark, index, "svc", files.toMap)
+      GoFrontend.ingest(store, files.toDF("path", "content"), "svc")
+    }
+    info(s"index ran $jobs Spark jobs")
+    assert(jobs <= 12, s"index ran $jobs Spark jobs")
+    assert(store.nodes.filter($"label" === Labels.Function).count() === 12L)
+    def oneFileEach(tag: String): Unit = Seq("nodes", "edges").foreach { k =>
+      val perDir = parquetFilesPerDir(store, k)
+      assert(perDir.nonEmpty && perDir.values.forall(_ == 1),
+        s"$tag $k: $perDir")
+    }
+    oneFileEach("index")
+    val edited = files.map { case (p, c) =>
+      if (p == "p1/f1.go") (p, body(1, 7)) else (p, c) }
+    IncrementalIndex.reindex(store, edited.toDF("path", "content"), "svc")
+      .collect()
+    assert(store.pendingDeltas("nodes") > 0 && store.pendingDeltas("edges") > 0)
+    store.compact("nodes"); store.compact("edges")
+    oneFileEach("compact")
+  }
+
+  test("scip duplicates: a twice-defined symbol keeps its first " +
+      "definition; one (path, line, col) is one Reference") {
+    def occ(sym: String, range: Seq[Int], roles: Int) =
+      ScipIngest.ScipOccurrence(s"scip-go go svc v0 p/$sym().", range, roles)
+    val index = ScipIngest.ScipIndex(Seq(ScipIngest.ScipDocument("p/a.go",
+      Seq(occ("F", Seq(2, 5, 2, 6), 1), occ("G", Seq(3, 1, 3, 2), 0),
+        occ("H", Seq(3, 1, 3, 9), 0), occ("F", Seq(7, 5, 7, 6), 1)))), Nil)
+    val dir = java.nio.file.Files.createTempDirectory("graft-sd").toString
+    val store = new GraphStore(spark, dir)
+    ScipIngest.ingest(store, spark, index, "svc")
+    val defines = store.edges.filter($"relType" === "DEFINES")
+      .select("line", "column").collect().map(r => (r.getInt(0), r.getInt(1)))
+    assert(defines.toSeq === Seq((2, 5)))
+    val refs = store.nodesByLabel(Labels.Reference)
+      .select("id", "startLine", "startColumn", "endColumn").collect()
+    assert(refs.map(r => (r.getInt(1), r.getInt(2), r.getInt(3))).toSeq ===
+      Seq((3, 1, 2)))
+    val refEdges = store.edges.filter($"relType" === "REFERENCES")
+      .join(store.nodes.select($"id".as("dst"), $"symbol"), "dst")
+      .select("src", "symbol", "line", "column").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getInt(3)))
+    assert(refEdges.toSet === Set("G", "H").map(n =>
+      (refs(0).getLong(0), s"scip-go go svc v0 p/$n().", 3, 1)))
+    assert(store.edges.filter($"relType" === "CONTAINS").count() === 3L,
+      "svc→file, file→F, file→reference")
+  }
 }

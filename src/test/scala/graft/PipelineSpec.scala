@@ -108,7 +108,7 @@ class PipelineSpec extends SparkSpec {
     assert(fps(0) === fps(1))
   }
 
-  test("multimodal: batched feature extraction + frame sampling shapes") {
+  test("multimodal: batched feature extraction is deterministic") {
     val media = syntheticMedia(30)
     val feats = Multimodal.extractFeatures(media)
     assert(feats.count() === 30L)
@@ -119,10 +119,6 @@ class PipelineSpec extends SparkSpec {
       .filter($"media_id" === 0L).collect()(0)
     assert(f0.features.toSeq === f0b.features.toSeq)
     assert(f0.checksum === f0b.checksum)
-    val frames = Multimodal.sampleFrames(media, stride = 2, frameSize = 16)
-    assert(frames.count() > 0)
-    assert(frames.columns.toSeq ===
-      Seq("media_id", "frame_index", "frame_bytes", "frame_features"))
   }
 
   test("semDedup drops the higher id of within-cluster near-dups only") {

@@ -176,16 +176,4 @@ class ScipProtoSpec extends SparkSpec {
       assert(ScipProto.decodeIndex(bytes) === idx, s"iteration $i")
     }
   }
-
-  test("occurrencesFromBinary matches the in-memory flatten") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-scipd")
-    java.nio.file.Files.write(dir.resolve("a.scip"),
-      encoded(packedRanges = true))
-    val fromBinary = ScipIngest
-      .occurrencesFromBinary(spark, dir.toString + "/*.scip")
-      .collect().toSet
-    val fromMemory = ScipIngest.occurrences(spark, caseClassIndex)
-      .collect().toSet
-    assert(fromBinary === fromMemory)
-  }
 }
